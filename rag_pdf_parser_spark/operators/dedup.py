@@ -79,11 +79,6 @@ def register_hashes(seen_path: str, new_hashes: DataFrame) -> None:
         .write.mode("append").parquet(seen_path)
 
 
-def dedup_stats(seen: DataFrame) -> DataFrame:
-    """A5: counts per namespace (deduplicator.py:318-326)."""
-    return seen.groupBy("kind").agg(F.count("*").alias("n_hashes"))
-
-
 # --- MinHash + LSH -------------------------------------------------------------
 
 def minhash_signature(df: DataFrame, text_col: str = "text", n: int = 5,
@@ -227,8 +222,15 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
     struct array in memory before the Generate copies it per output row —
     the 37× Generate-copy trap in another costume (8.1 s, 2.3× slower).
     The join streams pairs without ever materializing a bucket."""
-    buckets = lsh_buckets(df, id_col, text_col, n, num_perm, bands, flavor,
-                          shingle)
+    return bucket_pairs(lsh_buckets(df, id_col, text_col, n, num_perm, bands,
+                                    flavor, shingle), max_bucket)
+
+
+def bucket_pairs(buckets: DataFrame,
+                 max_bucket: int | None = None) -> DataFrame:
+    """Distinct (id_a < id_b) pairs sharing a (band, bucket) row of an
+    `lsh_buckets` table: the self-join of `lsh_candidate_pairs` (see there
+    for `max_bucket`), for callers that already hold the bucket table."""
     if max_bucket is not None:
         sizes = buckets.groupBy("band", "bucket").agg(
             F.count("*").alias("__bsz"))
@@ -454,11 +456,8 @@ def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
     # downstream join is inner on pair ids), and at corpus scale the
     # candidate docs are a vanishing fraction of the input — without this
     # the gram-array build runs over the WHOLE corpus only for the pair
-    # joins to drop it. The r6 eager checkpoint here is GONE (one job
-    # barrier less per call): it guarded against the caller's candidate
-    # plan being spliced into the doc lineage and re-executed per
-    # gram-explode reference — but the gram table below is materialized
-    # exactly ONCE now, so the splice executes once by construction.
+    # joins to drop it. No checkpoint of `df` is needed: the gram table
+    # below is materialized once, so a spliced-in pair plan runs once.
     ids = (pairs.select(F.col("id_a").alias(id_col))
            .unionByName(pairs.select(F.col("id_b").alias(id_col)))
            .distinct())
@@ -641,7 +640,10 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     """Connected components over a near-duplicate pair list → (id,
     component) with component = MIN node id in the cluster. The tail stage
     of every dedup pipeline: LSH/phash emit PAIRS, but dropping duplicates
-    needs CLUSTERS (keep one canonical doc per component).
+    needs CLUSTERS (keep one canonical doc per component). NOT a lazy plan
+    builder: at call time one bounded eager job fetches up to
+    `driver_edges`+1 pairs (see below), and the distributed fallback runs
+    its rounds eagerly too — pass a materialized pair table.
 
     Spark-first: iterative min-label propagation — each round joins the
     (undirected) edge list against current labels and takes the min label
@@ -767,12 +769,30 @@ def dedup_keep_canonical(docs: DataFrame, pairs: DataFrame,
     deterministic canonical pick) plus every unpaired document. The
     components table is usually tiny next to the corpus (only paired docs
     appear in it), so the join back is broadcast-friendly."""
-    comp = connected_components(pairs, id_a, id_b)
-    drop = comp.where(F.col("id") != F.col("comp")).select(
-        F.col("id").alias(id_col))
+    drop = _non_root_ids(pairs, id_a, id_b).withColumnRenamed("id", id_col)
     return docs.join(drop, id_col, "left_anti")
 
 
+def _non_root_ids(pairs: DataFrame, id_a: str = "id_a",
+                  id_b: str = "id_b") -> DataFrame:
+    """(id) of every paired node that is not its component's min-id root
+    — the drop set of keep-canonical."""
+    comp = connected_components(pairs, id_a, id_b)
+    return comp.where(F.col("id") != F.col("comp")).select("id")
+
+
+def _exact_staged(docs: DataFrame, id_col: str,
+                  text_col: str) -> DataFrame:
+    """The exact-dedup result MATERIALIZED before the near-dup fan-out:
+    each consumer (signature, verify gram table, final anti-join) would
+    otherwise re-run its shuffle (hash groupBy + semi-join). REPARTITIONED
+    by id at the session's shuffle width (a staging table bucketed by id):
+    the aggregate's byte-coalesced partitioning is ONE partition at sf0.1,
+    and every CPU-heavy consumer would run single-core (guide §2.5). On a
+    real cluster persist (DISK) or write a staging table here."""
+    n_spread = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return exact_dedup(docs, text_col, id_col).drop("content_sha") \
+        .repartition(n_spread, id_col).localCheckpoint(eager=True)
 
 
 def dedup_corpus(docs: DataFrame, id_col: str = "doc_id",
@@ -814,28 +834,10 @@ def dedup_corpus(docs: DataFrame, id_col: str = "doc_id",
 
     Scale shape: every stage is the scale-safe formulation documented on
     its function; the Jaccard verify is candidate-pair-bounded. Returns
-    the deduplicated corpus (all input columns).
-
-    The exact-dedup result is MATERIALIZED (localCheckpoint) before the
-    fan-out: four downstream subplans consume it (both sides of the LSH
-    self-join, the Jaccard shingle table, the final anti-join), and unlike
-    the pure-projection signature pipeline (see lsh_candidate_pairs's
-    measured note) it CONTAINS A SHUFFLE (hash groupBy + semi-join) that
-    would otherwise execute four times. On a real cluster use persist
-    (DISK) or a staging table at this point.
+    the deduplicated corpus (all input columns). The exact-dedup result
+    is materialized before the fan-out (`_exact_staged`).
     """
-    # The materialization is REPARTITIONED by id at the session's
-    # shuffle-partition width (the scale knob) — a production staging
-    # table bucketed by id. Without it the checkpoint inherits the
-    # byte-coalesced partitioning of the exact-dedup aggregate (ONE
-    # partition at sf0.1 — single-file scan + AQE byte-based coalescing),
-    # and every CPU-heavy consumer below (signature Generate + hashing ×2
-    # for the LSH self-join, the verify gram build) runs single-core
-    # (guide §2.5: under-parallel input → repartition right after it).
-    n_spread = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    out = exact_dedup(docs, text_col, id_col).drop("content_sha") \
-        .repartition(n_spread, id_col) \
-        .localCheckpoint(eager=True)
+    out = _exact_staged(docs, id_col, text_col)
     # materialize the candidate pairs: the verify stage references them
     # four times (pair-id restriction, size prefilter, intersection count,
     # zero-overlap left join) and each reference would otherwise re-run
@@ -871,16 +873,22 @@ def dedup_corpus_incremental(increment: DataFrame, store_dir: str,
     recomputes signatures over the full corpus every run; a daily increment
     at 100 TB must instead pair new docs against a PERSISTED bucket index:
 
-        1. full `dedup_corpus` recipe WITHIN the increment (exact → LSH →
-           Jaccard verify → components → canonical),
-        2. increment survivors' buckets probe the store — read PRUNED to
-           the batch's bp partitions (the streaming store's layout,
-           streaming/minhash.py: bp = pmod(xxhash64(band,bucket), P));
-           bucket collisions yield (new doc, canonical doc) candidates,
-        3. candidates are VERIFIED with the same-shingle-space Jaccard gate
-           (canonical texts fetched from `canon_dir` by a semi-join on the
-           hit ids only — at warehouse scale an id-bucketed Iceberg table
-           makes this a pruned read),
+        1. exact dedup of the increment (`_exact_staged`) and ONE
+           checkpointed (id, band, bucket, bp) table over it, which feeds
+           the within-batch pairs (`bucket_pairs`), the store probe and
+           the store append,
+        2. the buckets probe the store — read PRUNED to their bp
+           partitions (the streaming store's layout, streaming/minhash.py:
+           bp = pmod(xxhash64(band,bucket), P)),
+        3. within-batch and store candidates are VERIFIED in ONE
+           same-shingle-space Jaccard pass (canonical texts fetched from
+           `canon_dir` by a semi-join on the hit ids only). Dropped: the
+           non-root ids of the components over verified pairs owned by a
+           batch doc, plus every doc verified against a canonical one —
+           cross pairs stay out of the component pass, so a batch root
+           the store rejects does not free its near-dups. Probing with
+           all exact survivors admits the same set as probing only the
+           roots: buckets and Jaccard depend on the two texts only,
         4. admitted docs' (band, bucket, id, bp) rows are appended to the
            store FIRST, then the docs to `canon_dir` — the crash-safe
            order. An ORPHAN bucket row (id absent from canon) is
@@ -898,8 +906,8 @@ def dedup_corpus_incremental(increment: DataFrame, store_dir: str,
            in `canon_dir` are anti-joined out of the increment up front
            (same id ⇒ already admitted — the pipeline's manifest-resume
            rule), which also guarantees batch and canonical ids are
-           disjoint so a non-self candidate pair is always a genuine
-           cross-corpus pair.
+           disjoint, so a store pair owned by a batch id (another batch
+           doc's orphan) is classed with the within-batch pairs.
 
     The whole run holds the writer lease on the STORE's parent directory
     (plans/lease.py — the same lock the store's maintenance job
@@ -998,17 +1006,14 @@ def _dedup_corpus_incremental_locked(spark, increment, store_dir, canon_dir,
     elif stats is not None:
         stats["n_already_admitted"] = 0
 
-    batch = dedup_corpus(increment, id_col=id_col, text_col=text_col,
-                         jaccard_threshold=jaccard_threshold, n=n,
-                         num_perm=num_perm, bands=bands, shingle=shingle,
-                         max_bucket=max_bucket).localCheckpoint(eager=True)
+    out = _exact_staged(increment, id_col, text_col)
     buckets = (
-        lsh_buckets(batch, id_col, text_col, n, num_perm, bands, "xx",
-                    shingle)
+        lsh_buckets(out, id_col, text_col, n, num_perm, bands, "xx", shingle)
         .withColumn("bp", store_partition_expr(F.col("band"),
                                                F.col("bucket"), n_parts))
         .localCheckpoint(eager=True)
     )
+    cands = bucket_pairs(buckets, max_bucket)
 
     has_store = _os.path.isdir(store_dir) and any(
         d.startswith("bp=") for d in _os.listdir(store_dir))
@@ -1043,7 +1048,7 @@ def _dedup_corpus_incremental_locked(spark, increment, store_dir, canon_dir,
         # control-plane scalars: at most n_parts ints, never row data
         bps = [r["bp"] for r in buckets.select("bp").distinct().collect()]
         seen = read_store_pruned(spark, store_dir, bps)
-        cands = (
+        cands = cands.unionByName(
             buckets.join(seen.select("band", "bucket",
                                      F.col("id").alias("id_b")),
                          ["band", "bucket"])
@@ -1053,47 +1058,42 @@ def _dedup_corpus_incremental_locked(spark, increment, store_dir, canon_dir,
             # published its text — that is this doc's own history, not a
             # duplicate, so it must not count against admission
             .where(F.col("id") != F.col("id_b"))
-            .select(F.col("id").alias("id_a"), "id_b").distinct()
-            # materialized for the same reason as dedup_corpus's cands:
-            # referenced by the canon-text semi-join and four times inside
-            # the verify, each of which would otherwise re-read the store
-            # and re-run the probe join; bounded by the candidate pairs
-            .localCheckpoint(eager=True)
-        )
-        canon_hit = (
+            .select(F.col("id").alias("id_a"), "id_b").distinct())
+    # materialized: referenced by the canon-text semi-join and four times
+    # inside the verify, each of which would otherwise re-run the bucket
+    # self-join and re-read the store; bounded by the candidate pairs
+    cands = cands.localCheckpoint(eager=True)
+    texts = out.select(id_col, text_col)
+    if has_store and has_canon:
+        texts = texts.unionByName(
             spark.read.parquet(canon_dir)
             .join(cands.select(F.col("id_b").alias(id_col)).distinct(),
                   id_col, "left_semi")
-            .select(id_col, text_col)
-        )
-        texts = batch.select(id_col, text_col).unionByName(canon_hit)
-        # materialized (tiny — dropped ids only): BOTH consumers below
-        # (admitted docs, admitted buckets) reference it, and each
-        # checkpoint would otherwise re-run the whole cross-store verify
-        dropped = (
-            ngram_jaccard_pairs(texts, cands, id_col=id_col,
-                                text_col=text_col, n=n, shingle=shingle,
-                                min_jaccard=jaccard_threshold)
-            .where(F.col("jaccard") >= jaccard_threshold)
-            .select(F.col("id_a").alias(id_col)).distinct()
-            .localCheckpoint(eager=True)
-        )
-        admitted = batch.join(dropped, id_col, "left_anti")
-        admitted_buckets = buckets.join(
-            dropped.withColumnRenamed(id_col, "id"), "id", "left_anti")
-    else:
-        admitted, admitted_buckets = batch, buckets
-    # NO eager checkpoint here (r7 — two job barriers removed): the
-    # cache-invalidation hazard the former checkpoints guarded against
-    # (plans read canon_dir / store_dir which the appends below mutate)
-    # cannot occur any more, because every path into `admitted` /
-    # `admitted_buckets` is lineage-cut ABOVE any store/canon read:
-    # `batch` derives from dedup_corpus's checkpointed staging table (the
-    # resume anti-join's canon read is beneath that checkpoint),
-    # `buckets` and `dropped` are checkpointed right where the store
-    # probe / cross-verify results land, and the components table of the
-    # fast path is driver-local. If a future edit re-introduces a
-    # canon/store read below those cuts, restore the checkpoints.
+            .select(id_col, text_col))
+    # materialized (true pairs only): the component pass and the drop
+    # set's cross half would each re-run the verify and its canon read
+    verified = (
+        ngram_jaccard_pairs(texts, cands, id_col=id_col, text_col=text_col,
+                            n=n, shingle=shingle,
+                            min_jaccard=jaccard_threshold)
+        .where(F.col("jaccard") >= jaccard_threshold)
+        .select("id_a", "id_b").localCheckpoint(eager=True)
+    )
+    batch_ids = out.select(F.col(id_col).alias("id_b"))
+    # materialized (distinct ids — tiny, AQE-coalesced): both appends and
+    # the caller's read would each re-run the Python-side component RDD
+    dropped = _non_root_ids(verified.join(batch_ids, "id_b", "left_semi")) \
+        .unionByName(verified.join(batch_ids, "id_b", "left_anti")
+                     .select(F.col("id_a").alias("id"))) \
+        .distinct().localCheckpoint(eager=True)
+    admitted = out.join(dropped.withColumnRenamed("id", id_col), id_col,
+                        "left_anti")
+    admitted_buckets = buckets.join(dropped, "id", "left_anti")
+    # NO eager checkpoint here: the appends below mutate canon_dir and
+    # store_dir, but every path into `admitted` / `admitted_buckets` is
+    # lineage-cut ABOVE any store/canon read by the `out` (resume
+    # anti-join), `buckets` and `dropped` (probe, canon texts) checkpoints.
+    # A canon/store read added below those cuts needs its own checkpoint.
     # commit-point validation before publishing (same rule as the
     # pipeline): a stolen-stale lease must abort here, not interleave its
     # appends with the new owner's

@@ -867,6 +867,26 @@ def test_dedup_corpus_incremental_store(spark, tmp_path, docs_df):
     assert "e00" not in adm_b and "e01" not in adm_b
     assert "e02" in adm_b and "e03" not in adm_b and "e04" in adm_b
 
+    # store invariant: the store rows are exactly the (band, bucket, id,
+    # bp) rows of the canonical docs — every admitted doc is indexed, and
+    # no dropped doc is
+    from rag_pdf_parser_spark.operators.dedup import lsh_buckets
+    from rag_pdf_parser_spark.streaming.minhash import (
+        store_meta_partitions,
+        store_partition_expr,
+    )
+    n_parts = store_meta_partitions(store)
+    cols = ["band", "bucket", "id", "bp"]
+    want = sorted(tuple(r) for r in lsh_buckets(
+        spark.read.parquet(canon), "doc_id", "text", num_perm=32, bands=8)
+        .withColumn("bp", store_partition_expr(F.col("band"),
+                                               F.col("bucket"), n_parts))
+        .select(*cols).collect())
+    indexed = sorted(tuple(r) for r in
+                     spark.read.parquet(store).select(*cols).collect())
+    assert indexed == want
+    assert {r[2] for r in indexed} == set(got)
+
     # store layout: bp partitions + meta with the signature config
     import os
     assert any(d.startswith("bp=") for d in os.listdir(store))
@@ -897,16 +917,10 @@ def test_dedup_corpus_incremental_store(spark, tmp_path, docs_df):
     # are written BEFORE canon — the crash-safe order) but never published
     # its text. The orphan rows are self-collisions only and must not
     # block f00's own re-admission.
-    from rag_pdf_parser_spark.operators.dedup import lsh_buckets
-    from rag_pdf_parser_spark.streaming.minhash import (
-        store_meta_partitions,
-        store_partition_expr,
-    )
     C = spark.createDataFrame(
         [("f00", "an orphaned crash survivor document with plenty of "
                  "novel words describing centrifuges and flywheels")],
         "doc_id string, text string")
-    n_parts = store_meta_partitions(store)
     (lsh_buckets(C, "doc_id", "text")
      .withColumn("bp", store_partition_expr(F.col("band"), F.col("bucket"),
                                             n_parts))
@@ -918,6 +932,21 @@ def test_dedup_corpus_incremental_store(spark, tmp_path, docs_df):
     assert spark.read.parquet(canon).where(
         F.col("doc_id") == "f00").count() == 1
 
+    # a within-batch near-dup whose canonical the store rejects stays out:
+    # a00 ~ stored d07 (and a00 < d07, so folding the store pair into the
+    # component pass would wrongly keep a00), a01 ~ a00 but not ~ d07
+    words = rows[7]["text"].split(" ")
+    a00 = words[:4] + ["zzqqxxww"] + words[5:]
+    a01 = a00[:15] + ["kkvvjjyy"] + a00[16:25] + ["mmppttrr"] + a00[26:]
+    D = spark.createDataFrame(
+        [("a00", " ".join(a00)), ("a01", " ".join(a01)),
+         ("a02", "yet another novel text about glaciers calving into "
+                 "fjords under a pale arctic summer sun")],
+        "doc_id string, text string")
+    adm_d = sorted(r["doc_id"] for r in
+                   dedup_corpus_incremental(D, store, canon).collect())
+    assert adm_d == ["a02"], adm_d
+
     # the writer lease guards the increment too (concurrent increments
     # would both probe before either appends)
     from rag_pdf_parser_spark.plans.lease import LeaseHeldError, WriterLease
@@ -925,6 +954,30 @@ def test_dedup_corpus_incremental_store(spark, tmp_path, docs_df):
     with pytest.raises(LeaseHeldError):
         dedup_corpus_incremental(C, store, canon)
     holder.release()
+
+
+def test_incremental_admit_computes_signature_once(spark, tmp_path,
+                                                   docs_df, monkeypatch):
+    """One admit builds its MinHash bucket table once: the within-batch
+    pairs, the store probe and the store append all read it — on the
+    first batch (no store) and on a probing one."""
+    from rag_pdf_parser_spark.operators import dedup as dd
+
+    calls = []
+    real = dd.lsh_buckets
+
+    def counted(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(dd, "lsh_buckets", counted)
+    store, canon = str(tmp_path / "lsh"), str(tmp_path / "canon")
+    a = docs_df.where(F.col("doc_id") < "d10")
+    b = docs_df.where(F.col("doc_id") >= "d10")
+    for batch in (a, b):
+        calls.clear()
+        dd.dedup_corpus_incremental(batch, store, canon)
+        assert len(calls) == 1, len(calls)
 
 
 def test_flag_corpus_tokenizes_once_bit_identical(spark):
