@@ -48,8 +48,7 @@ from rag_pdf_parser_spark.operators.dedup import (
 )
 from rag_pdf_parser_spark.operators.extract import (explode_blocks,
                                                     explode_chunks,
-                                                    extract_docs,
-                                                    extract_docs_full)
+                                                    extract_docs)
 from rag_pdf_parser_spark.operators.multimodal import image_features
 from rag_pdf_parser_spark.operators.pagemerge import assemble_text_native
 from rag_pdf_parser_spark.operators.similarity import ann_topk, brute_force_topk
@@ -67,16 +66,16 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the full extraction pipeline in its production plan shape —
     distributed page generation → salted repartition → ONE fused
-    extract+chunk Arrow stage (`extract_docs_full`: blocks AND chunks nested,
-    no grouped-map shuffle) → per-doc stats as pure array expressions over
-    the nested columns (zero explode, zero self-join) → one broadcast join
-    against corpus language statistics from the driver's sf0.001 documents
-    table. Plan: scan → Exchange(xxhash64(url)) → MapInPandas → Project →
-    BroadcastHashJoin. Exactly one Python stage."""
-    from rag_pdf_parser_spark.operators.extract import extract_docs_full
+    extract+chunk Arrow stage (`extract_docs(chunks=True)`: blocks AND
+    chunks nested, no grouped-map shuffle) → per-doc stats as pure array
+    expressions over the nested columns (zero explode, zero self-join) → one
+    broadcast join against corpus language statistics from the sf0.001
+    documents table. Plan: generator (MapInPandas) →
+    Exchange(xxhash64(url)) → MapInArrow → Project → BroadcastHashJoin.
+    Exactly one extraction stage."""
     from rag_pdf_parser_spark.sources.pages import synth_pages_dist
 
-    docs = extract_docs_full(synth_pages_dist(spark, 300))
+    docs = extract_docs(synth_pages_dist(spark, 300), chunks=True)
     corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     lang_stats = corpus.groupBy(
         lang_expr(F.col("text")).alias("doc_lang")
@@ -892,14 +891,13 @@ def q_ann_topk(spark, sf_dir):
 
 
 def q_extract_pdf_mixed(spark, sf_dir):
-    """PDF lane + §2.9 dispatch registry: a mixed HTML/PDF corpus through
-    ONE extraction stage, kernel chosen per row by byte-sniffing
+    """PDF lane + §2.9 parser registry: a mixed HTML/PDF corpus through
+    ONE `mapInArrow` extraction stage, kernel chosen per row by byte-sniffing
     (stdlib-PDF text runs → XY-cut reading order → typed blocks)."""
     import pandas as pd
 
     from rag_pdf_parser_spark.datagen import make_pages
     from rag_pdf_parser_spark.kernel.pdfx import make_pdf
-    from rag_pdf_parser_spark.operators.registry import extract_dispatch
     from rag_pdf_parser_spark.schema import PAGES_SCHEMA
 
     rows = [(p["url"], None, p["html"], "", "en") for p in make_pages(80)]
@@ -909,7 +907,7 @@ def q_extract_pdf_mixed(spark, sf_dir):
         pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"]),
         schema=PAGES_SCHEMA,
     )
-    docs = extract_dispatch(pages)
+    docs = extract_docs(pages)
     return docs.select(
         "url", "doc_id", "charset", "failure_code", "n_pages",
         F.size("blocks").alias("n_blocks"),
@@ -920,9 +918,7 @@ def q_extract_pdf_mixed(spark, sf_dir):
 def q_chunk_provenance(spark, sf_dir):
     """J5: chunk↔block provenance — explode chunk.block_ids and equi-join
     back to blocks (chunking.py:161 / block.py:210-224 viewer path)."""
-    from rag_pdf_parser_spark.operators.extract import extract_docs_full
-
-    docs = extract_docs_full(synth_pages(spark, 100))
+    docs = extract_docs(synth_pages(spark, 100), chunks=True)
     chunks = docs.select(
         "doc_id", F.explode("chunks").alias("c")
     ).select("doc_id", F.col("c.chunk_id").alias("chunk_id"),
@@ -1138,13 +1134,15 @@ def q_bilingual_markdown(spark, sf_dir):
 def q_chunk_embedding_knn(spark, sf_dir):
     """Chunk-level similarity END-TO-END (the chunk.py:45 embedding slot
     exercised for real): synthetic pages → fused extract+chunk
-    (`extract_docs_full`, one Arrow stage) → explode_chunks → `embed_chunks`
-    (L2-normalized hashed bag-of-words, pure expressions) → brute-force
-    cosine top-3 for the 3 lexicographically-first chunk_ids. Golden oracle
-    re-computes the entire chain locally (oracles.chunk_knn_sql)."""
+    (`extract_docs(chunks=True)`, one Arrow stage) → explode_chunks →
+    `embed_chunks` (L2-normalized hashed bag-of-words, pure expressions) →
+    brute-force cosine top-3 for the 3 lexicographically-first chunk_ids.
+    Golden oracle re-computes the entire chain locally
+    (oracles.chunk_knn_sql)."""
     from rag_pdf_parser_spark.operators.chunking import embed_chunks
 
-    chunks = explode_chunks(extract_docs_full(synth_pages(spark, _N_PAGES_Q)))
+    chunks = explode_chunks(
+        extract_docs(synth_pages(spark, _N_PAGES_Q), chunks=True))
     emb = embed_chunks(chunks).select("chunk_id", "embedding")
     qs = emb.orderBy("chunk_id").limit(3)
     return brute_force_topk(emb, qs, k=3, id_col="chunk_id")

@@ -18,9 +18,11 @@ Reproduces the reference's IR-aware chunker semantics exactly
   min/max, block_ids, anchors, reading-order min/max, token_count on the
   merged text.
 
-Pure Python, no Spark imports — wrapped by ``applyInPandas`` in
-``rag_pdf_parser_spark.operators.chunking`` (grouped-map, sequential per doc,
-embarrassingly parallel across docs) and called directly by the pytest oracle.
+Pure Python, no Spark imports — called per row by the fused extraction
+stage (``operators.extract.extract_docs(chunks=True)``), wrapped by
+``applyInPandas`` in ``rag_pdf_parser_spark.operators.chunking`` (grouped-map,
+sequential per doc, embarrassingly parallel across docs) and called directly
+by the pytest oracle.
 """
 
 from __future__ import annotations

@@ -42,54 +42,6 @@ def chunk_documents(blocks: DataFrame, cfg: ChunkingConfig | None = None) -> Dat
     return blocks.groupBy("doc_id").applyInPandas(_chunk_group, CHUNKS_SCHEMA)
 
 
-def chunk_documents_sorted(blocks: DataFrame,
-                           cfg: ChunkingConfig | None = None) -> DataFrame:
-    """Scale-shape chunker: repartition by doc_id, sortWithinPartitions
-    (doc_id, reading_order), then ONE mapInPandas whose batches are split on
-    document boundaries (the last, possibly-incomplete doc of each Arrow
-    batch is carried into the next batch of the same partition).
-
-    Same results as `chunk_documents` (tested), but per-ARROW-BATCH pandas
-    overhead instead of per-GROUP — applyInPandas builds a pandas frame per
-    document, which at millions of tiny groups is the dominant cost; this
-    variant amortizes it ~batch_size× while keeping one shuffle.
-    """
-    cfg = cfg or ChunkingConfig()
-    n = int(blocks.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    src = (
-        blocks.select("doc_id", "page", "block_id", "type", "reading_order",
-                      "text", "markdown", "anchor")
-        .repartition(n, "doc_id")
-        .sortWithinPartitions("doc_id", "reading_order")
-    )
-
-    def _chunks_for(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for doc_id, g in pdf.groupby("doc_id", sort=False):
-            blist = g.to_dict("records")
-            for c in chunk_blocks(blist, doc_id, cfg):
-                out.append([c[k] for k in _CHUNK_COLS])
-        return pd.DataFrame(out, columns=_CHUNK_COLS)
-
-    def run(it):
-        carry: pd.DataFrame | None = None
-        for pdf in it:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if pdf.empty:
-                carry = None
-                continue
-            last_doc = pdf["doc_id"].iloc[-1]
-            done = pdf[pdf["doc_id"] != last_doc]
-            carry = pdf[pdf["doc_id"] == last_doc]
-            if len(done):
-                yield _chunks_for(done)
-        if carry is not None and len(carry):
-            yield _chunks_for(carry)
-
-    return src.mapInPandas(run, CHUNKS_SCHEMA)
-
-
 def embed_chunks(chunks: DataFrame, dim: int = 32) -> DataFrame:
     """Fill the chunk embedding slot (chunk.py:45) with an L2-normalized
     hashed bag-of-words vector — pure expressions, no UDF, no shuffle; the

@@ -1,13 +1,16 @@
-"""Extraction stage: pages → documents(blocks nested) → blocks (exploded).
+"""Extraction stage: pages → documents(blocks, optionally chunks, nested).
 
 Spark-first layout of the reference's per-file loop (SURVEY §3.1):
-the entire per-document pipeline (charset decode → DOM parse → boilerplate
-strip → typed blocks → reading order → markdown → page-merge assembly) runs
-inside ONE `mapInArrow` stage calling the pure-Python kernel
-(`rag_pdf_parser_spark.kernel.htmlx.extract_document`) per row of each Arrow
-batch — per-document imperative work is the one thing Spark built-ins cannot
-express (reference analog: ir_processor.py:96-264), and batching it through
-Arrow amortizes all serde.
+the entire per-document pipeline runs inside ONE `mapInArrow` stage calling
+a pure-Python kernel per row of each Arrow batch — per-document imperative
+work is the one thing Spark built-ins cannot express (reference analog:
+ir_processor.py:96-264), and batching it through Arrow amortizes all serde.
+
+The kernel is chosen per row (the parser registry, SURVEY §2.9): bytes that
+start with ``%PDF`` go to `kernel.pdfx.extract_pdf_document`, everything
+else to `kernel.htmlx.extract_document`. Both emit the same document dict,
+so every downstream operator (explode, enrichments, chunking, dedup, sinks)
+is lane-agnostic.
 
 Scale design:
 - **skew defusal**: upstream `repartition(n, xxhash64(url))` spreads hot
@@ -30,16 +33,14 @@ from pyspark.sql.pandas.types import to_arrow_type
 
 from ..kernel.chunker import chunk_blocks
 from ..kernel.htmlx import extract_document
-from ..schema import DOCS_FULL_SCHEMA, DOCS_SCHEMA
+from ..kernel.pdfx import extract_pdf_document
+from ..schema import CHUNK_STRUCT, DOCS_FULL_SCHEMA, DOCS_SCHEMA
 
-_DOC_COLS = [f.name for f in DOCS_SCHEMA.fields]
-_CHUNK_FIELDS = [f.name for f in DOCS_FULL_SCHEMA["chunks"].dataType.elementType.fields]
+_CHUNK_FIELDS = [f.name for f in CHUNK_STRUCT.fields]
 
-# Arrow twins of the output StructTypes, built once at import: the Arrow
-# stage yields RecordBatches directly (r7 — mapInPandas paid an extra
-# pandas round-trip per batch on both sides of the boundary; building the
-# pyarrow arrays ourselves measured 2.45 → 2.0 s on the 50k-page
-# extraction headline with byte-identical output, guide §4.2).
+# Arrow twins of the output StructTypes, built once at import: the stage
+# yields RecordBatches directly, with no pandas round-trip on either side of
+# the boundary.
 _DOCS_ARROW = pa.schema(
     [pa.field(f.name, to_arrow_type(f.dataType)) for f in DOCS_SCHEMA.fields])
 _DOCS_FULL_ARROW = pa.schema(
@@ -47,38 +48,42 @@ _DOCS_FULL_ARROW = pa.schema(
      for f in DOCS_FULL_SCHEMA.fields])
 
 
-def _append_doc_cols(cols: dict[str, list], url, raw: bytes, d: dict) -> None:
-    """Shared per-row column fill for both Arrow extraction stages (the
-    fused variant adds only `chunks` on top)."""
-    cols["url"].append(url)
-    cols["doc_id"].append(d["doc_id"])
-    cols["charset"].append(d["charset"])
-    cols["failure_code"].append(d["failure_code"])
-    cols["title"].append(d["title"])
-    cols["authors"].append(d["authors"])
-    cols["parser_version"].append(d["parser_version"])
-    cols["n_pages"].append(d["n_pages"])
-    cols["extracted_text"].append(d["extracted_text"])
-    cols["bytes_in"].append(len(raw))
-    cols["blocks"].append(d["blocks"])
+def _batch_fn(chunks: bool):
+    """The stage's Arrow batch function; `chunks` picks the output schema
+    and whether each row is also chunked."""
+    schema = _DOCS_FULL_ARROW if chunks else _DOCS_ARROW
 
+    def _extract_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in it:
+            cols: dict[str, list] = {name: [] for name in schema.names}
+            for url, html in zip(batch.column("url").to_pylist(),
+                                 batch.column("html").to_pylist()):
+                raw = bytes(html) if html is not None else b""
+                kernel = (extract_pdf_document if raw[:4] == b"%PDF"
+                          else extract_document)
+                d = {**kernel(raw), "url": url, "bytes_in": len(raw)}
+                if chunks:
+                    d["chunks"] = [
+                        {k: c[k] for k in _CHUNK_FIELDS}
+                        for c in chunk_blocks(d["blocks"], d["doc_id"])]
+                for name, col in cols.items():
+                    col.append(d[name])
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(cols[f.name], type=f.type) for f in schema],
+                schema=schema)
 
-def _extract_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    for batch in it:
-        urls = batch.column(batch.schema.get_field_index("url")).to_pylist()
-        htmls = batch.column(batch.schema.get_field_index("html")).to_pylist()
-        cols: dict[str, list] = {k: [] for k in _DOC_COLS}
-        for url, html in zip(urls, htmls):
-            raw = bytes(html) if html is not None else b""
-            _append_doc_cols(cols, url, raw, extract_document(raw))
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(cols[f.name], type=f.type) for f in _DOCS_ARROW],
-            schema=_DOCS_ARROW)
+    return _extract_batches
 
 
 def extract_docs(pages: DataFrame, partitions: int | None = None,
-                 salt: bool = True) -> DataFrame:
-    """pages(url, html, ...) → docs per DOCS_SCHEMA (blocks nested).
+                 salt: bool = True, chunks: bool = False) -> DataFrame:
+    """pages(url, html, ...) → docs per DOCS_SCHEMA (blocks nested), or per
+    DOCS_FULL_SCHEMA (blocks AND chunks nested) when `chunks` is set.
+
+    `chunks=True` fuses chunking into the same Arrow stage. Chunking is
+    per-doc sequential (SURVEY §2.5 W6), so fusing it costs no extra pass
+    and avoids the groupBy(doc_id) shuffle of the standalone grouped-map;
+    use `chunk_documents` only when chunking pre-existing block tables.
 
     `partitions`: salted-repartition width before the UDF; defaults to
     3× the session's shuffle partitions (UDF stages want finer tasks than
@@ -94,52 +99,17 @@ def extract_docs(pages: DataFrame, partitions: int | None = None,
         n = partitions or 3 * int(
             pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         src = src.repartition(n, F.xxhash64("url"))
-    return src.mapInArrow(_extract_batches, DOCS_SCHEMA)
-
-
-def _extract_full_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    full_cols = _DOC_COLS + ["chunks"]
-    for batch in it:
-        urls = batch.column(batch.schema.get_field_index("url")).to_pylist()
-        htmls = batch.column(batch.schema.get_field_index("html")).to_pylist()
-        cols: dict[str, list] = {k: [] for k in full_cols}
-        for url, html in zip(urls, htmls):
-            raw = bytes(html) if html is not None else b""
-            d = extract_document(raw)
-            _append_doc_cols(cols, url, raw, d)
-            cols["chunks"].append([
-                {k: c[k] for k in _CHUNK_FIELDS}
-                for c in chunk_blocks(d["blocks"], d["doc_id"])
-            ])
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(cols[f.name], type=f.type) for f in _DOCS_FULL_ARROW],
-            schema=_DOCS_FULL_ARROW)
+    return src.mapInArrow(_batch_fn(chunks),
+                          DOCS_FULL_SCHEMA if chunks else DOCS_SCHEMA)
 
 
 def extract_docs_full(pages: DataFrame, partitions: int | None = None,
                       salt: bool = True) -> DataFrame:
-    """Fused extraction + chunking in ONE Arrow stage (blocks and chunks both
-    nested). Chunking is per-doc sequential (SURVEY §2.5 W6), so fusing it
-    into the extraction pass costs nothing and removes the groupBy(doc_id)
-    shuffle + per-group pandas overhead of the standalone grouped-map —
-    the right plan shape at 10^12 docs. Use `chunk_documents` only when
-    chunking pre-existing block tables.
-
-    `salt=False` skips the defusal repartition (same contract as
-    `extract_docs`): correct when the input is already url-hash bucketed at
-    ingest — re-shuffling an already-bucketed 10^12-row corpus is pure waste.
-    """
-    src = pages.select("url", "html")
-    if salt:
-        # Same 3× default as extract_docs (r3 verdict #7 unification): the
-        # fused stage is MORE straggler-prone, not less — chunking adds
-        # per-doc cost on top of extraction, so uneven per-document work
-        # dominates the tail and finer tasks amortize it. Measured at sf0.1
-        # local[32] (salted, min-of-2 warm): 1× = 5.96 s, 3× = 4.71 s.
-        n = partitions or 3 * int(
-            pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        src = src.repartition(n, F.xxhash64("url"))
-    return src.mapInArrow(_extract_full_batches, DOCS_FULL_SCHEMA)
+    """`extract_docs(pages, partitions, salt, chunks=True)`. Kept only
+    because the benchmark harnesses (`bench.py`, `perfbench/core.py`)
+    import it under this name and signature and are not edited alongside
+    the library; new code calls `extract_docs` directly."""
+    return extract_docs(pages, partitions, salt, chunks=True)
 
 
 def explode_chunks(docs_full: DataFrame) -> DataFrame:

@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (training-data pipeline op).
 
-Two paths over `embeddings(vec_id, embedding: array<float>, label)`:
+Three paths over `embeddings(vec_id, embedding: array<float>, label)`:
 
 - **brute-force cosine top-k** (the correctness baseline): cross-join the
   (small, broadcast) query set against the corpus, cosine via
@@ -12,16 +12,17 @@ Two paths over `embeddings(vec_id, embedding: array<float>, label)`:
   At 10^12 scale the corpus signature is precomputed once and bucketed on
   disk, so a query touches only matching buckets (partition pruning).
 
-A numpy `mapInPandas` variant is provided for wide batches where the
-expression tree loses to BLAS — measured, not guessed (bench.py).
+- **IVF** (`ivf_topk`, `write_ivf_index` / `ivf_topk_from_index`): a
+  k-means coarse quantizer assigns every vector a list; a query re-ranks
+  only its n_probe nearest lists.
+
+All three rank with the same cosine expression and tiebreak, so
+`brute_force_topk` is the reference the other two are checked against.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -313,45 +314,4 @@ def ivf_topk_from_index(spark, path: str, centroids: np.ndarray,
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_id", "cand_id", "cosine", "rank")
-    )
-
-
-def brute_force_topk_numpy(corpus: DataFrame, queries_pdf: pd.DataFrame,
-                           k: int = 5, id_col: str = "vec_id",
-                           vec_col: str = "embedding") -> DataFrame:
-    """BLAS variant: queries as a driver-side matrix shipped in the closure
-    (small), corpus streamed through mapInPandas; each Arrow batch does one
-    matrix multiply. Returns per-batch local top-k; global top-k by a final
-    window (cheap: k × n_queries × n_partitions rows)."""
-    qids = queries_pdf[id_col].to_numpy()
-    qm = np.vstack(queries_pdf[vec_col].to_numpy()).astype("float64")
-    qn = qm / np.linalg.norm(qm, axis=1, keepdims=True)
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if pdf.empty:
-                continue
-            cm = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
-            cn = cm / np.maximum(np.linalg.norm(cm, axis=1, keepdims=True), 1e-12)
-            sims = qn @ cn.T  # (n_q, batch)
-            cand_ids = pdf[id_col].to_numpy()
-            out = []
-            top = min(k + 1, sims.shape[1])
-            for qi, qid in enumerate(qids):
-                idx = np.argpartition(-sims[qi], top - 1)[:top]
-                for ci in idx:
-                    if cand_ids[ci] != qid:
-                        out.append((int(qid), int(cand_ids[ci]),
-                                    round(float(sims[qi, ci]), 4)))
-            yield pd.DataFrame(out, columns=["query_id", "cand_id", "cosine"])
-
-    local = corpus.select(id_col, vec_col).mapInPandas(
-        run, "query_id long, cand_id long, cosine double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id")
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
     )

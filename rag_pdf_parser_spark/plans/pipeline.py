@@ -5,7 +5,7 @@ Spark-first restatement of the reference's CLI lifecycle (SURVEY §3.1):
     pages scan → resume anti-join (vs manifest)           [J3, persistent.py doc_status]
               → dedup anti-join (vs seen_hashes)          [F7/J2, main.py:43-46]
               → salted repartition by xxhash64(url)       [north_rule skew defusal]
-              → mapInPandas extraction (kernel)           [M1/M2 fused]
+              → mapInArrow extraction (kernel)            [M1/M2 fused]
               → docs + exploded blocks + chunks           [S3/W1/W6]
               → parquet sinks + manifest append           [K1-K4, K7]
 
@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 from ..operators.extract import (
     explode_blocks,
     explode_chunks,
-    extract_docs_full,
+    extract_docs,
 )
 from ..schema import MANIFEST_SCHEMA
 
@@ -278,11 +278,11 @@ class ExtractionPipeline:
             n_blocked = blocked_manifest.count()
             todo = flagged.where(~F.col("url_blocked")) \
                 .drop("url_blocked", "block_reason")
-        # fused extract+chunk: one Arrow stage, no chunking shuffle
-        docs = extract_docs_full(todo, self.partitions)
+        # fused extract(+chunk): one Arrow stage, no chunking shuffle
+        docs = extract_docs(todo, self.partitions, chunks=with_chunks)
 
         # manifest rows ride the same job: spark_partition_id() is stamped
-        # AFTER the salted repartition inside extract_docs_full, so each row
+        # AFTER the salted repartition inside extract_docs, so each row
         # records the partition that actually did the work.
         docs_m = docs.withColumn("partition_id", F.spark_partition_id())
         if curate:

@@ -1,9 +1,9 @@
 """Streaming extraction: the north-star pipeline as a Structured Streaming
 job — new page files appear in a directory (the streaming stand-in for an
 Iceberg table's incremental snapshots), each micro-batch runs the SAME
-extraction stage as batch (`extract_docs` / `extract_docs_full` — one Arrow
-`mapInPandas` per micro-batch), and results append to a parquet sink with
-a checkpoint for exactly-once resume.
+extraction stage as batch (`extract_docs` — one `mapInArrow` per
+micro-batch, so PDF rows take the PDF kernel here too), and results append
+to a parquet sink with a checkpoint for exactly-once resume.
 
 This is the incremental-crawl shape at 10^12 rows: `availableNow=True`
 drains the backlog in bounded micro-batches and stops (the reference's
@@ -32,9 +32,10 @@ def read_pages_stream(spark: SparkSession, src_dir: str,
 
 
 def extract_pages_stream(pages_stream: DataFrame, salt: bool = False) -> DataFrame:
-    """The SAME extraction operator as batch — mapInPandas applies per
-    micro-batch. salt=False by default: micro-batches are already small and
-    file-partitioned, so the defusal shuffle is pure overhead here."""
+    """The SAME extraction operator as batch — its one mapInArrow stage runs
+    per micro-batch, HTML and PDF rows alike. salt=False by default:
+    micro-batches are already small and file-partitioned, so the defusal
+    shuffle is pure overhead here."""
     return extract_docs(pages_stream, salt=salt)
 
 

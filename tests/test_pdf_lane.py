@@ -1,13 +1,13 @@
 """PDF lane: pure-stdlib PDF text extraction + XY-cut reading order, plus
-the content-type dispatch registry (SURVEY §2.9)."""
+the per-row kernel choice inside the one extraction stage (SURVEY §2.9)."""
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from rag_pdf_parser_spark.kernel.pdfx import extract_pdf_document, make_pdf
-from rag_pdf_parser_spark.operators.registry import extract_dispatch
-from rag_pdf_parser_spark.schema import PAGES_SCHEMA
+from rag_pdf_parser_spark.operators.extract import extract_docs
+from rag_pdf_parser_spark.schema import CHUNK_STRUCT, PAGES_SCHEMA
 
 
 class TestPdfKernel:
@@ -57,10 +57,13 @@ class TestPdfKernel:
 
 
 def test_dispatch_mixed_corpus(spark):
-    """One table mixing HTML and PDF rows → one dispatch stage, per-row
-    kernel selection (byte-sniffed), identical to per-kernel goldens."""
+    """One table mixing HTML and PDF rows → ONE mapInArrow extraction stage
+    (no pandas boundary), per-row kernel selection (byte-sniffed), identical
+    to per-kernel goldens; with chunks=True both lanes are chunked in that
+    same stage."""
     from rag_pdf_parser_spark.datagen import make_pages
     from rag_pdf_parser_spark.kernel import extract_document
+    from rag_pdf_parser_spark.kernel.chunker import chunk_blocks
 
     html_pages = make_pages(30)
     rows = [(p["url"], None, p["html"], "", "en") for p in html_pages]
@@ -68,7 +71,12 @@ def test_dispatch_mixed_corpus(spark):
     pdf_df = pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
     pages = spark.createDataFrame(pdf_df, schema=PAGES_SCHEMA)
 
-    out = {r["url"]: r for r in extract_dispatch(pages).collect()}
+    docs = extract_docs(pages)
+    plan = docs._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+    assert "MapInPandas" not in plan, plan
+
+    out = {r["url"]: r for r in docs.collect()}
     assert len(out) == 60
     for p in html_pages:
         g = extract_document(p["html"])
@@ -80,3 +88,13 @@ def test_dispatch_mixed_corpus(spark):
         assert r["extracted_text"] == g["extracted_text"]
         assert r["charset"] == "binary"
         assert len(r["blocks"]) == len(g["blocks"])
+
+    fields = [f.name for f in CHUNK_STRUCT.fields]
+    full = {r["url"]: r for r in extract_docs(pages, chunks=True).collect()}
+    for i in range(30):
+        g = extract_pdf_document(make_pdf(i))
+        want = [{k: c[k] for k in fields}
+                for c in chunk_blocks(g["blocks"], g["doc_id"])]
+        got = [c.asDict(recursive=True)
+               for c in full[f"pdf://doc/{i}"]["chunks"]]
+        assert want and got == want, i

@@ -305,7 +305,7 @@ def test_salted_repartition_defuses_host_skew(spark):
 
 
 def test_streaming_incremental_extraction(spark, tmp_path):
-    """Incremental extraction: the SAME mapInPandas extraction stage runs on
+    """Incremental extraction: the SAME mapInArrow extraction stage runs on
     a streaming pages source (micro-batched files); results equal batch."""
     from rag_pdf_parser_spark.operators.extract import extract_docs
     from rag_pdf_parser_spark.schema import PAGES_SCHEMA
@@ -1276,7 +1276,7 @@ def test_pipeline_curate_stage(spark, tmp_path):
 
     import pandas as pd
 
-    from rag_pdf_parser_spark.operators.extract import extract_docs_full
+    from rag_pdf_parser_spark.operators.extract import extract_docs
     from rag_pdf_parser_spark.plans.curate import curate_corpus
     from rag_pdf_parser_spark.schema import PAGES_SCHEMA
 
@@ -1345,7 +1345,7 @@ def test_pipeline_curate_stage(spark, tmp_path):
     p2 = ExtractionPipeline(spark, str(tmp_path / "cur2"), partitions=2)
     p2.run(pages, run_id="r1", with_chunks=False, curate=True)
     got = sorted(row["url"] for row in p2.read_docs().select("url").collect())
-    docs = extract_docs_full(pages, partitions=2) \
+    docs = extract_docs(pages, partitions=2) \
         .select("url", F.col("extracted_text").alias("text"))
     want = sorted(row["url"] for row in
                   curate_corpus(docs, id_col="url", text_col="text",

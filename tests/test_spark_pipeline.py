@@ -156,14 +156,11 @@ def test_determinism_across_partitionings(spark, pages_df):
 
 
 def test_fused_chunks_equal_grouped_map(spark, pages_df):
-    """extract_docs_full's fused chunking must equal the standalone
+    """extract_docs(chunks=True)'s fused chunking must equal the standalone
     applyInPandas chunker (same kernel, two plan shapes)."""
-    from rag_pdf_parser_spark.operators.extract import (
-        explode_chunks,
-        extract_docs_full,
-    )
+    from rag_pdf_parser_spark.operators.extract import explode_chunks
 
-    docs_full = extract_docs_full(pages_df)
+    docs_full = extract_docs(pages_df, chunks=True)
     fused = explode_chunks(docs_full).select(
         "chunk_id", "doc_id", "text", "token_count", "section"
     )
@@ -179,18 +176,18 @@ def test_salt_false_skips_shuffle(spark, pages_df):
     """Round-2 verdict #2: salt=False must NOT pay the defusal shuffle on
     either extraction path — pre-bucketed input (Iceberg bucketed at ingest)
     goes straight into the Arrow stage with no Exchange."""
-    from rag_pdf_parser_spark.operators.extract import extract_docs_full
-
-    for op in (extract_docs, extract_docs_full):
-        plan_unsalted = op(pages_df, salt=False)._jdf \
-            .queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan_unsalted, (op.__name__, plan_unsalted)
-        plan_salted = op(pages_df, salt=True)._jdf \
-            .queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" in plan_salted, op.__name__
+    for chunks in (False, True):
+        plan_unsalted = extract_docs(pages_df, salt=False, chunks=chunks) \
+            ._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan_unsalted, (chunks, plan_unsalted)
+        plan_salted = extract_docs(pages_df, salt=True, chunks=chunks) \
+            ._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange hashpartitioning" in plan_salted, chunks
     # and the fused output is identical either way
-    full = extract_docs_full(pages_df, salt=True).select("url", "doc_id")
-    unsalted = extract_docs_full(pages_df, salt=False).select("url", "doc_id")
+    full = extract_docs(pages_df, salt=True, chunks=True) \
+        .select("url", "doc_id")
+    unsalted = extract_docs(pages_df, salt=False, chunks=True) \
+        .select("url", "doc_id")
     assert full.exceptAll(unsalted).count() == 0
     assert unsalted.exceptAll(full).count() == 0
 
@@ -217,21 +214,6 @@ def test_render_markdown_doc(spark, pages_df, golden_docs):
             pos = nxt
         if g["n_pages"] > 1:
             assert "<!-- Page 2 -->" in md
-
-
-def test_sorted_chunker_equals_grouped_map(spark, pages_df):
-    """The batch-amortized mapInPandas chunker must produce exactly the
-    grouped-map chunker's rows."""
-    from rag_pdf_parser_spark.operators.chunking import chunk_documents_sorted
-
-    blocks = explode_blocks(extract_docs(pages_df))
-    a = chunk_documents(blocks).select("chunk_id", "doc_id", "text",
-                                       "token_count", "section", "block_ids")
-    b = chunk_documents_sorted(blocks).select("chunk_id", "doc_id", "text",
-                                              "token_count", "section",
-                                              "block_ids")
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
 
 
 def test_nested_lines_arrow_roundtrip(spark, pages_df, golden_docs):
@@ -269,12 +251,9 @@ def test_embed_chunks_fills_slot(spark, pages_df):
     """chunks.embedding: null at chunking time, filled by the embedding
     stage (unit-norm hashed-BoW), excluded by the JSONL sink."""
     from rag_pdf_parser_spark.operators.chunking import chunks_jsonl, embed_chunks
-    from rag_pdf_parser_spark.operators.extract import (
-        explode_chunks,
-        extract_docs_full,
-    )
+    from rag_pdf_parser_spark.operators.extract import explode_chunks
 
-    chunks = explode_chunks(extract_docs_full(pages_df))
+    chunks = explode_chunks(extract_docs(pages_df, chunks=True))
     assert chunks.where(F.col("embedding").isNotNull()).count() == 0
 
     emb = embed_chunks(chunks)
