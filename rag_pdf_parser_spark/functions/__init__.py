@@ -94,25 +94,6 @@ def url_normalize_expr(url: Column) -> Column:
     )
 
 
-def markdown_expr(btype: Column, text: Column) -> Column:
-    """Type-dispatched markdown — ir_processor.py:341-362 (X2) for the
-    text-like types (tables/figures render inside the extraction kernel)."""
-    return (
-        F.when(btype == "title", F.concat(F.lit("# "), text))
-        .when(btype == "section_header", F.concat(F.lit("## "), text))
-        .when(btype == "caption", F.concat(F.lit("*"), text, F.lit("*")))
-        .otherwise(text)
-    )
-
-
-# NOTE (r4): the former char_ngrams_expr / minhash_sha_expr helpers were
-# deleted — nothing referenced them, and the materialized-array explode
-# shape char_ngrams_expr embodied measured 37× slower than the
-# index-sequence Generate the shipping operators use
-# (operators/dedup.py minhash_signature). Shingle semantics live on in
-# kernel/twins.py:char_shingles (pure-Python oracle twin).
-
-
 def quality_features_expr(text: Column) -> dict[str, Column]:
     """Deterministic text-quality features (training-data pipeline op):
     length, alpha/digit/punct/space ratios, mean word length, stopword hits."""

@@ -878,8 +878,7 @@ def dedup_corpus_incremental(increment: DataFrame, store_dir: str,
            the within-batch pairs (`bucket_pairs`), the store probe and
            the store append,
         2. the buckets probe the store — read PRUNED to their bp
-           partitions (the streaming store's layout, streaming/minhash.py:
-           bp = pmod(xxhash64(band,bucket), P)),
+           partitions (bp = pmod(xxhash64(band,bucket), P)),
         3. within-batch and store candidates are VERIFIED in ONE
            same-shingle-space Jaccard pass (canonical texts fetched from
            `canon_dir` by a semi-join on the hit ids only). Dropped: the
@@ -911,19 +910,19 @@ def dedup_corpus_incremental(increment: DataFrame, store_dir: str,
 
     The whole run holds the writer lease on the STORE's parent directory
     (plans/lease.py — the same lock the store's maintenance job
-    `compact_batch_lsh_store` takes; the membership-only
-    `compact_lsh_store` REFUSES this id-bearing store, see
-    plans/maintenance.py): two concurrent increments would each probe
+    `compact_lsh_store` takes): two concurrent increments would each probe
     before the other appends and both admit near-duplicates of the
     other's admissions.
     Co-locate `canon_dir` under the same parent so one lease covers both
     tables.
 
-    The store schema extends the streaming gate's (band, bucket, bp) with
-    the OWNER id — the verify stage needs to know which canonical doc a
-    collision points at; the signature config rides the store meta and is
-    validated on every run (a different n/num_perm/bands/shingle would
-    make bucket values incomparable and silently admit every duplicate).
+    The store is the streaming gate's (streaming/minhash.py `open_store`
+    … `append_store`): (band, bucket, id, bp) rows, where the OWNER id
+    tells the verify stage which canonical doc a collision points at. The
+    signature config rides the store meta and is validated on every run
+    (a different n/num_perm/bands/shingle would make bucket values
+    incomparable and silently admit every duplicate), as are the bp
+    modulus and the partitioned layout.
 
     Semantics are FIRST-SEEN GREEDY, the standard incremental trade-off:
     equal to one-shot `dedup_corpus` over the accumulated corpus except
@@ -965,29 +964,15 @@ def _dedup_corpus_incremental_locked(spark, increment, store_dir, canon_dir,
 
     from ..plans.maintenance import recover_store
     from ..streaming.minhash import (
-        STORE_PARTITIONS,
-        _resolve_store_partitions,
-        read_store_meta,
-        read_store_pruned,
-        store_partition_expr,
-        write_store_meta,
+        append_store,
+        open_store,
+        probe_store,
+        store_buckets,
     )
 
-    recover_store(store_dir)
+    cfg = {"n": n, "num_perm": num_perm, "bands": bands, "shingle": shingle}
+    n_parts, has_store = open_store(store_dir, store_partitions, cfg)
     recover_store(canon_dir)
-    n_parts = _resolve_store_partitions(store_dir,
-                                        store_partitions or STORE_PARTITIONS)
-    cfg = {"lsh_n": n, "lsh_num_perm": num_perm, "lsh_bands": bands,
-           "lsh_shingle": shingle}
-    meta = read_store_meta(store_dir)
-    if meta is not None and any(k in meta and meta[k] != v
-                                for k, v in cfg.items()):
-        raise ValueError(
-            f"batch LSH index at {store_dir} was written with "
-            f"{ {k: meta.get(k) for k in cfg} }, but { cfg } was "
-            "requested — bucket values under different signature configs "
-            "are incomparable and every seen duplicate would be silently "
-            "re-admitted. Rebuild the index to change the config.")
 
     # resume semantics (retry of a COMPLETED run): an id already in the
     # canonical corpus is already admitted — anti-join it out up front.
@@ -1007,16 +992,9 @@ def _dedup_corpus_incremental_locked(spark, increment, store_dir, canon_dir,
         stats["n_already_admitted"] = 0
 
     out = _exact_staged(increment, id_col, text_col)
-    buckets = (
-        lsh_buckets(out, id_col, text_col, n, num_perm, bands, "xx", shingle)
-        .withColumn("bp", store_partition_expr(F.col("band"),
-                                               F.col("bucket"), n_parts))
-        .localCheckpoint(eager=True)
-    )
+    buckets = store_buckets(out, id_col, text_col, n_parts, cfg)
     cands = bucket_pairs(buckets, max_bucket)
 
-    has_store = _os.path.isdir(store_dir) and any(
-        d.startswith("bp=") for d in _os.listdir(store_dir))
     # `has_store and not has_canon` is the FIRST-EVER batch retried after a
     # crash between the two appends: every store row is an orphan (no
     # canonical text exists anywhere), so a collision can never verify and
@@ -1045,9 +1023,7 @@ def _dedup_corpus_incremental_locked(spark, increment, store_dir, canon_dir,
                 "duplicate of the indexed corpus. Restore canon_dir or "
                 "rebuild the store.")
     if has_store and has_canon:
-        # control-plane scalars: at most n_parts ints, never row data
-        bps = [r["bp"] for r in buckets.select("bp").distinct().collect()]
-        seen = read_store_pruned(spark, store_dir, bps)
+        seen = probe_store(spark, store_dir, buckets)
         cands = cands.unionByName(
             buckets.join(seen.select("band", "bucket",
                                      F.col("id").alias("id_b")),
@@ -1102,14 +1078,7 @@ def _dedup_corpus_incremental_locked(spark, increment, store_dir, canon_dir,
     # BUCKETS FIRST, canon second — the crash-safe order (see docstring
     # step 4: orphan bucket rows are inert; canon rows without index
     # entries would silently admit every future near-dup of them)
-    write_store_meta(store_dir, n_parts, extra=cfg)
-    # repartition by bp before the partitioned write: a W-partition
-    # DataFrame written partitionBy("bp") emits up to W×n_parts files per
-    # append (guide §6 small-files — every future pruned read pays the
-    # listing+open cost). Keyed by bp the append writes ≤ n_parts files.
-    (admitted_buckets.select("band", "bucket", "id", "bp")
-     .repartition(n_parts, "bp")
-     .write.mode("append").partitionBy("bp").parquet(store_dir))
+    append_store(store_dir, n_parts, cfg, admitted_buckets)
     admitted.write.mode("append").parquet(canon_dir)
     return admitted
 

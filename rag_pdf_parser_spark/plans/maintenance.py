@@ -4,7 +4,8 @@ The engine's two long-lived mutable tables are bare parquet appends:
 
 - ``seen_hashes`` (operators/dedup.py register_hashes — the reference's
   SQLite upsert, persistent.py:158-190, as a table), and
-- the streaming LSH bucket store (streaming/minhash.py).
+- the LSH bucket store shared by the streaming gate and the incremental
+  admit (streaming/minhash.py).
 
 Appends accumulate duplicate rows (harmless for correctness — both lookups
 are semi-joins — but scan cost grows without bound). SURVEY §1.1 maps these
@@ -86,76 +87,70 @@ def atomic_swap(path: str) -> None:
 
 
 def compact_table(spark: SparkSession, path: str,
-                  dedup_keys: list[str],
+                  dedup_keys: list[str] | None,
                   partition_by: list[str] | None = None,
                   target_files_per_partition: int = 1,
                   preserve_files: list[str] | None = None,
                   lease_stale_sec: float = 3600.0) -> dict:
     """Rewrite the parquet table at `path` with duplicate rows (by
-    `dedup_keys`) collapsed and small append files coalesced — the
-    MERGE-maintenance job. Preserves (or re-establishes) the
-    `partition_by` layout so downstream partition pruning keeps working.
-    Holds the parent-dir writer lease for the duration (module docstring).
+    `dedup_keys`, or whole rows when None) collapsed and small append
+    files coalesced — the MERGE-maintenance job. Preserves (or
+    re-establishes) the `partition_by` layout so downstream partition
+    pruning keeps working. Holds the parent-dir writer lease for the
+    duration (module docstring).
 
     Returns {"rows_before", "rows_after", "files_before", "files_after"}.
     """
     with WriterLease(os.path.dirname(path.rstrip("/")) or ".",
                      lease_stale_sec) as lease:
-        return _compact_table_locked(spark, path, dedup_keys, partition_by,
-                                     target_files_per_partition,
-                                     preserve_files, lease)
-
-
-def _compact_table_locked(spark: SparkSession, path: str,
-                          dedup_keys: list[str],
-                          partition_by: list[str] | None = None,
-                          target_files_per_partition: int = 1,
-                          preserve_files: list[str] | None = None,
-                          lease: WriterLease | None = None) -> dict:
-    recover_store(path)
-    df = spark.read.parquet(path)
-    files_before = sum(
-        len([f for f in fs if f.endswith(".parquet")])
-        for _, _, fs in os.walk(path))
-    rows_before = df.count()
-    compacted = df.dropDuplicates(dedup_keys)
-    if partition_by:
-        # one output file per partition dir (small dimension stores); at
-        # real scale tune target_files_per_partition to executor-sized files
-        compacted = compacted.repartition(
-            target_files_per_partition * max(
-                1, compacted.select(*partition_by).distinct().count()),
-            *partition_by)
-        writer = compacted.write.mode("overwrite").partitionBy(*partition_by)
-    else:
-        writer = compacted.coalesce(target_files_per_partition) \
-            .write.mode("overwrite")
-    # the tmp write is an ACTION that completes before any rename below —
-    # the source read and the swap never overlap
-    writer.parquet(_tmp(path))
-    # sidecar metadata (e.g. the LSH store's persisted bp modulus) must
-    # TRAVEL WITH the commit rename — copying it after the swap would leave
-    # a metadata-less store if the process dies in between (reopening the
-    # exact silent-mismatch hole the metadata exists to close)
-    for name in preserve_files or []:
-        src = os.path.join(path, name)
-        if os.path.exists(src):
-            shutil.copy2(src, os.path.join(_tmp(path), name))
-    if lease is not None:
+        # recover INSIDE the lease: an un-leased recover_store could
+        # resurrect the trash dir of a CONCURRENT compaction sitting
+        # between its two swap renames, colliding with its second rename
+        recover_store(path)
+        df = spark.read.parquet(path)
+        files_before = sum(
+            len([f for f in fs if f.endswith(".parquet")])
+            for _, _, fs in os.walk(path))
+        rows_before = df.count()
+        compacted = df.dropDuplicates(dedup_keys)
+        if partition_by:
+            # one output file per partition dir (small dimension stores);
+            # at real scale tune target_files_per_partition to
+            # executor-sized files
+            compacted = compacted.repartition(
+                target_files_per_partition * max(
+                    1, compacted.select(*partition_by).distinct().count()),
+                *partition_by)
+            writer = compacted.write.mode("overwrite") \
+                .partitionBy(*partition_by)
+        else:
+            writer = compacted.coalesce(target_files_per_partition) \
+                .write.mode("overwrite")
+        # the tmp write is an ACTION that completes before any rename
+        # below — the source read and the swap never overlap
+        writer.parquet(_tmp(path))
+        # sidecar metadata (e.g. the LSH store's persisted bp modulus)
+        # must TRAVEL WITH the commit rename — copying it after the swap
+        # would leave a metadata-less store if the process dies in between
+        # (reopening the exact silent-mismatch hole the metadata closes)
+        for name in preserve_files or []:
+            src = os.path.join(path, name)
+            if os.path.exists(src):
+                shutil.copy2(src, os.path.join(_tmp(path), name))
         # commit-point validation (same rule as pipeline._run): a long
-        # compaction whose lock went stale and was stolen must abort HERE
-        # — swapping would discard rows the stealing writer appended to
-        # the store after our read. touch() first so a healthy compaction
-        # never looks stale to the next acquirer.
+        # compaction whose lock went stale and was stolen must abort HERE —
+        # swapping would discard rows the stealing writer appended to the
+        # store after our read. touch() first so a healthy compaction never
+        # looks stale to the next acquirer.
         lease.assert_held()
         lease.touch()
-    atomic_swap(path)
-    out = spark.read.parquet(path)
-    files_after = sum(
-        len([f for f in fs if f.endswith(".parquet")])
-        for _, _, fs in os.walk(path))
-    return {"rows_before": rows_before, "rows_after": out.count(),
-            "files_before": files_before, "files_after": files_after}
+        atomic_swap(path)
+        out = spark.read.parquet(path)
+        files_after = sum(
+            len([f for f in fs if f.endswith(".parquet")])
+            for _, _, fs in os.walk(path))
+        return {"rows_before": rows_before, "rows_after": out.count(),
+                "files_before": files_before, "files_after": files_after}
 
 
 def compact_seen_hashes(spark: SparkSession, path: str) -> dict:
@@ -231,52 +226,19 @@ def compact_output(spark: SparkSession, out_dir: str,
 
 
 def compact_lsh_store(spark: SparkSession, path: str) -> dict:
-    """STREAMING LSH bucket store maintenance: one row per (band, bucket),
-    bp partition layout preserved for micro-batch pruning. The store's
-    _STORE_META.json (the persisted bp modulus — streaming/minhash.py)
-    rides the atomic swap via `preserve_files` — bp values are preserved
-    verbatim, so the modulus they were computed with must be too, through
-    every crash point.
-
-    REFUSES id-bearing stores (the batch-incremental index,
-    operators/dedup.py dedup_corpus_incremental): its rows carry an OWNER
-    id, and two canonical docs legitimately share a bucket below the
-    Jaccard threshold — deduping by (band, bucket) would keep one
-    arbitrary owner, and every future near-dup of the dropped owner would
-    probe, miss, and be admitted forever (silent loss, r5 verdict #1).
-    Use `compact_batch_lsh_store` for that store.
-
-    The recover + schema read happen INSIDE the leased section (review
-    finding): an un-leased recover_store here could resurrect the trash
-    dir of a CONCURRENT compaction sitting between its two swap renames,
-    making that compaction's second rename collide mid-commit."""
+    """LSH store maintenance (the one store the streaming gate and the
+    incremental admit share — streaming/minhash.py): whole-row duplicates
+    collapsed, bp partition layout preserved for pruned probes. Deduping
+    whole (band, bucket, id, bp) rows keeps every co-bucketed OWNER — two
+    canonical docs legitimately share a bucket below the Jaccard threshold,
+    and dropping either would let its future near-dups probe, miss and be
+    admitted forever. What gets reclaimed: rows re-appended by crashed and
+    retried writers, and the per-append small files. The store's
+    _STORE_META.json (bp modulus + signature config) rides the atomic swap
+    via `preserve_files` — bp values are preserved verbatim, so the
+    modulus they were computed with must be too, through every crash
+    point."""
     from ..streaming.minhash import _META_NAME
 
-    with WriterLease(os.path.dirname(path.rstrip("/")) or ".",
-                     3600.0) as lease:
-        recover_store(path)
-        if "id" in spark.read.parquet(path).schema.fieldNames():
-            raise ValueError(
-                f"LSH store at {path} carries an owner `id` column — this "
-                "is the batch-incremental index, and collapsing it to one "
-                "row per (band, bucket) would drop legitimate co-bucketed "
-                "owners and silently re-admit their future "
-                "near-duplicates. Run compact_batch_lsh_store instead.")
-        return _compact_table_locked(spark, path, ["band", "bucket"],
-                                     partition_by=["bp"],
-                                     preserve_files=[_META_NAME],
-                                     lease=lease)
-
-
-def compact_batch_lsh_store(spark: SparkSession, path: str) -> dict:
-    """BATCH-incremental LSH index maintenance (the id-bearing store
-    `dedup_corpus_incremental` appends to): one row per (band, bucket, id)
-    — the owner id is part of the identity, so co-bucketed canonical owners
-    all survive and keep rejecting their future near-dups. bp layout and
-    _STORE_META.json (bp modulus + signature config) ride the swap exactly
-    as in `compact_lsh_store`. What gets reclaimed: duplicate rows from
-    crashed-and-retried appends, and the per-increment small files."""
-    from ..streaming.minhash import _META_NAME
-
-    return compact_table(spark, path, ["band", "bucket", "id"],
-                         partition_by=["bp"], preserve_files=[_META_NAME])
+    return compact_table(spark, path, None, partition_by=["bp"],
+                         preserve_files=[_META_NAME])

@@ -8,17 +8,10 @@ fixture described in FIXTURES.md §1.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..datagen import pages_pandas
 from ..schema import PAGES_SCHEMA
-
-TPCH_TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
 
 def synth_pages(spark: SparkSession, n: int, seed: int = 42,
@@ -56,21 +49,6 @@ def synth_pages_dist(spark: SparkSession, n: int, seed: int = 42,
     )
 
 
-def write_pages(spark: SparkSession, n: int, path: str, seed: int = 42) -> str:
-    synth_pages(spark, n, seed).write.mode("overwrite").parquet(path)
-    return path
-
-
 def read_pages(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(PAGES_SCHEMA).parquet(path)
 
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for t in TPCH_TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            spark.read.parquet(p).createOrReplaceTempView(t)

@@ -18,10 +18,16 @@ the same hash-bucketed layout an Iceberg table would use. Each micro-batch
 4. writes the surviving documents to the output sink FIRST, then appends
    their buckets to the store (retry-safe order — see process()).
 
-Duplicate (band, bucket) rows accumulate across appends (they change no
-join result — the lookup is a semi-join); `plans.maintenance.compact_table`
-is the MERGE-equivalent job that rewrites the store deduplicated, keeping
-the partitioned layout.
+The store format is shared with the batch incremental admit
+(`operators.dedup.dedup_corpus_incremental`): both write (band, bucket, id,
+bp) rows through the `open_store` / `store_buckets` / `probe_store` /
+`append_store` functions below, so layout, modulus and signature-config
+checks live in one place. Rows carry the OWNER id (the admit's verify needs
+the canonical doc a collision points at; the gate ignores it). Duplicate
+rows accumulate across appends (they change no join result — the lookup is
+a semi-join); `plans.maintenance.compact_lsh_store` is the MERGE-equivalent
+job that rewrites the store with whole-row duplicates collapsed, keeping
+the partitioned layout and every owner.
 
 foreachBatch gives at-least-once semantics on retry: re-appending a
 surviving doc's buckets is harmless, and the output sink dedups by id
@@ -36,7 +42,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import lsh_buckets
+from ..plans.maintenance import recover_store
 
 #: store partition count — at 10^12 scale raise this so each partition's
 #: bucket file set stays executor-sized; the lookup cost per micro-batch is
@@ -50,15 +56,8 @@ STORE_PARTITIONS = 64
 
 _META_NAME = "_STORE_META.json"  # leading '_': ignored by Spark's listing
 
-
-def store_meta_partitions(seen_dir: str) -> int | None:
-    """The modulus the store at `seen_dir` was written with, or None if the
-    store doesn't exist yet."""
-    p = os.path.join(seen_dir, _META_NAME)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return int(json.load(f)["store_partitions"])
+#: the streaming gate's signature config (`lsh_buckets` keyword arguments)
+_GATE_LSH = {"n": 5, "num_perm": 8, "bands": 4, "shingle": "char"}
 
 
 def read_store_meta(seen_dir: str) -> dict | None:
@@ -74,12 +73,12 @@ def write_store_meta(seen_dir: str, n_parts: int,
                      extra: dict | None = None) -> None:
     """Atomic (tmp + rename) and idempotent: an in-place truncate-write
     could be caught mid-flush by a crash, leaving unparseable JSON that
-    bricks every later `_resolve_store_partitions`; a no-op when the meta
-    already holds the same values (the per-micro-batch call path).
+    bricks every later `open_store`; a no-op when the meta already holds
+    the same values (the per-micro-batch call path).
 
     `extra` merges additional layout-defining fields into the meta (the
-    incremental batch index persists its LSH signature config — bucket
-    values are only comparable when n/num_perm/bands/shingle match)."""
+    LSH signature config — bucket values are only comparable when
+    n/num_perm/bands/shingle match)."""
     existing = read_store_meta(seen_dir)
     if existing is not None \
             and existing.get("store_partitions") == int(n_parts) \
@@ -94,19 +93,60 @@ def write_store_meta(seen_dir: str, n_parts: int,
     os.replace(tmp, os.path.join(seen_dir, _META_NAME))
 
 
-def _resolve_store_partitions(seen_dir: str, requested: int) -> int:
-    persisted = store_meta_partitions(seen_dir)
-    if persisted is None:
-        return requested
-    if persisted != requested:
+def _meta_cfg(cfg: dict) -> dict:
+    """The meta fields recording an `lsh_buckets` config."""
+    return {f"lsh_{k}": v for k, v in cfg.items()}
+
+
+def open_store(store_dir: str, store_partitions: int | None,
+               cfg: dict) -> tuple[int, bool]:
+    """(n_parts, has_rows) for the LSH store at `store_dir`, after every
+    precondition a reader or appender relies on — filesystem listing and
+    the meta file only, no Spark job:
+
+    - a compaction that died between its two swap renames left the store
+      in the trash dir — restore it before anything reads or appends
+      (appending first would strand the old buckets forever);
+    - the persisted bp modulus must equal the requested one (reading with
+      another modulus would prune the WRONG partitions and silently
+      re-admit seen duplicates);
+    - the persisted signature config must equal `cfg` (bucket values
+      under different configs are incomparable);
+    - a dir with ROOT parquet files and no bp= partitions is a
+      pre-bp-layout (flat) store — treating it as empty would re-admit
+      every seen duplicate and then corrupt the layout by appending
+      partitions next to flat files.
+
+    `has_rows` is False for a missing store and for one holding only the
+    meta file (crash between meta write and first append)."""
+    recover_store(store_dir)
+    n_parts = store_partitions or STORE_PARTITIONS
+    meta = read_store_meta(store_dir) or {}
+    persisted = meta.get("store_partitions", n_parts)
+    if persisted != n_parts:
         raise ValueError(
-            f"LSH store at {seen_dir} was written with "
-            f"store_partitions={persisted}, but {requested} was requested — "
+            f"LSH store at {store_dir} was written with "
+            f"store_partitions={persisted}, but {n_parts} was requested — "
             "reading with a different modulus would prune the WRONG "
             "partitions and silently re-admit seen duplicates. Rewrite the "
-            "store (recomputing bp) to change the partition count."
-        )
-    return persisted
+            "store (recomputing bp) to change the partition count.")
+    want = _meta_cfg(cfg)
+    if any(k in meta and meta[k] != v for k, v in want.items()):
+        raise ValueError(
+            f"LSH store at {store_dir} was written with "
+            f"{ {k: meta.get(k) for k in want} }, but {want} was "
+            "requested — bucket values under different signature configs "
+            "are incomparable and every seen duplicate would be silently "
+            "re-admitted. Rebuild the store to change the config.")
+    entries = os.listdir(store_dir) if os.path.isdir(store_dir) else []
+    has_rows = any(d.startswith("bp=") for d in entries)
+    if not has_rows and any(f.endswith(".parquet") for f in entries):
+        raise ValueError(
+            f"LSH store at {store_dir} has the legacy FLAT layout (root "
+            "parquet files, no bp= partitions) — rewrite it into the "
+            "partitioned layout (read, add bp via store_partition_expr, "
+            "write partitionBy('bp'), write_store_meta) before resuming")
+    return n_parts, has_rows
 
 
 def store_partition_expr(band: Column, bucket: Column,
@@ -117,34 +157,63 @@ def store_partition_expr(band: Column, bucket: Column,
     return F.pmod(F.xxhash64(band, bucket), F.lit(n_parts)).cast("int")
 
 
+def store_buckets(docs: DataFrame, id_col: str, text_col: str,
+                  n_parts: int, cfg: dict) -> DataFrame:
+    """The (id, band, bucket, bp) table of `docs` under `cfg` — the same
+    dict `open_store` validates and `append_store` records.
+
+    localCheckpoint'ed (not cached): it feeds the bp collection, the probe
+    and the append, and the caller appends to the store the probe reads —
+    a checkpoint is immune to that invalidation and leaves nothing to
+    unpersist per micro-batch."""
+    from ..operators.dedup import lsh_buckets
+
+    return (
+        lsh_buckets(docs, id_col, text_col, flavor="xx", **cfg)
+        .withColumn("bp", store_partition_expr(F.col("band"),
+                                               F.col("bucket"), n_parts))
+        .localCheckpoint(eager=True)
+    )
+
+
 def read_store_pruned(spark: SparkSession, seen_dir: str,
                       bps: list[int]) -> DataFrame:
-    """The store lookup, pruned to the given bp partitions. `bps` is
-    control-plane metadata: at most STORE_PARTITIONS ints, collected from
-    the (checkpointed, small) batch bucket table — never row data. The
-    literal isin over the partition column becomes a static PartitionFilter
+    """The store lookup, pruned to the given bp partitions. The literal
+    isin over the partition column becomes a static PartitionFilter
     (asserted in tests): orphan partitions' files are never opened."""
     return spark.read.parquet(seen_dir).where(
         F.col("bp").isin([int(b) for b in bps]))
 
 
-def novel_against_store(batch: DataFrame, seen: DataFrame | None,
-                        id_col: str = "doc_id",
-                        text_col: str = "text",
-                        buckets: DataFrame | None = None,
-                        ) -> tuple[DataFrame, DataFrame]:
-    """(novel_docs, their_buckets): docs not LSH-colliding with `seen` nor
-    with an earlier (smaller-id) doc in the same batch. `buckets` lets the
-    caller pass a precomputed (already checkpointed) bucket table so the
-    partition-pruning bp collection and the gate share one computation.
+def probe_store(spark: SparkSession, store_dir: str,
+                buckets: DataFrame) -> DataFrame:
+    """The store rows sharing a bp partition with `buckets` (a
+    `store_buckets` table). The bp values are control-plane metadata: at
+    most n_parts ints collected from the checkpointed bucket table — never
+    row data. Call only when `open_store` reported rows."""
+    bps = [r["bp"] for r in buckets.select("bp").distinct().collect()]
+    return read_store_pruned(spark, store_dir, bps)
 
-    The bucket table is localCheckpoint'ed (not cached): it is read by both
-    returned frames AND the caller appends to the store the seen-join
-    reads — the same invalidation hazard as plans/pipeline.py; a checkpoint
-    is immune and leaves nothing to unpersist per micro-batch."""
-    if buckets is None:
-        buckets = lsh_buckets(batch, id_col, text_col) \
-            .localCheckpoint(eager=True)
+
+def append_store(store_dir: str, n_parts: int, cfg: dict,
+                 buckets: DataFrame) -> None:
+    """Record the layout (modulus + `cfg`) in the meta, then append the
+    (band, bucket, id, bp) rows of `buckets`. Repartitioned by bp before
+    the partitioned write: a W-partition DataFrame written partitionBy("bp")
+    emits up to W×n_parts files per append (every future pruned read pays
+    the listing+open cost); keyed by bp the append writes ≤ n_parts files."""
+    write_store_meta(store_dir, n_parts, extra=_meta_cfg(cfg))
+    (buckets.select("band", "bucket", "id", "bp")
+     .repartition(n_parts, "bp")
+     .write.mode("append").partitionBy("bp").parquet(store_dir))
+
+
+def novel_against_store(batch: DataFrame, buckets: DataFrame,
+                        seen: DataFrame | None, id_col: str = "doc_id",
+                        ) -> tuple[DataFrame, DataFrame]:
+    """(novel_docs, their_buckets): docs of `batch` whose `buckets` (a
+    `store_buckets` table) collide neither with `seen` nor with an earlier
+    (smaller-id) doc in the same batch."""
     hit = buckets.join(seen, ["band", "bucket"], "left_semi") if seen is not None \
         else buckets.limit(0)
     dup_ids = hit.select("id").distinct()
@@ -184,39 +253,12 @@ def run_streaming_dedup(spark: SparkSession, src_dir: str, schema,
 
     def process(batch: DataFrame, _bid: int) -> None:
         sp = batch.sparkSession
-        # a compaction that died between its two swap renames left the
-        # store in the trash dir — restore it before anything reads or
-        # appends (appending first would strand the old buckets forever)
-        from ..plans.maintenance import recover_store
-
-        recover_store(seen_dir)
-        n_parts = _resolve_store_partitions(seen_dir, store_partitions)
-        buckets = (
-            lsh_buckets(batch, id_col, text_col)
-            .withColumn("bp", store_partition_expr(
-                F.col("band"), F.col("bucket"), n_parts))
-            .localCheckpoint(eager=True)
-        )
-        bps = [r["bp"] for r in buckets.select("bp").distinct().collect()]
-        # a store dir that exists but holds only the meta file (crash
-        # between meta write and first append) has nothing to read yet;
-        # a dir with ROOT parquet files and no bp= partitions is a
-        # pre-bp-layout (flat) store — treating it as empty would silently
-        # re-admit every seen duplicate and then corrupt the layout by
-        # appending partitions next to flat files, so reject it loudly
-        # (same doctrine as the modulus-mismatch ValueError)
-        entries = os.listdir(seen_dir) if os.path.isdir(seen_dir) else []
-        has_bp = any(d.startswith("bp=") for d in entries)
-        if not has_bp and any(f.endswith(".parquet") for f in entries):
-            raise ValueError(
-                f"LSH store at {seen_dir} has the legacy FLAT layout (root "
-                "parquet files, no bp= partitions) — rewrite it into the "
-                "partitioned layout (read, add bp via store_partition_expr, "
-                "write partitionBy('bp'), write_store_meta) before resuming"
-            )
-        seen = read_store_pruned(sp, seen_dir, bps) if has_bp else None
-        novel, nb = novel_against_store(batch, seen, id_col, text_col,
-                                        buckets=buckets)
+        n_parts, has_rows = open_store(seen_dir, store_partitions,
+                                       _GATE_LSH)
+        buckets = store_buckets(batch, id_col, text_col, n_parts,
+                                _GATE_LSH)
+        seen = probe_store(sp, seen_dir, buckets) if has_rows else None
+        novel, nb = novel_against_store(batch, buckets, seen, id_col)
         # OUTPUT FIRST, store second: if the job dies between the writes, a
         # retry re-runs the batch against a store that does NOT yet contain
         # its own buckets, so the docs are re-emitted (at-least-once
@@ -224,9 +266,7 @@ def run_streaming_dedup(spark: SparkSession, src_dir: str, schema,
         # order would make a retried batch LSH-collide with itself and
         # silently drop every document.
         novel.write.mode("append").parquet(out_dir)
-        write_store_meta(seen_dir, n_parts)  # idempotent; before first rows
-        (nb.select("band", "bucket", "bp")
-         .write.mode("append").partitionBy("bp").parquet(seen_dir))
+        append_store(seen_dir, n_parts, _GATE_LSH, nb)
 
     q = (
         stream.writeStream.foreachBatch(process)

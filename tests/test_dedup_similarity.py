@@ -859,10 +859,10 @@ def test_dedup_corpus_incremental_store(spark, tmp_path, docs_df):
     # no dropped doc is
     from rag_pdf_parser_spark.operators.dedup import lsh_buckets
     from rag_pdf_parser_spark.streaming.minhash import (
-        store_meta_partitions,
+        read_store_meta,
         store_partition_expr,
     )
-    n_parts = store_meta_partitions(store)
+    n_parts = read_store_meta(store)["store_partitions"]
     cols = ["band", "bucket", "id", "bp"]
     want = sorted(tuple(r) for r in lsh_buckets(
         spark.read.parquet(canon), "doc_id", "text", num_perm=32, bands=8)
@@ -1184,16 +1184,13 @@ def test_incremental_first_batch_crash_retry(spark, tmp_path):
 
 def test_compact_batch_lsh_store_preserves_owners(spark, tmp_path):
     """r5 verdict #1: two canonical docs legitimately share a bucket below
-    the Jaccard threshold. The membership-only `compact_lsh_store` must
-    REFUSE the id-bearing store (collapsing to one arbitrary owner would
-    silently re-admit the dropped owner's future near-dups forever);
-    `compact_batch_lsh_store` keeps one row per (band, bucket, id) — after
-    it runs, a fresh near-dup of EACH owner is still rejected."""
+    the Jaccard threshold. Collapsing the store to one arbitrary owner per
+    (band, bucket) would silently re-admit the dropped owner's future
+    near-dups forever; `compact_lsh_store` dedups whole (band, bucket, id,
+    bp) rows — after it runs, a fresh near-dup of EACH owner is still
+    rejected."""
     from rag_pdf_parser_spark.operators.dedup import dedup_corpus_incremental
-    from rag_pdf_parser_spark.plans.maintenance import (
-        compact_batch_lsh_store,
-        compact_lsh_store,
-    )
+    from rag_pdf_parser_spark.plans.maintenance import compact_lsh_store
     from rag_pdf_parser_spark.streaming.minhash import read_store_meta
 
     common = " ".join(f"shared{i} token{i}" for i in range(30))
@@ -1217,15 +1214,12 @@ def test_compact_batch_lsh_store_preserves_owners(spark, tmp_path):
               .where(F.col("a.id") < F.col("b.id")).count())
     assert shared >= 1, "crafted docs no longer co-bucket; adjust texts"
 
-    with pytest.raises(ValueError, match="owner.*id"):
-        compact_lsh_store(spark, store)
-
     # grow some genuine append duplication (a crashed retry re-appending
-    # the same bucket rows), then compact with the id-preserving job
+    # the same bucket rows), then compact
     idx_rows = spark.read.parquet(store).localCheckpoint(eager=True)
     idx_rows.write.mode("append").partitionBy("bp").parquet(store)
     before_meta = read_store_meta(store)
-    res = compact_batch_lsh_store(spark, store)
+    res = compact_lsh_store(spark, store)
     assert res["rows_after"] < res["rows_before"]
     assert read_store_meta(store) == before_meta  # meta rode the swap
     after = spark.read.parquet(store)

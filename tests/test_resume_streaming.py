@@ -653,6 +653,20 @@ def test_streaming_minhash_dedup_gate(spark, tmp_path):
     kept2 = sorted(r["doc_id"] for r in spark.read.parquet(out).collect())
     assert kept2 == [1, 2, 3, 5, 7], kept2
 
+    # store invariant (shared with the incremental admit): the store rows
+    # are exactly the (band, bucket, id, bp) rows of the emitted docs
+    from rag_pdf_parser_spark.operators.dedup import lsh_buckets
+    from rag_pdf_parser_spark.streaming.minhash import store_partition_expr
+    cols = ["band", "bucket", "id", "bp"]
+    want = sorted(tuple(r) for r in lsh_buckets(
+        spark.read.parquet(out), num_perm=8, bands=4)
+        .withColumn("bp", store_partition_expr(F.col("band"),
+                                               F.col("bucket")))
+        .select(*cols).collect())
+    indexed = sorted(tuple(r) for r in
+                     spark.read.parquet(seen).select(*cols).collect())
+    assert indexed == want
+
 
 def test_streaming_store_is_partitioned_and_pruned(spark, tmp_path):
     """The r3 scale-killer fix: the LSH seen store is bp-partitioned and a
@@ -705,14 +719,27 @@ def test_streaming_store_is_partitioned_and_pruned(spark, tmp_path):
 
     # the modulus is persisted with the store and a mismatched rerun fails
     # LOUDLY instead of pruning the wrong partitions (r4 review finding)
-    from rag_pdf_parser_spark.streaming.minhash import store_meta_partitions
-    assert store_meta_partitions(seen) == STORE_PARTITIONS
+    from rag_pdf_parser_spark.streaming.minhash import (
+        read_store_meta,
+        write_store_meta,
+    )
+    meta = read_store_meta(seen)
+    assert meta["store_partitions"] == STORE_PARTITIONS
     # (Spark wraps the foreachBatch ValueError in StreamingQueryException)
     with pytest.raises(Exception, match="store_partitions"):
         run_streaming_dedup(spark, str(src) + "/part*.parquet", sch,
                             str(tmp_path / "out2"), seen,
                             str(tmp_path / "ck2"),
                             store_partitions=STORE_PARTITIONS * 2)
+
+    # the signature config is persisted too: a store built under another
+    # config holds incomparable buckets and is rejected, not probed
+    assert meta["lsh_num_perm"] == 8
+    write_store_meta(seen, STORE_PARTITIONS, extra={"lsh_num_perm": 32})
+    with pytest.raises(Exception, match="incomparable"):
+        run_streaming_dedup(spark, str(src) + "/part*.parquet", sch,
+                            str(tmp_path / "out3"), seen,
+                            str(tmp_path / "ck3"))
 
 
 def test_compaction_merge_equivalent(spark, tmp_path):
@@ -747,7 +774,7 @@ def test_compaction_merge_equivalent(spark, tmp_path):
     b.write.mode("append").partitionBy("bp").parquet(lsh_path)
     b.write.mode("append").partitionBy("bp").parquet(lsh_path)
     from rag_pdf_parser_spark.streaming.minhash import (
-        store_meta_partitions,
+        read_store_meta,
         write_store_meta,
     )
     write_store_meta(lsh_path, 64)
@@ -758,7 +785,7 @@ def test_compaction_merge_equivalent(spark, tmp_path):
     # the persisted modulus RIDES the atomic swap (copied into the tmp dir
     # before the commit rename — a crash at any point leaves either the old
     # store+meta or the new store+meta, never a meta-less store)
-    assert store_meta_partitions(lsh_path) == 64
+    assert read_store_meta(lsh_path)["store_partitions"] == 64
 
     # crash recovery: simulate death between the two swap renames
     import shutil as sh
@@ -804,8 +831,9 @@ def test_pipeline_recovers_half_swapped_seen_store(spark, tmp_path):
 
 def test_streaming_rejects_legacy_flat_store(spark, tmp_path):
     """A pre-bp-layout store (root parquet files, no partitions, no meta)
-    must be rejected loudly — treating it as empty would re-admit every
-    seen duplicate, then corrupt the layout by appending partitions."""
+    must be rejected loudly by the gate and the incremental admit —
+    treating it as empty would re-admit every seen duplicate, then corrupt
+    the layout by appending partitions."""
     from rag_pdf_parser_spark.streaming.minhash import run_streaming_dedup
 
     seen = str(tmp_path / "flat_seen")
@@ -825,6 +853,11 @@ def test_streaming_rejects_legacy_flat_store(spark, tmp_path):
         run_streaming_dedup(spark, str(src) + "/part*.parquet", sch,
                             str(tmp_path / "out"), seen,
                             str(tmp_path / "ck"))
+    # the incremental admit shares the store's open path: same refusal
+    from rag_pdf_parser_spark.operators.dedup import dedup_corpus_incremental
+    docs = spark.read.parquet(str(src / "f1"))
+    with pytest.raises(ValueError, match="FLAT layout"):
+        dedup_corpus_incremental(docs, seen, str(tmp_path / "canon"))
 
 
 def test_writer_lease_mutual_exclusion(spark, tmp_path):
