@@ -70,7 +70,7 @@ def entry(spark: SparkSession) -> DataFrame:
     chunks nested, no grouped-map shuffle) → per-doc stats as pure array
     expressions over the nested columns (zero explode, zero self-join) → one
     broadcast join against corpus language statistics from the sf0.001
-    documents table. Plan: generator (MapInPandas) →
+    documents table. Plan: generator (MapInArrow) →
     Exchange(xxhash64(url)) → MapInArrow → Project → BroadcastHashJoin.
     Exactly one extraction stage."""
     from rag_pdf_parser_spark.sources.pages import synth_pages_dist
@@ -1171,7 +1171,7 @@ def q_ivf_disk_topk(spark, sf_dir):
 
 
 def q_image_features(spark, sf_dir):
-    """Multimodal plumbing: binary column → mapInPandas feature extraction.
+    """Multimodal plumbing: binary column → mapInArrow feature extraction.
     Decode is the deterministic fake (no PIL in this container) but phash is
     the reference's REAL 8×8 average-hash (D3, deduplicator.py:85-101),
     re-computed independently by the DuckDB oracle."""

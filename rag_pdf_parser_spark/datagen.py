@@ -179,12 +179,3 @@ def make_page(i: int, seed: int = 42) -> dict:
 
 def make_pages(n: int, seed: int = 42) -> list[dict]:
     return [make_page(i, seed) for i in range(n)]
-
-
-def pages_pandas(n: int, seed: int = 42):
-    import pandas as pd
-
-    rows = make_pages(n, seed)
-    df = pd.DataFrame(rows)
-    df["warc_ts"] = pd.to_datetime(df["warc_ts"], utc=True).dt.tz_localize(None)
-    return df

@@ -2,7 +2,8 @@
 
 This package is the single source of truth for per-document semantics.
 It is imported both by the pytest oracle (golden generation) and by the
-Arrow-vectorized pandas UDFs in ``rag_pdf_parser_spark.operators``, so the
+Arrow stages (``mapInArrow`` / ``applyInArrow``) in
+``rag_pdf_parser_spark.operators``, so the
 Spark pipeline's extracted text is byte-identical to the goldens by
 construction (SURVEY.md §5 / §7.1).
 

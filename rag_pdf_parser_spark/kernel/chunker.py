@@ -20,7 +20,7 @@ Reproduces the reference's IR-aware chunker semantics exactly
 
 Pure Python, no Spark imports — called per row by the fused extraction
 stage (``operators.extract.extract_docs(chunks=True)``), wrapped by
-``applyInPandas`` in ``rag_pdf_parser_spark.operators.chunking`` (grouped-map,
+``applyInArrow`` in ``rag_pdf_parser_spark.operators.chunking`` (grouped-map,
 sequential per doc, embarrassingly parallel across docs) and called directly
 by the pytest oracle.
 """

@@ -16,7 +16,7 @@ north star (pdfminer-style text-box clustering → reading order):
   10px bands, left-to-right within a band; Python's sort is stable
   (extractor.py:356), which we preserve.
 
-Pure Python + stdlib; wrapped by an applyInPandas operator per (doc, page)
+Pure Python + stdlib; wrapped by an applyInArrow operator per (doc, page)
 in operators/layout.py and unit-tested directly.
 """
 

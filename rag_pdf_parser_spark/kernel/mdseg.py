@@ -15,7 +15,7 @@ Reproduces the reference's markdown→blocks parser semantics
 - everything else accumulates into paragraphs flushed on blank lines
   (qwen_parser.py:472-489).
 
-Pure Python; used by the mdseg operator (mapInPandas over a text/markdown
+Pure Python; used by the mdseg operator (mapInArrow over a text/markdown
 column) and the pytest oracle.
 """
 

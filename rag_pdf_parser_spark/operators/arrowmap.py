@@ -1,0 +1,69 @@
+"""The one Python boundary: the row → Arrow-batch loop every Python stage
+shares.
+
+A stage's kernel is pure Python and works on one row (or one group).
+`map_rows` makes it the body of a `mapInArrow` stage, `group_rows` the body
+of a `groupBy(...).applyInArrow` stage: input columns are read with
+`to_pylist`, the kernel's output rows are collected, and one `pa.array` per
+output column is built, typed from the Spark schema — no pandas frame on
+either side. `salted` is the skew defusal the row maps put in front.
+"""
+
+from __future__ import annotations
+
+from collections.abc import Callable, Iterable, Iterator
+
+import pyarrow as pa
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType
+
+
+def _to_batch(rows: Iterable, schema: pa.Schema) -> pa.RecordBatch:
+    """Output rows (values in schema order) → one column-wise batch."""
+    cols: list[list] = [[] for _ in schema.names]
+    for row in rows:
+        for col, v in zip(cols, row):
+            col.append(v)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+        schema=schema)
+
+
+def _arrow(schema: StructType | str) -> pa.Schema:
+    return to_arrow_schema(DataType.fromDDL(schema)
+                           if isinstance(schema, str) else schema)
+
+
+def map_rows(fn: Callable[..., Iterable], schema: StructType | str):
+    """`mapInArrow` function: `fn(*row)` gets one input row's values in
+    column order and returns zero or more output rows."""
+    arrow = _arrow(schema)
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows = zip(*(c.to_pylist() for c in batch.columns))
+            yield _to_batch((out for row in rows for out in fn(*row)), arrow)
+
+    run.__name__ = fn.__name__  # the plan shows the kernel, not `run`
+    return run
+
+
+def group_rows(fn: Callable[[dict], Iterable], schema: StructType | str):
+    """`applyInArrow` function: `fn` gets one group as `{column: values}`
+    and returns its output rows."""
+    arrow = _arrow(schema)
+
+    def run(table: pa.Table) -> pa.Table:
+        return pa.Table.from_batches([_to_batch(fn(table.to_pydict()), arrow)])
+
+    run.__name__ = fn.__name__
+    return run
+
+
+def salted(df: DataFrame, key: str, n: int | None = None) -> DataFrame:
+    """Spread rows uniformly by `xxhash64(key)` over `n` partitions (default:
+    the session's shuffle partitions)."""
+    n = n or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n, F.xxhash64(key))

@@ -1,10 +1,10 @@
-"""Chunking as a grouped-map: `groupBy(doc_id).applyInPandas(...)`.
+"""Chunking as a grouped map: `groupBy(doc_id).applyInArrow(...)`.
 
 The reference's chunker (/root/reference/src/processing/chunking.py:18-231)
 is inherently sequential per document — overlap re-seeding carries state
 across flush boundaries (SURVEY §2.5 W6) — and embarrassingly parallel across
-documents. That is exactly `applyInPandas`: one pandas group per doc_id, the
-pure-Python kernel chunker inside, Arrow both ways.
+documents. That is exactly a grouped map: one Arrow group per doc_id, the
+pure-Python kernel chunker inside (`operators.arrowmap.group_rows`).
 
 Scale: the shuffle key is doc_id (high cardinality, uniform by construction
 since doc_id = sha256 prefix), so no skew; group size is bounded by blocks
@@ -13,33 +13,30 @@ per document, not corpus size.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernel.chunker import ChunkingConfig, chunk_blocks
 from ..schema import CHUNKS_SCHEMA
+from .arrowmap import group_rows
 
-_CHUNK_COLS = [f.name for f in CHUNKS_SCHEMA.fields]
+_BLOCK_COLS = ["page", "block_id", "type", "reading_order", "text",
+               "markdown", "anchor"]
 
 
 def chunk_documents(blocks: DataFrame, cfg: ChunkingConfig | None = None) -> DataFrame:
     """blocks (flat, any order) → chunks per CHUNKS_SCHEMA."""
     cfg = cfg or ChunkingConfig()
 
-    def _chunk_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("reading_order", kind="stable")
-        doc_id = pdf["doc_id"].iloc[0]
-        blist = pdf[
-            ["page", "block_id", "type", "reading_order", "text", "markdown",
-             "anchor"]
-        ].to_dict("records")
-        chunks = chunk_blocks(blist, doc_id, cfg)
-        return pd.DataFrame(
-            [[c[k] for k in _CHUNK_COLS] for c in chunks], columns=_CHUNK_COLS
-        )
+    def chunk_group(g: dict[str, list]) -> list[list]:
+        blist = sorted((dict(zip(_BLOCK_COLS, vals))
+                        for vals in zip(*(g[c] for c in _BLOCK_COLS))),
+                       key=lambda b: b["reading_order"])  # stable
+        chunks = chunk_blocks(blist, g["doc_id"][0], cfg)
+        return [[c[k] for k in CHUNKS_SCHEMA.names] for c in chunks]
 
-    return blocks.groupBy("doc_id").applyInPandas(_chunk_group, CHUNKS_SCHEMA)
+    return blocks.groupBy("doc_id").applyInArrow(
+        group_rows(chunk_group, CHUNKS_SCHEMA), CHUNKS_SCHEMA)
 
 
 def embed_chunks(chunks: DataFrame, dim: int = 32) -> DataFrame:

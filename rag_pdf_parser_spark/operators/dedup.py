@@ -21,6 +21,7 @@ the hash (or none when bucketed storage pre-partitions by hash).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -703,13 +704,13 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
                 # IS the component label (same semantics as the loop)
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
-        out = [(x, find(x)) for x in parent]
-        spark = pairs.sparkSession
-        f = pairs.schema[id_a]
-        from pyspark.sql.types import StructField, StructType
-        schema = StructType([StructField("id", f.dataType, f.nullable),
-                             StructField("comp", f.dataType, f.nullable)])
-        return spark.createDataFrame(out, schema)
+        # built from Arrow so it plans as a LocalTableScan, not a pickled
+        # RDD that every consumer re-runs in Python workers
+        ids = list(parent)
+        schema = pairs.select(F.col(id_a).alias("id"),
+                              F.col(id_a).alias("comp")).schema
+        return pairs.sparkSession.createDataFrame(
+            pa.table({"id": ids, "comp": [find(x) for x in ids]}), schema)
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))

@@ -24,55 +24,31 @@ Scale design:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_type
 
 from ..kernel.chunker import chunk_blocks
 from ..kernel.htmlx import extract_document
 from ..kernel.pdfx import extract_pdf_document
-from ..schema import CHUNK_STRUCT, DOCS_FULL_SCHEMA, DOCS_SCHEMA
-
-_CHUNK_FIELDS = [f.name for f in CHUNK_STRUCT.fields]
-
-# Arrow twins of the output StructTypes, built once at import: the stage
-# yields RecordBatches directly, with no pandas round-trip on either side of
-# the boundary.
-_DOCS_ARROW = pa.schema(
-    [pa.field(f.name, to_arrow_type(f.dataType)) for f in DOCS_SCHEMA.fields])
-_DOCS_FULL_ARROW = pa.schema(
-    [pa.field(f.name, to_arrow_type(f.dataType))
-     for f in DOCS_FULL_SCHEMA.fields])
+from ..schema import DOCS_FULL_SCHEMA, DOCS_SCHEMA
+from .arrowmap import map_rows, salted
 
 
-def _batch_fn(chunks: bool):
-    """The stage's Arrow batch function; `chunks` picks the output schema
-    and whether each row is also chunked."""
-    schema = _DOCS_FULL_ARROW if chunks else _DOCS_ARROW
+def _extract_row(chunks: bool):
+    """The stage's row kernel; `chunks` picks the output columns and
+    whether each row is also chunked."""
+    names = (DOCS_FULL_SCHEMA if chunks else DOCS_SCHEMA).names
 
-    def _extract_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            cols: dict[str, list] = {name: [] for name in schema.names}
-            for url, html in zip(batch.column("url").to_pylist(),
-                                 batch.column("html").to_pylist()):
-                raw = bytes(html) if html is not None else b""
-                kernel = (extract_pdf_document if raw[:4] == b"%PDF"
-                          else extract_document)
-                d = {**kernel(raw), "url": url, "bytes_in": len(raw)}
-                if chunks:
-                    d["chunks"] = [
-                        {k: c[k] for k in _CHUNK_FIELDS}
-                        for c in chunk_blocks(d["blocks"], d["doc_id"])]
-                for name, col in cols.items():
-                    col.append(d[name])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], type=f.type) for f in schema],
-                schema=schema)
+    def extract(url, html):
+        raw = bytes(html) if html is not None else b""
+        kernel = (extract_pdf_document if raw[:4] == b"%PDF"
+                  else extract_document)
+        d = {**kernel(raw), "url": url, "bytes_in": len(raw)}
+        if chunks:  # the chunk struct keeps its fields, drops `doc_id`
+            d["chunks"] = chunk_blocks(d["blocks"], d["doc_id"])
+        return [[d[name] for name in names]]
 
-    return _extract_batches
+    return extract
 
 
 def extract_docs(pages: DataFrame, partitions: int | None = None,
@@ -98,9 +74,9 @@ def extract_docs(pages: DataFrame, partitions: int | None = None,
     if salt:
         n = partitions or 3 * int(
             pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        src = src.repartition(n, F.xxhash64("url"))
-    return src.mapInArrow(_batch_fn(chunks),
-                          DOCS_FULL_SCHEMA if chunks else DOCS_SCHEMA)
+        src = salted(src, "url", n)
+    schema = DOCS_FULL_SCHEMA if chunks else DOCS_SCHEMA
+    return src.mapInArrow(map_rows(_extract_row(chunks), schema), schema)
 
 
 def extract_docs_full(pages: DataFrame, partitions: int | None = None,

@@ -8,15 +8,12 @@ lane handles already-linearized text inputs like the `documents` table).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..kernel.layout import sort_boxes
+from ..kernel.layout import make_boxes, sort_boxes
 from ..kernel.mdseg import segment_markdown
+from .arrowmap import group_rows, map_rows, salted
 
 BOXES_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType(), False),
@@ -41,62 +38,36 @@ def xy_cut_order(boxes: DataFrame) -> DataFrame:
     a per-document total order, inherently sequential per doc and parallel
     across docs."""
 
-    def per_doc(pdf: pd.DataFrame) -> pd.DataFrame:
-        width = float(pdf["page_width"].iloc[0])
-        lines = [
-            {"line_id": int(r.line_id), "text": r.text,
-             "box": list(r.box)}
-            for r in pdf.itertuples()
-        ]
-        ordered = sort_boxes(lines, width)
+    def per_doc(g: dict[str, list]) -> list[tuple]:
+        lines = [{"line_id": i, "text": t, "box": b}
+                 for i, t, b in zip(g["line_id"], g["text"], g["box"])]
+        ordered = sort_boxes(lines, float(g["page_width"][0]))
         rank = {l["line_id"]: i for i, l in enumerate(ordered)}
-        pdf = pdf.copy()
-        pdf["reading_order"] = pdf["line_id"].map(rank).astype("int32")
-        return pdf
+        rows = zip(*(g[f] for f in BOXES_SCHEMA.names))
+        return [(*row, rank[lid]) for row, lid in zip(rows, g["line_id"])]
 
-    return boxes.groupBy("doc_id").applyInPandas(per_doc, ORDERED_SCHEMA)
+    return boxes.groupBy("doc_id").applyInArrow(
+        group_rows(per_doc, ORDERED_SCHEMA), ORDERED_SCHEMA)
 
 
 def segment_markdown_docs(docs: DataFrame, id_col: str = "doc_id",
                           text_col: str = "text") -> DataFrame:
-    """X7 as a mapInPandas stage over any text/markdown column — emits the
-    flat typed-block table."""
+    """X7 as one Arrow row-map stage over any text/markdown column — emits
+    the flat typed-block table."""
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                for b in segment_markdown(text or ""):
-                    rows.append((int(did), b["reading_order"], b["type"],
-                                 b["text"], b["markdown"]))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "reading_order", "type", "text", "markdown"],
-            )
+    def blocks(did, text):
+        return [(int(did), b["reading_order"], b["type"], b["text"],
+                 b["markdown"]) for b in segment_markdown(text or "")]
 
-    n = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        docs.select(id_col, text_col)
-        .repartition(n, F.xxhash64(F.col(id_col)))
-        .mapInPandas(run, MD_BLOCKS_SCHEMA)
-    )
+    return salted(docs.select(id_col, text_col), id_col).mapInArrow(
+        map_rows(blocks, MD_BLOCKS_SCHEMA), MD_BLOCKS_SCHEMA)
 
 
 def synth_boxes(spark, n_docs: int, seed: int = 42) -> DataFrame:
     """Deterministic positioned-boxes fixture, distributed generation."""
-    from ..kernel.layout import make_boxes
+    def gen(i):
+        lines, width = make_boxes(i, seed)
+        return [(i, width, l["line_id"], l["text"], l["box"]) for l in lines]
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for i in pdf["id"]:
-                lines, width = make_boxes(int(i), seed)
-                for l in lines:
-                    box = l["box"]
-                    rows.append((int(i), width, l["line_id"], l["text"],
-                                 [float(x) for x in box]))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "page_width", "line_id", "text", "box"]
-            )
-
-    return spark.range(n_docs).mapInPandas(gen, BOXES_SCHEMA)
+    return spark.range(n_docs).mapInArrow(
+        map_rows(gen, BOXES_SCHEMA), BOXES_SCHEMA)

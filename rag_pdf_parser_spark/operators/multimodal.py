@@ -15,28 +15,17 @@ re-implementation.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..kernel.imagex import image_features_row
+from ..kernel.imagex import (GRID, avg_hash_64, fake_decode_gray,
+                             image_features_row)
+from .arrowmap import map_rows, salted
 
 IMAGE_FEATURES_SCHEMA = (
     "media_id string, n_bytes long, entropy_q double, phash string, "
     "format_guess string"
 )
-
-
-def _salted_map(media: DataFrame, id_col: str, bytes_col: str, run,
-                schema: str) -> DataFrame:
-    """Shared shape of every media feature stage: project (id, bytes),
-    salt rows uniformly by id hash, one Arrow mapInPandas."""
-    src = media.select(id_col, bytes_col)
-    n = int(media.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return src.repartition(n, F.xxhash64(F.col(id_col))).mapInPandas(
-        run, schema)
 
 
 def decode_image_stub(raw: bytes):
@@ -52,23 +41,15 @@ def decode_image_stub(raw: bytes):
 
 def image_features(media: DataFrame, id_col: str = "media_id",
                    bytes_col: str = "content") -> DataFrame:
-    """mapInPandas feature extraction over a binary media column — the
-    decode slot of the pipeline. phash is a genuine 8×8 average-hash
+    """Arrow feature extraction over a binary media column — the decode
+    slot of the pipeline. phash is a genuine 8×8 average-hash
     (kernel.imagex.avg_hash_64) over the deterministic fake decode."""
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [
-                image_features_row(str(m), bytes(b) if b is not None else b"")
-                for m, b in zip(pdf[id_col], pdf[bytes_col])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_bytes", "entropy_q", "phash",
-                         "format_guess"],
-            )
+    def features(m, raw):
+        return [image_features_row(str(m), raw)]
 
-    return _salted_map(media, id_col, bytes_col, run, IMAGE_FEATURES_SCHEMA)
+    return salted(media.select(id_col, bytes_col), id_col).mapInArrow(
+        map_rows(features, IMAGE_FEATURES_SCHEMA), IMAGE_FEATURES_SCHEMA)
 
 
 def media_from_blocks(blocks: DataFrame) -> DataFrame:
@@ -122,38 +103,23 @@ VIDEO_FRAMES_SCHEMA = (
 def video_frame_features(media: DataFrame, frame_bytes: int = 4096,
                          every_n: int = 4, id_col: str = "media_id",
                          bytes_col: str = "content") -> DataFrame:
-    """Frame-SAMPLING plumbing for opaque video columns: treat the payload
-    as a sequence of fixed-size 'frames' (a real decoder would yield real
-    frames at timestamps — the codec libraries are not in this container,
-    so the frame iterator is this deterministic byte-slicer; the schema,
-    Arrow batch shape, nested output structure, and per-frame hashing ARE
-    the real plumbing), sample every `every_n`-th frame, and emit the
-    reference's genuine 8×8 average-hash per sampled frame — the input a
-    video near-dup stage (banded join over frame-hash arrays) consumes.
+    """Frame-SAMPLING plumbing for opaque video columns: the payload is cut
+    into fixed-size 'frames' (a deterministic byte-slicer stands in for the
+    absent codec libraries), every `every_n`-th frame is kept, and each gets
+    the reference's genuine 8×8 average-hash — the input of a video near-dup
+    stage. One row per media item with a nested frame array whose size is
+    capped by payload/frame_bytes/every_n; rows are salted by id hash like
+    image_features."""
+    def frames(m, raw):
+        raw = raw or b""
+        out = [(fi, off, avg_hash_64(fake_decode_gray(
+                   raw[off:off + frame_bytes])))
+               for fi, off in enumerate(range(0, len(raw), frame_bytes))
+               if fi % every_n == 0]
+        return [(str(m), len(raw), len(out), out)]
 
-    Output is one row per media item with a bounded nested frame array —
-    at 100 TB the per-row cost and output size are capped by
-    payload/frame_bytes/every_n, and rows are salted across partitions by
-    id hash exactly like image_features."""
-    from ..kernel.imagex import avg_hash_64, fake_decode_gray
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for m, b in zip(pdf[id_col], pdf[bytes_col]):
-                raw = bytes(b) if b is not None else b""
-                frames = []
-                for fi, off in enumerate(range(0, len(raw), frame_bytes)):
-                    if fi % every_n:
-                        continue
-                    chunk = raw[off:off + frame_bytes]
-                    frames.append(
-                        (fi, off, avg_hash_64(fake_decode_gray(chunk))))
-                out.append((str(m), len(raw), len(frames), frames))
-            yield pd.DataFrame(
-                out, columns=["media_id", "n_bytes", "n_frames", "frames"])
-
-    return _salted_map(media, id_col, bytes_col, run, VIDEO_FRAMES_SCHEMA)
+    return salted(media.select(id_col, bytes_col), id_col).mapInArrow(
+        map_rows(frames, VIDEO_FRAMES_SCHEMA), VIDEO_FRAMES_SCHEMA)
 
 
 RESIZED_SCHEMA = (
@@ -165,35 +131,27 @@ def resize_media(media: DataFrame, target_grid: int = 8,
                  id_col: str = "media_id",
                  bytes_col: str = "content") -> DataFrame:
     """RESIZE plumbing: media payload → target_grid×target_grid grayscale
-    thumbnail via block-mean pooling over the deterministic fake decode
-    (the real decoder slot is decode_image_stub — codec libs absent). The
-    nested-array output shape, pooling math, and Arrow batching are the
-    real pipeline pieces a thumbnail/feature stage needs; pooling is the
-    same arithmetic the reference's resize-before-VLM performs
-    (vlm.py:122-126 bounds the image to 1024px the same way)."""
-    from ..kernel.imagex import GRID, fake_decode_gray
-
+    thumbnail by block-mean pooling over the deterministic fake decode (the
+    real decoder slot is decode_image_stub). Pooling is the arithmetic of
+    the reference's resize-before-VLM (vlm.py:122-126)."""
     if GRID % target_grid != 0:
         raise ValueError(
             f"target_grid must divide the decode grid {GRID} "
             f"(got {target_grid})")  # a bare assert vanishes under -O
     blk = GRID // target_grid
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for m, b in zip(pdf[id_col], pdf[bytes_col]):
-                px = fake_decode_gray(bytes(b) if b is not None else b"")
-                pooled = []
-                for by in range(target_grid):
-                    for bx in range(target_grid):
-                        s = 0
-                        for y in range(by * blk, (by + 1) * blk):
-                            row = y * GRID
-                            for x in range(bx * blk, (bx + 1) * blk):
-                                s += px[row + x]
-                        pooled.append(s // (blk * blk))
-                out.append((str(m), target_grid, pooled))
-            yield pd.DataFrame(out, columns=["media_id", "grid", "pixels"])
+    def pool(m, raw):
+        px = fake_decode_gray(raw or b"")
+        pooled = []
+        for by in range(target_grid):
+            for bx in range(target_grid):
+                s = 0
+                for y in range(by * blk, (by + 1) * blk):
+                    row = y * GRID
+                    for x in range(bx * blk, (bx + 1) * blk):
+                        s += px[row + x]
+                pooled.append(s // (blk * blk))
+        return [(str(m), target_grid, pooled)]
 
-    return _salted_map(media, id_col, bytes_col, run, RESIZED_SCHEMA)
+    return salted(media.select(id_col, bytes_col), id_col).mapInArrow(
+        map_rows(pool, RESIZED_SCHEMA), RESIZED_SCHEMA)

@@ -23,7 +23,39 @@ case guide §2.5 says to repartition right after.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 from pyspark.sql import DataFrame
+
+_PKG = "org.apache.spark.sql.execution."
+
+
+def plan_nodes(df: DataFrame) -> Iterator:
+    """Every node of `df`'s executed physical plan (py4j objects),
+    depth-first. Descends into what a plain child walk misses: AQE's
+    current plan, a query stage's plan, and inner children (a cached
+    relation's plan). Match nodes by class or `nodeName()`, never by plan
+    text — a scan path or a column name can spell any operator's name."""
+    forname = df.sparkSession._jvm.Class.forName
+    aqe = forname(_PKG + "adaptive.AdaptiveSparkPlanExec")
+    stage = forname(_PKG + "adaptive.QueryStageExec")
+    todo = [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        yield node
+        if aqe.isInstance(node):
+            todo.append(node.executedPlan())
+        elif stage.isInstance(node):
+            todo.append(node.plan())
+        else:
+            for seq in (node.children(), node.innerChildren()):
+                todo.extend(seq.apply(i) for i in range(seq.size()))
+
+
+def has_exchange(df: DataFrame) -> bool:
+    """True iff `df`'s plan holds a shuffle or broadcast Exchange node."""
+    exchange = df.sparkSession._jvm.Class.forName(_PKG + "exchange.Exchange")
+    return any(exchange.isInstance(n) for n in plan_nodes(df))
 
 
 def ensure_parallelism(df: DataFrame, factor: int = 1) -> DataFrame:
@@ -34,21 +66,18 @@ def ensure_parallelism(df: DataFrame, factor: int = 1) -> DataFrame:
     SPARK-23207).
 
     The guard only ever probes EXCHANGE-FREE plans (scans, checkpoints,
-    projections): under AQE, `df.rdd` on a plan containing a shuffle or
-    broadcast MATERIALIZES those stages as real hidden jobs at
-    plan-build time — and that work re-runs when the returned DataFrame
-    actually executes (r7 review finding: the curate pipeline's probe
-    re-ran the whole extraction scan). A plan that already contains an
-    Exchange doesn't need this guard anyway: its post-shuffle width is
-    AQE-governed (see session.py's minPartitionSize floor). For
-    exchange-free plans `df.rdd` compiles without running a job, and the
-    partition count it reports (file splits / checkpoint partitions) is
-    exact."""
+    projections): under AQE, `df.rdd` on a plan holding a shuffle or
+    broadcast runs those stages as hidden jobs at plan-build time, and
+    that work re-runs when the returned DataFrame executes. A plan with an
+    Exchange node (`has_exchange`, cached inputs' plans included) doesn't
+    need the guard anyway: its post-shuffle width is AQE-governed (see
+    session.py's minPartitionSize floor). For exchange-free plans `df.rdd`
+    compiles without a job, and its partition count (file splits /
+    checkpoint partitions) is exact."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism * factor
     try:
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        if "Exchange" in plan:
+        if has_exchange(df):
             return df
         current = df.rdd.getNumPartitions()
     except Exception:  # noqa: BLE001 — un-plannable input (e.g. a

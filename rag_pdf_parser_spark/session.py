@@ -2,7 +2,7 @@
 
 Local-mode settings tuned for this sandbox (local[N], single JVM); the same
 conf keys are what a 1000-executor deployment would tune — AQE on (runtime
-coalesce + skew-join splitting), Arrow enabled for every pandas-UDF stage,
+coalesce + skew-join splitting), Arrow enabled for pandas conversions,
 UTC session timezone pinned for DuckDB-oracle comparability.
 """
 

@@ -104,11 +104,12 @@ def main() -> None:
         entry_plan,
         ["MapInArrow", "BroadcastHashJoin"],
     ))
-    # two Python stages: the distributed fixture GENERATOR (mapInPandas —
-    # the table-scan stand-in; production reads parquet/Iceberg) + ONE
-    # Arrow-native extraction stage (r7).
-    assert entry_plan.count("MapInPandas (") == 1, "entry: ONE generator stage"
-    assert entry_plan.count("MapInArrow (") == 1, "entry: ONE extract stage"
+    # two Python stages, both Arrow maps: the distributed fixture GENERATOR
+    # (the table-scan stand-in; production reads parquet/Iceberg) + ONE
+    # extraction stage. No pandas boundary anywhere.
+    assert entry_plan.count("MapInArrow (") == 2, \
+        "entry: generator + ONE extract stage"
+    assert entry_plan.count("MapInPandas (") == 0, "entry: no pandas boundary"
     assert "FlatMapGroupsInPandas" not in entry_plan, "no grouped-map in entry"
 
     # 7. as-of join: union-window formulation — ONE exchange, NO join node

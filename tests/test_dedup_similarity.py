@@ -1,6 +1,8 @@
 """Dedup family (exact / MinHash-LSH / SimHash / Jaccard) and similarity
 search — verified against independent Python recomputation."""
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -399,6 +401,62 @@ def test_ensure_parallelism_skips_exchange_plans(spark):
     assert spread.rdd.getNumPartitions() \
         == spark.sparkContext.defaultParallelism
 
+
+def test_ensure_parallelism_ignores_exchange_in_scan_path(spark):
+    """The guard looks for Exchange plan NODES: a one-file parquet under a
+    directory whose name contains "Exchange" is still an exchange-free
+    scan and must be spread like the same file anywhere else. (A short
+    temp dir keeps the name inside the plan text's 100-char location.)"""
+    import tempfile
+
+    from rag_pdf_parser_spark.operators.spread import ensure_parallelism
+
+    target = spark.sparkContext.defaultParallelism
+    with tempfile.TemporaryDirectory() as tmp:
+        for name in ("Exchange_rates", "plain"):
+            path = os.path.join(tmp, name)
+            spark.range(200).coalesce(1).write.parquet(path)
+            df = spark.read.parquet(path)
+            assert df.rdd.getNumPartitions() == 1
+            assert ensure_parallelism(df).rdd.getNumPartitions() == target, \
+                name
+
+
+def test_ensure_parallelism_starts_no_job_on_shuffled_input(spark):
+    """A shuffled input, and the same input cached, come back untouched —
+    and deciding so runs no Spark job (the plan walk never calls .rdd)."""
+    from rag_pdf_parser_spark.operators.spread import ensure_parallelism
+
+    sc = spark.sparkContext
+    shuffled = (spark.range(100).groupBy((F.col("id") % 7).alias("k"))
+                .count())
+    cached = shuffled.groupBy("k").count().cache()
+    cached.count()
+    try:
+        sc.setJobGroup("spread-probe", "ensure_parallelism job probe")
+        for df in (shuffled, cached):
+            assert ensure_parallelism(df) is df
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup("spread-probe")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        cached.unpersist()
+
+
+def test_connected_components_fast_path_plans_local_scan(spark):
+    """The union-find result is built from Arrow: it plans as a
+    LocalTableScan, not an ExistingRDD scan that re-runs Python."""
+    from rag_pdf_parser_spark.operators.dedup import connected_components
+    from rag_pdf_parser_spark.operators.spread import plan_nodes
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)],
+                                  "id_a long, id_b long")
+    comp = connected_components(pairs)
+    names = [n.nodeName() for n in plan_nodes(comp)]
+    assert "LocalTableScan" in names, names
+    assert not any("ExistingRDD" in n for n in names), names
+    assert sorted(map(tuple, comp.collect())) == [
+        (1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]
 
 def test_decontaminate_respects_n(spark):
     """Regression: the n parameter must thread through to gram construction

@@ -266,3 +266,40 @@ def test_embed_chunks_fills_slot(spark, pages_df):
     assert all(r["d"] == 32 for r in rows)
     assert all(abs(r["sq"] - 1.0) < 1e-5 for r in rows)
     assert "embedding" not in chunks_jsonl(emb).columns
+
+
+def test_python_stages_cross_one_arrow_boundary(spark):
+    """Every Python stage plans as an Arrow map (MapInArrow) or grouped
+    map (FlatMapGroupsInArrow); no plan carries a pandas UDF node. The
+    driver-built fixture (synth_pages) has no Python stage at all."""
+    from rag_pdf_parser_spark.operators.layout import (
+        segment_markdown_docs, synth_boxes, xy_cut_order)
+    from rag_pdf_parser_spark.operators.multimodal import (
+        image_features, resize_media, video_frame_features)
+    from rag_pdf_parser_spark.operators.spread import plan_nodes
+    from rag_pdf_parser_spark.schema import BLOCKS_FLAT_SCHEMA
+    from rag_pdf_parser_spark.sources.pages import synth_pages, synth_pages_dist
+
+    media = spark.createDataFrame([("m1", b"\x00\x01")],
+                                  "media_id string, content binary")
+    md = spark.createDataFrame([(1, "# t\n\nbody")], "doc_id long, text string")
+    blocks = spark.createDataFrame([], BLOCKS_FLAT_SCHEMA)
+    pages = synth_pages(spark, 4)
+    arrow_map, arrow_group = "MapInArrow", "FlatMapGroupsInArrow"
+    cases = {
+        "image_features": (image_features(media), arrow_map),
+        "video_frame_features": (video_frame_features(media), arrow_map),
+        "resize_media": (resize_media(media), arrow_map),
+        "segment_markdown_docs": (segment_markdown_docs(md), arrow_map),
+        "synth_boxes": (synth_boxes(spark, 3), arrow_map),
+        "xy_cut_order": (xy_cut_order(synth_boxes(spark, 3)), arrow_group),
+        "chunk_documents": (chunk_documents(blocks), arrow_group),
+        "synth_pages_dist": (synth_pages_dist(spark, 4), arrow_map),
+        "synth_pages": (pages, "LocalTableScan"),
+        "extract_docs": (extract_docs(pages), arrow_map),
+        "extract_docs_chunks": (extract_docs(pages, chunks=True), arrow_map),
+    }
+    for name, (df, expected) in cases.items():
+        names = {n.nodeName() for n in plan_nodes(df)}
+        assert expected in names, (name, names)
+        assert not names & {"MapInPandas", "FlatMapGroupsInPandas"}, (name, names)
