@@ -67,11 +67,6 @@ def anchor_expr(page: Column, btype: Column, order: Column) -> Column:
     return F.format_string("[@p%d_%s%d]", page, abbrev, order)
 
 
-def doc_id_expr(html: Column) -> Column:
-    """sha256[:16] of source bytes — block.py:226-230."""
-    return F.substring(F.sha2(html, 256), 1, 16)
-
-
 def content_hash_expr(text: Column) -> Column:
     """sha256[:12] of text — chunk.py:86-88 (D5)."""
     return F.substring(F.sha2(text, 256), 1, 12)
@@ -236,8 +231,7 @@ def gopher_features_expr(text: Column, toks: Column | None = None,
                          bigrams: Column | None = None) -> dict[str, Column]:
     """Gopher/C4-style web-text quality filters (Rae et al. 2021 'Scaling
     Language Models' §A1.1; Raffel et al. 2020 C4 heuristics) as pure
-    expressions — the standard pre-training corpus gate, word-level subset
-    (line-level repetition lives in `line_features_expr`):
+    expressions — the standard pre-training corpus gate, word-level subset:
 
     - word count + mean word length windows,
     - fraction of words containing an alphabetic char,
@@ -317,38 +311,6 @@ def gopher_features_expr(text: Column, toks: Column | None = None,
         "has_brace": text.contains("{"),
         "ends_terminal_punct": text.rlike('[.!?"]\\s*$'),
         "gopher_keep": keep,
-    }
-
-
-def line_features_expr(text: Column) -> dict[str, Column]:
-    """Line-level Gopher repetition/format features (duplicate-line
-    fraction via sorted-run fold, bullet-start and ellipsis-end line
-    fractions, terminal-punctuation line fraction). Same sorted-run trick
-    as the bigram stat — O(n log n) per doc, no joins."""
-    lines = F.filter(F.split(text, "\n", -1),
-                     lambda l: F.length(F.trim(l)) > 0)
-    n_lines = F.greatest(F.size(lines).cast("double"), F.lit(1.0))
-    sorted_l = F.array_sort(lines)
-    dup_acc = F.aggregate(
-        sorted_l,
-        F.struct(F.lit("").alias("prev"), F.lit(0).alias("dups")),
-        lambda acc, l: F.struct(
-            l.alias("prev"),
-            (acc["dups"] + F.when(l == acc["prev"], 1).otherwise(0))
-            .alias("dups"),
-        ),
-    )
-    frac = lambda cond: (  # noqa: E731
-        F.size(F.filter(lines, cond)).cast("double") / n_lines)
-    return {
-        "n_lines": F.size(lines).cast("long"),
-        "dup_line_frac": F.round(dup_acc["dups"].cast("double") / n_lines, 6),
-        "frac_bullet_lines": F.round(
-            frac(lambda l: F.trim(l).rlike("^[-*•]")), 6),
-        "frac_ellipsis_lines": F.round(
-            frac(lambda l: l.rlike(r"(\.\.\.|…)\s*$")), 6),
-        "frac_lines_term_punct": F.round(
-            frac(lambda l: l.rlike('[.!?"]\\s*$')), 6),
     }
 
 

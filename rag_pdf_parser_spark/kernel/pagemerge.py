@@ -37,10 +37,3 @@ def merge_kind(prev_tail: str, next_head: str) -> str | None:
         return "space"
     return None
 
-
-def join_pieces(prev: str, nxt: str, kind: str | None, sep: str = "\n\n") -> str:
-    if kind == "hyphen":
-        return prev[:-1] + nxt
-    if kind == "space":
-        return prev + " " + nxt
-    return prev + sep + nxt

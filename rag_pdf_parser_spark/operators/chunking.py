@@ -51,22 +51,3 @@ def embed_chunks(chunks: DataFrame, dim: int = 32) -> DataFrame:
         "embedding", F.transform(vec, lambda v: v.cast("float"))
     )
 
-
-def chunks_jsonl(chunks: DataFrame) -> DataFrame:
-    """K3 sink projection — the embedding column is excluded per
-    /root/reference/src/models/chunk.py:52-60 (chunk JSONL never carries
-    vectors; they live in a separate embeddings table)."""
-    chunks = chunks.drop("embedding")
-    return chunks.withColumn(
-        "citation",
-        F.when(
-            F.col("page_start") == F.col("page_end"),
-            F.format_string("[Source: %s, p.%d, blocks: %d]",
-                            F.col("doc_id"), F.col("page_start"),
-                            F.size("block_ids")),
-        ).otherwise(
-            F.format_string("[Source: %s, p.%d-%d, blocks: %d]",
-                            F.col("doc_id"), F.col("page_start"),
-                            F.col("page_end"), F.size("block_ids"))
-        ),
-    )

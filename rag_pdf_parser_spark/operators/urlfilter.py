@@ -15,9 +15,9 @@ side table and left-joined the hit urls back — correct, but with a
 heavily-blocked corpus the hit set outgrows the broadcast threshold and the
 join-back degrades to a full corpus shuffle on url; per-depth probes have
 no join-back at all). If the blocklist ever outgrows broadcast (1e8+
-entries), fall back to exploding `host_suffixes_expr` and shuffle-joining
-on suffix. Pattern rules are a fixed list of RE2-safe regexes compiled into
-ONE alternation evaluated JVM-side.
+entries), the fallback is to explode each host's suffix chain and
+shuffle-join on suffix. Pattern rules are a fixed list of RE2-safe regexes
+compiled into ONE alternation evaluated JVM-side.
 
 The reference has no URL gate (single-directory file tool); this is an
 engine-added operator per the §2.11 training-data inventory.
@@ -198,32 +198,6 @@ def url_host_expr(url: Column) -> Column:
     # the strip, 'ads.tracker.example.' would evade a 'tracker.example'
     # blocklist entry (every suffix would carry the trailing dot)
     return F.regexp_replace(host, r"\.+$", "")
-
-
-def host_suffixes_expr(host: Column,
-                       max_labels: int = MAX_HOST_LABELS) -> Column:
-    """Array of the host's registrable suffix chain, shortest last:
-    'a.b.example.com' → ['a.b.example.com', 'b.example.com', 'example.com',
-    'com']. Built with one split + slice/array_join per depth — constant
-    expression count, no HOF-over-derived-array O(n²).
-
-    Hosts deeper than `max_labels` keep their last `max_labels` labels AND
-    the full host itself (one extra element, no extra fan-out class) — the
-    cap bounds cost, but an exact-host blocklist entry deeper than the cap
-    must still match (r4 ADVICE finding: the capped chain silently dropped
-    the full host, so a 7-label exact entry never hit)."""
-    labels = F.split(host, r"\.")
-    n = F.size(labels)
-    start = F.greatest(n - max_labels + 1, F.lit(1))
-    suffixes = [F.when(n > max_labels, host)] + [
-        F.when(n - k >= start,
-               F.array_join(F.slice(labels, n - k, k + 1), "."))
-        for k in range(max_labels - 1, -1, -1)
-    ]
-    # empty suffixes (empty host, empty labels) must not survive: an empty
-    # string would equi-match a blank blocklist line and flag everything
-    return F.filter(F.array(*suffixes),
-                    lambda s: s.isNotNull() & (F.length(s) > 0))
 
 
 def _normalize_entries(entries: DataFrame, col: str) -> DataFrame:

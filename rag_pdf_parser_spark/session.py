@@ -1,6 +1,7 @@
 """SparkSession factory with scale-aware defaults.
 
-Local-mode settings tuned for this sandbox (local[N], single JVM); the same
+Local-mode defaults are sized from the host: all its CPUs and half its
+physical RAM (SPARK_GRAFT_CPUS / SPARK_DRIVER_MEM override them). The same
 conf keys are what a 1000-executor deployment would tune — AQE on (runtime
 coalesce + skew-join splitting), Arrow enabled for pandas conversions,
 UTC session timezone pinned for DuckDB-oracle comparability.
@@ -13,13 +14,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _host_driver_mem() -> str:
+    """Half the host's physical RAM, capped at 24g."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(24 << 10, ram_mb // 2)}m"
+
+
 def get_spark(master: str | None = None, app: str = "rag_pdf_parser_spark",
               shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # ~cores in local mode; a cluster deployment would use 2-3× total cores
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
+        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "*"
         shuffle_partitions = cpus if n == "*" else int(n)
     # AQE coalescing is BYTE-based; with parallelismFirst (default true)
     # the post-shuffle floor is minPartitionSize (1m default) — for
@@ -42,7 +49,8 @@ def get_spark(master: str | None = None, app: str = "rag_pdf_parser_spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _host_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.sql.warehouse.dir", "/tmp/rpps-warehouse")

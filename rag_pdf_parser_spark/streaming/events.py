@@ -1,115 +1,22 @@
-"""Streaming operators over the `events` table.
+"""Session windows over the `events` table.
 
-The reference is strictly batch (SURVEY §2.10); its nearest streaming analog
-is resume-by-status ≈ `availableNow` + checkpoint. These operators provide
-the idiomatic Structured Streaming slots: watermarked tumbling-window
-aggregation and an incremental extraction micro-batch.
-
-Both have batch twins (same transformations on a static DataFrame) so the
-DuckDB oracle can verify the aggregation logic; the streaming tests verify
-that the streaming execution produces the same rows as the batch twin.
+The reference is strictly batch (SURVEY §2.10). `user_sessions` is the
+session-window aggregation the `user_sessions` query runs; the DuckDB
+oracle re-derives it independently.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def hourly_event_stats(events: DataFrame) -> DataFrame:
-    """Tumbling 1-hour window per event_type: count + sum(value).
-    Works identically on a static or streaming DataFrame."""
-    # parquet ts is TIMESTAMP_NTZ; watermarks need TIMESTAMP (session tz is
-    # pinned UTC so the cast is value-preserving)
-    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (
-        events.withWatermark("ts", "1 hour")
-        if events.isStreaming
-        else events
-    ).groupBy(
-        F.window("ts", "1 hour").alias("w"), "event_type"
-    ).agg(
-        F.count("*").alias("n_events"),
-        F.round(F.sum("value"), 4).alias("sum_value"),
-    ).select(
-        F.col("w.start").alias("window_start"),
-        "event_type",
-        "n_events",
-        "sum_value",
-    )
-
-
-def user_running_stats_stateful(events_stream: DataFrame) -> DataFrame:
-    """Custom stateful streaming operator via applyInPandasWithState:
-    per-user running event count + running value sum, state carried across
-    micro-batches (the §2.10 'custom stateful operator' slot). Emits the
-    updated totals for every user seen in each batch."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState
-
-    output_schema = "user_id long, n_events long, total_value double"
-    state_schema = "n long, v double"
-
-    def update(key, pdfs, state: GroupState):
-        n, v = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            v += float(pdf["value"].sum())
-        state.update((n, v))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n],
-             "total_value": [round(v, 4)]}
-        )
-
-    return events_stream.groupBy("user_id").applyInPandasWithState(
-        update, output_schema, state_schema, "update", "NoTimeout"
-    )
-
-
-def run_stream_once(spark: SparkSession, src_parquet: str, schema,
-                    checkpoint: str, query_name: str = "hourly") -> DataFrame:
-    """Drive the streaming aggregation over a static parquet dir with
-    availableNow semantics (processAllAvailable), collecting to a memory
-    sink — the local-mode harness for streaming correctness tests."""
-    stream = (
-        spark.readStream.schema(schema).parquet(src_parquet)
-    )
-    agg = hourly_event_stats(stream)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
-def dedup_events(events: DataFrame, watermark: str = "1 hour",
-                 keys: tuple[str, ...] = ("event_id",)) -> DataFrame:
-    """Streaming dedup slot: `dropDuplicatesWithinWatermark` on the event
-    key — duplicates arriving within the watermark horizon are suppressed
-    and the dedup state ages out with the watermark (bounded memory, the
-    only shape that survives an unbounded stream). Static DataFrames take
-    the plain distinct path, so batch and streaming twins agree."""
-    ev = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    if ev.isStreaming:
-        return ev.withWatermark("ts", watermark) \
-            .dropDuplicatesWithinWatermark(list(keys))
-    return ev.dropDuplicates(list(keys))
 
 
 def user_sessions(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Session-window aggregation per user (`F.session_window`): a session
     is a maximal run of events whose inter-event gap is < `gap`; the window
-    end is last-event + gap (Spark semantics, [start, end)). Works on static
-    or streaming input (watermark applied when streaming). The DuckDB oracle
-    re-derives sessions with the gaps-and-islands formulation."""
+    end is last-event + gap (Spark semantics, [start, end)). The DuckDB
+    oracle re-derives sessions with the gaps-and-islands formulation."""
     ev = events.withColumn("ts", F.col("ts").cast("timestamp"))
-    if ev.isStreaming:
-        ev = ev.withWatermark("ts", gap)
     return (
         ev.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(

@@ -1,0 +1,91 @@
+"""Guards for the library's shape, checked on the source with `ast`.
+
+1. No pandas UDF and no pandas import anywhere in the library: every
+   Python stage crosses the JVM boundary as Arrow (`operators/arrowmap`).
+2. Every public operator has a production caller. A test is not a
+   caller: a def under operators/, streaming/, functions/, plans/ or
+   sources/ must be referenced from the library, the driver entry, the
+   bench, perfbench or a script, or be a named user entry point.
+"""
+
+import ast
+import os
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+LIB = os.path.join(ROOT, "rag_pdf_parser_spark")
+OPERATOR_DIRS = ("operators", "streaming", "functions", "plans", "sources")
+
+# user entry points (batch/incremental curation, streaming runs, store and
+# output maintenance): called by deployments, not from inside the repo
+ENTRY_POINTS = {"curate_corpus", "curate_corpus_incremental",
+                "run_streaming_dedup", "run_extraction_stream",
+                "compact_seen_hashes", "compact_lsh_store", "compact_output"}
+
+
+def _py_files(*paths):
+    for p in paths:
+        if os.path.isfile(p):
+            yield p
+            continue
+        for d, _, files in os.walk(p):
+            yield from (os.path.join(d, f) for f in sorted(files)
+                        if f.endswith(".py"))
+
+
+def _parse(path):
+    with open(path, encoding="utf-8") as f:
+        return ast.parse(f.read(), path)
+
+
+def _names_used(tree):
+    """Every identifier a module refers to: names, attributes and
+    imported names (a def's own name is not a use)."""
+    used = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Name):
+            used.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            used.add(n.attr)
+        elif isinstance(n, ast.ImportFrom):
+            used.update(a.name for a in n.names)
+    return used
+
+
+def test_no_pandas_udf_or_pandas_import_in_library():
+    bad = []
+    for path in _py_files(LIB):
+        rel = os.path.relpath(path, ROOT)
+        for n in ast.walk(_parse(path)):
+            if isinstance(n, ast.Import):
+                mods = [a.name for a in n.names]
+            elif isinstance(n, ast.ImportFrom):
+                mods = [n.module or ""]
+                bad += [(rel, n.lineno, a.name) for a in n.names
+                        if a.name == "pandas_udf"]
+            else:
+                name = getattr(n, "attr", getattr(n, "id", None))
+                if name and (name in ("mapInPandas", "pandas_udf")
+                             or name.startswith("applyInPandas")):
+                    bad.append((rel, n.lineno, name))
+                continue
+            bad += [(rel, n.lineno, m) for m in mods
+                    if m == "pandas" or m.startswith("pandas.")]
+    assert not bad, bad
+
+
+def test_every_public_operator_has_a_production_caller():
+    callers = [LIB, os.path.join(ROOT, "__spark_entry__.py"),
+               os.path.join(ROOT, "bench.py"),
+               os.path.join(ROOT, "perfbench"), os.path.join(ROOT, "scripts")]
+    used = set()
+    for path in _py_files(*callers):
+        used |= _names_used(_parse(path))
+
+    orphans = []
+    for path in _py_files(*(os.path.join(LIB, d) for d in OPERATOR_DIRS)):
+        for n in _parse(path).body:
+            if (isinstance(n, (ast.FunctionDef, ast.ClassDef))
+                    and not n.name.startswith("_")
+                    and n.name not in used and n.name not in ENTRY_POINTS):
+                orphans.append(f"{os.path.relpath(path, ROOT)}:{n.name}")
+    assert not orphans, orphans

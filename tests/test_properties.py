@@ -173,52 +173,8 @@ def test_xxh_twin_never_collides_with_type_confusion(a, b):
 
 
 class TestGopherQuality:
-    """Gopher/C4 quality expressions vs an independent per-string Python
-    twin (the driver query webtext_quality additionally has a full DuckDB
-    twin; line-level features have no driver slot so this is their gate)."""
-
-    TEXTS = [
-        "The quick brown fox jumps over the lazy dog. " * 12,
-        "short",
-        "# # # # # spam spam spam spam spam " * 10,
-        "- bullet one\n- bullet two\nplain line.\nAnother line!\n\n"
-        "trailing ellipsis...\nsame\nsame\nsame",
-        "word " * 60,
-        "lorem ipsum dolor { code(); }",
-        "",
-        "一 二 三 四 五 multi 语言 mixed text here now",
-    ]
-
-    @staticmethod
-    def _py_line_feats(t):
-        import re
-        lines = [l for l in t.split("\n") if l.strip(" ")]
-        n = max(len(lines), 1.0)
-        dups = len(lines) - len(set(lines))
-        bullet = sum(1 for l in lines if re.match(r"^[-*•]", l.strip(" ")))
-        ell = sum(1 for l in lines
-                  if re.search(r"(\.\.\.|…)[ \t\x0b\f\r]*$", l))
-        term = sum(1 for l in lines
-                   if re.search(r'[.!?"][ \t\x0b\f\r]*$', l))
-        return (len(lines), round(dups / n, 6), round(bullet / n, 6),
-                round(ell / n, 6), round(term / n, 6))
-
-    def test_line_features_match_python_twin(self, spark):
-        from rag_pdf_parser_spark.functions import line_features_expr
-
-        df = spark.createDataFrame(
-            [(i, t) for i, t in enumerate(self.TEXTS)], "i int, text string")
-        feats = line_features_expr(F.col("text"))
-        rows = {r["i"]: r for r in df.select(
-            "i", *[c.alias(k) for k, c in feats.items()]).collect()}
-        for i, t in enumerate(self.TEXTS):
-            n_lines, dup, bullet, ell, term = self._py_line_feats(t)
-            r = rows[i]
-            assert r["n_lines"] == n_lines, (i, r)
-            assert r["dup_line_frac"] == dup, (i, r)
-            assert r["frac_bullet_lines"] == bullet, (i, r)
-            assert r["frac_ellipsis_lines"] == ell, (i, r)
-            assert r["frac_lines_term_punct"] == term, (i, r)
+    """Gopher/C4 quality expressions (the driver query webtext_quality
+    has a full DuckDB twin)."""
 
     def test_gopher_keep_sanity(self, spark):
         from rag_pdf_parser_spark.functions import gopher_features_expr

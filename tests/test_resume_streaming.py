@@ -9,9 +9,6 @@ from pyspark.sql import functions as F
 from rag_pdf_parser_spark.operators.multimodal import image_features
 from rag_pdf_parser_spark.plans.pipeline import ExtractionPipeline
 from rag_pdf_parser_spark.sources.pages import synth_pages
-from rag_pdf_parser_spark.streaming.events import hourly_event_stats, run_stream_once
-
-SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_resume_no_double_processing(spark, tmp_path):
@@ -113,7 +110,10 @@ def test_pipeline_json_sinks_with_commit_layout(spark, tmp_path):
     assert r["docs_processed"] == 20
     docs = p.read_docs(fmt="json")
     assert docs.count() == 20 and "batch_id" not in docs.columns
-    assert p.read_chunks(fmt="json").count() > 0
+    chunks = p.read_chunks(fmt="json")
+    assert chunks.count() > 0
+    # K3: chunk JSONL never carries vectors (the null embedding is dropped)
+    assert "embedding" not in chunks.columns
     # the sink layout is really JSONL under batch partitions
     batch_dirs = [d for d in os.listdir(p.docs_path)
                   if d.startswith("batch_id=")]
@@ -171,33 +171,6 @@ def test_manifest_summary_lineage(spark, tmp_path):
     assert "OK" in codes
 
 
-def test_streaming_matches_batch(spark, tmp_path):
-    events = spark.read.parquet(os.path.join(SF_DIR, "events.parquet"))
-    batch = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in hourly_event_stats(events).collect()
-    }
-    # streaming file source needs a directory, not a bare file
-    src_dir = tmp_path / "events_src"
-    src_dir.mkdir()
-    import shutil
-
-    shutil.copy(os.path.join(SF_DIR, "events.parquet"),
-                src_dir / "events.parquet")
-    got = run_stream_once(
-        spark,
-        str(src_dir),
-        events.schema,
-        str(tmp_path / "ckpt"),
-        query_name="t_hourly",
-    )
-    stream = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in got.collect()
-    }
-    assert stream == batch
-
-
 def test_multimodal_feature_plumbing(spark):
     rows = [
         ("m1", b"\x89PNG\r\n" + b"x" * 100),
@@ -213,63 +186,6 @@ def test_multimodal_feature_plumbing(spark):
     # deterministic
     again = {r["media_id"]: r for r in image_features(df).collect()}
     assert {k: tuple(v) for k, v in got.items()} == {k: tuple(v) for k, v in again.items()}
-
-
-def test_decode_stub_raises(spark):
-    from rag_pdf_parser_spark.operators.multimodal import decode_image_stub
-
-    with pytest.raises(NotImplementedError):
-        decode_image_stub(b"\x89PNG")
-
-
-def test_stateful_streaming_carries_state_across_batches(spark, tmp_path):
-    """applyInPandasWithState: per-user running totals with state carried
-    across micro-batches (two files, maxFilesPerTrigger=1) must equal the
-    batch groupBy totals."""
-    from rag_pdf_parser_spark.streaming.events import user_running_stats_stateful
-
-    events = spark.read.parquet(os.path.join(SF_DIR, "events.parquet"))
-    src = tmp_path / "ev2"
-    src.mkdir()
-    events.where(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(
-        str(src / "a"))
-    events.where(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(
-        str(src / "b"))
-    # flatten the two file sets into one dir
-    import glob
-    import shutil
-    for i, f in enumerate(sorted(glob.glob(str(src / "*" / "*.parquet")))):
-        shutil.copy(f, src / f"part{i}.parquet")
-
-    stream = (spark.readStream.schema(events.schema)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(str(src) + "/part*.parquet"))
-    out = user_running_stats_stateful(stream)
-    q = (out.writeStream.outputMode("update").format("memory")
-         .queryName("t_state")
-         .option("checkpointLocation", str(tmp_path / "ckpt2"))
-         .start())
-    q.processAllAvailable()
-    q.stop()
-    # last emitted row per user = final running totals
-    rows = spark.sql(
-        "SELECT user_id, n_events, total_value FROM t_state"
-    ).collect()
-    final = {}
-    for r in rows:  # memory sink appends per batch; keep max n_events
-        cur = final.get(r["user_id"])
-        if cur is None or r["n_events"] > cur[0]:
-            final[r["user_id"]] = (r["n_events"], r["total_value"])
-    batch = {
-        r["user_id"]: (r["n"], r["v"])
-        for r in events.groupBy("user_id").agg(
-            F.count("*").alias("n"),
-            F.round(F.sum("value"), 4).alias("v")).collect()
-    }
-    assert set(final) == set(batch)
-    for u, (n, v) in batch.items():
-        assert final[u][0] == n, u
-        assert abs(final[u][1] - v) < 1e-6, u
 
 
 def test_salted_repartition_defuses_host_skew(spark):
@@ -475,66 +391,6 @@ class TestAsofJoin:
         # every left row on key 'a' carries the same (hash-chosen) winner
         a_vals = {px for eid, px in results[0] if eid != 9}
         assert len(a_vals) == 1, results[0]
-
-
-def test_streaming_dedup_matches_batch(spark, tmp_path):
-    """dropDuplicatesWithinWatermark over a stream with injected duplicate
-    event_ids produces exactly the batch-distinct row set."""
-    from rag_pdf_parser_spark.streaming.events import dedup_events
-
-    src = str(tmp_path / "dup_events")
-    ckpt = str(tmp_path / "ckpt_dedup")
-    base = spark.read.parquet("/root/testdata/sf0.001/events.parquet") \
-        .limit(500)
-    # duplicate every row once (two files → at least two micro-batch inputs)
-    base.write.mode("overwrite").parquet(src)
-    base.write.mode("append").parquet(src)
-
-    stream = spark.readStream.schema(base.schema).parquet(src)
-    q = (
-        dedup_events(stream).writeStream.outputMode("append")
-        .format("memory").queryName("dedup_sink")
-        .option("checkpointLocation", ckpt).start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {r["event_id"] for r in spark.sql("SELECT * FROM dedup_sink").collect()}
-    exp = {r["event_id"] for r in dedup_events(spark.read.parquet(src)).collect()}
-    assert got == exp
-    assert len(got) == base.count()
-
-
-def test_media_scan_and_blob_sink(spark, tmp_path, pages_df):
-    """S5/K5 analogs: visual blocks → media table → per-row blob files with
-    recorded relative paths; payload bytes round-trip exactly."""
-    import os
-
-    from rag_pdf_parser_spark.operators.extract import explode_blocks, extract_docs
-    from rag_pdf_parser_spark.operators.multimodal import (
-        image_features,
-        media_from_blocks,
-        write_media_blobs,
-    )
-
-    blocks = explode_blocks(extract_docs(pages_df))
-    media = media_from_blocks(blocks)
-    n = media.count()
-    assert n > 20
-    assert media.columns == ["media_id", "media_type", "content",
-                             "doc_id", "block_id"]
-
-    out = str(tmp_path / "blobs")
-    with_paths = write_media_blobs(media, out)
-    rows = with_paths.select("image_path", "content").collect()
-    assert len(os.listdir(out)) == n
-    for r in rows[:10]:
-        with open(os.path.join(out, r["image_path"]), "rb") as f:
-            assert f.read() == bytes(r["content"])
-
-    # the media table feeds the feature/dedup path directly
-    feats = image_features(media)
-    assert feats.count() == n
-    assert feats.where(F.length("phash") == 16).count() == n
 
 
 def test_streaming_extraction_matches_batch(spark, tmp_path):
@@ -1257,46 +1113,6 @@ def test_aqe_skew_join_splits_hot_partition(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def test_video_frame_sampling_plumbing(spark):
-    """Frame-sample plumbing: nested frame array with every_n sampling,
-    per-frame avg-hash equal to a local recomputation, deterministic."""
-    from rag_pdf_parser_spark.kernel.imagex import avg_hash_64, fake_decode_gray
-    from rag_pdf_parser_spark.operators.multimodal import video_frame_features
-
-    payload = bytes(range(256)) * 80  # 20480 bytes → 5 frames of 4096
-    df = spark.createDataFrame(
-        [("v1", payload), ("v2", b"tiny"), ("v3", None)],
-        "media_id string, content binary")
-    got = {r["media_id"]: r
-           for r in video_frame_features(df, every_n=2).collect()}
-    v1 = got["v1"]
-    assert v1["n_bytes"] == 20480
-    # frames 0,2,4 of 5 sampled
-    assert [f["frame_idx"] for f in v1["frames"]] == [0, 2, 4]
-    assert [f["offset"] for f in v1["frames"]] == [0, 8192, 16384]
-    exp0 = avg_hash_64(fake_decode_gray(payload[:4096]))
-    assert v1["frames"][0]["phash"] == exp0
-    assert got["v2"]["n_frames"] == 1 and got["v3"]["n_frames"] == 0
-
-
-def test_resize_media_block_mean(spark):
-    from rag_pdf_parser_spark.kernel.imagex import GRID, fake_decode_gray
-    from rag_pdf_parser_spark.operators.multimodal import resize_media
-
-    payload = bytes(range(200)) * 11
-    df = spark.createDataFrame([("m1", payload)],
-                               "media_id string, content binary")
-    r = resize_media(df, target_grid=8).collect()[0]
-    assert r["grid"] == 8 and len(r["pixels"]) == 64
-    # local recomputation of one pooled cell
-    px = fake_decode_gray(payload)
-    blk = GRID // 8
-    exp00 = sum(px[y * GRID + x] for y in range(blk)
-                for x in range(blk)) // (blk * blk)
-    assert r["pixels"][0] == exp00
-    assert all(0 <= v <= 255 for v in r["pixels"])
 
 
 def test_pipeline_curate_stage(spark, tmp_path):

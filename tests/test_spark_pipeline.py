@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 from rag_pdf_parser_spark.functions import (
     anchor_expr,
     content_hash_expr,
-    doc_id_expr,
     lang_expr,
     token_estimate_expr,
 )
@@ -18,7 +17,6 @@ from rag_pdf_parser_spark.kernel import (
 )
 from rag_pdf_parser_spark.operators.chunking import chunk_documents
 from rag_pdf_parser_spark.operators.extract import explode_blocks, extract_docs
-from rag_pdf_parser_spark.operators.metadata import doc_metadata, first_title, with_section
 from rag_pdf_parser_spark.operators.pagemerge import assemble_text_native
 
 
@@ -78,14 +76,6 @@ def test_anchor_and_hash_exprs(spark):
     assert rows[0]["h"] == hashlib.sha256(b"hello").hexdigest()[:12]
 
 
-def test_doc_id_expr_matches_kernel(spark, pages_df, golden_docs):
-    rows = pages_df.select(
-        "url", doc_id_expr(F.col("html")).alias("doc_id")
-    ).collect()
-    for r in rows:
-        assert r["doc_id"] == golden_docs[r["url"]]["doc_id"]
-
-
 def test_assemble_text_native_equals_kernel(spark, pages_df, golden_docs):
     """The window-based relational re-assembly (J4/W7/W8 as lead/lag +
     ordered concat) reproduces the kernel's sequential assembly byte-for-byte."""
@@ -114,37 +104,6 @@ def test_chunking_grouped_map_equals_kernel(spark, pages_df, golden_docs):
             assert h["token_count"] == e["token_count"]
             assert list(h["block_ids"]) == e["block_ids"]
             assert h["section"] == e["section"]
-
-
-def test_first_title_and_metadata(spark, pages_df, golden_docs):
-    blocks = explode_blocks(extract_docs(pages_df))
-    titles = {r["doc_id"]: r["title"] for r in first_title(blocks).collect()}
-    meta = {r["doc_id"]: r for r in doc_metadata(blocks).collect()}
-    for g in golden_docs.values():
-        if g["title"] is not None:
-            assert titles[g["doc_id"]] == g["title"]
-        if g["blocks"]:
-            m = meta[g["doc_id"]]
-            assert m["total_blocks"] == len(g["blocks"])
-            assert m["total_text_chars"] == sum(len(b["text"]) for b in g["blocks"])
-
-
-def test_section_carry_forward(spark, pages_df, golden_docs):
-    blocks = explode_blocks(extract_docs(pages_df))
-    rows = with_section(blocks).collect()
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    for g in golden_docs.values():
-        if not g["blocks"]:
-            continue
-        have = sorted(by_doc[g["doc_id"]], key=lambda r: r["reading_order"])
-        # python reimplementation of carry-forward
-        cur = None
-        for hb, gb in zip(have, g["blocks"]):
-            if gb["type"] in ("title", "section_header"):
-                cur = gb["text"]
-            assert hb["section"] == cur
 
 
 def test_determinism_across_partitionings(spark, pages_df):
@@ -249,8 +208,8 @@ def test_caption_and_metadata_through_spark(spark, pages_df, golden_docs):
 
 def test_embed_chunks_fills_slot(spark, pages_df):
     """chunks.embedding: null at chunking time, filled by the embedding
-    stage (unit-norm hashed-BoW), excluded by the JSONL sink."""
-    from rag_pdf_parser_spark.operators.chunking import chunks_jsonl, embed_chunks
+    stage (unit-norm hashed-BoW)."""
+    from rag_pdf_parser_spark.operators.chunking import embed_chunks
     from rag_pdf_parser_spark.operators.extract import explode_chunks
 
     chunks = explode_chunks(extract_docs(pages_df, chunks=True))
@@ -265,7 +224,6 @@ def test_embed_chunks_fills_slot(spark, pages_df):
     ).collect()
     assert all(r["d"] == 32 for r in rows)
     assert all(abs(r["sq"] - 1.0) < 1e-5 for r in rows)
-    assert "embedding" not in chunks_jsonl(emb).columns
 
 
 def test_python_stages_cross_one_arrow_boundary(spark):
@@ -274,8 +232,7 @@ def test_python_stages_cross_one_arrow_boundary(spark):
     driver-built fixture (synth_pages) has no Python stage at all."""
     from rag_pdf_parser_spark.operators.layout import (
         segment_markdown_docs, synth_boxes, xy_cut_order)
-    from rag_pdf_parser_spark.operators.multimodal import (
-        image_features, resize_media, video_frame_features)
+    from rag_pdf_parser_spark.operators.multimodal import image_features
     from rag_pdf_parser_spark.operators.spread import plan_nodes
     from rag_pdf_parser_spark.schema import BLOCKS_FLAT_SCHEMA
     from rag_pdf_parser_spark.sources.pages import synth_pages, synth_pages_dist
@@ -288,8 +245,6 @@ def test_python_stages_cross_one_arrow_boundary(spark):
     arrow_map, arrow_group = "MapInArrow", "FlatMapGroupsInArrow"
     cases = {
         "image_features": (image_features(media), arrow_map),
-        "video_frame_features": (video_frame_features(media), arrow_map),
-        "resize_media": (resize_media(media), arrow_map),
         "segment_markdown_docs": (segment_markdown_docs(md), arrow_map),
         "synth_boxes": (synth_boxes(spark, 3), arrow_map),
         "xy_cut_order": (xy_cut_order(synth_boxes(spark, 3)), arrow_group),
@@ -303,3 +258,14 @@ def test_python_stages_cross_one_arrow_boundary(spark):
         names = {n.nodeName() for n in plan_nodes(df)}
         assert expected in names, (name, names)
         assert not names & {"MapInPandas", "FlatMapGroupsInPandas"}, (name, names)
+
+
+def test_session_driver_memory_fits_the_host(spark):
+    """The default driver heap is a share of the host's physical RAM, not
+    a literal sized for a bigger machine."""
+    import os
+
+    mem = spark.sparkContext.getConf().get("spark.driver.memory")
+    heap = spark._jvm.org.apache.spark.network.util.JavaUtils \
+        .byteStringAsBytes(mem)
+    assert heap <= os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"), mem
