@@ -1,8 +1,11 @@
 """Native Spark Column expressions for the engine's scalar semantics.
 
-Every function here is pure `pyspark.sql.functions` composition — JVM-side,
-whole-stage-codegen'd, zero Python on the hot path. Each mirrors a kernel
-function (unit-tested equal) and a reference behavior (cited).
+Every function here is `pyspark.sql.functions` composition and runs in the
+JVM, with one exception: the Gopher repetition family counts word n-grams
+in `kernel.repetition` as one `mapInArrow` stage (`with_repetition_stats`),
+and only the fractions and thresholds over those counts are expressions.
+Each function mirrors a kernel function (unit-tested equal) and a
+reference behavior (cited).
 """
 
 from __future__ import annotations
@@ -11,6 +14,7 @@ from functools import lru_cache as _lru_cache
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 # Unicode classes (exact reference ranges, extractor.py:358-387 /
 # chunk.py:102-108)
@@ -252,8 +256,7 @@ def gopher_features_expr(text: Column, toks: Column | None = None,
     flag_corpus) tokenizes once for all gates — bit-identical to the
     defaults, which build both from `text` here."""
     if toks is None:
-        toks = F.filter(F.split(F.trim(text), r"\s+"),
-                        lambda t: F.length(t) > 0)
+        toks = raw_tokens_expr(text)
     n_words = F.size(toks).cast("double")
     safe_words = F.greatest(n_words, F.lit(1.0))
     word_chars = F.length(F.regexp_replace(text, r"\s", "")).cast("double")
@@ -267,11 +270,6 @@ def gopher_features_expr(text: Column, toks: Column | None = None,
 
     if bigrams is None:
         low = F.transform(toks, F.lower)
-        # adjacent pairs via zip_with(low, low-shifted-by-one): `low` is
-        # referenced a constant number of times (each an O(n) evaluation).
-        # Building bigrams as transform(sequence, i -> element_at(low, i)...)
-        # instead re-evaluates `low` PER ELEMENT — the O(n²) HOF
-        # re-evaluation trap (measured: 19.4 s → 1.6 s at sf0.1).
         bigrams = gram_step_expr(low, low, 2)
     sorted_b = F.array_sort(bigrams)
     run_acc = F.aggregate(
@@ -434,6 +432,13 @@ def with_quality_model(df, text_col: str = "text",
 
 # --- word n-gram primitives (shared by dedup / repetition / quality) --------
 
+def raw_tokens_expr(text: Column) -> Column:
+    """Non-empty whitespace tokens of `text`, case kept: the one split the
+    text gates share (gopher reads it as is; the quality model and the
+    repetition family read its lowercase transform)."""
+    return F.filter(F.split(F.trim(text), r"\s+"), lambda t: F.length(t) > 0)
+
+
 def word_tokens_expr(text: Column, pre_normalized: bool = False) -> Column:
     """Non-empty whitespace tokens of the normalized text."""
     norm = text if pre_normalized else normalized_text_expr(text)
@@ -443,12 +448,11 @@ def word_tokens_expr(text: Column, pre_normalized: bool = False) -> Column:
 
 def gram_step_expr(prev: Column, toks: Column, n: int) -> Column:
     """ONE level of the zip-shift gram fold: (n-1)-grams `prev` extended by
-    the (n-1)-shifted token array into n-grams. THE canonical idiom —
-    building grams with `transform(sequence, i -> slice/element_at(...))`
-    instead re-evaluates the derived array PER ELEMENT (the HOF O(n²)
-    trap — the 19.4 s → 2.2 s bigram lesson, see gopher_features_expr).
-    Consumed by `word_ngram_chain_expr` (expression chains) and
-    `with_repetition_features` (column-staged chain)."""
+    the (n-1)-shifted token array into n-grams. Each array is referenced a
+    constant number of times; building grams with
+    `transform(sequence, i -> slice/element_at(...))` instead re-evaluates
+    the derived array per element (O(n²)). Consumed by
+    `word_ngram_chain_expr` and by the gopher/quality bigram step."""
     shifted = F.slice(toks, n, F.greatest(F.size(toks) - (n - 1),
                                           F.lit(0)))
     return F.filter(
@@ -462,9 +466,9 @@ def gram_step_expr(prev: Column, toks: Column, n: int) -> Column:
 def word_ngram_chain_expr(toks: Column, n_max: int) -> dict[int, Column]:
     """Word n-gram arrays for n=1..n_max, each built from the previous by
     one `gram_step_expr` — every reference is a constant-count O(tokens)
-    pass. Single home for the gram idiom; decontamination, word-MinHash,
-    and the quality classifier consume it from here (the repetition family
-    stages the same steps as real columns — with_repetition_features)."""
+    pass. Decontamination and word-MinHash consume it through
+    `token_ngrams_expr`; the quality classifier's default bigrams are its
+    n=2 level."""
     grams: dict[int, Column] = {1: toks}
     for n in range(2, n_max + 1):
         grams[n] = gram_step_expr(grams[n - 1], toks, n)
@@ -482,66 +486,15 @@ def token_ngrams_expr(text: Column, n: int = 13,
 
 # --- full Gopher repetition suite (Rae et al. 2021 §A1.1) -------------------
 
-
-def _top_gram_chars(sorted_grams: Column) -> Column:
-    """Characters covered by the most frequent gram: count(top) × len(top),
-    ties broken toward the lexicographically smallest gram (strict-> update
-    over the sorted array — deterministic, mirrored by the oracle's
-    ORDER BY count DESC, gram ASC LIMIT 1)."""
-    acc = F.aggregate(
-        sorted_grams,
-        F.struct(F.lit("").alias("prev"), F.lit(0).alias("run"),
-                 F.lit(0).alias("best"), F.lit(0).alias("blen")),
-        lambda a, g: F.struct(
-            g.alias("prev"),
-            F.when(g == a["prev"], a["run"] + 1).otherwise(F.lit(1))
-            .alias("run"),
-            F.greatest(a["best"],
-                       F.when(g == a["prev"], a["run"] + 1)
-                       .otherwise(F.lit(1))).alias("best"),
-            F.when(
-                F.when(g == a["prev"], a["run"] + 1).otherwise(F.lit(1))
-                > a["best"], F.length(g)
-            ).otherwise(a["blen"]).alias("blen"),
-        ),
-    )
-    # count and length each fit an int (Java strings cap at 2^31 chars) but
-    # their PRODUCT can overflow 32 bits on a pathological repeated-blob
-    # page — widen before multiplying (the DuckDB twin sums in BIGINT)
-    return (acc["best"].cast("long") * acc["blen"]).cast("double")
-
-
-def _dup_gram_chars(sorted_grams: Column) -> Column:
-    """Characters in duplicate grams: Σ over distinct grams with count c>1
-    of (c-1)·len(gram) — the standard overlap-agnostic Gopher accounting
-    (every occurrence beyond the first counts its characters)."""
-    # LONG accumulator: the summed duplicate-gram characters can exceed
-    # 2^31 on a large repeated-blob page (dup chars approach n·doc_len) —
-    # a 32-bit wrap would turn the most repetitive possible document into
-    # frac<0 → repetition_keep=true (ANSI mode would throw instead)
-    acc = F.aggregate(
-        sorted_grams,
-        F.struct(F.lit("").alias("prev"), F.lit(0).cast("long").alias("dc")),
-        lambda a, g: F.struct(
-            g.alias("prev"),
-            (a["dc"] + F.when(g == a["prev"], F.length(g).cast("long"))
-             .otherwise(F.lit(0).cast("long"))).alias("dc"),
-        ),
-    )
-    return acc["dc"].cast("double")
-
-
 #: Gopher §A1.1 published removal thresholds
 REPETITION_TOP_THRESHOLDS = {2: 0.20, 3: 0.18, 4: 0.16}
 REPETITION_DUP_THRESHOLDS = {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12,
                              9: 0.11, 10: 0.10}
 
-
-# (The former one-select `repetition_features_expr` was deleted — dead
-# code after the staged rewrite below, and a second parallel
-# implementation of the same stats that would silently diverge. The
-# DuckDB twin in __spark_entry__._repetition_filters_sql mirrors
-# `with_repetition_features`.)
+#: `kernel.repetition.repetition_counts` output columns, in its order
+_REPETITION_COUNTS = (*(f"__top{n}" for n in REPETITION_TOP_THRESHOLDS),
+                      *(f"__dup{n}" for n in REPETITION_DUP_THRESHOLDS),
+                      "__dup_paras", "__dup_para_chars", "__paras")
 
 
 def with_repetition_features(df, text_col: str = "text"):
@@ -557,94 +510,58 @@ def with_repetition_features(df, text_col: str = "text"):
       fraction (paragraphs = '\\n\\n'-separated, trimmed, non-empty),
     - `repetition_keep` applying the published thresholds.
 
-    All per-doc O(tokens·n_max + n log n) sorted-run folds — zero shuffle,
-    zero UDF; NULL text behaves as empty (all fractions 0, keep true).
-    Two structural tricks, both CollapseProject-aware:
-
-    1. The gram CHAIN is staged level-by-level as real columns (__g2 built
-       from __toks, __g3 from __g2, …): each level is referenced by the
-       next level AND its own stat column (2 non-cheap refs), so
-       CollapseProject keeps the staging and every zip-shift pass runs
-       ONCE per row. Inlining everything into one projection re-derives
-       level n from scratch per column — Σ(n-1) = 45 chain passes plus
-       the same again for keep; measured 14.1 s → ~3 s at sf0.1.
-    2. `repetition_keep` reads the fraction ATTRIBUTES in a later select
-       (same rule), so thresholds apply to the rounded 6-decimal values —
-       a distinction without a difference at these thresholds (the DuckDB
-       twin thresholds the rounded values identically).
-
-    Plan-asserted in tests (zip_with count ≈ 9, one per chain level).
-
-    The three pieces (`stage_repetition_chain`, `repetition_stat_cols`,
-    `repetition_keep_expr`) are exposed separately so the composed
-    curation plan (plans/curate.py flag_corpus) can share ONE staged
-    token/gram chain across the gopher, repetition, and quality-model
-    gates instead of tokenizing three times."""
+    Words are the lowercase non-empty whitespace tokens of the text. Zero
+    shuffle; NULL text behaves as empty (all fractions 0, keep true)."""
     safe = F.coalesce(F.col(text_col), F.lit(""))
-    staged = stage_repetition_chain(
-        df.withColumn("__toks", word_tokens_expr(safe)), safe)
-    staged = staged.select(
-        *[c for c in df.columns],
-        *[c.alias(k) for k, c in repetition_stat_cols().items()])
-    return staged.withColumn("repetition_keep", repetition_keep_expr())
+    toks = F.transform(raw_tokens_expr(safe), F.lower)
+    return with_repetition_stats(df.withColumn("__toks", toks), text_col)
 
 
-def stage_repetition_chain(df, safe: Column):
-    """Stage the repetition family's working columns on top of an already
-    present lowercase token column `__toks`: `__tc` (char denominator),
-    the word n-gram chain `__g2`..`__g10` (level-by-level — see
-    with_repetition_features docstring trick #1), and `__sp` (sorted
-    non-empty paragraphs)."""
-    staged = df.withColumn(
-        "__tc", F.greatest(F.length(safe).cast("double"), F.lit(1.0)))
-    for n in range(2, 11):
-        prev = F.col("__toks") if n == 2 else F.col(f"__g{n - 1}")
-        staged = staged.withColumn(
-            f"__g{n}", gram_step_expr(prev, F.col("__toks"), n))
-    paras = F.filter(
-        F.transform(F.split(safe, r"\n\n", -1), lambda p: F.trim(p)),
-        lambda p: F.length(p) > 0,
-    )
-    return staged.withColumn("__sp", F.array_sort(paras))
+def with_repetition_stats(df, text_col: str):
+    """`df` carrying the lowercase token column `__toks` → `df` without it
+    + the 11 repetition stat columns + `repetition_keep` (see
+    `with_repetition_features`), the shared core of that gate and of
+    `plans/curate.py:with_text_gate_flags`.
 
+    One `mapInArrow` stage runs `kernel.repetition.repetition_counts` per
+    row and returns integer counts; the fractions, their 6-decimal
+    rounding and the thresholds stay expressions, and the keep flag reads
+    the rounded fractions."""
+    from ..kernel.repetition import repetition_counts
+    from ..operators.arrowmap import map_rows
 
-def repetition_stat_cols() -> dict[str, Column]:
-    """The 11 repetition stat expressions over the staged ATTRIBUTES from
-    `stage_repetition_chain` (__tc, __g2..__g10, __sp)."""
-    tc = F.col("__tc")
-    cols = {}
-    for n in (2, 3, 4):
-        cols[f"top_{n}gram_char_frac"] = F.round(
-            F.least(_top_gram_chars(F.array_sort(F.col(f"__g{n}"))) / tc,
-                    F.lit(1.0)), 6)
-    for n in range(5, 11):
-        cols[f"dup_{n}gram_char_frac"] = F.round(
-            F.least(_dup_gram_chars(F.array_sort(F.col(f"__g{n}"))) / tc,
-                    F.lit(1.0)), 6)
-    sp = F.col("__sp")
-    n_paras = F.greatest(F.size(sp).cast("double"), F.lit(1.0))
-    dup_para_count = F.aggregate(
-        sp,
-        F.struct(F.lit("").alias("prev"), F.lit(0).alias("d")),
-        lambda a, p: F.struct(
-            p.alias("prev"),
-            (a["d"] + F.when(p == a["prev"], 1).otherwise(0)).alias("d"),
-        ),
-    )["d"].cast("double")
-    cols["dup_para_frac"] = F.round(dup_para_count / n_paras, 6)
-    cols["dup_para_char_frac"] = F.round(
-        F.least(_dup_gram_chars(sp) / tc, F.lit(1.0)), 6)
-    return cols
+    cols = [c for c in df.columns if c != "__toks"]
+    text_at = cols.index(text_col)
+    counted = df.select(*cols, "__toks")
+    schema = StructType(counted.schema.fields[:-1] + [
+        StructField(c, LongType(), False) for c in _REPETITION_COUNTS])
 
+    def repetition_row(*row):
+        yield (*row[:-1], *repetition_counts(row[-1], row[text_at]))
 
-def repetition_keep_expr() -> Column:
-    """`repetition_keep` from the (rounded) stat ATTRIBUTES — apply in a
-    select AFTER the stats are projected (CollapseProject rule #2 in the
-    with_repetition_features docstring)."""
+    counted = counted.mapInArrow(map_rows(repetition_row, schema), schema)
+    chars = F.greatest(F.length(F.coalesce(F.col(text_col), F.lit("")))
+                       .cast("double"), F.lit(1.0))
+
+    def frac(count: str) -> Column:
+        return F.round(F.least(F.col(count).cast("double") / chars,
+                               F.lit(1.0)), 6)
+
+    stats = {f"top_{n}gram_char_frac": frac(f"__top{n}")
+             for n in REPETITION_TOP_THRESHOLDS}
+    stats |= {f"dup_{n}gram_char_frac": frac(f"__dup{n}")
+              for n in REPETITION_DUP_THRESHOLDS}
+    stats["dup_para_frac"] = F.round(
+        F.col("__dup_paras").cast("double")
+        / F.greatest(F.col("__paras").cast("double"), F.lit(1.0)), 6)
+    stats["dup_para_char_frac"] = frac("__dup_para_chars")
+    out = counted.select(*cols, *[c.alias(k) for k, c in stats.items()])
+
     keep = F.lit(True)
     for n, thr in REPETITION_TOP_THRESHOLDS.items():
         keep = keep & (F.col(f"top_{n}gram_char_frac") <= thr)
     for n, thr in REPETITION_DUP_THRESHOLDS.items():
         keep = keep & (F.col(f"dup_{n}gram_char_frac") <= thr)
-    return keep & (F.col("dup_para_frac") <= 0.30) \
+    keep = keep & (F.col("dup_para_frac") <= 0.30) \
         & (F.col("dup_para_char_frac") <= 0.20)
+    return out.withColumn("repetition_keep", keep)

@@ -440,12 +440,6 @@ def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
     bounded by the pipeline's MAX_HTML_BYTES-capped doc sizes."""
     if shingle not in ("char", "word"):
         raise ValueError(f"shingle must be 'char' or 'word', got {shingle!r}")
-    # PRECONDITION (same discipline as dedup_lines_corpus): `id_col` must
-    # uniquely key `df`. The former exploded-gram formulation silently
-    # UNIONED the grams of duplicate-id rows; the array formulation would
-    # instead emit one output row per duplicate — don't feed it dup ids
-    # (every in-repo caller dedups or reads uniquely-keyed tables first).
-    #
     # spread a single-task doc scan before the gram-array build (the
     # same §2.5 guard as the pair side below; no-op for exchange-bearing
     # or well-partitioned inputs)
@@ -539,8 +533,18 @@ def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
             .cast("long"))
     else:
         elem_bytes = (F.size("__gs") * F.lit(8)).cast("long")
+    # the same job checks the precondition that `id_col` uniquely keys
+    # the candidate docs: the array joins would emit one output row per
+    # duplicate-id row
     stats_row = gtab.agg(F.sum(elem_bytes).alias("b"),
-                         F.sum(F.size("__gs")).alias("c")).collect()[0]
+                         F.sum(F.size("__gs")).alias("c"),
+                         F.count("*").alias("n"),
+                         F.countDistinct("id").alias("d")).collect()[0]
+    if stats_row["n"] != stats_row["d"]:
+        raise ValueError(
+            f"ngram_jaccard_pairs: {id_col!r} must uniquely key df; "
+            f"{stats_row['n'] - stats_row['d']} duplicate rows among the "
+            f"candidate docs")
     est_bytes = (stats_row["b"] or 0) + 16 * (stats_row["c"] or 0)
     fits = est_bytes <= broadcast_bytes
     ga = gtab.select(F.col("id").alias("id_a"), F.col("__gs").alias("__ga"))
@@ -550,7 +554,7 @@ def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
     # two-step projection: __ni is referenced twice by the jaccard
     # formula, and size(array_intersect) is non-cheap — staging it as an
     # attribute keeps CollapseProject from inlining (and thus evaluating)
-    # the intersection twice per row (the repetition-chain staging rule).
+    # the intersection twice per row.
     # array_compact strips the NULL gram a NULL-text doc carries (its
     # array is exactly [NULL] — substr of a NULL string): the former
     # equi-join could never match a NULL gram, so two NULL-text docs

@@ -393,7 +393,8 @@ def domain_stats(docs: DataFrame, url_col: str = "url",
     gopher_features_expr's default construction re-evaluates the split
     per stat column, since CollapseProject duplicates non-cheap siblings
     and HOFs skip codegen CSE)."""
-    from ..functions import gopher_features_expr, gram_step_expr
+    from ..functions import (gopher_features_expr, gram_step_expr,
+                             raw_tokens_expr)
 
     safe_text = F.coalesce(F.col(text_col), F.lit(""))
     pat = F.coalesce(
@@ -411,8 +412,7 @@ def domain_stats(docs: DataFrame, url_col: str = "url",
     s1 = base.select(
         dom.alias("domain"),
         safe_text.alias("__t"),
-        F.filter(F.split(F.trim(safe_text), r"\s+"),
-                 lambda t: F.length(t) > 0).alias("__rtoks"),
+        raw_tokens_expr(safe_text).alias("__rtoks"),
         pat.alias("__pat"),
     )
     s2 = s1.withColumn("__low", F.transform(F.col("__rtoks"), F.lower))

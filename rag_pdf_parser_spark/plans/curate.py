@@ -7,20 +7,20 @@
   → model quality gate     (functions.with_quality_model)
   → near-dedup             (operators.dedup.dedup_corpus)
 
-The text gates (gopher/repetition/model) contribute their boolean columns
-in ONE projection pass over the corpus — zero shuffle, zero extra scans —
-and tokenize ONCE (r4 verdict #2): the raw whitespace split, the lowercase
-token array, and the word n-gram chain are staged as shared columns that
-all three gates consume (gopher's bigram stat and the quality model's
-features both read the staged `__g2`; each gate's default standalone path
-builds the identical arrays itself, so the composed flags are
-bit-identical to the standalone gates — asserted in tests). The URL gate,
-when a blocklist is supplied, is per-depth broadcast probes of the
-blocklist (operators/urlfilter.py) — zero shuffle of the corpus. The
-funnel report aggregates drop counts per stage from the flags in one job;
-dedup shuffles per its own documented shapes. The reference has no corpus
-curation at all — this is the §2.11 engine-added capstone composing its
-per-stage analogs.
+The text gates (gopher/repetition/model) add their columns in one pass over
+the corpus with no shuffle and one tokenization: the raw whitespace split,
+its lowercase transform and the bigram array are staged once and shared
+(gopher's bigram stat and the quality model's features read the same
+bigrams). The repetition family then runs as one `mapInArrow` stage over
+the lowercase tokens (`functions.with_repetition_stats`). Each gate's
+standalone path builds the same arrays itself, so the composed flags equal
+the standalone gates (asserted in tests). The URL gate, when a blocklist is
+supplied, is per-depth broadcast probes of the blocklist
+(operators/urlfilter.py) — zero shuffle of the corpus. The funnel report
+aggregates drop counts per stage from the flags in one job; dedup shuffles
+per its own documented shapes. The reference has no corpus curation at
+all — this is the §2.11 engine-added capstone composing its per-stage
+analogs.
 """
 
 from __future__ import annotations
@@ -30,10 +30,10 @@ from pyspark.sql import functions as F
 
 from ..functions import (
     gopher_features_expr,
-    repetition_keep_expr,
-    repetition_stat_cols,
-    stage_repetition_chain,
+    gram_step_expr,
+    raw_tokens_expr,
     with_quality_model,
+    with_repetition_stats,
 )
 from ..operators.dedup import dedup_corpus
 from ..operators.urlfilter import filter_urls
@@ -41,45 +41,43 @@ from ..operators.urlfilter import filter_urls
 
 def with_text_gate_flags(docs: DataFrame,
                          text_col: str = "text") -> DataFrame:
-    """docs + the THREE text-gate flag families (gopher_keep, the 12
-    repetition stat columns + repetition_keep, score_lin/quality_p/
-    model_keep) in one tokenize-once projection pass — the shared core of
-    `flag_corpus` and the pipeline's `curate=` stage (r5 verdict #3).
+    """docs + the THREE text-gate flag families (gopher_keep, the 11
+    repetition stat columns, score_lin/quality_p/model_keep, then
+    repetition_keep) in one pass with one tokenization — the shared core
+    of `flag_corpus` and the pipeline's `curate=` stage.
 
     NULL text behaves as empty like in every other gate — a NULL
     gopher_keep would poison any pass-all conjunction to NULL (the doc
     would vanish from every funnel bucket and both curate branches).
 
-    ONE tokenization for all three gates: raw-case tokens (gopher's
-    alpha/word stats), their lowercase transform (== word_tokens_expr of
-    the same text — lower() never creates or destroys ASCII whitespace),
-    and the staged gram chain (__g2 feeds gopher's bigram stat AND the
-    quality model's features; __g2..__g10 feed the repetition family)."""
+    Raw-case tokens feed gopher's alpha/word stats; their lowercase
+    transform (== `word_tokens_expr` of the same text — lower() never
+    creates or destroys ASCII whitespace) feeds the one bigram step that
+    gopher and the quality model share, and then the repetition stage,
+    which drops it."""
     from ..operators.spread import ensure_parallelism
 
-    # three tokenize-once gate families are pure per-row CPU — spread a
-    # single-task input scan first (measured 4.3 → 1.5 s at sf0.1);
-    # structural no-op on well-partitioned inputs (the pipeline's salted
-    # extraction output, any real corpus scan)
+    # the gates are per-row CPU: spread a single-task input scan first
+    # (a no-op on inputs that already have the parallelism)
     docs = ensure_parallelism(docs)
     orig = list(docs.columns)
     safe = F.coalesce(F.col(text_col), F.lit(""))
-    out = docs.withColumn(
-        "__rtoks", F.filter(F.split(F.trim(safe), r"\s+"),
-                            lambda t: F.length(t) > 0))
+    out = docs.withColumn("__rtoks", raw_tokens_expr(safe))
     out = out.withColumn("__toks", F.transform(F.col("__rtoks"), F.lower))
-    out = stage_repetition_chain(out, safe)
+    out = out.withColumn(
+        "__g2", gram_step_expr(F.col("__toks"), F.col("__toks"), 2))
     out = with_quality_model(out, text_col, toks=F.col("__toks"),
                              bigrams=F.col("__g2"))
     gf = gopher_features_expr(safe, toks=F.col("__rtoks"),
                               bigrams=F.col("__g2"))
-    out = out.select(
-        *orig,
-        gf["gopher_keep"].alias("gopher_keep"),
-        *[c.alias(k) for k, c in repetition_stat_cols().items()],
-        "score_lin", "quality_p", "model_keep",
-    )
-    return out.withColumn("repetition_keep", repetition_keep_expr())
+    quality = ["score_lin", "quality_p", "model_keep"]
+    out = with_repetition_stats(out.select(
+        *orig, gf["gopher_keep"].alias("gopher_keep"), *quality, "__toks"),
+        text_col)
+    stats = [c for c in out.columns
+             if c not in (*orig, "gopher_keep", *quality, "repetition_keep")]
+    return out.select(*orig, "gopher_keep", *stats, *quality,
+                      "repetition_keep")
 
 
 def flag_corpus(docs: DataFrame, blocked_hosts: DataFrame | None = None,
@@ -205,7 +203,7 @@ def curate_corpus_incremental(increment: DataFrame, store_dir: str,
 
     `flagged` is localCheckpointed before its two consumers (the funnel
     aggregation and the pass_all filter feeding dedup): without it every
-    gate expression — the tokenize + 9-level gram chain + quality fold —
+    gate — the tokenize, the quality fold and the repetition stage —
     executes twice per row, and the dedup-side plan would also re-read
     canon_dir after this very call appends to it (the cache-invalidation
     hazard documented in plans/pipeline.py).

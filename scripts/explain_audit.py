@@ -21,10 +21,19 @@ from pyspark.sql import functions as F  # noqa: E402
 import __spark_entry__ as E  # noqa: E402
 from rag_pdf_parser_spark.operators.dedup import lsh_candidate_pairs  # noqa: E402
 from rag_pdf_parser_spark.operators.extract import extract_docs  # noqa: E402
+from rag_pdf_parser_spark.operators.spread import (  # noqa: E402
+    has_exchange, plan_nodes)
 from rag_pdf_parser_spark.session import get_spark  # noqa: E402
 from rag_pdf_parser_spark.sources.pages import synth_pages  # noqa: E402
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+
+
+def repetition_stages(df) -> int:
+    """Arrow stages in `df`'s executed plan that run the repetition
+    kernel."""
+    return sum(n.nodeName() == "MapInArrow"
+               and "repetition_row" in n.toString() for n in plan_nodes(df))
 
 
 def plan_of(df) -> str:
@@ -187,14 +196,22 @@ def main() -> None:
     assert "partial_count" in cld_exec, "line counting must map-side combine"
 
     # 12. round-4 operators
-    # repetition filters: pure per-row expressions — zero Exchange
+    # repetition filters: one split in the JVM, the n-gram counts in ONE
+    # Arrow stage (the repetition kernel), zero Exchange
     rep = E.q_repetition_filters(spark, SF)
-    rep_exec = rep._jdf.queryExecution().executedPlan().toString()
+    rep_opt = rep._jdf.queryExecution().optimizedPlan().toString()
     sections.append((
-        "full Gopher repetition family (zero-shuffle projection)",
-        plan_of(rep), ["Scan parquet"],
+        "full Gopher repetition family (one Arrow stage, zero shuffle)",
+        plan_of(rep), ["Scan parquet", "MapInArrow"],
     ))
-    assert "Exchange" not in rep_exec, "repetition family must not shuffle"
+    assert not has_exchange(rep), "repetition family must not shuffle"
+    assert repetition_stages(rep) == 1, \
+        "repetition family must be ONE repetition-kernel Arrow stage"
+    assert rep_opt.count("zip_with") == 0, \
+        "repetition n-grams are counted in the kernel, not built in the JVM"
+    assert rep_opt.count("split(trim(") == 1, "one tokenization"
+    assert "regexp_replace(lower(text" not in rep_opt, \
+        "no normalized-text re-tokenizer"
 
     # quality classifier: zero Exchange, no UDF
     qm = E.q_quality_model(spark, SF)
@@ -233,14 +250,17 @@ def main() -> None:
         "shorten the entries to lift the limitation.",
     ))
 
-    # composed curation funnel (r5): ONE tokenization + ONE gram chain
-    # shared by the gopher/repetition/quality gates — 9 zip_withs (chain
-    # levels 2..10), no second normalized-text split
+    # composed curation funnel (r5): ONE tokenization + ONE bigram step
+    # shared by the gopher/quality gates (1 zip_with), the repetition
+    # counts in ONE Arrow stage, no second normalized-text split
     fn = E.q_curation_funnel(spark, SF)
     fn_opt = fn._jdf.queryExecution().optimizedPlan().toString()
-    assert fn_opt.count("zip_with") == 9, \
-        f"funnel must stage one gram chain (9 zip_withs), saw " \
+    assert fn_opt.count("zip_with") == 1, \
+        f"funnel must stage one shared bigram step (1 zip_with), saw " \
         f"{fn_opt.count('zip_with')}"
+    assert fn_opt.count("split(trim(") == 1, "funnel tokenizes once"
+    assert repetition_stages(fn) == 1, \
+        "funnel must run ONE repetition-kernel Arrow stage"
     # the url-host expr legitimately lowercases the URL column; the banned
     # pattern is the standalone gates' normalized-TEXT tokenizer
     assert "regexp_replace(lower(text" not in fn_opt, \

@@ -386,6 +386,25 @@ def test_jaccard_null_and_empty_text_parity(spark):
     assert out[(4, 5)] == 1.0   # '' vs '' share the ''-gram
 
 
+def test_jaccard_duplicate_ids_raise(spark):
+    """`id_col` must uniquely key the docs: a duplicate id among the
+    candidate docs raises instead of emitting one row per duplicate; a
+    duplicate id in no candidate pair cannot reach the output and
+    passes."""
+    from rag_pdf_parser_spark.operators.dedup import ngram_jaccard_pairs
+
+    docs = spark.createDataFrame(
+        [(1, "abcdefgh"), (1, "abcdefgx"), (2, "abcdefgh"),
+         (9, "zzzzzz"), (9, "yyyyyy")], "doc_id long, text string")
+    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    for shingle in ("char", "word"):
+        with pytest.raises(ValueError, match="uniquely key"):
+            ngram_jaccard_pairs(docs, pairs, shingle=shingle)
+    ok = ngram_jaccard_pairs(docs.where("doc_id != 1 OR text LIKE '%h'"),
+                             pairs).collect()
+    assert [(r["id_a"], r["id_b"], r["jaccard"]) for r in ok] == [(1, 2, 1.0)]
+
+
 def test_ensure_parallelism_skips_exchange_plans(spark):
     """r7 review regression: the spread guard must return exchange-
     bearing plans UNTOUCHED (probing .rdd under AQE would execute the
@@ -1019,11 +1038,12 @@ def test_incremental_admit_computes_signature_once(spark, tmp_path,
 
 def test_flag_corpus_tokenizes_once_bit_identical(spark):
     """r4 verdict #2: the composed funnel stages ONE raw split + ONE
-    lowercase transform + ONE gram chain shared by all three text gates.
+    lowercase transform + ONE bigram step shared by all three text gates.
     (a) every flag and stat column is bit-identical to the standalone
     gates run independently (incl. Unicode-whitespace adversaries);
-    (b) the optimized plan carries exactly the 9 chain zip_withs and no
-    second tokenization."""
+    (b) the optimized plan carries the one shared bigram zip_with, one
+    repetition-kernel Arrow stage, and no second tokenization."""
+    from rag_pdf_parser_spark.operators.spread import plan_nodes
     from rag_pdf_parser_spark.functions import (
         gopher_features_expr,
         with_quality_model,
@@ -1063,7 +1083,10 @@ def test_flag_corpus_tokenizes_once_bit_identical(spark):
     assert a == b, {k: (a[k], b[k]) for k in a if a[k] != b[k]}
 
     plan = composed._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("zip_with") == 9, plan.count("zip_with")
+    assert plan.count("zip_with") == 1, plan.count("zip_with")
+    arrow = [n.toString() for n in plan_nodes(composed)
+             if n.nodeName() == "MapInArrow"]
+    assert len(arrow) == 1 and "repetition_row" in arrow[0], arrow
     # no gate re-tokenizes: the normalized-TEXT split (the standalone
     # repetition/quality tokenizer) must be absent — the staged lowercase
     # transform of the single raw split replaces it (the url-host expr is
@@ -1075,6 +1098,7 @@ def test_flag_corpus_tokenizes_once_bit_identical(spark):
 def test_repetition_features_known_values(spark):
     """Hand-computed Gopher repetition stats on constructed docs."""
     from rag_pdf_parser_spark.functions import with_repetition_features
+    from rag_pdf_parser_spark.operators.spread import plan_nodes
 
     # doc 1: "ab cd " ×4 → top bigram 'ab cd' count 4, len 5 → 20/24 chars
     t1 = "ab cd ab cd ab cd ab cd"
@@ -1093,14 +1117,14 @@ def test_repetition_features_known_values(spark):
     assert got[4]["top_2gram_char_frac"] == 0.0
     assert got[4]["dup_para_frac"] == 0.0 and got[4]["repetition_keep"]
 
-    # single-chain plan: the level-by-level staging evaluates each gram
-    # level ONCE (9 zip_withs, one per level 2..10) — the flat one-select
-    # form measured 102 (every chain re-derived per column, then again for
-    # keep: 19.7 s vs 6.1 s at sf0.1); CollapseProject must keep the
-    # staged Projects (each level referenced by the next AND its stat)
+    # the n-grams are counted in the one repetition-kernel Arrow stage:
+    # no gram array is built in the JVM, and the text is split once
     plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("zip_with") == 9, plan.count("zip_with")
-    assert plan.count("Project") >= 10, plan.count("Project")
+    assert plan.count("zip_with") == 0, plan.count("zip_with")
+    assert plan.count("split(trim(") == 1, plan.count("split(trim(")
+    arrow = [n.toString() for n in plan_nodes(out)
+             if n.nodeName() == "MapInArrow"]
+    assert len(arrow) == 1 and "repetition_row" in arrow[0], arrow
 
     # t1: len=23 chars; bigrams: 'ab cd'(4) 'cd ab'(3); top = 4*5=20/23
     assert got[1]["top_2gram_char_frac"] == pytest.approx(20 / 23, abs=1e-6)

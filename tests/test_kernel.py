@@ -483,3 +483,48 @@ class TestFastTokenizer:
             s = "".join(rng.choice(frags)
                         for _ in range(rng.randint(1, 30)))
             self._check(s)
+
+
+class TestRepetitionCounts:
+    """kernel.repetition.repetition_counts: (top 2/3/4-gram chars, dup
+    5..10-gram chars, dup paragraphs, dup paragraph chars, paragraphs)."""
+
+    @staticmethod
+    def counts(text):
+        from rag_pdf_parser_spark.kernel.repetition import repetition_counts
+
+        return repetition_counts(text.lower().split(), text)
+
+    def test_repeated_bigram_doc(self):
+        # bigrams 'ab cd'×4 'cd ab'×3; trigrams tie at 3 → 'ab cd ab';
+        # 4-grams 'ab cd ab cd'×3; 5-grams two distinct ×2 (14 chars
+        # each); 6-grams 'ab cd ab cd ab cd'×2; no repeated 7-gram
+        assert self.counts("ab cd ab cd ab cd ab cd") == (
+            20, 24, 33, 28, 17, 0, 0, 0, 0, 0, 0, 1)
+
+    def test_no_repetition(self):
+        assert self.counts("aa bb cc dd ee ff gg hh ii jj") == (
+            5, 8, 11, 0, 0, 0, 0, 0, 0, 0, 0, 1)
+
+    def test_duplicate_paragraphs(self):
+        # bigrams 'para one'×2 and 'one here'×2 tie → 'one here';
+        # 3 paragraphs, 'para one here' (13 chars) once duplicated
+        assert self.counts("para one here\n\npara one here\n\nunique tail") \
+            == (16, 26, 18, 0, 0, 0, 0, 0, 0, 1, 13, 3)
+
+    def test_tie_goes_to_smallest_gram(self):
+        # every bigram occurs once: the top is 'a b', not the first
+        # ('zz yy') or the longest
+        assert self.counts("zz yy a b")[:3] == (3, 6, 9)
+
+    def test_empty_and_null(self):
+        from rag_pdf_parser_spark.kernel.repetition import repetition_counts
+
+        assert repetition_counts([], "") == (0,) * 12
+        assert repetition_counts([], None) == (0,) * 12
+
+    def test_paragraphs_trim_spaces_only(self):
+        # pieces '  a b  ', ' a b', '', 'a b ', '\n': Spark's trim strips
+        # spaces only, so the lone '\n' is a paragraph of its own
+        got = self.counts("  a b  \n\n a b\n\n\n\na b \n\n\n")
+        assert got[-3:] == (2, 6, 4)

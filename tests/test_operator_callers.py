@@ -2,7 +2,10 @@
 
 1. No pandas UDF and no pandas import anywhere in the library: every
    Python stage crosses the JVM boundary as Arrow (`operators/arrowmap`).
-2. Every public operator has a production caller. A test is not a
+2. Every `mapInArrow` / `applyInArrow` call passes a body built by
+   `arrowmap.map_rows` / `arrowmap.group_rows`: one row → batch loop for
+   every Python stage.
+3. Every public operator has a production caller. A test is not a
    caller: a def under operators/, streaming/, functions/, plans/ or
    sources/ must be referenced from the library, the driver entry, the
    bench, perfbench or a script, or be a named user entry point.
@@ -70,6 +73,34 @@ def test_no_pandas_udf_or_pandas_import_in_library():
                 continue
             bad += [(rel, n.lineno, m) for m in mods
                     if m == "pandas" or m.startswith("pandas.")]
+    assert not bad, bad
+
+
+#: each Arrow boundary method and the arrowmap builder its body must come from
+ARROW_BODIES = {"mapInArrow": "map_rows", "applyInArrow": "group_rows"}
+
+
+def _callee(node):
+    f = node.func
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+
+def test_every_arrow_stage_runs_through_arrowmap():
+    calls, bad = 0, []
+    for path in _py_files(LIB):
+        for n in ast.walk(_parse(path)):
+            if not (isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and n.func.attr in ARROW_BODIES):
+                continue
+            calls += 1
+            body = n.args[0] if n.args else next(
+                (k.value for k in n.keywords if k.arg == "func"), None)
+            if not (isinstance(body, ast.Call)
+                    and _callee(body) == ARROW_BODIES[n.func.attr]):
+                bad.append((os.path.relpath(path, ROOT), n.lineno,
+                            n.func.attr))
+    assert calls >= 8, calls  # the guard must see the library's stages
     assert not bad, bad
 
 

@@ -293,3 +293,86 @@ def test_quality_model_twin_matches_spark_adversarial(spark):
            for r in with_quality_model(df).collect()}
     for i, t in enumerate(texts):
         assert got[i] == quality_model_score(t), (i, repr(t))
+
+
+def _repetition_model(text):
+    """Test-local model of `with_repetition_features` for one text:
+    sorted-run counting over the twin-normalized tokens, fractions
+    rounded like Spark's F.round."""
+    from itertools import groupby
+
+    from rag_pdf_parser_spark.functions import (REPETITION_DUP_THRESHOLDS,
+                                                REPETITION_TOP_THRESHOLDS)
+    from rag_pdf_parser_spark.kernel.twins import (normalized_text,
+                                                   round_half_up)
+
+    text = text or ""
+    chars = max(len(text), 1)
+    toks = [t for t in normalized_text(text).split(" ") if t]
+
+    def runs(items):  # [(item, count)] in sorted order
+        return [(k, len(list(g))) for k, g in groupby(sorted(items))]
+
+    def frac(n_chars):
+        return round_half_up(min(n_chars / chars, 1.0), 6)
+
+    out = {}
+    for n in range(2, 11):
+        grams = runs(" ".join(toks[i:i + n])
+                     for i in range(len(toks) - n + 1))
+        if n in REPETITION_TOP_THRESHOLDS:
+            best = max((c for _, c in grams), default=0)
+            top = next((g for g, c in grams if c == best), "")
+            out[f"top_{n}gram_char_frac"] = frac(best * len(top))
+        else:
+            out[f"dup_{n}gram_char_frac"] = frac(
+                sum((c - 1) * len(g) for g, c in grams))
+    paras = runs(p for p in (s.strip(" ") for s in text.split("\n\n")) if p)
+    n_paras = sum(c for _, c in paras)
+    out["dup_para_frac"] = round_half_up(
+        sum(c - 1 for _, c in paras) / max(n_paras, 1), 6)
+    out["dup_para_char_frac"] = frac(sum((c - 1) * len(p) for p, c in paras))
+    out["repetition_keep"] = (
+        all(out[f"top_{n}gram_char_frac"] <= t
+            for n, t in REPETITION_TOP_THRESHOLDS.items())
+        and all(out[f"dup_{n}gram_char_frac"] <= t
+                for n, t in REPETITION_DUP_THRESHOLDS.items())
+        and out["dup_para_frac"] <= 0.30
+        and out["dup_para_char_frac"] <= 0.20)
+    return out
+
+
+def _check_repetition_batch(spark, texts):
+    from rag_pdf_parser_spark.functions import with_repetition_features
+
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    got = {r["i"]: r.asDict() for r in
+           with_repetition_features(df).drop("text").collect()}
+    for i, t in enumerate(texts):
+        exp = {"i": i, **_repetition_model(t)}
+        assert got[i] == exp, (repr(t), {k: (got[i][k], exp[k])
+                                         for k in exp if got[i][k] != exp[k]})
+
+
+#: a small vocabulary with paragraph breaks, and a phrase repeated up to
+#: 4 times, so the repetition stats come out non-zero
+_REPETITIVE = st.tuples(
+    st.lists(st.tuples(
+        st.sampled_from(["a", "b", "ab", "A", "Ab", "ΣΑΣ", "数据", "İ",
+                         "x\xa0y", "the cat", ""]),
+        st.sampled_from([" ", "  ", "\t", "\n", "\n\n", "\n\n\n",
+                         " \n\n ", "\n \n"])), max_size=20),
+    st.integers(min_value=1, max_value=4),
+).map(lambda pk: "".join(w + s for w, s in pk[0]) * pk[1])
+
+
+@settings(max_examples=15, deadline=None)
+@given(st.lists(st.one_of(st.none(), TEXT), min_size=1, max_size=20))
+def test_repetition_features_match_python_model(spark, texts):
+    _check_repetition_batch(spark, texts)
+
+
+@settings(max_examples=15, deadline=None)
+@given(st.lists(st.one_of(st.none(), _REPETITIVE), min_size=1, max_size=20))
+def test_repetition_features_match_python_model_repetitive(spark, texts):
+    _check_repetition_batch(spark, texts)
