@@ -496,6 +496,12 @@ _REPETITION_COUNTS = (*(f"__top{n}" for n in REPETITION_TOP_THRESHOLDS),
                       *(f"__dup{n}" for n in REPETITION_DUP_THRESHOLDS),
                       "__dup_paras", "__dup_para_chars", "__paras")
 
+#: the repetition stat columns `with_repetition_stats` adds, in order
+REPETITION_STATS = (
+    *(f"top_{n}gram_char_frac" for n in REPETITION_TOP_THRESHOLDS),
+    *(f"dup_{n}gram_char_frac" for n in REPETITION_DUP_THRESHOLDS),
+    "dup_para_frac", "dup_para_char_frac")
+
 
 def with_repetition_features(df, text_col: str = "text"):
     """df + the COMPLETE Gopher repetition-filter family (Rae et al. 2021
@@ -514,32 +520,36 @@ def with_repetition_features(df, text_col: str = "text"):
     shuffle; NULL text behaves as empty (all fractions 0, keep true)."""
     safe = F.coalesce(F.col(text_col), F.lit(""))
     toks = F.transform(raw_tokens_expr(safe), F.lower)
-    return with_repetition_stats(df.withColumn("__toks", toks), text_col)
+    return with_repetition_stats(df.withColumn("__rep_toks", toks),
+                                 text_col, "__rep_toks")
 
 
-def with_repetition_stats(df, text_col: str):
-    """`df` carrying the lowercase token column `__toks` → `df` without it
-    + the 11 repetition stat columns + `repetition_keep` (see
-    `with_repetition_features`), the shared core of that gate and of
-    `plans/curate.py:with_text_gate_flags`.
+def with_repetition_stats(df, text_col: str, toks_col: str):
+    """`df` → `df` without `toks_col` + the `REPETITION_STATS` columns +
+    `repetition_keep` (see `with_repetition_features`), the shared core of
+    that gate and of `plans/curate.py:with_text_gate_flags`. `toks_col`
+    names the column holding the text's lowercase word tokens; the stage
+    consumes it.
 
     One `mapInArrow` stage runs `kernel.repetition.repetition_counts` per
-    row and returns integer counts; the fractions, their 6-decimal
-    rounding and the thresholds stay expressions, and the keep flag reads
-    the rounded fractions."""
+    row and returns integer counts; only the text and the tokens are read
+    in Python, every other column is carried through as Arrow arrays. The
+    fractions, their 6-decimal rounding and the thresholds stay
+    expressions, and the keep flag reads the rounded fractions."""
     from ..kernel.repetition import repetition_counts
     from ..operators.arrowmap import map_rows
 
-    cols = [c for c in df.columns if c != "__toks"]
-    text_at = cols.index(text_col)
-    counted = df.select(*cols, "__toks")
+    cols = [c for c in df.columns if c != toks_col]
+    carried = [c for c in cols if c != text_col]
+    counted = df.select(*carried, text_col, toks_col)
     schema = StructType(counted.schema.fields[:-1] + [
         StructField(c, LongType(), False) for c in _REPETITION_COUNTS])
 
-    def repetition_row(*row):
-        yield (*row[:-1], *repetition_counts(row[-1], row[text_at]))
+    def repetition_row(text, toks):
+        yield text, *repetition_counts(toks, text)
 
-    counted = counted.mapInArrow(map_rows(repetition_row, schema), schema)
+    counted = counted.mapInArrow(
+        map_rows(repetition_row, schema, carry=len(carried)), schema)
     chars = F.greatest(F.length(F.coalesce(F.col(text_col), F.lit("")))
                        .cast("double"), F.lit(1.0))
 
@@ -547,15 +557,14 @@ def with_repetition_stats(df, text_col: str):
         return F.round(F.least(F.col(count).cast("double") / chars,
                                F.lit(1.0)), 6)
 
-    stats = {f"top_{n}gram_char_frac": frac(f"__top{n}")
-             for n in REPETITION_TOP_THRESHOLDS}
-    stats |= {f"dup_{n}gram_char_frac": frac(f"__dup{n}")
-              for n in REPETITION_DUP_THRESHOLDS}
-    stats["dup_para_frac"] = F.round(
-        F.col("__dup_paras").cast("double")
-        / F.greatest(F.col("__paras").cast("double"), F.lit(1.0)), 6)
-    stats["dup_para_char_frac"] = frac("__dup_para_chars")
-    out = counted.select(*cols, *[c.alias(k) for k, c in stats.items()])
+    stats = [frac(f"__top{n}") for n in REPETITION_TOP_THRESHOLDS]
+    stats += [frac(f"__dup{n}") for n in REPETITION_DUP_THRESHOLDS]
+    stats += [F.round(F.col("__dup_paras").cast("double")
+                      / F.greatest(F.col("__paras").cast("double"),
+                                   F.lit(1.0)), 6),
+              frac("__dup_para_chars")]
+    out = counted.select(*cols, *[c.alias(k)
+                                  for k, c in zip(REPETITION_STATS, stats)])
 
     keep = F.lit(True)
     for n, thr in REPETITION_TOP_THRESHOLDS.items():

@@ -6,7 +6,9 @@ A stage's kernel is pure Python and works on one row (or one group).
 of a `groupBy(...).applyInArrow` stage: input columns are read with
 `to_pylist`, the kernel's output rows are collected, and one `pa.array` per
 output column is built, typed from the Spark schema — no pandas frame on
-either side. `salted` is the skew defusal the row maps put in front.
+either side. Columns a row map only passes along are carried as Arrow
+arrays instead (`map_rows(..., carry=k)`). `salted` is the skew defusal
+the row maps put in front.
 """
 
 from __future__ import annotations
@@ -36,15 +38,26 @@ def _arrow(schema: StructType | str) -> pa.Schema:
                            if isinstance(schema, str) else schema)
 
 
-def map_rows(fn: Callable[..., Iterable], schema: StructType | str):
+def map_rows(fn: Callable[..., Iterable], schema: StructType | str,
+             carry: int = 0):
     """`mapInArrow` function: `fn(*row)` gets one input row's values in
-    column order and returns zero or more output rows."""
+    column order and returns zero or more output rows.
+
+    `carry=k` copies the first k input columns to the first k output
+    columns as Arrow arrays, never converted to Python; `fn` then gets the
+    remaining columns and returns exactly one row per input row, which
+    fills the remaining output columns."""
     arrow = _arrow(schema)
+    made = pa.schema(list(arrow)[carry:])
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            rows = zip(*(c.to_pylist() for c in batch.columns))
-            yield _to_batch((out for row in rows for out in fn(*row)), arrow)
+            rows = zip(*(c.to_pylist() for c in batch.columns[carry:]))
+            out = _to_batch((r for row in rows for r in fn(*row)), made)
+            if carry:  # from_arrays rejects a row count mismatch
+                out = pa.RecordBatch.from_arrays(
+                    batch.columns[:carry] + out.columns, names=arrow.names)
+            yield out
 
     run.__name__ = fn.__name__  # the plan shows the kernel, not `run`
     return run

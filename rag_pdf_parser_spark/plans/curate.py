@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import (
+    REPETITION_STATS,
     gopher_features_expr,
     gram_step_expr,
     raw_tokens_expr,
@@ -73,10 +74,8 @@ def with_text_gate_flags(docs: DataFrame,
     quality = ["score_lin", "quality_p", "model_keep"]
     out = with_repetition_stats(out.select(
         *orig, gf["gopher_keep"].alias("gopher_keep"), *quality, "__toks"),
-        text_col)
-    stats = [c for c in out.columns
-             if c not in (*orig, "gopher_keep", *quality, "repetition_keep")]
-    return out.select(*orig, "gopher_keep", *stats, *quality,
+        text_col, "__toks")
+    return out.select(*orig, "gopher_keep", *REPETITION_STATS, *quality,
                       "repetition_keep")
 
 

@@ -528,3 +528,37 @@ class TestRepetitionCounts:
         # spaces only, so the lone '\n' is a paragraph of its own
         got = self.counts("  a b  \n\n a b\n\n\n\na b \n\n\n")
         assert got[-3:] == (2, 6, 4)
+
+
+def test_map_rows_carries_columns_as_arrow():
+    """`map_rows(carry=k)` passes the first k columns through untouched and
+    hands `fn` only the rest; a row count mismatch is an error."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    from rag_pdf_parser_spark.operators.arrowmap import map_rows
+
+    nested = pa.array([[{"t": "x"}], None, []],
+                      type=pa.list_(pa.struct([("t", pa.string())])))
+    batch = pa.RecordBatch.from_arrays(
+        [nested, pa.array(["a b", None, ""])], names=["blocks", "text"])
+    schema = T.StructType([
+        T.StructField("blocks", T.ArrayType(T.StructType(
+            [T.StructField("t", T.StringType())]))),
+        T.StructField("text", T.StringType()),
+        T.StructField("n", T.LongType())])
+
+    def count(text):
+        yield text, len((text or "").split())
+
+    (out,) = map_rows(count, schema, carry=1)(iter([batch]))
+    addresses = lambda a: [b.address for b in a.buffers() if b]  # noqa: E731
+    assert addresses(out.column(0)) == addresses(batch.column(0))  # no copy
+    assert out.to_pydict() == {"blocks": [[{"t": "x"}], None, []],
+                               "text": ["a b", None, ""], "n": [2, 0, 0]}
+
+    def none(text):
+        return ()
+
+    with pytest.raises(ValueError):
+        list(map_rows(none, schema, carry=1)(iter([batch])))
