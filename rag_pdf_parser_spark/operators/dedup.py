@@ -40,13 +40,23 @@ from ..functions import (  # noqa: F401
 def exact_dedup(df: DataFrame, content_col: str = "text",
                 id_col: str = "doc_id") -> DataFrame:
     """D1/D2: keep one row per normalized-content hash (deterministic winner:
-    min id) — reference 'skip if hash seen', main.py:43-46."""
-    h = normalized_text_hash_expr(F.col(content_col)).alias("content_sha")
-    withh = df.withColumn("content_sha", h)
+    min id) — reference 'skip if hash seen', main.py:43-46.
+
+    A NULL text is never an exact duplicate of anything (the NULL rule of
+    `ngram_jaccard_pairs` and of the pipeline's dedup gate): every
+    NULL-text row is kept, with a NULL `content_sha`."""
+    h = normalized_text_hash_expr(F.col(content_col))
+    # a NULL key matches nothing in the semi-join and would silently drop
+    # every NULL-text row: key each one by its own id instead (no sha256
+    # hex digest contains ':')
+    withh = df.withColumn("content_sha", F.coalesce(
+        h, F.concat(F.lit("null:"), F.col(id_col).cast("string"))))
     first_key = withh.groupBy("content_sha").agg(
         F.min(id_col).alias(id_col)
     )
-    return withh.join(first_key, ["content_sha", id_col], "left_semi")
+    return withh.join(first_key, ["content_sha", id_col], "left_semi") \
+        .withColumn("content_sha", F.when(F.col(content_col).isNotNull(),
+                                          F.col("content_sha")))
 
 
 def anti_join_seen(df: DataFrame, seen: DataFrame, hash_col: Column,
@@ -715,17 +725,19 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
                               F.col(id_a).alias("comp")).schema
         return pairs.sparkSession.createDataFrame(
             pa.table({"id": ids, "comp": [find(x) for x in ids]}), schema)
+    if max_iter < 1:
+        raise ValueError("max_iter must be >= 1")
+    # materialized once: every round joins `edges`, and without the
+    # checkpoint each round would re-run the caller's pair plan
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .distinct()
-    )
+    ).localCheckpoint(eager=True)
     labels = (
         edges.select(F.col("src").alias("id")).distinct()
         .withColumn("comp", F.col("id"))
     )
-    if max_iter < 1:
-        raise ValueError("max_iter must be >= 1")
     # max_iter propagation rounds + 1 certification round: convergence is
     # certified by a zero-change round, so a graph converging in EXACTLY
     # max_iter rounds still certifies (and returns) rather than raising.
@@ -921,7 +933,9 @@ def dedup_corpus_incremental(increment: DataFrame, store_dir: str,
     Co-locate `canon_dir` under the same parent so one lease covers both
     tables.
 
-    The store is the streaming gate's (streaming/minhash.py `open_store`
+    This is the store's one admission path; the streaming gate
+    (`streaming.minhash.run_streaming_dedup`) calls it once per
+    micro-batch. The store lives in streaming/minhash.py (`open_store`
     … `append_store`): (band, bucket, id, bp) rows, where the OWNER id
     tells the verify stage which canonical doc a collision points at. The
     signature config rides the store meta and is validated on every run
@@ -1061,8 +1075,10 @@ def _dedup_corpus_incremental_locked(spark, increment, store_dir, canon_dir,
         .select("id_a", "id_b").localCheckpoint(eager=True)
     )
     batch_ids = out.select(F.col(id_col).alias("id_b"))
-    # materialized (distinct ids — tiny, AQE-coalesced): both appends and
-    # the caller's read would each re-run the Python-side component RDD
+    # materialized (distinct ids — tiny, AQE-coalesced): the store append,
+    # the canon write and the caller's read of the result each anti-join
+    # it, and would otherwise each re-run its two joins of `verified`
+    # against the batch ids and the dedup of their union
     dropped = _non_root_ids(verified.join(batch_ids, "id_b", "left_semi")) \
         .unionByName(verified.join(batch_ids, "id_b", "left_anti")
                      .select(F.col("id_a").alias("id"))) \

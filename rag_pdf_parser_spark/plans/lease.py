@@ -20,9 +20,9 @@ guarantee is an ATOMIC ``mkdir`` lease:
 Consumers: `ExtractionPipeline.run` (one lease per run, validated before
 `_commit`), and `plans.maintenance.compact_*` (compaction takes the same
 lease, replacing the old "run in a maintenance window" comment with an
-actual guard). The streaming writer (streaming/minhash.py) is a single
-long-lived query by construction and is documented, not leased — stopping
-the stream IS its maintenance window.
+actual guard), and `operators.dedup.dedup_corpus_incremental` (one lease
+per increment on the LSH store's parent dir — the streaming near-dup gate
+admits each micro-batch through it, so the stream is leased too).
 
 At 10^12-row scale the same role is played by the metastore's commit
 conflict detection (Iceberg optimistic locking); this module documents and

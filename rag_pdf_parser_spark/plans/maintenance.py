@@ -4,8 +4,8 @@ The engine's two long-lived mutable tables are bare parquet appends:
 
 - ``seen_hashes`` (operators/dedup.py register_hashes — the reference's
   SQLite upsert, persistent.py:158-190, as a table), and
-- the LSH bucket store shared by the streaming gate and the incremental
-  admit (streaming/minhash.py).
+- the LSH bucket store the incremental admit writes, per increment or
+  per streaming micro-batch (streaming/minhash.py).
 
 Appends accumulate duplicate rows (harmless for correctness — both lookups
 are semi-joins — but scan cost grows without bound). SURVEY §1.1 maps these
@@ -31,9 +31,9 @@ Writer exclusion is ENFORCED, not assumed (r4 verdict #9): every compact_*
 acquires the same `plans.lease.WriterLease` on the store's parent dir that
 `ExtractionPipeline.run` takes on its out_dir — a compaction racing a live
 pipeline (or another compaction) raises LeaseHeldError instead of swapping
-files out from under it. The one unleased writer is the streaming LSH
-query (a single long-lived query by construction): stopping the stream IS
-its maintenance window, documented in streaming/minhash.py.
+files out from under it. The LSH store's one writer, the incremental
+admit (which the streaming gate calls per micro-batch), takes the same
+lease on the store's parent dir.
 
 `compact_output` extends the same two-rename commit to the pipeline's
 MANIFEST (r4 verdict #7): committed batches are folded into one base
@@ -226,9 +226,10 @@ def compact_output(spark: SparkSession, out_dir: str,
 
 
 def compact_lsh_store(spark: SparkSession, path: str) -> dict:
-    """LSH store maintenance (the one store the streaming gate and the
-    incremental admit share — streaming/minhash.py): whole-row duplicates
-    collapsed, bp partition layout preserved for pruned probes. Deduping
+    """LSH store maintenance (the store the incremental admit writes,
+    per increment or per streaming micro-batch — streaming/minhash.py):
+    whole-row duplicates collapsed, bp partition layout preserved for
+    pruned probes. Deduping
     whole (band, bucket, id, bp) rows keeps every co-bucketed OWNER — two
     canonical docs legitimately share a bucket below the Jaccard threshold,
     and dropping either would let its future near-dups probe, miss and be

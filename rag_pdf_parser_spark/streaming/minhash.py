@@ -1,37 +1,33 @@
-"""Streaming near-dup gate: incoming documents are checked against a
-PERSISTED MinHash-LSH bucket store and only novel documents pass.
+"""The persisted MinHash-LSH seen-store, and the streaming near-dup gate
+that admits each micro-batch through it.
 
 The 10^12-row crawl shape: the seen-store is an append-only parquet table
 PARTITIONED by ``bp = pmod(xxhash64(band, bucket), STORE_PARTITIONS)`` —
-the same hash-bucketed layout an Iceberg table would use. Each micro-batch
+the same hash-bucketed layout an Iceberg table would use. A store lookup
+reads it PRUNED to the probing batch's bp partitions (an isin over the
+partition column → static partition pruning): a batch of B docs touches
+at most min(B·bands, STORE_PARTITIONS) partitions, NOT the whole
+monotonically-growing store.
 
-1. computes band buckets for its documents (`operators.dedup.lsh_buckets` —
-   the same index the batch pair-generator uses) and their bp values,
-2. reads the store PRUNED to the batch's bp partitions (an isin over the
-   partition column → static partition pruning; a micro-batch of B docs
-   touches at most min(B·bands, STORE_PARTITIONS) partitions, NOT the whole
-   monotonically-growing store — the r3 full-scan-per-micro-batch fix),
-3. drops any document colliding with the store on ANY band (LSH candidate
-   ⇒ near-duplicate of something already accepted; threshold tuning =
-   bands/rows, exactly as in batch), and dedups WITHIN the batch
-   (keep the smallest id per bucket chain),
-4. writes the surviving documents to the output sink FIRST, then appends
-   their buckets to the store (retry-safe order — see process()).
-
-The store format is shared with the batch incremental admit
-(`operators.dedup.dedup_corpus_incremental`): both write (band, bucket, id,
-bp) rows through the `open_store` / `store_buckets` / `probe_store` /
+The store has ONE admission path: the incremental admit
+(`operators.dedup.dedup_corpus_incremental`), which writes (band, bucket,
+id, bp) rows through the `open_store` / `store_buckets` / `probe_store` /
 `append_store` functions below, so layout, modulus and signature-config
-checks live in one place. Rows carry the OWNER id (the admit's verify needs
-the canonical doc a collision points at; the gate ignores it). Duplicate
-rows accumulate across appends (they change no join result — the lookup is
-a semi-join); `plans.maintenance.compact_lsh_store` is the MERGE-equivalent
+checks live in one place. Rows carry the OWNER id: the admit verifies
+every collision with exact Jaccard against the canonical doc it points
+at, so a shared bucket alone never drops a document. Duplicate rows
+accumulate across appends (they change no join result — the lookup is a
+semi-join); `plans.maintenance.compact_lsh_store` is the MERGE-equivalent
 job that rewrites the store with whole-row duplicates collapsed, keeping
 the partitioned layout and every owner.
 
-foreachBatch gives at-least-once semantics on retry: re-appending a
-surviving doc's buckets is harmless, and the output sink dedups by id
-downstream — the same idempotence argument as the batch manifest resume.
+`run_streaming_dedup` is the streaming form: each micro-batch is one
+admit call, with the stream's output directory as the canonical table.
+A micro-batch therefore inherits the admit's writer lease (the one
+`compact_lsh_store` takes), its crash order (buckets first, then canon)
+and its resume anti-join (ids already in the output are skipped), so a
+retried micro-batch is admitted exactly once, and the stream admits what
+the admit run over the same micro-batches in order admits.
 """
 
 from __future__ import annotations
@@ -55,9 +51,6 @@ from ..plans.maintenance import recover_store
 STORE_PARTITIONS = 64
 
 _META_NAME = "_STORE_META.json"  # leading '_': ignored by Spark's listing
-
-#: the streaming gate's signature config (`lsh_buckets` keyword arguments)
-_GATE_LSH = {"n": 5, "num_perm": 8, "bands": 4, "shingle": "char"}
 
 
 def read_store_meta(seen_dir: str) -> dict | None:
@@ -208,43 +201,20 @@ def append_store(store_dir: str, n_parts: int, cfg: dict,
      .write.mode("append").partitionBy("bp").parquet(store_dir))
 
 
-def novel_against_store(batch: DataFrame, buckets: DataFrame,
-                        seen: DataFrame | None, id_col: str = "doc_id",
-                        ) -> tuple[DataFrame, DataFrame]:
-    """(novel_docs, their_buckets): docs of `batch` whose `buckets` (a
-    `store_buckets` table) collide neither with `seen` nor with an earlier
-    (smaller-id) doc in the same batch."""
-    hit = buckets.join(seen, ["band", "bucket"], "left_semi") if seen is not None \
-        else buckets.limit(0)
-    dup_ids = hit.select("id").distinct()
-    # within-batch: keep the minimum id of each bucket group
-    first_per_bucket = buckets.groupBy("band", "bucket").agg(
-        F.min("id").alias("keep_id"))
-    batch_dups = (
-        buckets.join(first_per_bucket, ["band", "bucket"])
-        .where(F.col("id") != F.col("keep_id"))
-        .select("id").distinct()
-    )
-    drop = dup_ids.union(batch_dups).distinct()
-    novel = batch.join(drop.withColumnRenamed("id", id_col), id_col,
-                       "left_anti")
-    novel_buckets = buckets.join(drop, "id", "left_anti")
-    # materialize BOTH results before the caller writes: their plans read
-    # the seen store the caller is about to append to (and novel_buckets
-    # would otherwise be appended into a path its own plan reads)
-    return (novel.localCheckpoint(eager=True),
-            novel_buckets.localCheckpoint(eager=True))
-
-
 def run_streaming_dedup(spark: SparkSession, src_dir: str, schema,
                         out_dir: str, seen_dir: str, checkpoint_dir: str,
                         id_col: str = "doc_id", text_col: str = "text",
                         max_files_per_trigger: int = 1,
                         store_partitions: int = STORE_PARTITIONS) -> None:
-    """Drain available document files through the near-dup gate
-    (availableNow), maintaining the bucket store across micro-batches AND
-    across restarts (the store itself is the persistent state — no
-    in-memory streaming state to lose)."""
+    """Drain available document files through the incremental admit
+    (availableNow): each micro-batch is one `dedup_corpus_incremental`
+    call with `seen_dir` as its store and `out_dir` as its canonical
+    table. The store and `out_dir` are the persistent state across
+    micro-batches AND restarts — no in-memory streaming state to lose.
+    Put `out_dir` under the store's parent dir so the admit's writer
+    lease covers both tables."""
+    from ..operators.dedup import dedup_corpus_incremental
+
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -252,21 +222,9 @@ def run_streaming_dedup(spark: SparkSession, src_dir: str, schema,
     )
 
     def process(batch: DataFrame, _bid: int) -> None:
-        sp = batch.sparkSession
-        n_parts, has_rows = open_store(seen_dir, store_partitions,
-                                       _GATE_LSH)
-        buckets = store_buckets(batch, id_col, text_col, n_parts,
-                                _GATE_LSH)
-        seen = probe_store(sp, seen_dir, buckets) if has_rows else None
-        novel, nb = novel_against_store(batch, buckets, seen, id_col)
-        # OUTPUT FIRST, store second: if the job dies between the writes, a
-        # retry re-runs the batch against a store that does NOT yet contain
-        # its own buckets, so the docs are re-emitted (at-least-once
-        # duplicates in the sink — dedup by id downstream). The reverse
-        # order would make a retried batch LSH-collide with itself and
-        # silently drop every document.
-        novel.write.mode("append").parquet(out_dir)
-        append_store(seen_dir, n_parts, _GATE_LSH, nb)
+        dedup_corpus_incremental(batch, seen_dir, out_dir, id_col=id_col,
+                                 text_col=text_col,
+                                 store_partitions=store_partitions)
 
     q = (
         stream.writeStream.foreachBatch(process)

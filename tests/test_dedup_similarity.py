@@ -364,6 +364,78 @@ def test_connected_components_fast_path_matches_loop(spark):
     assert fast_s == loop_s
 
 
+def test_connected_components_loop_reads_checkpointed_edges(spark,
+                                                           monkeypatch):
+    """When the bounded probe overflows `driver_edges`, the distributed
+    loop materializes the edge list once: no propagation round re-runs
+    the caller's pair plan. Labels equal the fast path's."""
+    from rag_pdf_parser_spark.operators.dedup import connected_components
+    from rag_pdf_parser_spark.operators.spread import plan_nodes
+
+    # a 6-node chain per component, 5 components: 25 edges
+    pairs = spark.range(30).where(F.col("id") % 6 != 5).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
+    fast = sorted(map(tuple, connected_components(pairs).collect()))
+
+    rounds = []
+    frame = type(pairs)  # the session's concrete DataFrame class
+    real = frame.localCheckpoint
+
+    def recording(self, *a, **k):
+        if "__changed" in self.columns:
+            rounds.append(self)
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(frame, "localCheckpoint", recording)
+    loop = sorted(map(tuple,
+                      connected_components(pairs, driver_edges=4).collect()))
+    assert loop == fast
+    assert fast[:6] == [(i, 0) for i in range(6)]
+    assert len(rounds) >= 3, len(rounds)
+    jvm = spark._jvm
+    range_exec = jvm.Class.forName(
+        "org.apache.spark.sql.execution.RangeExec")
+    rdd_scan = jvm.Class.forName(
+        "org.apache.spark.sql.execution.RDDScanExec")
+    # each round joins two checkpoints (labels, edges) and never scans
+    # the caller's Range
+    for r in rounds:
+        nodes = list(plan_nodes(r))
+        assert not any(range_exec.isInstance(n) for n in nodes)
+        assert sum(rdd_scan.isInstance(n) for n in nodes) >= 2, \
+            [n.nodeName() for n in nodes]
+
+
+def test_exact_and_near_dedup_keep_null_text_docs(spark, tmp_path):
+    """A NULL text is never an exact duplicate of anything: `exact_dedup`,
+    `dedup_corpus` and the incremental admit keep every NULL-text doc,
+    while real duplicates are still dropped."""
+    from rag_pdf_parser_spark.operators.dedup import (
+        dedup_corpus,
+        dedup_corpus_incremental,
+    )
+
+    hello = "hello world, this is a document long enough to shingle"
+    schema = "doc_id string, text string"
+    docs = spark.createDataFrame(
+        [("a", hello), ("b", None), ("c", None), ("d", ""), ("e", hello)],
+        schema)
+    ex = {r["doc_id"]: r["content_sha"] for r in exact_dedup(docs).collect()}
+    assert sorted(ex) == ["a", "b", "c", "d"], ex
+    assert ex["b"] is None and ex["c"] is None and ex["a"] is not None
+    assert sorted(r["doc_id"] for r in dedup_corpus(docs).collect()) \
+        == ["a", "b", "c", "d"]
+
+    store, canon = str(tmp_path / "lsh"), str(tmp_path / "canon")
+    first = dedup_corpus_incremental(docs, store, canon)
+    assert sorted(r["doc_id"] for r in first.collect()) \
+        == ["a", "b", "c", "d"]
+    second = spark.createDataFrame(
+        [("f", None), ("g", hello), ("h", "")], schema)
+    assert [r["doc_id"] for r in
+            dedup_corpus_incremental(second, store, canon).collect()] == ["f"]
+
+
 def test_jaccard_null_and_empty_text_parity(spark):
     """r7 review regression: the array_intersect formulation must keep
     the pre-r7 equi-join NULL semantics — a NULL-text doc's single NULL

@@ -120,3 +120,21 @@ def test_every_public_operator_has_a_production_caller():
                     and n.name not in used and n.name not in ENTRY_POINTS):
                 orphans.append(f"{os.path.relpath(path, ROOT)}:{n.name}")
     assert not orphans, orphans
+
+
+def test_lsh_store_has_one_admission_path():
+    """`append_store` is called only from operators/dedup.py: the
+    incremental admit is the one writer of the LSH store, and the
+    streaming gate admits through it."""
+    callers = [LIB, os.path.join(ROOT, "__spark_entry__.py"),
+               os.path.join(ROOT, "bench.py"),
+               os.path.join(ROOT, "perfbench"), os.path.join(ROOT, "scripts")]
+    sites = [(os.path.relpath(path, ROOT), n.lineno)
+             for path in _py_files(*callers)
+             for n in ast.walk(_parse(path))
+             if isinstance(n, ast.Call) and _callee(n) == "append_store"]
+    assert sites, "the guard must see the admit's append"
+    bad = [s for s in sites
+           if s[0] != os.path.join("rag_pdf_parser_spark", "operators",
+                                   "dedup.py")]
+    assert not bad, bad

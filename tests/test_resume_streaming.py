@@ -515,7 +515,7 @@ def test_streaming_minhash_dedup_gate(spark, tmp_path):
     from rag_pdf_parser_spark.streaming.minhash import store_partition_expr
     cols = ["band", "bucket", "id", "bp"]
     want = sorted(tuple(r) for r in lsh_buckets(
-        spark.read.parquet(out), num_perm=8, bands=4)
+        spark.read.parquet(out), num_perm=32, bands=8)
         .withColumn("bp", store_partition_expr(F.col("band"),
                                                F.col("bucket")))
         .select(*cols).collect())
@@ -590,12 +590,106 @@ def test_streaming_store_is_partitioned_and_pruned(spark, tmp_path):
 
     # the signature config is persisted too: a store built under another
     # config holds incomparable buckets and is rejected, not probed
-    assert meta["lsh_num_perm"] == 8
-    write_store_meta(seen, STORE_PARTITIONS, extra={"lsh_num_perm": 32})
+    assert meta["lsh_num_perm"] == 32
+    write_store_meta(seen, STORE_PARTITIONS, extra={"lsh_num_perm": 8})
     with pytest.raises(Exception, match="incomparable"):
         run_streaming_dedup(spark, str(src) + "/part*.parquet", sch,
                             str(tmp_path / "out3"), seen,
                             str(tmp_path / "ck3"))
+
+
+def _stream_files(spark, src, batches):
+    """Write each `(doc_id, text)` row list as one parquet file under
+    `src`, with increasing mtimes so a maxFilesPerTrigger=1 stream reads
+    them as micro-batches in list order; returns the glob and schema."""
+    import glob
+    import shutil
+    import time
+
+    schema = "doc_id string, text string"
+    now = time.time()
+    for k, rows in enumerate(batches):
+        tmp = str(src / f"tmp{k}")
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(tmp)
+        dst = src / f"part{k}.parquet"
+        shutil.copy(glob.glob(tmp + "/*.parquet")[0], dst)
+        os.utime(dst, (now - 100 + k, now - 100 + k))
+    return str(src) + "/part*.parquet", spark.read.parquet(tmp).schema
+
+
+def _page_texts(n):
+    """`n` distinct extracted texts of synthetic pages: they share the
+    site templates, so many pairs share an LSH band bucket, but no two
+    are near-duplicates."""
+    from rag_pdf_parser_spark.datagen import make_page
+    from rag_pdf_parser_spark.kernel.htmlx import extract_document
+
+    texts, i = [], 0
+    while len(texts) < n:
+        d = extract_document(make_page(i)["html"])
+        t = d["extracted_text"]
+        if d["failure_code"] is None and t and t not in texts:
+            texts.append(t)
+        i += 1
+    return texts
+
+
+def test_streaming_gate_keeps_distinct_template_docs(spark, tmp_path):
+    """120 distinct pages that share templates, streamed as 2 files:
+    every one is kept. A gate that drops any bucket collision without
+    verifying it keeps a fraction of them."""
+    from rag_pdf_parser_spark.streaming.minhash import run_streaming_dedup
+
+    src = tmp_path / "src"
+    src.mkdir()
+    rows = [(f"p{i:03d}", t) for i, t in enumerate(_page_texts(120))]
+    glob_, sch = _stream_files(spark, src, [rows[:60], rows[60:]])
+    out = str(tmp_path / "out")
+    run_streaming_dedup(spark, glob_, sch, out, str(tmp_path / "seen"),
+                        str(tmp_path / "ck"))
+    kept = sorted(r["doc_id"] for r in spark.read.parquet(out).collect())
+    assert kept == [r[0] for r in rows], len(kept)
+
+
+def test_streaming_gate_equals_incremental_admit(spark, tmp_path):
+    """The stream admits exactly what `dedup_corpus_incremental` admits
+    over the same micro-batches in order, on a corpus with exact copies
+    and one-word-edited copies within and across batches."""
+    from rag_pdf_parser_spark.operators.dedup import dedup_corpus_incremental
+    from rag_pdf_parser_spark.streaming.minhash import run_streaming_dedup
+
+    base = [(f"b{i:03d}", t[:600]) for i, t in enumerate(_page_texts(40))]
+
+    def edited(text, k):
+        words = text.split(" ")
+        words[k % len(words)] = "zzedited"
+        return " ".join(words)
+
+    batches = [
+        base[:20] + [("x001", base[3][1]), ("n001", edited(base[5][1], 7))],
+        base[20:35] + [("x002", base[10][1]), ("n002", edited(base[0][1], 3)),
+                       ("n003", edited(base[25][1], 11))],
+        base[35:] + [("x003", base[30][1]), ("n004", edited(base[36][1], 5)),
+                     ("n005", edited(base[14][1], 9))],
+    ]
+    src = tmp_path / "src"
+    src.mkdir()
+    glob_, sch = _stream_files(spark, src, batches)
+    s_root, a_root = tmp_path / "stream", tmp_path / "admit"
+    run_streaming_dedup(spark, glob_, sch, str(s_root / "out"),
+                        str(s_root / "seen"), str(tmp_path / "ck"))
+    for rows in batches:
+        dedup_corpus_incremental(
+            spark.createDataFrame(rows, "doc_id string, text string"),
+            str(a_root / "seen"), str(a_root / "out"))
+
+    def ids(root):
+        return sorted(r["doc_id"] for r in
+                      spark.read.parquet(str(root / "out")).collect())
+
+    assert ids(s_root) == ids(a_root)
+    # every copy is caught and every distinct page is kept
+    assert ids(s_root) == [b[0] for b in base], ids(s_root)
 
 
 def test_compaction_merge_equivalent(spark, tmp_path):
