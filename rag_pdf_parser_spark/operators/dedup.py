@@ -22,7 +22,7 @@ the hash (or none when bucketed storage pre-partitions by hash).
 from __future__ import annotations
 
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 # token_ngrams_expr lives in functions/ (the canonical home of the
@@ -44,19 +44,21 @@ def exact_dedup(df: DataFrame, content_col: str = "text",
 
     A NULL text is never an exact duplicate of anything (the NULL rule of
     `ngram_jaccard_pairs` and of the pipeline's dedup gate): every
-    NULL-text row is kept, with a NULL `content_sha`."""
-    h = normalized_text_hash_expr(F.col(content_col))
-    # a NULL key matches nothing in the semi-join and would silently drop
-    # every NULL-text row: key each one by its own id instead (no sha256
-    # hex digest contains ':')
-    withh = df.withColumn("content_sha", F.coalesce(
-        h, F.concat(F.lit("null:"), F.col(id_col).cast("string"))))
-    first_key = withh.groupBy("content_sha").agg(
-        F.min(id_col).alias(id_col)
-    )
-    return withh.join(first_key, ["content_sha", id_col], "left_semi") \
-        .withColumn("content_sha", F.when(F.col(content_col).isNotNull(),
-                                          F.col("content_sha")))
+    NULL-text row is kept, with a NULL `content_sha`. Rows tied on the
+    minimum id all stay; NULL-id rows are dropped.
+
+    One scan, one sha256 per row: rank() over the hash's window (a NULL
+    hash is keyed by its row's own id — no sha256 hex digest contains
+    ':'), not a self-join that re-scans and re-hashes the input."""
+    key = F.coalesce(F.col("content_sha"),
+                     F.concat(F.lit("null:"), F.col(id_col).cast("string")))
+    first = F.rank().over(Window.partitionBy(key).orderBy(id_col))
+    rest = [c for c in df.columns if c not in ("content_sha", id_col)]
+    return df.where(F.col(id_col).isNotNull()) \
+        .withColumn("content_sha",
+                    normalized_text_hash_expr(F.col(content_col))) \
+        .withColumn("__rank", first).where(F.col("__rank") == 1) \
+        .select("content_sha", id_col, *rest)
 
 
 def anti_join_seen(df: DataFrame, seen: DataFrame, hash_col: Column,

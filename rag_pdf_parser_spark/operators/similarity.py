@@ -190,8 +190,8 @@ def quantizer_sample(corpus: DataFrame, sample_n: int = 512,
 def ivf_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
              n_lists: int = 8, n_probe: int = 2, sample_n: int = 512,
              seed: int = 42, id_col: str = "vec_id",
-             vec_col: str = "embedding", max_queries: int = 4096,
-             centroids: np.ndarray | None = None) -> DataFrame:
+             vec_col: str = "embedding",
+             max_queries: int = 4096) -> DataFrame:
     """IVF approximate NN: deterministic k-means coarse quantizer (fit on a
     bounded deterministic sample), corpus assigned to its nearest list
     (native argmin expression), queries probe their `n_probe` nearest lists,
@@ -204,10 +204,8 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
     `max_queries` (the IVF contract is few-queries-vs-huge-corpus; a large
     query side should rank probe lists distributedly via
     `_nearest_centroid_expr` instead)."""
-    if centroids is None:
-        sample = quantizer_sample(corpus, sample_n, id_col, vec_col)
-        centroids = _kmeans_fit(sample, n_lists, seed=seed)
-    cents = centroids
+    sample = quantizer_sample(corpus, sample_n, id_col, vec_col)
+    cents = _kmeans_fit(sample, n_lists, seed=seed)
 
     c_assigned = corpus.select(
         F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cand_v"),

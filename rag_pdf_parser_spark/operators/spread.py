@@ -58,12 +58,11 @@ def has_exchange(df: DataFrame) -> bool:
     return any(exchange.isInstance(n) for n in plan_nodes(df))
 
 
-def ensure_parallelism(df: DataFrame, factor: int = 1) -> DataFrame:
-    """Round-robin-spread `df` to `factor ×` the session's default
-    parallelism iff its planned partition count is lower; otherwise the
-    input is returned untouched. Keyless repartition is
-    retry-deterministic (sort-before-repartition is on by default,
-    SPARK-23207).
+def ensure_parallelism(df: DataFrame) -> DataFrame:
+    """Round-robin-spread `df` to the session's default parallelism iff
+    its planned partition count is lower; otherwise the input is returned
+    untouched. Keyless repartition is retry-deterministic
+    (sort-before-repartition is on by default, SPARK-23207).
 
     The guard only ever probes EXCHANGE-FREE plans (scans, checkpoints,
     projections): under AQE, `df.rdd` on a plan holding a shuffle or
@@ -74,8 +73,7 @@ def ensure_parallelism(df: DataFrame, factor: int = 1) -> DataFrame:
     session.py's minPartitionSize floor). For exchange-free plans `df.rdd`
     compiles without a job, and its partition count (file splits /
     checkpoint partitions) is exact."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * factor
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         if has_exchange(df):
             return df

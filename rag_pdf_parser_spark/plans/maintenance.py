@@ -89,7 +89,6 @@ def atomic_swap(path: str) -> None:
 def compact_table(spark: SparkSession, path: str,
                   dedup_keys: list[str] | None,
                   partition_by: list[str] | None = None,
-                  target_files_per_partition: int = 1,
                   preserve_files: list[str] | None = None,
                   lease_stale_sec: float = 3600.0) -> dict:
     """Rewrite the parquet table at `path` with duplicate rows (by
@@ -114,18 +113,12 @@ def compact_table(spark: SparkSession, path: str,
         rows_before = df.count()
         compacted = df.dropDuplicates(dedup_keys)
         if partition_by:
-            # one output file per partition dir (small dimension stores);
-            # at real scale tune target_files_per_partition to
-            # executor-sized files
-            compacted = compacted.repartition(
-                target_files_per_partition * max(
-                    1, compacted.select(*partition_by).distinct().count()),
-                *partition_by)
-            writer = compacted.write.mode("overwrite") \
-                .partitionBy(*partition_by)
+            # one output file per partition dir: each key lands in one
+            # shuffle task, and AQE sizes the (unnamed) shuffle width
+            writer = compacted.repartition(*partition_by).write \
+                .mode("overwrite").partitionBy(*partition_by)
         else:
-            writer = compacted.coalesce(target_files_per_partition) \
-                .write.mode("overwrite")
+            writer = compacted.coalesce(1).write.mode("overwrite")
         # the tmp write is an ACTION that completes before any rename
         # below — the source read and the swap never overlap
         writer.parquet(_tmp(path))
@@ -137,11 +130,11 @@ def compact_table(spark: SparkSession, path: str,
             src = os.path.join(path, name)
             if os.path.exists(src):
                 shutil.copy2(src, os.path.join(_tmp(path), name))
-        # commit-point validation (same rule as pipeline._run): a long
-        # compaction whose lock went stale and was stolen must abort HERE —
-        # swapping would discard rows the stealing writer appended to the
-        # store after our read. touch() first so a healthy compaction never
-        # looks stale to the next acquirer.
+        # commit-point validation (same rule as ExtractionPipeline.run): a
+        # long compaction whose lock went stale and was stolen must abort
+        # HERE — swapping would discard rows the stealing writer appended
+        # to the store after our read. touch() first so a healthy
+        # compaction never looks stale to the next acquirer.
         lease.assert_held()
         lease.touch()
         atomic_swap(path)

@@ -3,11 +3,19 @@
 Spark-first restatement of the reference's CLI lifecycle (SURVEY §3.1):
 
     pages scan → resume anti-join (vs manifest)           [J3, persistent.py doc_status]
-              → dedup anti-join (vs seen_hashes)          [F7/J2, main.py:43-46]
+              → URL gate (url_blocklist=)                 [C4 front filter]
               → salted repartition by xxhash64(url)       [north_rule skew defusal]
               → mapInArrow extraction (kernel)            [M1/M2 fused]
+              → text-quality gates (curate=)              [plans/curate.py]
+              → dedup gate: left joins vs in-batch winners
+                and seen_hashes (dedupe=)                 [F7/J2, main.py:43-46]
               → docs + exploded blocks + chunks           [S3/W1/W6]
               → parquet sinks + manifest append           [K1-K4, K7]
+
+Each gate writes one nullable `__code` column (URL_BLOCKED rows leave
+before extraction and go straight into the manifest batch): the sinks take
+the rows whose `__code` is NULL, and the manifest records
+`coalesce(failure_code, __code)`.
 
 The manifest is the resume/lineage mechanism the north rule requires: one row
 per (run, partition, url) with bytes in/out and failure code. Resume = left
@@ -49,12 +57,18 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import normalized_text_hash_expr
+from ..operators.dedup import register_hashes
 from ..operators.extract import (
     explode_blocks,
     explode_chunks,
     extract_docs,
 )
+from ..operators.urlfilter import filter_urls
 from ..schema import MANIFEST_SCHEMA
+from .curate import TEXT_GATE_CODES, text_gate_code_expr, with_text_gate_flags
+from .lease import WriterLease
+from .maintenance import recover_store
 
 
 class ExtractionPipeline:
@@ -75,8 +89,6 @@ class ExtractionPipeline:
         # between its two swap renames left the commit log in the trash
         # dir — restore before ANY read of committed state, or readers see
         # an empty table and a fresh run re-extracts everything
-        from .maintenance import recover_store
-
         recover_store(self.manifest_path)
 
     # -- resume gate ----------------------------------------------------------
@@ -102,7 +114,6 @@ class ExtractionPipeline:
             with_chunks: bool = True, fmt: str = "parquet",
             dedupe: bool = False,
             url_blocklist: DataFrame | None = None,
-            url_blocklist_validate: bool = True,
             curate: bool = False) -> dict:
         """`fmt='json'` mirrors the reference's JSONL sinks (K2/K3,
         writer.py:110-165) — same rows, line-delimited; parquet is the
@@ -140,13 +151,123 @@ class ExtractionPipeline:
         `lease_stale_sec`, owner re-validated at the commit point). A
         second concurrent run on the same out_dir raises LeaseHeldError at
         start instead of silently committing duplicate urls; a writer
-        whose stale lock was stolen aborts before its commit rename."""
-        from .lease import WriterLease
+        whose stale lock was stolen aborts before its commit rename.
 
+        The returned counts come from the manifest batch this run stages:
+        `docs_processed` is every row but URL_BLOCKED; `urls_blocked`,
+        `duplicates_skipped` and `curation_drops` count their codes."""
         with WriterLease(self.out_dir, self.lease_stale_sec) as lease:
-            return self._run(pages, run_id, with_chunks, fmt, dedupe,
-                             url_blocklist, lease, curate,
-                             url_blocklist_validate=url_blocklist_validate)
+            todo = self.pending(pages)
+            batch_id = f"{run_id}-{uuid.uuid4().hex[:12]}"
+            if dedupe:
+                # a seen-hashes compaction that died between its two swap
+                # renames left the store in the trash dir; restore BEFORE
+                # the exists() check in _mark_duplicates — otherwise this
+                # run would silently pass every known duplicate and
+                # recreate a fresh store, stranding the whole hash history
+                recover_store(self.seen_path)
+            blocked = None
+            if url_blocklist is not None:
+                flagged = filter_urls(todo, url_blocklist)
+                # read once, by the staging write below — which runs before
+                # the commit rename mutates the manifest its plan reads
+                blocked = flagged.where(F.col("url_blocked")).select(
+                    F.lit(run_id).alias("run_id"),
+                    F.spark_partition_id().alias("partition_id"),
+                    F.col("url"),
+                    F.length(F.coalesce(F.col("html"), F.lit(b"")))
+                    .cast("long").alias("bytes_in"),
+                    F.lit(0).cast("long").alias("bytes_out"),
+                    F.lit("URL_BLOCKED").alias("failure_code"),
+                )
+                todo = flagged.where(~F.col("url_blocked")) \
+                    .drop("url_blocked", "block_reason")
+            # fused extract(+chunk): one Arrow stage, no chunking shuffle
+            docs = extract_docs(todo, self.partitions, chunks=with_chunks)
+
+            # manifest rows ride the same job: spark_partition_id() is
+            # stamped AFTER the salted repartition inside extract_docs, so
+            # each row records the partition that actually did the work.
+            docs_m = docs.withColumns({
+                "partition_id": F.spark_partition_id(),
+                "__code": F.lit(None).cast("string"),
+            })
+            if curate:
+                # gates BEFORE the dedup marking — the curate_corpus funnel
+                # order (dedup applies only to gate survivors, and a gated
+                # doc's hash must not be registered or own a winner slot)
+                docs_m = self._mark_curation(docs_m)
+            if dedupe:
+                docs_m = self._mark_duplicates(docs_m)
+            # localCheckpoint, NOT cache: the plan reads the manifest
+            # (resume anti-join) and the seen_hashes store (dedup gate) —
+            # appending to either path below refreshes it and INVALIDATES
+            # a cache built on it, silently recomputing docs_m against the
+            # post-write state (todo becomes empty, dup flags flip).
+            # Checkpointing materializes the batch immutably before any
+            # sink write.
+            docs_m = docs_m.localCheckpoint(eager=True)
+            fresh = docs_m.where(F.col("__code").isNull()) \
+                .drop("__code", "__h") \
+                .withColumn("batch_id", F.lit(batch_id))
+
+            # content sinks: UNCOMMITTED until _commit below (batch_id
+            # partition + manifest-dir commit log; see module docstring)
+            (fresh.drop("blocks", "chunks")
+             .write.mode("append").partitionBy("batch_id")
+             .format(fmt).save(self.docs_path))
+
+            blocks = explode_blocks(fresh.drop("chunks", "batch_id")) \
+                .withColumn("batch_id", F.lit(batch_id))
+            (blocks.write.mode("append").partitionBy("batch_id")
+             .format(fmt).save(self.blocks_path))
+
+            if with_chunks:
+                (explode_chunks(fresh.drop("batch_id"))
+                 .withColumn("batch_id", F.lit(batch_id))
+                 .write.mode("append").partitionBy("batch_id")
+                 .format(fmt).save(self.chunks_path))
+
+            manifest = docs_m.select(
+                F.lit(run_id).alias("run_id"),
+                F.col("partition_id"),
+                F.col("url"),
+                F.col("bytes_in"),
+                F.length(F.coalesce("extracted_text", F.lit("")))
+                .cast("long").alias("bytes_out"),
+                # an extraction failure outranks a gate code (the gates
+                # only code docs whose failure_code is NULL anyway)
+                F.coalesce("failure_code", "__code").alias("failure_code"),
+            )
+            if blocked is not None:
+                manifest = manifest.unionByName(blocked)
+            staging = os.path.join(self.out_dir, "_staging", batch_id)
+            manifest.write.mode("overwrite").parquet(staging)
+            counts = {
+                r["failure_code"]: r["count"] for r in
+                self.spark.read.schema(MANIFEST_SCHEMA).parquet(staging)
+                .groupBy("failure_code").count().collect()
+            }
+            # commit-point validation: if this run's lock went stale during
+            # a long extraction and another writer stole it, abort HERE —
+            # publishing would race the new owner's batch. touch() first so
+            # a healthy run never looks stale to the next acquirer.
+            lease.assert_held()
+            lease.touch()
+            self._commit(staging, batch_id)
+            if dedupe:
+                fresh_hashes = docs_m.where(F.col("__h").isNotNull()).select(
+                    F.col("__h").alias("hash"),
+                    F.lit("normalized_text").alias("kind"),
+                    F.lit(run_id).alias("source"),
+                )
+                register_hashes(self.seen_path, fresh_hashes)
+        n_blocked = counts.pop("URL_BLOCKED", 0)
+        return {"run_id": run_id, "docs_processed": sum(counts.values()),
+                "duplicates_skipped": counts.get("DUPLICATE", 0),
+                "urls_blocked": n_blocked,
+                "curation_drops": {c: counts[c] for c in TEXT_GATE_CODES
+                                   if c in counts}}
 
     # -- commit protocol -------------------------------------------------------
     def committed_batch_ids(self) -> list[str]:
@@ -235,197 +356,45 @@ class ExtractionPipeline:
                     removed += 1
         return removed
 
-    def _run(self, pages: DataFrame, run_id: str,
-             with_chunks: bool, fmt: str, dedupe: bool = False,
-             url_blocklist: DataFrame | None = None,
-             lease=None, curate: bool = False,
-             url_blocklist_validate: bool = True) -> dict:
-        todo = self.pending(pages)
-        batch_id = f"{run_id}-{uuid.uuid4().hex[:12]}"
-        if dedupe:
-            # a seen-hashes compaction that died between its two swap
-            # renames left the store in the trash dir; restore BEFORE the
-            # exists() checks below — otherwise this run would silently
-            # pass every known duplicate and recreate a fresh store,
-            # stranding the whole hash history (recover_store is then a
-            # permanent no-op because the path exists again)
-            from .maintenance import recover_store
-
-            recover_store(self.seen_path)
-        blocked_manifest = None
-        n_blocked = 0
-        if url_blocklist is not None:
-            from ..operators.urlfilter import filter_urls
-
-            # url_blocklist_validate=False skips the per-run load-time
-            # blocklist check (one tiny eager job + repeated deep-entry
-            # warning) — for resume loops re-running an already-validated
-            # list
-            flagged = filter_urls(todo, url_blocklist,
-                                  validate=url_blocklist_validate)
-            # checkpointed for the same reason as docs_m below: its plan
-            # reads the manifest (resume anti-join) that the commit below
-            # mutates, and it feeds both the manifest union and the count
-            blocked_manifest = flagged.where(F.col("url_blocked")).select(
-                F.lit(run_id).alias("run_id"),
-                F.spark_partition_id().alias("partition_id"),
-                F.col("url"),
-                F.length(F.coalesce(F.col("html"), F.lit(b"")))
-                .cast("long").alias("bytes_in"),
-                F.lit(0).cast("long").alias("bytes_out"),
-                F.lit("URL_BLOCKED").alias("failure_code"),
-            ).localCheckpoint(eager=True)
-            n_blocked = blocked_manifest.count()
-            todo = flagged.where(~F.col("url_blocked")) \
-                .drop("url_blocked", "block_reason")
-        # fused extract(+chunk): one Arrow stage, no chunking shuffle
-        docs = extract_docs(todo, self.partitions, chunks=with_chunks)
-
-        # manifest rows ride the same job: spark_partition_id() is stamped
-        # AFTER the salted repartition inside extract_docs, so each row
-        # records the partition that actually did the work.
-        docs_m = docs.withColumn("partition_id", F.spark_partition_id())
-        if curate:
-            # gates BEFORE the dedup marking — the curate_corpus funnel
-            # order (dedup applies only to gate survivors, and a gated
-            # doc's hash must not be registered or own a winner slot)
-            docs_m = self._mark_curation(docs_m)
-        else:
-            docs_m = docs_m.withColumn("__gate", F.lit(None).cast("string"))
-        if dedupe:
-            docs_m = self._mark_duplicates(docs_m, run_id)
-        else:
-            docs_m = docs_m.withColumn("__dup", F.lit(False))
-        # localCheckpoint, NOT cache: the plan reads the manifest (resume
-        # anti-join) and the seen_hashes store (dedup gate) — appending to
-        # either path below refreshes it and INVALIDATES a cache built on
-        # it, silently recomputing docs_m against the post-write state
-        # (todo becomes empty, dup flags flip). Checkpointing materializes
-        # the batch immutably before any sink write.
-        docs_m = docs_m.localCheckpoint(eager=True)
-        n_docs = docs_m.count()
-        fresh = docs_m.where(~F.col("__dup") & F.col("__gate").isNull()) \
-            .drop("__dup", "__gate") \
-            .withColumn("batch_id", F.lit(batch_id))
-
-        # content sinks: UNCOMMITTED until _commit below (batch_id partition
-        # + manifest-dir commit log; see module docstring)
-        (fresh.drop("blocks", "chunks")
-         .write.mode("append").partitionBy("batch_id")
-         .format(fmt).save(self.docs_path))
-
-        blocks = explode_blocks(fresh.drop("chunks", "batch_id")) \
-            .withColumn("batch_id", F.lit(batch_id))
-        (blocks.write.mode("append").partitionBy("batch_id")
-         .format(fmt).save(self.blocks_path))
-
-        if with_chunks:
-            (explode_chunks(fresh.drop("batch_id"))
-             .withColumn("batch_id", F.lit(batch_id))
-             .write.mode("append").partitionBy("batch_id")
-             .format(fmt).save(self.chunks_path))
-
-        manifest = docs_m.select(
-            F.lit(run_id).alias("run_id"),
-            F.col("partition_id"),
-            F.col("url"),
-            F.col("bytes_in"),
-            F.length(F.coalesce("extracted_text", F.lit(""))).cast("long").alias("bytes_out"),
-            # precedence: extraction failure > curation gate > duplicate
-            # (non-curate runs have __gate ≡ NULL — identical to the old
-            # when(__dup, coalesce(fc, DUPLICATE)).otherwise(fc) form)
-            F.coalesce(
-                F.col("failure_code"), F.col("__gate"),
-                F.when(F.col("__dup"), F.lit("DUPLICATE")),
-            ).alias("failure_code"),
-        )
-        if blocked_manifest is not None:
-            manifest = manifest.unionByName(blocked_manifest)
-        staging = os.path.join(self.out_dir, "_staging", batch_id)
-        manifest.write.mode("overwrite").parquet(staging)
-        if lease is not None:
-            # commit-point validation: if this run's lock went stale during
-            # a long extraction and another writer stole it, abort HERE —
-            # publishing would race the new owner's batch. touch() first so
-            # a healthy run never looks stale to the next acquirer.
-            lease.assert_held()
-            lease.touch()
-        self._commit(staging, batch_id)
-        if dedupe:
-            from ..functions import normalized_text_hash_expr
-            from ..operators.dedup import register_hashes
-
-            register_hashes(
-                self.seen_path,
-                docs_m.where(
-                    ~F.col("__dup") & F.col("__gate").isNull()
-                    & F.col("failure_code").isNull()
-                    & (F.length(F.coalesce("extracted_text", F.lit(""))) > 0)
-                ).select(
-                    normalized_text_hash_expr(F.col("extracted_text"))
-                    .alias("hash"),
-                    F.lit("normalized_text").alias("kind"),
-                    F.lit(run_id).alias("source"),
-                ),
-            )
-        n_dups = docs_m.where(F.col("__dup")).count() if dedupe else 0
-        gate_drops = {}
-        if curate:
-            # ≤3 rows (one per gate code) — control-plane scalars; the
-            # full per-(run, partition) funnel comes from manifest_summary
-            gate_drops = {
-                r["__gate"]: r["n"]
-                for r in docs_m.where(F.col("__gate").isNotNull())
-                .groupBy("__gate").agg(F.count("*").alias("n")).collect()
-            }
-        return {"run_id": run_id, "docs_processed": n_docs,
-                "duplicates_skipped": n_dups, "urls_blocked": n_blocked,
-                "curation_drops": gate_drops}
-
     @property
     def seen_path(self) -> str:
         return os.path.join(self.out_dir, "seen_hashes")
 
     def _mark_curation(self, docs_m: DataFrame) -> DataFrame:
-        """Add `__gate`: the first failing text-quality gate's manifest
-        code (GOPHER_DROP / REPETITION_DROP / MODEL_DROP), NULL when all
-        three pass — the reference's doc_status failure tracking
+        """Set `__code` to the first failing text-quality gate's manifest
+        code (GOPHER_DROP / REPETITION_DROP / MODEL_DROP) where it is NULL
+        — the reference's doc_status failure tracking
         (persistent.py:369-406) extended to the curation stage. Docs with
         an extraction failure_code are not gate-coded (a parse failure is
-        not a quality judgment; precedence is enforced again in the
-        manifest coalesce). Flags come from the same tokenize-once
+        not a quality judgment). Flags come from the same tokenize-once
         projection pass `flag_corpus` uses (`with_text_gate_flags`) —
         zero extra scans, zero shuffles, and bit-identity with the
         standalone gates is already pinned by the curate tests."""
-        from .curate import text_gate_code_expr, with_text_gate_flags
-
-        orig = list(docs_m.columns)
-        flagged = with_text_gate_flags(docs_m, "extracted_text")
         gate = F.when(F.col("failure_code").isNull(), text_gate_code_expr())
-        return flagged.withColumn("__gate", gate).select(*orig, "__gate")
+        return with_text_gate_flags(docs_m, "extracted_text") \
+            .withColumn("__code", F.coalesce("__code", gate)) \
+            .select(*docs_m.columns)
 
-    def _mark_duplicates(self, docs_m: DataFrame, run_id: str) -> DataFrame:
-        """Add `__dup`: true when the doc's normalized-text hash is in the
-        persistent seen store OR a smaller url in this batch owns the hash.
+    def _mark_duplicates(self, docs_m: DataFrame) -> DataFrame:
+        """Set `__code` to DUPLICATE when the doc's normalized-text hash is
+        in the persistent seen store OR a smaller url in this batch owns
+        the hash, and add `__h`: the hash of every doc this run registers
+        (the gate-eligible docs that are not duplicates), NULL otherwise.
 
-        Failed or empty extractions are NEVER gated: all of EMPTY_HTML /
-        PARSE_ERROR / oversize docs share extracted_text='' and would
-        otherwise collapse into one 'duplicate' class (and poison the seen
-        store with hash('') forever); a parse failure is not a content
-        duplicate. Their hash is null → excluded from winners, the seen
-        join, and registration. Curation-gated docs (`__gate` non-null)
-        are excluded for the published-winner invariant: a gated doc is
-        never written, so letting it own a hash's winner slot would mark
-        its duplicates DUPLICATE while NO copy reaches the sinks — silent
-        loss of the content."""
-        from ..functions import normalized_text_hash_expr
-
-        gate_ok = (F.col("failure_code").isNull()
-                   & F.col("__gate").isNull()
-                   & (F.length(F.coalesce("extracted_text", F.lit(""))) > 0))
-        h = F.when(gate_ok,
-                   normalized_text_hash_expr(F.col("extracted_text")))
-        hashed = docs_m.withColumn("__h", h)
+        Only docs with no code and no extraction failure and a non-empty
+        text are gate-eligible. Failed or empty extractions all share
+        extracted_text='' and would otherwise collapse into one
+        'duplicate' class (and poison the seen store with hash('')
+        forever); a parse failure is not a content duplicate.
+        Curation-gated docs are excluded for the published-winner
+        invariant: a gated doc is never written, so letting it own a
+        hash's winner slot would mark its duplicates DUPLICATE while NO
+        copy reaches the sinks — silent loss of the content."""
+        eligible = (F.col("failure_code").isNull()
+                    & F.col("__code").isNull()
+                    & (F.length(F.coalesce("extracted_text", F.lit(""))) > 0))
+        hashed = docs_m.withColumn("__h", F.when(
+            eligible, normalized_text_hash_expr(F.col("extracted_text"))))
         winners = hashed.where(F.col("__h").isNotNull()) \
             .groupBy("__h").agg(F.min("url").alias("__wurl"))
         hashed = hashed.join(winners, "__h", "left")
@@ -439,12 +408,14 @@ class ExtractionPipeline:
             hashed = hashed.join(seen, "__h", "left")
         else:
             hashed = hashed.withColumn("__seen", F.lit(None).cast("boolean"))
-        return hashed.withColumn(
-            "__dup",
-            F.col("__h").isNotNull()
-            & (F.coalesce("__seen", F.lit(False))
-               | (F.col("url") != F.col("__wurl"))),
-        ).drop("__h", "__wurl", "__seen")
+        dup = F.col("__h").isNotNull() & (
+            F.coalesce("__seen", F.lit(False))
+            | (F.col("url") != F.col("__wurl")))
+        return hashed.withColumns({
+            "__code": F.when(dup, F.lit("DUPLICATE"))
+            .otherwise(F.col("__code")),
+            "__h": F.when(~dup, F.col("__h")),
+        }).drop("__wurl", "__seen")
 
     # -- lineage metrics --------------------------------------------------------
     def manifest_summary(self) -> DataFrame:

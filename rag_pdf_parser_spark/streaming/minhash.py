@@ -194,10 +194,12 @@ def append_store(store_dir: str, n_parts: int, cfg: dict,
     (band, bucket, id, bp) rows of `buckets`. Repartitioned by bp before
     the partitioned write: a W-partition DataFrame written partitionBy("bp")
     emits up to W×n_parts files per append (every future pruned read pays
-    the listing+open cost); keyed by bp the append writes ≤ n_parts files."""
+    the listing+open cost); keyed by bp the append writes ≤ 1 file per bp
+    dir. No width is named, so AQE coalesces the shuffle to the rows'
+    size instead of running n_parts tasks for a few hundred rows."""
     write_store_meta(store_dir, n_parts, extra=_meta_cfg(cfg))
     (buckets.select("band", "bucket", "id", "bp")
-     .repartition(n_parts, "bp")
+     .repartition("bp")
      .write.mode("append").partitionBy("bp").parquet(store_dir))
 
 

@@ -49,6 +49,27 @@ def test_exact_dedup(spark, docs_df):
     assert len(ids) == 18
 
 
+def test_exact_dedup_hashes_each_row_once(spark, docs_df):
+    """One scan of the input and one sha256 per row: the optimized plan of
+    `exact_dedup` holds exactly one Sha2 expression and one leaf (a
+    self-join re-scans the input and re-hashes it on both sides)."""
+    def walk(root, kids):
+        todo = [root]
+        while todo:
+            node = todo.pop()
+            yield node
+            seq = kids(node)
+            todo.extend(seq.apply(i) for i in range(seq.size()))
+
+    plan = exact_dedup(docs_df)._jdf.queryExecution().optimizedPlan()
+    ops = list(walk(plan, lambda n: n.children()))
+    exprs = [e for op in ops
+             for i in range(op.expressions().size())
+             for e in walk(op.expressions().apply(i), lambda n: n.children())]
+    assert sum(e.nodeName() == "Sha2" for e in exprs) == 1, plan.toString()
+    assert sum(op.children().size() == 0 for op in ops) == 1, plan.toString()
+
+
 def test_lsh_finds_near_dups(spark, docs_df):
     pairs = {(r["id_a"], r["id_b"])
              for r in lsh_candidate_pairs(docs_df, bands=4, num_perm=8).collect()}

@@ -1295,3 +1295,86 @@ def test_pipeline_curate_stage(spark, tmp_path):
                                 dedup=False).select("url").collect())
     assert got == want == ["https://ok.example/a-ok",
                            "https://ok.example/b-okdup"], (got, want)
+
+
+def test_pipeline_counts_match_committed_manifest(spark, tmp_path):
+    """All three gates plus a kernel failure in one run: the returned
+    counts equal the code counts of the batch's committed manifest rows,
+    the sinks hold exactly the docs no gate coded (the EMPTY_HTML doc
+    included), `seen_hashes` holds only the OK docs' hashes, and a resume
+    run reports all zeros."""
+    import random
+
+    import pandas as pd
+
+    from rag_pdf_parser_spark.functions import normalized_text_hash_expr
+    from rag_pdf_parser_spark.plans.curate import TEXT_GATE_CODES
+    from rag_pdf_parser_spark.schema import PAGES_SCHEMA
+
+    def good(seed):
+        rng = random.Random(seed)
+        return " ".join(f"{'abcdefghijklmnop'[rng.randrange(16)]}word{i}"
+                        for i in range(70)) + "."
+
+    def html(text):
+        return f"<html><body><p>{text}</p></body></html>".encode()
+
+    rows = [("https://ok.example/a", html(good(0))),
+            ("https://ok.example/b", html(good(0))),      # exact dup of a
+            ("https://ok.example/c", html(good(1))),
+            ("https://ok.example/d", html("too short")),  # GOPHER_DROP
+            ("https://ok.example/e", b""),                # EMPTY_HTML
+            ("https://spam.example/f", html(good(2))),    # URL_BLOCKED
+            ("https://sub.spam.example/g", html(good(3)))]
+    pages = spark.createDataFrame(
+        pd.DataFrame([(u, None, h, "", "en") for u, h in rows],
+                     columns=["url", "warc_ts", "html", "text", "lang"]),
+        schema=PAGES_SCHEMA)
+    blocked = spark.createDataFrame([("spam.example",)], "host string")
+    p = ExtractionPipeline(spark, str(tmp_path / "all"), partitions=2)
+
+    def run(run_id):
+        return p.run(pages, run_id=run_id, with_chunks=True,
+                     url_blocklist=blocked, curate=True, dedupe=True)
+
+    r = run("r1")
+    [batch] = p.committed_batch_ids()
+    m = spark.read.parquet(p.manifest_path) \
+        .where(F.col("batch_id") == batch)
+    codes = {row["failure_code"]: row["count"]
+             for row in m.groupBy("failure_code").count().collect()}
+    assert r == {
+        "run_id": "r1",
+        "docs_processed": sum(codes.values()) - codes["URL_BLOCKED"],
+        "duplicates_skipped": codes["DUPLICATE"],
+        "urls_blocked": codes["URL_BLOCKED"],
+        "curation_drops": {c: codes[c] for c in TEXT_GATE_CODES
+                           if c in codes},
+    }, (r, codes)
+    assert (codes["URL_BLOCKED"], codes["DUPLICATE"], codes["EMPTY_HTML"],
+            r["docs_processed"]) == (2, 1, 1, 5), codes
+    assert r["curation_drops"].get("GOPHER_DROP") == 1, r
+
+    # the sinks hold exactly the uncoded docs: OK plus kernel failures
+    uncoded = {row["url"] for row in m.where(
+        F.col("failure_code").isNull()
+        | (F.col("failure_code") == "EMPTY_HTML")).collect()}
+    docs = p.read_docs()
+    assert {row["url"] for row in docs.collect()} == uncoded
+    assert "https://ok.example/e" in uncoded
+    assert "https://ok.example/a" in uncoded
+    doc_ids = {row["doc_id"] for row in docs.collect()}
+    assert {row["doc_id"] for row in p.read_chunks().collect()} <= doc_ids
+
+    # only the OK docs' hashes are registered
+    ok_hashes = {row["h"] for row in docs.where(
+        F.col("failure_code").isNull()).select(
+        normalized_text_hash_expr(F.col("extracted_text")).alias("h"))
+        .collect()}
+    seen = [row["hash"] for row in
+            spark.read.parquet(p.seen_path).select("hash").collect()]
+    assert sorted(seen) == sorted(ok_hashes) and ok_hashes, (seen, ok_hashes)
+
+    assert run("r2") == {"run_id": "r2", "docs_processed": 0,
+                         "duplicates_skipped": 0, "urls_blocked": 0,
+                         "curation_drops": {}}
