@@ -21,6 +21,8 @@ the hash (or none when bucketed storage pre-partitions by hash).
 
 from __future__ import annotations
 
+import os
+
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -33,6 +35,30 @@ from ..functions import (  # noqa: F401
     normalized_text_hash_expr,
     token_ngrams_expr,
 )
+from ..plans.lease import WriterLease
+from ..plans.maintenance import recover_store
+
+#: The near-dup recipe's one signature config: char 5-gram shingles,
+#: 32 xxhash minhashes in 8 bands of r=4 rows, S-curve midpoint
+#: (1/b)^(1/r) ≈ 0.59. Against the pair-generation operator's
+#: recall-first (8, 4) it has the same recall at the 0.8 threshold
+#: (1-(1-J^4)^8 = 0.985 at J=0.8 vs 0.983; at sf0.1 both find the same
+#: 256 true pairs) and far fewer low-J banding collisions (theory: 12×
+#: at J=0.2; measured on the template-heavy sf0.1 corpus: 870,708 →
+#: 464,414 candidates — the rest sit near the r=4 crossover at
+#: J≈0.3-0.5). With the verify's size-bound prefilter the recipe's cost
+#: at sf0.1 drops 172 → 62.5 s (BENCH.md "dedup_corpus stage profile").
+#: The 4× signature hashes are embarrassingly parallel (Lee et al. spend
+#: 9,000 hashes per doc for the same reason). The LSH store records it
+#: in its meta (`streaming.minhash`): bucket values under another config
+#: are incomparable, so a store written under one is refused.
+LSH_CONFIG = {"n": 5, "num_perm": 32, "bands": 8, "shingle": "char"}
+#: LSH skew cap: buckets holding more docs are left out of candidate
+#: generation (boilerplate mega-buckets; their members are exact dups the
+#: exact lane upstream already collapsed)
+MAX_BUCKET = 10_000
+#: verified char-5-gram Jaccard at or above which two docs are near-dups
+JACCARD_THRESHOLD = 0.8
 
 
 # --- exact -------------------------------------------------------------------
@@ -396,12 +422,13 @@ def jaccard_size_bound_expr(sz_a: Column, sz_b: Column,
 
 
 def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", n: int = 5,
-                        shingle: str = "char",
+                        text_col: str = "text",
                         min_jaccard: float | None = None,
                         broadcast_bytes: int = 256 << 20) -> DataFrame:
-    """Exact n-gram Jaccard for candidate pairs (id_a, id_b): explode distinct
-    shingles, equi-join on shingle, |∩| / (|A|+|B|-|∩|).
+    """Exact char n-gram Jaccard for candidate pairs (id_a, id_b):
+    |∩| / (|A|+|B|-|∩|) over the docs' distinct shingle sets, with n the
+    recipe's shingle length (`LSH_CONFIG`), so candidates verify in the
+    space their signatures approximated.
 
     `min_jaccard` switches on the size-bound prefilter for the
     dedup-verify workload: J(A,B) ≥ t requires min(|A|,|B|)/max(|A|,|B|)
@@ -426,17 +453,9 @@ def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
     load-bearing lineage cut, see the inline comment). Callers that only
     want to inspect the plan pay that job.
 
-    shingle='char' (default, the oracle-checked config): character n-grams
-    as per-doc DISTINCT STRING arrays (no 64-bit hashing — a hash
-    collision would change the exact count the DuckDB oracle checks).
-    shingle='word': TOKEN n-grams — the similarity space that word-shingle
-    MinHash-LSH approximates, so a word-config `dedup_corpus` verifies in
-    the same space its candidates came from (r4 ADVICE finding: verifying
-    word-LSH candidates with char-gram Jaccard thresholds a different
-    metric). Gram construction is identical to `minhash_signature`'s word/xx
-    path (zip-shift fold, empty doc → one ''-shingle, grams hashed to
-    int64 — set sizes and intersections over the hashes equal those over
-    the grams up to 64-bit collisions).
+    Shingles are per-doc DISTINCT STRING arrays of the normalized text
+    (no 64-bit hashing — a hash collision would change the exact count
+    the DuckDB oracle checks).
 
     Shape (r7 rewrite, guide §2.3/§2.4 — shuffle fewer bytes / remove the
     fan-out shuffle): the former formulation exploded every candidate
@@ -450,8 +469,7 @@ def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
     64M-row exchange exists at all. Measured at sf0.1 (212k surviving
     pairs): verify stage 27.9 → ~3 s. Per-row memory is O(doc grams),
     bounded by the pipeline's MAX_HTML_BYTES-capped doc sizes."""
-    if shingle not in ("char", "word"):
-        raise ValueError(f"shingle must be 'char' or 'word', got {shingle!r}")
+    n = LSH_CONFIG["n"]
     # spread a single-task doc scan before the gram-array build (the
     # same §2.5 guard as the pair side below; no-op for exchange-bearing
     # or well-partitioned inputs)
@@ -482,31 +500,16 @@ def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
     pre = df.join(ids, id_col, "left_semi").select(
         F.col(id_col).alias("id"),
         normalized_text_expr(F.col(text_col)).alias("__t"))
-    if shingle == "word":
-        grams = token_ngrams_expr(F.col("__t"), n, pre_normalized=True)
-        raw = F.transform(grams, lambda g: F.xxhash64(g))
-    else:
-        idx = F.sequence(F.lit(1),
-                         F.greatest(F.length("__t") - (n - 1), F.lit(1)))
-        raw = F.transform(idx, lambda i: F.col("__t").substr(i, F.lit(n)))
+    idx = F.sequence(F.lit(1),
+                     F.greatest(F.length("__t") - (n - 1), F.lit(1)))
+    raw = F.transform(idx, lambda i: F.col("__t").substr(i, F.lit(n)))
     # materialized ONCE (one row per candidate doc, a few KB each): the
     # pair joins below reference it twice (id_a / id_b sides) and the
     # prefilter twice more — without the checkpoint each reference
     # re-runs the semi-join + normalize + gram build, and AQE would not
     # see the (small) true size that lets it pick broadcast joins.
-    gtab = pre.select("id", F.array_distinct(raw).alias("__gs0")) \
+    gtab = pre.select("id", F.array_distinct(raw).alias("__gs")) \
         .localCheckpoint(eager=True)
-    if shingle == "word":
-        # empty doc → one ''-shingle, exactly like the explode_outer +
-        # coalesce of minhash_signature. Applied ON TOP of the
-        # materialized column so the conditional's double reference
-        # cannot duplicate the gram-build expression (the r4
-        # CollapseProject finding).
-        gs = F.when(F.size("__gs0") > 0, F.col("__gs0")) \
-            .otherwise(F.array(F.xxhash64(F.lit(""))))
-    else:
-        gs = F.col("__gs0")
-    gtab = gtab.select("id", gs.alias("__gs"))
     sizes = gtab.select("id", F.size("__gs").alias("sz"))
     if min_jaccard is not None:
         pairs = (
@@ -538,13 +541,10 @@ def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
     # measured in BYTES, not characters (a CJK-heavy corpus is 3× bigger
     # than its char count): payload via octet_length, + 16 B/element of
     # array/offset overhead. One small job over the materialized table.
-    if shingle == "char":
-        elem_bytes = F.aggregate(
-            F.col("__gs"), F.lit(0).cast("long"),
-            lambda a, x: a + F.coalesce(F.octet_length(x), F.lit(0))
-            .cast("long"))
-    else:
-        elem_bytes = (F.size("__gs") * F.lit(8)).cast("long")
+    elem_bytes = F.aggregate(
+        F.col("__gs"), F.lit(0).cast("long"),
+        lambda a, x: a + F.coalesce(F.octet_length(x), F.lit(0))
+        .cast("long"))
     # the same job checks the precondition that `id_col` uniquely keys
     # the candidate docs: the array joins would emit one output row per
     # duplicate-id row
@@ -815,10 +815,7 @@ def _exact_staged(docs: DataFrame, id_col: str,
 
 
 def dedup_corpus(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text", jaccard_threshold: float = 0.8,
-                 n: int = 5, num_perm: int = 32, bands: int = 8,
-                 shingle: str = "char",
-                 max_bucket: int | None = 10_000) -> DataFrame:
+                 text_col: str = "text") -> DataFrame:
     """The COMPLETE near-duplicate removal pipeline in one call — the
     published training-data recipe (Lee et al. 2022 / RefinedWeb) composed
     from this module's tested stages:
@@ -830,26 +827,10 @@ def dedup_corpus(docs: DataFrame, id_col: str = "doc_id",
       → keep-canonical                    (min id per cluster + unpaired)
 
     Verification matters: LSH banding includes low-similarity collisions;
-    the Jaccard gate at `jaccard_threshold` makes the drop decision exact
-    — and it runs in the SAME shingle space (`shingle`/`n` are passed
-    through) that the LSH stage approximated, as the published recipes
-    require. `max_bucket` caps boilerplate mega-buckets (their members
-    are exact dups — the exact lane upstream already collapsed those).
-
-    Default signature config is (num_perm=32, bands=8) — r=4 rows/band,
-    S-curve midpoint (1/b)^(1/r) ≈ 0.59. Versus the pair-generation
-    operator's recall-first (8, 4): identical recall at the 0.8 threshold
-    (1-(1-J^4)^8 = 0.985 at J=0.8 vs 0.983 — and measured at sf0.1 the
-    two configs find the IDENTICAL 256 true pairs) with sharply fewer
-    low-J banding collisions (theory: 12× at J=0.2; measured on this
-    template-heavy corpus: 870,708 → 464,414 candidates, 1.9× — the
-    surviving collision mass sits near the r=4 S-curve crossover at
-    J≈0.3-0.5, where the pigeonhole gap narrows). Combined with the exact
-    size-bound prefilter the recipe's end-to-end cost at sf0.1 drops
-    172 → 62.5 s (BENCH.md "dedup_corpus stage profile"). Signatures cost
-    4× more hashes — embarrassingly parallel, the side of the trade you
-    WANT to pay at 100 TB (Lee et al. spend 9,000 hashes per doc for
-    exactly this reason).
+    the Jaccard gate at `JACCARD_THRESHOLD` makes the drop decision exact
+    — and it runs in the char n-gram space the LSH stage approximated, as
+    the published recipes require. The signature config and the skew cap
+    are the module's `LSH_CONFIG` and `MAX_BUCKET`.
 
     Scale shape: every stage is the scale-safe formulation documented on
     its function; the Jaccard verify is candidate-pair-bounded. Returns
@@ -860,20 +841,19 @@ def dedup_corpus(docs: DataFrame, id_col: str = "doc_id",
     # materialize the candidate pairs: the verify stage references them
     # four times (pair-id restriction, size prefilter, intersection count,
     # zero-overlap left join) and each reference would otherwise re-run
-    # the banding self-join; the pair set is bounded (max_bucket caps the
+    # the banding self-join; the pair set is bounded (MAX_BUCKET caps the
     # per-bucket quadratic blowup)
     cands = lsh_candidate_pairs(out, id_col=id_col, text_col=text_col,
-                                n=n, num_perm=num_perm, bands=bands,
-                                shingle=shingle, max_bucket=max_bucket) \
+                                max_bucket=MAX_BUCKET, **LSH_CONFIG) \
         .localCheckpoint(eager=True)
     # materialized: dedup_keep_canonical's component pass executes its
     # pair input twice (bounded fetch + fallback) and the final anti-join
     # references it again — without the checkpoint each execution re-runs
     # the whole verify. True pairs only, so the materialization is tiny.
     verified = ngram_jaccard_pairs(out, cands, id_col=id_col,
-                                   text_col=text_col, n=n, shingle=shingle,
-                                   min_jaccard=jaccard_threshold) \
-        .where(F.col("jaccard") >= jaccard_threshold) \
+                                   text_col=text_col,
+                                   min_jaccard=JACCARD_THRESHOLD) \
+        .where(F.col("jaccard") >= JACCARD_THRESHOLD) \
         .select("id_a", "id_b").localCheckpoint(eager=True)
     return dedup_keep_canonical(out, verified, id_col)
 
@@ -881,11 +861,6 @@ def dedup_corpus(docs: DataFrame, id_col: str = "doc_id",
 def dedup_corpus_incremental(increment: DataFrame, store_dir: str,
                              canon_dir: str, id_col: str = "doc_id",
                              text_col: str = "text",
-                             jaccard_threshold: float = 0.8, n: int = 5,
-                             num_perm: int = 32, bands: int = 8,
-                             shingle: str = "char",
-                             max_bucket: int | None = 10_000,
-                             store_partitions: int | None = None,
                              stats: dict | None = None) -> DataFrame:
     """INCREMENTAL near-dedup (r4 verdict #4): admit a new batch against the
     accumulated canonical corpus WITHOUT re-shingling it. `dedup_corpus`
@@ -940,10 +915,11 @@ def dedup_corpus_incremental(increment: DataFrame, store_dir: str,
     micro-batch. The store lives in streaming/minhash.py (`open_store`
     … `append_store`): (band, bucket, id, bp) rows, where the OWNER id
     tells the verify stage which canonical doc a collision points at. The
-    signature config rides the store meta and is validated on every run
-    (a different n/num_perm/bands/shingle would make bucket values
-    incomparable and silently admit every duplicate), as are the bp
-    modulus and the partitioned layout.
+    recipe's `LSH_CONFIG` rides the store meta and is checked on every run
+    (a store written under another config holds incomparable bucket
+    values and would silently admit every duplicate), as is the
+    partitioned layout; the store is read with the bp modulus its meta
+    records.
 
     Semantics are FIRST-SEEN GREEDY, the standard incremental trade-off:
     equal to one-shot `dedup_corpus` over the accumulated corpus except
@@ -963,27 +939,6 @@ def dedup_corpus_incremental(increment: DataFrame, store_dir: str,
     acquisition races a concurrent increment's commit and skews the split
     between already-admitted and dedup-dropped — r5 verdict #6).
     """
-    import os as _os
-
-    from ..plans.lease import WriterLease
-
-    spark = increment.sparkSession
-    with WriterLease(_os.path.dirname(store_dir.rstrip("/")) or ".") \
-            as lease:
-        return _dedup_corpus_incremental_locked(
-            spark, increment, store_dir, canon_dir, id_col, text_col,
-            jaccard_threshold, n, num_perm, bands, shingle, max_bucket,
-            store_partitions, lease, stats)
-
-
-def _dedup_corpus_incremental_locked(spark, increment, store_dir, canon_dir,
-                                     id_col, text_col, jaccard_threshold, n,
-                                     num_perm, bands, shingle, max_bucket,
-                                     store_partitions, lease,
-                                     stats=None) -> DataFrame:
-    import os as _os
-
-    from ..plans.maintenance import recover_store
     from ..streaming.minhash import (
         append_store,
         open_store,
@@ -991,119 +946,129 @@ def _dedup_corpus_incremental_locked(spark, increment, store_dir, canon_dir,
         store_buckets,
     )
 
-    cfg = {"n": n, "num_perm": num_perm, "bands": bands, "shingle": shingle}
-    n_parts, has_store = open_store(store_dir, store_partitions, cfg)
-    recover_store(canon_dir)
+    spark = increment.sparkSession
+    with WriterLease(os.path.dirname(store_dir.rstrip("/")) or ".") \
+            as lease:
+        n_parts, has_store = open_store(store_dir)
+        recover_store(canon_dir)
 
-    # resume semantics (retry of a COMPLETED run): an id already in the
-    # canonical corpus is already admitted — anti-join it out up front.
-    # This also makes batch and canonical ids provably disjoint, so the
-    # only same-id candidate pairs below are orphan self-collisions.
-    has_canon = _os.path.isdir(canon_dir) and any(
-        f.endswith(".parquet") for f in _os.listdir(canon_dir))
-    if has_canon:
-        canon_ids = spark.read.parquet(canon_dir).select(id_col)
-        if stats is not None:
-            # measured here, under the lease, against the exact snapshot
-            # the anti-join reads — see the docstring's `stats` contract
-            stats["n_already_admitted"] = increment.join(
-                canon_ids, id_col, "left_semi").count()
-        increment = increment.join(canon_ids, id_col, "left_anti")
-    elif stats is not None:
-        stats["n_already_admitted"] = 0
+        # resume semantics (retry of a COMPLETED run): an id already in
+        # the canonical corpus is already admitted — anti-join it out up
+        # front. This also makes batch and canonical ids provably
+        # disjoint, so the only same-id candidate pairs below are orphan
+        # self-collisions.
+        has_canon = os.path.isdir(canon_dir) and any(
+            f.endswith(".parquet") for f in os.listdir(canon_dir))
+        if has_canon:
+            canon_ids = spark.read.parquet(canon_dir).select(id_col)
+            if stats is not None:
+                # measured here, under the lease, against the exact
+                # snapshot the anti-join reads — see the docstring's
+                # `stats` contract
+                stats["n_already_admitted"] = increment.join(
+                    canon_ids, id_col, "left_semi").count()
+            increment = increment.join(canon_ids, id_col, "left_anti")
+        elif stats is not None:
+            stats["n_already_admitted"] = 0
 
-    out = _exact_staged(increment, id_col, text_col)
-    buckets = store_buckets(out, id_col, text_col, n_parts, cfg)
-    cands = bucket_pairs(buckets, max_bucket)
+        out = _exact_staged(increment, id_col, text_col)
+        buckets = store_buckets(out, id_col, text_col, n_parts)
+        cands = bucket_pairs(buckets, MAX_BUCKET)
 
-    # `has_store and not has_canon` is the FIRST-EVER batch retried after a
-    # crash between the two appends: every store row is an orphan (no
-    # canonical text exists anywhere), so a collision can never verify and
-    # the probe branch would only crash on the canon_dir read
-    # (PATH_NOT_FOUND) — skip it and admit the batch (ADVICE r5). But the
-    # same state also describes a LOST or mispointed canon table (review
-    # finding: silently admitting every near-dup of a mature store would
-    # be far worse than the crash the guard removes), so the orphan
-    # hypothesis is VERIFIED first: in the crash window every store row's
-    # owner id comes from this very increment. Any foreign id ⇒ refuse
-    # loudly. The check reads the store once — in the genuine crash state
-    # that store is one batch's worth of rows.
-    if has_store and not has_canon:
-        foreign = (
-            spark.read.parquet(store_dir).select("id")
-            .join(increment.select(F.col(id_col).alias("id")),
-                  "id", "left_anti")
-            .limit(1).count())
-        if foreign:
-            raise ValueError(
-                f"LSH store at {store_dir} carries owner ids that are not "
-                f"in this increment, but canon_dir {canon_dir} has no "
-                "data — the store references canonical documents that do "
-                "not exist (lost or mispointed canon table?). Refusing to "
-                "probe-skip: that would silently admit every near-"
-                "duplicate of the indexed corpus. Restore canon_dir or "
-                "rebuild the store.")
-    if has_store and has_canon:
-        seen = probe_store(spark, store_dir, buckets)
-        cands = cands.unionByName(
-            buckets.join(seen.select("band", "bucket",
-                                     F.col("id").alias("id_b")),
-                         ["band", "bucket"])
-            # id_a == id_b can only be an ORPHAN self-collision (batch and
-            # canon ids are disjoint after the resume anti-join): a prior
-            # crashed attempt indexed this doc's buckets but never
-            # published its text — that is this doc's own history, not a
-            # duplicate, so it must not count against admission
-            .where(F.col("id") != F.col("id_b"))
-            .select(F.col("id").alias("id_a"), "id_b").distinct())
-    # materialized: referenced by the canon-text semi-join and four times
-    # inside the verify, each of which would otherwise re-run the bucket
-    # self-join and re-read the store; bounded by the candidate pairs
-    cands = cands.localCheckpoint(eager=True)
-    texts = out.select(id_col, text_col)
-    if has_store and has_canon:
-        texts = texts.unionByName(
-            spark.read.parquet(canon_dir)
-            .join(cands.select(F.col("id_b").alias(id_col)).distinct(),
-                  id_col, "left_semi")
-            .select(id_col, text_col))
-    # materialized (true pairs only): the component pass and the drop
-    # set's cross half would each re-run the verify and its canon read
-    verified = (
-        ngram_jaccard_pairs(texts, cands, id_col=id_col, text_col=text_col,
-                            n=n, shingle=shingle,
-                            min_jaccard=jaccard_threshold)
-        .where(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b").localCheckpoint(eager=True)
-    )
-    batch_ids = out.select(F.col(id_col).alias("id_b"))
-    # materialized (distinct ids — tiny, AQE-coalesced): the store append,
-    # the canon write and the caller's read of the result each anti-join
-    # it, and would otherwise each re-run its two joins of `verified`
-    # against the batch ids and the dedup of their union
-    dropped = _non_root_ids(verified.join(batch_ids, "id_b", "left_semi")) \
-        .unionByName(verified.join(batch_ids, "id_b", "left_anti")
-                     .select(F.col("id_a").alias("id"))) \
-        .distinct().localCheckpoint(eager=True)
-    admitted = out.join(dropped.withColumnRenamed("id", id_col), id_col,
-                        "left_anti")
-    admitted_buckets = buckets.join(dropped, "id", "left_anti")
-    # NO eager checkpoint here: the appends below mutate canon_dir and
-    # store_dir, but every path into `admitted` / `admitted_buckets` is
-    # lineage-cut ABOVE any store/canon read by the `out` (resume
-    # anti-join), `buckets` and `dropped` (probe, canon texts) checkpoints.
-    # A canon/store read added below those cuts needs its own checkpoint.
-    # commit-point validation before publishing (same rule as the
-    # pipeline): a stolen-stale lease must abort here, not interleave its
-    # appends with the new owner's
-    lease.assert_held()
-    lease.touch()
-    # BUCKETS FIRST, canon second — the crash-safe order (see docstring
-    # step 4: orphan bucket rows are inert; canon rows without index
-    # entries would silently admit every future near-dup of them)
-    append_store(store_dir, n_parts, cfg, admitted_buckets)
-    admitted.write.mode("append").parquet(canon_dir)
-    return admitted
+        # `has_store and not has_canon` is the FIRST-EVER batch retried
+        # after a crash between the two appends: every store row is an
+        # orphan (no canonical text exists anywhere), so a collision can
+        # never verify and the probe branch would only crash on the
+        # canon_dir read (PATH_NOT_FOUND) — skip it and admit the batch
+        # (ADVICE r5). But the same state also describes a LOST or
+        # mispointed canon table (review finding: silently admitting every
+        # near-dup of a mature store would be far worse than the crash the
+        # guard removes), so the orphan hypothesis is VERIFIED first: in
+        # the crash window every store row's owner id comes from this very
+        # increment. Any foreign id ⇒ refuse loudly. The check reads the
+        # store once — in the genuine crash state that store is one
+        # batch's worth of rows.
+        if has_store and not has_canon:
+            foreign = (
+                spark.read.parquet(store_dir).select("id")
+                .join(increment.select(F.col(id_col).alias("id")),
+                      "id", "left_anti")
+                .limit(1).count())
+            if foreign:
+                raise ValueError(
+                    f"LSH store at {store_dir} carries owner ids that are "
+                    f"not in this increment, but canon_dir {canon_dir} has "
+                    "no data — the store references canonical documents "
+                    "that do not exist (lost or mispointed canon table?). "
+                    "Refusing to probe-skip: that would silently admit "
+                    "every near-duplicate of the indexed corpus. Restore "
+                    "canon_dir or rebuild the store.")
+        if has_store and has_canon:
+            seen = probe_store(spark, store_dir, buckets)
+            cands = cands.unionByName(
+                buckets.join(seen.select("band", "bucket",
+                                         F.col("id").alias("id_b")),
+                             ["band", "bucket"])
+                # id_a == id_b can only be an ORPHAN self-collision (batch
+                # and canon ids are disjoint after the resume anti-join): a
+                # prior crashed attempt indexed this doc's buckets but
+                # never published its text — that is this doc's own
+                # history, not a duplicate, so it must not count against
+                # admission
+                .where(F.col("id") != F.col("id_b"))
+                .select(F.col("id").alias("id_a"), "id_b").distinct())
+        # materialized: referenced by the canon-text semi-join and four
+        # times inside the verify, each of which would otherwise re-run
+        # the bucket self-join and re-read the store; bounded by the
+        # candidate pairs
+        cands = cands.localCheckpoint(eager=True)
+        texts = out.select(id_col, text_col)
+        if has_store and has_canon:
+            texts = texts.unionByName(
+                spark.read.parquet(canon_dir)
+                .join(cands.select(F.col("id_b").alias(id_col)).distinct(),
+                      id_col, "left_semi")
+                .select(id_col, text_col))
+        # materialized (true pairs only): the component pass and the drop
+        # set's cross half would each re-run the verify and its canon read
+        verified = (
+            ngram_jaccard_pairs(texts, cands, id_col=id_col,
+                                text_col=text_col,
+                                min_jaccard=JACCARD_THRESHOLD)
+            .where(F.col("jaccard") >= JACCARD_THRESHOLD)
+            .select("id_a", "id_b").localCheckpoint(eager=True)
+        )
+        batch_ids = out.select(F.col(id_col).alias("id_b"))
+        # materialized (distinct ids — tiny, AQE-coalesced): the store
+        # append, the canon write and the caller's read of the result each
+        # anti-join it, and would otherwise each re-run its two joins of
+        # `verified` against the batch ids and the dedup of their union
+        dropped = _non_root_ids(
+            verified.join(batch_ids, "id_b", "left_semi")) \
+            .unionByName(verified.join(batch_ids, "id_b", "left_anti")
+                         .select(F.col("id_a").alias("id"))) \
+            .distinct().localCheckpoint(eager=True)
+        admitted = out.join(dropped.withColumnRenamed("id", id_col), id_col,
+                            "left_anti")
+        admitted_buckets = buckets.join(dropped, "id", "left_anti")
+        # NO eager checkpoint here: the appends below mutate canon_dir and
+        # store_dir, but every path into `admitted` / `admitted_buckets`
+        # is lineage-cut ABOVE any store/canon read by the `out` (resume
+        # anti-join), `buckets` and `dropped` (probe, canon texts)
+        # checkpoints. A canon/store read added below those cuts needs its
+        # own checkpoint.
+        # commit-point validation before publishing (same rule as the
+        # pipeline): a stolen-stale lease must abort here, not interleave
+        # its appends with the new owner's
+        lease.assert_held()
+        lease.touch()
+        # BUCKETS FIRST, canon second — the crash-safe order (see
+        # docstring step 4: orphan bucket rows are inert; canon rows
+        # without index entries would silently admit every future
+        # near-dup of them)
+        append_store(store_dir, n_parts, admitted_buckets)
+        admitted.write.mode("append").parquet(canon_dir)
+        return admitted
 
 
 def decontaminate_flags(docs: DataFrame, benchmark_grams: DataFrame,

@@ -159,7 +159,6 @@ def curation_funnel(flagged: DataFrame) -> dict:
 def curate_corpus(docs: DataFrame, blocked_hosts: DataFrame | None = None,
                   id_col: str = "doc_id", url_col: str = "url",
                   text_col: str = "text", dedup: bool = True,
-                  jaccard_threshold: float = 0.8,
                   validate: bool = True) -> DataFrame:
     """The full curation: gate flags → filter to pass_all → near-dedup.
     Returns the curated corpus with the original columns. `validate` —
@@ -169,8 +168,7 @@ def curate_corpus(docs: DataFrame, blocked_hosts: DataFrame | None = None,
     kept = flagged.where(F.col("pass_all")).select(*docs.columns)
     if not dedup:
         return kept
-    return dedup_corpus(kept, id_col=id_col, text_col=text_col,
-                        jaccard_threshold=jaccard_threshold)
+    return dedup_corpus(kept, id_col=id_col, text_col=text_col)
 
 
 def curate_corpus_incremental(increment: DataFrame, store_dir: str,
@@ -178,19 +176,13 @@ def curate_corpus_incremental(increment: DataFrame, store_dir: str,
                               blocked_hosts: DataFrame | None = None,
                               id_col: str = "doc_id", url_col: str = "url",
                               text_col: str = "text",
-                              jaccard_threshold: float = 0.8,
-                              n: int = 5, num_perm: int = 32, bands: int = 8,
-                              shingle: str = "char",
-                              max_bucket: int | None = 10_000,
-                              store_partitions: int | None = None,
                               validate: bool = True
                               ) -> tuple[DataFrame, dict]:
     """The DAILY-INCREMENT production entrypoint: gate flags (tokenize-once
     pass) → sequential funnel accounting → pass_all filter → incremental
     near-dedup against the persisted bucket index + accumulated canonical
     corpus (`operators.dedup.dedup_corpus_incremental` — bp-pruned store
-    probes, crash-safe append order, writer-leased; the LSH config params
-    pass through so a store built with any config is usable here).
+    probes, crash-safe append order, writer-leased).
 
     Returns (admitted_docs, funnel) where `funnel` extends the per-gate
     accounting with `drop_already_admitted` (gate survivors whose id is
@@ -222,9 +214,7 @@ def curate_corpus_incremental(increment: DataFrame, store_dir: str,
     dedup_stats: dict = {}
     admitted = dedup_corpus_incremental(
         kept, store_dir, canon_dir, id_col=id_col, text_col=text_col,
-        jaccard_threshold=jaccard_threshold, n=n, num_perm=num_perm,
-        bands=bands, shingle=shingle, max_bucket=max_bucket,
-        store_partitions=store_partitions, stats=dedup_stats)
+        stats=dedup_stats)
     n_admitted = admitted.count()
     n_already = dedup_stats["n_already_admitted"]
     funnel["drop_already_admitted"] = n_already

@@ -9,7 +9,7 @@ reference got mutual exclusion for free from SQLite's file lock
 guarantee is an ATOMIC ``mkdir`` lease:
 
     acquire  = os.mkdir(<root>/_lock)          (atomic: exactly one winner)
-    steal    = lock older than `stale_sec` → rmtree + one retry
+    steal    = lock older than `STALE_SEC` → rmtree + one retry
                (same age doctrine as vacuum_uncommitted's staging guard)
     validate = the owner token written inside the lock dir is re-checked at
                the COMMIT POINT (`assert_held`) — a writer whose stale lock
@@ -45,20 +45,21 @@ class LeaseHeldError(RuntimeError):
 
 _OWNER_FILE = "owner.json"
 
+#: a lock with no mtime update for this long is presumed dead (crashed
+#: writer) and may be taken over
+STALE_SEC = 3600.0
+
 
 class WriterLease:
-    """Context-manager lease on ``<root>/_lock``.
-
-    `stale_sec`: a lock with no mtime update for this long is presumed dead
-    (crashed writer) and may be taken over. Long-running writers call
-    `touch()` at phase boundaries to stay fresh; the pipeline touches
-    before its commit rename.
+    """Context-manager lease on ``<root>/_lock``, stealable once it is
+    `STALE_SEC` old. Long-running writers call `touch()` at phase
+    boundaries to stay fresh; the pipeline touches before its commit
+    rename.
     """
 
-    def __init__(self, root: str, stale_sec: float = 3600.0) -> None:
+    def __init__(self, root: str) -> None:
         self.root = root
         self.dir = os.path.join(root, "_lock")
-        self.stale_sec = stale_sec
         self.token = uuid.uuid4().hex
 
     # -- lifecycle -----------------------------------------------------------
@@ -72,7 +73,7 @@ class WriterLease:
                     age = time.time() - os.path.getmtime(self.dir)
                 except OSError:
                     continue  # holder released between mkdir and getmtime
-                if attempt == 0 and age >= self.stale_sec:
+                if attempt == 0 and age >= STALE_SEC:
                     # presumed-dead holder: steal once, via an ATOMIC
                     # rename to a stealer-unique trash name. Exactly one
                     # concurrent stealer's rename succeeds; the loser's
@@ -90,7 +91,7 @@ class WriterLease:
                     continue
                 raise LeaseHeldError(
                     f"writer lease at {self.dir} held by another run "
-                    f"(age {age:.0f}s < stale_sec {self.stale_sec:.0f}s); "
+                    f"(age {age:.0f}s < STALE_SEC {STALE_SEC:.0f}s); "
                     "a second concurrent writer on one out_dir would "
                     "commit duplicate urls") from None
             with open(os.path.join(self.dir, _OWNER_FILE), "w",

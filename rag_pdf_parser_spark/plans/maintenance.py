@@ -89,8 +89,7 @@ def atomic_swap(path: str) -> None:
 def compact_table(spark: SparkSession, path: str,
                   dedup_keys: list[str] | None,
                   partition_by: list[str] | None = None,
-                  preserve_files: list[str] | None = None,
-                  lease_stale_sec: float = 3600.0) -> dict:
+                  preserve_files: list[str] | None = None) -> dict:
     """Rewrite the parquet table at `path` with duplicate rows (by
     `dedup_keys`, or whole rows when None) collapsed and small append
     files coalesced — the MERGE-maintenance job. Preserves (or
@@ -100,8 +99,7 @@ def compact_table(spark: SparkSession, path: str,
 
     Returns {"rows_before", "rows_after", "files_before", "files_after"}.
     """
-    with WriterLease(os.path.dirname(path.rstrip("/")) or ".",
-                     lease_stale_sec) as lease:
+    with WriterLease(os.path.dirname(path.rstrip("/")) or ".") as lease:
         # recover INSIDE the lease: an un-leased recover_store could
         # resurrect the trash dir of a CONCURRENT compaction sitting
         # between its two swap renames, colliding with its second rename
@@ -154,8 +152,7 @@ def compact_seen_hashes(spark: SparkSession, path: str) -> dict:
 
 
 def compact_output(spark: SparkSession, out_dir: str,
-                   fmt: str = "parquet",
-                   lease_stale_sec: float = 3600.0) -> dict:
+                   fmt: str = "parquet") -> dict:
     """Fold an ExtractionPipeline out_dir's committed ``batch_id=`` batches
     into ONE base batch — manifest maintenance (r4 verdict #7). The commit
     log grows a dir per run forever; after thousands of runs the listing
@@ -184,7 +181,7 @@ def compact_output(spark: SparkSession, out_dir: str,
     from .pipeline import ExtractionPipeline
 
     p = ExtractionPipeline(spark, out_dir)
-    with WriterLease(out_dir, lease_stale_sec) as lease:
+    with WriterLease(out_dir) as lease:
         ids = p.committed_batch_ids()
         if len(ids) <= 1:
             return {"batches_before": len(ids), "batches_after": len(ids),

@@ -73,12 +73,10 @@ from .maintenance import recover_store
 
 class ExtractionPipeline:
     def __init__(self, spark: SparkSession, out_dir: str,
-                 partitions: int | None = None,
-                 lease_stale_sec: float = 3600.0) -> None:
+                 partitions: int | None = None) -> None:
         self.spark = spark
         self.out_dir = out_dir
         self.partitions = partitions
-        self.lease_stale_sec = lease_stale_sec
         self.manifest_path = os.path.join(out_dir, "manifest")
         self.docs_path = os.path.join(out_dir, "docs")
         self.blocks_path = os.path.join(out_dir, "blocks")
@@ -148,15 +146,17 @@ class ExtractionPipeline:
 
         SINGLE WRITER, enforced: the whole run holds the out_dir writer
         lease (plans/lease.py — atomic mkdir, stale-age takeover after
-        `lease_stale_sec`, owner re-validated at the commit point). A
+        `STALE_SEC`, owner re-validated at the commit point). A
         second concurrent run on the same out_dir raises LeaseHeldError at
         start instead of silently committing duplicate urls; a writer
         whose stale lock was stolen aborts before its commit rename.
 
         The returned counts come from the manifest batch this run stages:
         `docs_processed` is every row but URL_BLOCKED; `urls_blocked`,
-        `duplicates_skipped` and `curation_drops` count their codes."""
-        with WriterLease(self.out_dir, self.lease_stale_sec) as lease:
+        `duplicates_skipped` and `curation_drops` count their codes. A run
+        with nothing pending stages no rows, so it commits no batch and
+        registers no hashes, and its counts are all zero."""
+        with WriterLease(self.out_dir) as lease:
             todo = self.pending(pages)
             batch_id = f"{run_id}-{uuid.uuid4().hex[:12]}"
             if dedupe:
@@ -242,26 +242,36 @@ class ExtractionPipeline:
             if blocked is not None:
                 manifest = manifest.unionByName(blocked)
             staging = os.path.join(self.out_dir, "_staging", batch_id)
-            manifest.write.mode("overwrite").parquet(staging)
+            # keyed by url with no width, so AQE sizes the write to the
+            # rows instead of one part file per extraction partition plus
+            # one per blocked-row partition; coalesce(1) would instead
+            # pull the URL gate's scan into one task
+            manifest.repartition("url").write.mode("overwrite") \
+                .parquet(staging)
             counts = {
                 r["failure_code"]: r["count"] for r in
                 self.spark.read.schema(MANIFEST_SCHEMA).parquet(staging)
                 .groupBy("failure_code").count().collect()
             }
-            # commit-point validation: if this run's lock went stale during
-            # a long extraction and another writer stole it, abort HERE —
-            # publishing would race the new owner's batch. touch() first so
-            # a healthy run never looks stale to the next acquirer.
-            lease.assert_held()
-            lease.touch()
-            self._commit(staging, batch_id)
-            if dedupe:
-                fresh_hashes = docs_m.where(F.col("__h").isNotNull()).select(
-                    F.col("__h").alias("hash"),
-                    F.lit("normalized_text").alias("kind"),
-                    F.lit(run_id).alias("source"),
-                )
-                register_hashes(self.seen_path, fresh_hashes)
+            if not counts:
+                # nothing was pending: an empty batch would only grow the
+                # commit log, so commit and register nothing
+                shutil.rmtree(staging)
+            else:
+                # commit-point validation: if this run's lock went stale
+                # during a long extraction and another writer stole it,
+                # abort HERE — publishing would race the new owner's
+                # batch. touch() first so a healthy run never looks stale
+                # to the next acquirer.
+                lease.assert_held()
+                lease.touch()
+                self._commit(staging, batch_id)
+                if dedupe:
+                    fresh_hashes = docs_m.where(F.col("__h").isNotNull()) \
+                        .select(F.col("__h").alias("hash"),
+                                F.lit("normalized_text").alias("kind"),
+                                F.lit(run_id).alias("source"))
+                    register_hashes(self.seen_path, fresh_hashes)
         n_blocked = counts.pop("URL_BLOCKED", 0)
         return {"run_id": run_id, "docs_processed": sum(counts.values()),
                 "duplicates_skipped": counts.get("DUPLICATE", 0),

@@ -2,20 +2,24 @@
 that admits each micro-batch through it.
 
 The 10^12-row crawl shape: the seen-store is an append-only parquet table
-PARTITIONED by ``bp = pmod(xxhash64(band, bucket), STORE_PARTITIONS)`` —
-the same hash-bucketed layout an Iceberg table would use. A store lookup
-reads it PRUNED to the probing batch's bp partitions (an isin over the
-partition column → static partition pruning): a batch of B docs touches
-at most min(B·bands, STORE_PARTITIONS) partitions, NOT the whole
+PARTITIONED by ``bp = pmod(xxhash64(band, bucket), P)``, P the store's
+bp modulus — the same hash-bucketed layout an Iceberg table would use. A
+store lookup reads it PRUNED to the probing batch's bp partitions (an isin
+over the partition column → static partition pruning): a batch of B docs
+touches at most min(B·bands, P) partitions, NOT the whole
 monotonically-growing store.
 
 The store has ONE admission path: the incremental admit
 (`operators.dedup.dedup_corpus_incremental`), which writes (band, bucket,
 id, bp) rows through the `open_store` / `store_buckets` / `probe_store` /
-`append_store` functions below, so layout, modulus and signature-config
-checks live in one place. Rows carry the OWNER id: the admit verifies
-every collision with exact Jaccard against the canonical doc it points
-at, so a shared bucket alone never drops a document. Duplicate rows
+`append_store` functions below, so the layout, modulus and signature-config
+checks live in one place. The store's `_STORE_META.json` records its bp
+modulus and the recipe's signature config (`operators.dedup.LSH_CONFIG`):
+a new store takes `STORE_PARTITIONS`, an existing one is always read and
+appended with the modulus it records, and a store whose recorded config
+differs from the recipe's is refused. Rows carry the OWNER id: the admit
+verifies every collision with exact Jaccard against the canonical doc it
+points at, so a shared bucket alone never drops a document. Duplicate rows
 accumulate across appends (they change no join result — the lookup is a
 semi-join); `plans.maintenance.compact_lsh_store` is the MERGE-equivalent
 job that rewrites the store with whole-row duplicates collapsed, keeping
@@ -38,17 +42,22 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dedup import LSH_CONFIG
 from ..plans.maintenance import recover_store
 
-#: store partition count — at 10^12 scale raise this so each partition's
-#: bucket file set stays executor-sized; the lookup cost per micro-batch is
-#: bounded by the batch's own bucket count either way. The value is BAKED
-#: INTO the store's bp values, so an existing store must be read with the
-#: modulus it was written with — it is persisted in _STORE_META.json at
-#: store creation and VALIDATED on every run (a silent mismatch would
-#: prune the wrong partitions and re-admit every seen duplicate). To
-#: change it, rewrite the store (recompute bp) — not just the parameter.
+#: bp modulus of a NEW store — at 10^12 scale raise this so each
+#: partition's bucket file set stays executor-sized; the lookup cost per
+#: micro-batch is bounded by the batch's own bucket count either way. The
+#: value is BAKED INTO the store's bp values, so it is recorded in
+#: _STORE_META.json when the store is created, and an existing store keeps
+#: (and is always read with) its recorded modulus: reading with another
+#: would prune the wrong partitions and re-admit every seen duplicate.
+#: Changing this constant therefore affects new stores only; to move an
+#: existing store, rewrite it (recompute bp and its meta).
 STORE_PARTITIONS = 64
+
+#: the meta fields recording the recipe's signature config
+_META_CFG = {f"lsh_{k}": v for k, v in LSH_CONFIG.items()}
 
 _META_NAME = "_STORE_META.json"  # leading '_': ignored by Spark's listing
 
@@ -86,13 +95,7 @@ def write_store_meta(seen_dir: str, n_parts: int,
     os.replace(tmp, os.path.join(seen_dir, _META_NAME))
 
 
-def _meta_cfg(cfg: dict) -> dict:
-    """The meta fields recording an `lsh_buckets` config."""
-    return {f"lsh_{k}": v for k, v in cfg.items()}
-
-
-def open_store(store_dir: str, store_partitions: int | None,
-               cfg: dict) -> tuple[int, bool]:
+def open_store(store_dir: str) -> tuple[int, bool]:
     """(n_parts, has_rows) for the LSH store at `store_dir`, after every
     precondition a reader or appender relies on — filesystem listing and
     the meta file only, no Spark job:
@@ -100,11 +103,11 @@ def open_store(store_dir: str, store_partitions: int | None,
     - a compaction that died between its two swap renames left the store
       in the trash dir — restore it before anything reads or appends
       (appending first would strand the old buckets forever);
-    - the persisted bp modulus must equal the requested one (reading with
-      another modulus would prune the WRONG partitions and silently
-      re-admit seen duplicates);
-    - the persisted signature config must equal `cfg` (bucket values
-      under different configs are incomparable);
+    - `n_parts` is the bp modulus the meta records (reading with another
+      would prune the WRONG partitions and silently re-admit seen
+      duplicates), or `STORE_PARTITIONS` for a store with no meta yet;
+    - the recorded signature config must equal `LSH_CONFIG` (bucket
+      values under different configs are incomparable);
     - a dir with ROOT parquet files and no bp= partitions is a
       pre-bp-layout (flat) store — treating it as empty would re-admit
       every seen duplicate and then corrupt the layout by appending
@@ -113,24 +116,15 @@ def open_store(store_dir: str, store_partitions: int | None,
     `has_rows` is False for a missing store and for one holding only the
     meta file (crash between meta write and first append)."""
     recover_store(store_dir)
-    n_parts = store_partitions or STORE_PARTITIONS
     meta = read_store_meta(store_dir) or {}
-    persisted = meta.get("store_partitions", n_parts)
-    if persisted != n_parts:
+    n_parts = meta.get("store_partitions", STORE_PARTITIONS)
+    if any(k in meta and meta[k] != v for k, v in _META_CFG.items()):
         raise ValueError(
             f"LSH store at {store_dir} was written with "
-            f"store_partitions={persisted}, but {n_parts} was requested — "
-            "reading with a different modulus would prune the WRONG "
-            "partitions and silently re-admit seen duplicates. Rewrite the "
-            "store (recomputing bp) to change the partition count.")
-    want = _meta_cfg(cfg)
-    if any(k in meta and meta[k] != v for k, v in want.items()):
-        raise ValueError(
-            f"LSH store at {store_dir} was written with "
-            f"{ {k: meta.get(k) for k in want} }, but {want} was "
-            "requested — bucket values under different signature configs "
-            "are incomparable and every seen duplicate would be silently "
-            "re-admitted. Rebuild the store to change the config.")
+            f"{ {k: meta.get(k) for k in _META_CFG} }, but the recipe's "
+            f"config is {_META_CFG} — bucket values under different "
+            "signature configs are incomparable and every seen duplicate "
+            "would be silently re-admitted. Rebuild the store.")
     entries = os.listdir(store_dir) if os.path.isdir(store_dir) else []
     has_rows = any(d.startswith("bp=") for d in entries)
     if not has_rows and any(f.endswith(".parquet") for f in entries):
@@ -151,9 +145,9 @@ def store_partition_expr(band: Column, bucket: Column,
 
 
 def store_buckets(docs: DataFrame, id_col: str, text_col: str,
-                  n_parts: int, cfg: dict) -> DataFrame:
-    """The (id, band, bucket, bp) table of `docs` under `cfg` — the same
-    dict `open_store` validates and `append_store` records.
+                  n_parts: int) -> DataFrame:
+    """The (id, band, bucket, bp) table of `docs` under `LSH_CONFIG` — the
+    config `open_store` checks and `append_store` records.
 
     localCheckpoint'ed (not cached): it feeds the bp collection, the probe
     and the append, and the caller appends to the store the probe reads —
@@ -162,7 +156,7 @@ def store_buckets(docs: DataFrame, id_col: str, text_col: str,
     from ..operators.dedup import lsh_buckets
 
     return (
-        lsh_buckets(docs, id_col, text_col, flavor="xx", **cfg)
+        lsh_buckets(docs, id_col, text_col, flavor="xx", **LSH_CONFIG)
         .withColumn("bp", store_partition_expr(F.col("band"),
                                                F.col("bucket"), n_parts))
         .localCheckpoint(eager=True)
@@ -188,16 +182,16 @@ def probe_store(spark: SparkSession, store_dir: str,
     return read_store_pruned(spark, store_dir, bps)
 
 
-def append_store(store_dir: str, n_parts: int, cfg: dict,
+def append_store(store_dir: str, n_parts: int,
                  buckets: DataFrame) -> None:
-    """Record the layout (modulus + `cfg`) in the meta, then append the
+    """Record the layout (modulus + `LSH_CONFIG`) in the meta, then append the
     (band, bucket, id, bp) rows of `buckets`. Repartitioned by bp before
     the partitioned write: a W-partition DataFrame written partitionBy("bp")
     emits up to W×n_parts files per append (every future pruned read pays
     the listing+open cost); keyed by bp the append writes ≤ 1 file per bp
     dir. No width is named, so AQE coalesces the shuffle to the rows'
     size instead of running n_parts tasks for a few hundred rows."""
-    write_store_meta(store_dir, n_parts, extra=_meta_cfg(cfg))
+    write_store_meta(store_dir, n_parts, extra=_META_CFG)
     (buckets.select("band", "bucket", "id", "bp")
      .repartition("bp")
      .write.mode("append").partitionBy("bp").parquet(store_dir))
@@ -205,28 +199,27 @@ def append_store(store_dir: str, n_parts: int, cfg: dict,
 
 def run_streaming_dedup(spark: SparkSession, src_dir: str, schema,
                         out_dir: str, seen_dir: str, checkpoint_dir: str,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        max_files_per_trigger: int = 1,
-                        store_partitions: int = STORE_PARTITIONS) -> None:
+                        id_col: str = "doc_id",
+                        text_col: str = "text") -> None:
     """Drain available document files through the incremental admit
-    (availableNow): each micro-batch is one `dedup_corpus_incremental`
-    call with `seen_dir` as its store and `out_dir` as its canonical
-    table. The store and `out_dir` are the persistent state across
-    micro-batches AND restarts — no in-memory streaming state to lose.
+    (availableNow, one file per micro-batch): each micro-batch is one
+    `dedup_corpus_incremental` call with `seen_dir` as its store and
+    `out_dir` as its canonical table. The store and `out_dir` are the
+    persistent state across micro-batches AND restarts — no in-memory
+    streaming state to lose.
     Put `out_dir` under the store's parent dir so the admit's writer
     lease covers both tables."""
     from ..operators.dedup import dedup_corpus_incremental
 
     stream = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
 
     def process(batch: DataFrame, _bid: int) -> None:
         dedup_corpus_incremental(batch, seen_dir, out_dir, id_col=id_col,
-                                 text_col=text_col,
-                                 store_partitions=store_partitions)
+                                 text_col=text_col)
 
     q = (
         stream.writeStream.foreachBatch(process)

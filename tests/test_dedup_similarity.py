@@ -110,30 +110,6 @@ def test_jaccard_exact(spark, docs_df):
     assert got[("d00", "d03")] == pytest.approx(py_jaccard(texts["d00"], texts["d03"]), abs=1e-6)
     assert got[("d00", "d07")] < 0.05
 
-    # ADVICE r4: word-shingle mode verifies in the TOKEN n-gram space (the
-    # space word-MinHash-LSH approximates), not char space — values must
-    # equal the pure-Python word-gram Jaccard (hashed-gram sets are
-    # collision-free at this scale)
-    gotw = {(r["id_a"], r["id_b"]): r["jaccard"]
-            for r in ngram_jaccard_pairs(docs_df, pairs, n=3,
-                                         shingle="word").collect()}
-
-    def py_word_jaccard(a, b, n=3):
-        import re
-        sets = []
-        for t in (a, b):
-            toks = re.sub(r"\s+", " ", t.lower()).strip(" ").split(" ")
-            grams = {" ".join(toks[i:i + n])
-                     for i in range(len(toks) - n + 1)} or {""}
-            sets.append(grams)
-        return round(len(sets[0] & sets[1]) / len(sets[0] | sets[1]), 6)
-
-    for ia, ib in [("d00", "d01"), ("d00", "d03"), ("d00", "d07")]:
-        assert gotw[(ia, ib)] == pytest.approx(
-            py_word_jaccard(texts[ia], texts[ib]), abs=1e-6), (ia, ib)
-    with pytest.raises(ValueError, match="char.*word"):
-        ngram_jaccard_pairs(docs_df, pairs, shingle="sentence")
-
 
 def test_jaccard_size_bound_keeps_rounding_boundary(spark, docs_df):
     """The prefilter bound must never drop a pair the round-half-up-6
@@ -490,9 +466,8 @@ def test_jaccard_duplicate_ids_raise(spark):
         [(1, "abcdefgh"), (1, "abcdefgx"), (2, "abcdefgh"),
          (9, "zzzzzz"), (9, "yyyyyy")], "doc_id long, text string")
     pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    for shingle in ("char", "word"):
-        with pytest.raises(ValueError, match="uniquely key"):
-            ngram_jaccard_pairs(docs, pairs, shingle=shingle)
+    with pytest.raises(ValueError, match="uniquely key"):
+        ngram_jaccard_pairs(docs, pairs)
     ok = ngram_jaccard_pairs(docs.where("doc_id != 1 OR text LIKE '%h'"),
                              pairs).collect()
     assert [(r["id_a"], r["id_b"], r["jaccard"]) for r in ok] == [(1, 2, 1.0)]
@@ -780,34 +755,15 @@ def test_dedup_corpus_end_to_end(spark, docs_df):
     pass untouched."""
     from rag_pdf_parser_spark.operators.dedup import dedup_corpus
 
-    kept = sorted(r["doc_id"]
-                  for r in dedup_corpus(docs_df, jaccard_threshold=0.8)
-                  .collect())
+    out = dedup_corpus(docs_df)
+    kept = sorted(r["doc_id"] for r in out.collect())
     # d00/d01/d02 identical → d00; d03/d04/d05 are one-word variants of
     # BASE (jaccard >> 0.8 vs d00) → absorbed into d00's component;
     # d06..d19 unique → all kept
     assert kept == ["d00"] + [f"d{i:02d}" for i in range(6, 20)], kept
 
-    # with an impossibly high threshold the near-dup stage is inert and
-    # only exact dedup bites
-    kept2 = sorted(r["doc_id"]
-                   for r in dedup_corpus(docs_df, jaccard_threshold=1.01)
-                   .collect())
-    assert kept2 == ["d00"] + [f"d{i:02d}" for i in range(3, 20)], kept2
-
     # columns preserved
-    out = dedup_corpus(docs_df)
     assert set(out.columns) == {"doc_id", "text"}
-
-    # ADVICE r4: shingle='word' must VERIFY in word-gram space too (the
-    # published recipe thresholds word-shingle Jaccard; verifying word-LSH
-    # candidates with char-gram Jaccard thresholds a different metric).
-    # The one-word variants d03..d05 share all but ~1 of their word 3-grams
-    # with d00 (word-jaccard >> 0.5) → absorbed; unrelated docs survive.
-    keptw = sorted(r["doc_id"]
-                   for r in dedup_corpus(docs_df, jaccard_threshold=0.5,
-                                         n=3, shingle="word").collect())
-    assert keptw == ["d00"] + [f"d{i:02d}" for i in range(6, 20)], keptw
 
 
 def test_curate_corpus_funnel(spark):
@@ -1051,9 +1007,13 @@ def test_dedup_corpus_incremental_store(spark, tmp_path, docs_df):
     assert "PartitionFilters" in plan and \
         "bp" in plan.split("PartitionFilters")[1].split("]")[0], plan
 
-    # config drift is rejected, not silently incomparable
+    # config drift is rejected, not silently incomparable: a store whose
+    # meta records another signature config is refused
+    from rag_pdf_parser_spark.streaming.minhash import write_store_meta
+    write_store_meta(store, n_parts, extra={"lsh_n": 7})
     with pytest.raises(ValueError, match="incomparable"):
-        dedup_corpus_incremental(B, store, canon, n=7)
+        dedup_corpus_incremental(B, store, canon)
+    write_store_meta(store, n_parts, extra={"lsh_n": 5})
 
     # retry of a COMPLETED increment is a no-op (resume semantics: ids
     # already canonical are anti-joined out — no duplicate canon rows)
@@ -1360,19 +1320,17 @@ def test_compact_batch_lsh_store_preserves_owners(spark, tmp_path):
     from rag_pdf_parser_spark.plans.maintenance import compact_lsh_store
     from rag_pdf_parser_spark.streaming.minhash import read_store_meta
 
+    # J(t1, t2) ≈ 0.56: below the threshold, but high enough that the
+    # recipe's r=4 banding puts the pair in a shared bucket
     common = " ".join(f"shared{i} token{i}" for i in range(30))
-    t1 = common + " " + " ".join(f"alpha{i} beta{i}" for i in range(25))
-    t2 = common + " " + " ".join(f"gamma{i} delta{i}" for i in range(25))
+    t1 = common + " " + " ".join(f"alpha{i} beta{i}" for i in range(10))
+    t2 = common + " " + " ".join(f"gamma{i} delta{i}" for i in range(10))
     store = str(tmp_path / "idx")
     canon = str(tmp_path / "canon")
     A = spark.createDataFrame([("x1", t1), ("x2", t2)],
                               "doc_id string, text string")
-    # (8, 4) pinned: the co-bucket fixture is crafted for r=2 banding —
-    # at the recipe's precision-first default (32, 8) a J=0.4 pair rarely
-    # shares a bucket, which is the point of that default
     adm = sorted(r["doc_id"] for r in
-                 dedup_corpus_incremental(A, store, canon, num_perm=8,
-                                          bands=4).collect())
+                 dedup_corpus_incremental(A, store, canon).collect())
     assert adm == ["x1", "x2"]  # similar but below threshold: both admitted
 
     # precondition of the hazard: the two owners REALLY share a bucket
@@ -1399,8 +1357,7 @@ def test_compact_batch_lsh_store_preserves_owners(spark, tmp_path):
         [("y1", t1.replace("alpha3", "other3")),
          ("y2", t2.replace("gamma3", "newly3"))],
         "doc_id string, text string")
-    assert dedup_corpus_incremental(B, store, canon, num_perm=8,
-                                    bands=4).count() == 0
+    assert dedup_corpus_incremental(B, store, canon).count() == 0
     assert sorted(r["doc_id"] for r in
                   spark.read.parquet(canon).collect()) == ["x1", "x2"]
 

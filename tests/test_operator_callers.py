@@ -138,3 +138,30 @@ def test_lsh_store_has_one_admission_path():
            if s[0] != os.path.join("rag_pdf_parser_spark", "operators",
                                    "dedup.py")]
     assert not bad, bad
+
+
+#: the near-dup recipe's entry points, and the config names none of them
+#: may take: the signature config, skew cap and Jaccard threshold are
+#: constants in operators/dedup.py, and the store is read with the bp
+#: modulus its meta records
+RECIPE_FUNCS = {"dedup_corpus", "dedup_corpus_incremental", "curate_corpus",
+                "curate_corpus_incremental", "run_streaming_dedup",
+                "open_store"}
+RECIPE_CONFIG = {"n", "num_perm", "bands", "shingle", "max_bucket",
+                 "jaccard_threshold", "store_partitions"}
+
+
+def test_near_dup_recipe_takes_no_config_parameter():
+    """No entry point of the near-dup recipe takes a config parameter, so
+    no call can ask for a config or modulus the store meta does not
+    record."""
+    found, bad = set(), []
+    for path in _py_files(LIB):
+        for n in ast.walk(_parse(path)):
+            if isinstance(n, ast.FunctionDef) and n.name in RECIPE_FUNCS:
+                found.add(n.name)
+                a = n.args
+                names = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+                bad += [(n.name, p) for p in sorted(names & RECIPE_CONFIG)]
+    assert found == RECIPE_FUNCS, found
+    assert not bad, bad

@@ -376,3 +376,68 @@ def test_repetition_features_match_python_model(spark, texts):
 @given(st.lists(st.one_of(st.none(), _REPETITIVE), min_size=1, max_size=20))
 def test_repetition_features_match_python_model_repetitive(spark, texts):
     _check_repetition_batch(spark, texts)
+
+
+#: words for the near-dup corpus: ASCII of several lengths, CJK, and
+#: letters whose lowercase differs in length (İ) or by context (Σ)
+_DEDUP_WORDS = st.one_of(
+    st.sampled_from(["river", "stone", "a", "the", "alpha", "数据", "处理",
+                     "学习模型", "İstanbul", "Σίσυφος"]),
+    st.text(alphabet="abcdefgh数据学", min_size=1, max_size=9))
+
+
+@st.composite
+def _near_dup_corpora(draw):
+    """Docs that are fresh, exact copies or one-word edits of an earlier
+    doc, NULL or empty. Fresh docs are 6-16 words, so a one-word edit
+    lands on both sides of the 0.8 Jaccard threshold."""
+    texts = []
+    for _ in range(draw(st.integers(min_value=1, max_value=10))):
+        earlier = [t for t in texts if t]
+        kind = draw(st.sampled_from(
+            ["fresh", "copy", "edit", "edit", "null", "empty"]
+            if earlier else ["fresh", "null", "empty"]))
+        if kind == "fresh":
+            texts.append(" ".join(draw(st.lists(_DEDUP_WORDS, min_size=6,
+                                                max_size=16))))
+        elif kind == "null":
+            texts.append(None)
+        elif kind == "empty":
+            texts.append("")
+        else:
+            src = draw(st.sampled_from(earlier))
+            if kind == "edit":
+                words = src.split(" ")
+                words[draw(st.integers(0, len(words) - 1))] = \
+                    draw(_DEDUP_WORDS)
+                src = " ".join(words)
+            texts.append(src)
+    return [(f"d{i:02d}", t) for i, t in enumerate(texts)]
+
+
+@settings(max_examples=8, deadline=None)
+@given(_near_dup_corpora())
+def test_one_increment_into_empty_store_keeps_what_dedup_corpus_keeps(
+        spark, rows):
+    """Admitting a corpus as one increment into an empty store keeps
+    exactly the ids `dedup_corpus` keeps: both run the same exact lane,
+    LSH config, skew cap and Jaccard verify, and with no store there is
+    nothing to probe."""
+    import shutil
+    import tempfile
+
+    from rag_pdf_parser_spark.operators.dedup import (
+        dedup_corpus,
+        dedup_corpus_incremental,
+    )
+
+    docs = spark.createDataFrame(rows, "doc_id string, text string")
+    root = tempfile.mkdtemp(prefix="admit_prop_")
+    try:
+        admitted = dedup_corpus_incremental(
+            docs, f"{root}/lsh", f"{root}/canon")
+        got = sorted(r["doc_id"] for r in admitted.collect())
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+    want = sorted(r["doc_id"] for r in dedup_corpus(docs).collect())
+    assert got == want, (rows, got, want)

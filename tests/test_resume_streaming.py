@@ -573,20 +573,36 @@ def test_streaming_store_is_partitioned_and_pruned(spark, tmp_path):
                   .alias("bp")).collect()[0]["bp"]
     assert 0 <= a < STORE_PARTITIONS
 
-    # the modulus is persisted with the store and a mismatched rerun fails
-    # LOUDLY instead of pruning the wrong partitions (r4 review finding)
+    # the modulus is persisted with the store, and a store whose meta
+    # records another modulus is probed and appended with THAT modulus:
+    # pruning with the constant would read the wrong partitions and
+    # re-admit seen duplicates (r4 review finding)
     from rag_pdf_parser_spark.streaming.minhash import (
         read_store_meta,
         write_store_meta,
     )
     meta = read_store_meta(seen)
     assert meta["store_partitions"] == STORE_PARTITIONS
-    # (Spark wraps the foreachBatch ValueError in StreamingQueryException)
-    with pytest.raises(Exception, match="store_partitions"):
-        run_streaming_dedup(spark, str(src) + "/part*.parquet", sch,
-                            str(tmp_path / "out2"), seen,
-                            str(tmp_path / "ck2"),
-                            store_partitions=STORE_PARTITIONS * 2)
+    seen8, out8 = str(tmp_path / "seen8"), str(tmp_path / "out8")
+    cfg = {k: v for k, v in meta.items() if k.startswith("lsh_")}
+    write_store_meta(seen8, 8, extra=cfg)
+    run_streaming_dedup(spark, str(src) + "/part*.parquet", sch, out8,
+                        seen8, str(tmp_path / "ck8"))
+    kept8 = spark.read.parquet(out8).orderBy("doc_id").first()
+    spark.createDataFrame([(1000, kept8["text"])],
+                          "doc_id long, text string") \
+        .coalesce(1).write.parquet(str(src / "f2"))
+    for i, f in enumerate(sorted(glob.glob(str(src / "f2" / "*.parquet")))):
+        shutil.copy(f, src / f"part9{i}.parquet")
+    run_streaming_dedup(spark, str(src) + "/part*.parquet", sch, out8,
+                        seen8, str(tmp_path / "ck8"))
+    assert spark.read.parquet(out8).where("doc_id = 1000").count() == 0
+    assert read_store_meta(seen8)["store_partitions"] == 8
+    store8 = spark.read.parquet(seen8)
+    assert store8.where(
+        F.col("bp") != store_partition_expr(F.col("band"), F.col("bucket"),
+                                            8)).count() == 0
+    assert store8.select("bp").distinct().count() > 1
 
     # the signature config is persisted too: a store built under another
     # config holds incomparable buckets and is rejected, not probed
@@ -843,7 +859,7 @@ def test_writer_lease_mutual_exclusion(spark, tmp_path):
     assert compact_seen_hashes(spark, seen)["rows_after"] == 1
 
     # stale takeover: a crashed writer's old lock is stolen after
-    # stale_sec; the displaced writer must fail its commit-point check
+    # STALE_SEC; the displaced writer must fail its commit-point check
     l1 = WriterLease(out).acquire()
     os.utime(l1.dir, (1, 1))  # pretend l1's holder died long ago
     l2 = WriterLease(out).acquire()  # steals
@@ -932,10 +948,12 @@ def test_compact_output_folds_batches(spark, tmp_path):
     for sink in (p.docs_path, p.blocks_path, p.chunks_path):
         dirs = [d for d in os.listdir(sink) if d.startswith("batch_id=")]
         assert dirs == [f"batch_id={ids[0]}"], (sink, dirs)
-    # resume is still exact over the folded manifest
+    # resume is still exact over the folded manifest, and a run with
+    # nothing pending commits no batch
     r = p.run(pages, run_id="r3", with_chunks=True)
     assert r["docs_processed"] == 0
-    # re-compaction folds the base batch + r3's empty batch back to one
+    assert len(p.committed_batch_ids()) == 1, p.committed_batch_ids()
+    # re-compaction of the one base batch is a no-op
     res2 = compact_output(spark, out)
     assert res2["batches_after"] == 1, res2
     assert p.read_docs().count() == 30
