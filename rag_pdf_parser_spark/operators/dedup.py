@@ -24,7 +24,7 @@ from __future__ import annotations
 import os
 
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 # token_ngrams_expr lives in functions/ (the canonical home of the
@@ -802,16 +802,82 @@ def _non_root_ids(pairs: DataFrame, id_a: str = "id_a",
 
 def _exact_staged(docs: DataFrame, id_col: str,
                   text_col: str) -> DataFrame:
-    """The exact-dedup result MATERIALIZED before the near-dup fan-out:
-    each consumer (signature, verify gram table, final anti-join) would
-    otherwise re-run its shuffle (hash groupBy + semi-join). REPARTITIONED
-    by id at the session's shuffle width (a staging table bucketed by id):
-    the aggregate's byte-coalesced partitioning is ONE partition at sf0.1,
-    and every CPU-heavy consumer would run single-core (guide §2.5). On a
-    real cluster persist (DISK) or write a staging table here."""
+    """The exact-dedup result MATERIALIZED before the near-dup fan-out
+    (each consumer would otherwise re-run the exact lane's rank() window)
+    and REPARTITIONED by id at the session's shuffle width: the window's
+    byte-coalesced output is ONE partition at sf0.1, and every CPU-heavy
+    consumer would run single-core (guide §2.5).
+
+    Raises when one id keys two survivors: the verify's array joins and
+    the admit's canon table need one row per id. The check is a per-id
+    count observed on the checkpoint job (observed metrics refuse
+    DISTINCT), on the repartition's own partitioning: no job, no shuffle."""
     n_spread = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return exact_dedup(docs, text_col, id_col).drop("content_sha") \
-        .repartition(n_spread, id_col).localCheckpoint(eager=True)
+    per_id = F.count(F.lit(1)).over(Window.partitionBy(id_col))
+    obs = Observation()
+    out = exact_dedup(docs, text_col, id_col).drop("content_sha") \
+        .repartition(n_spread, id_col).withColumn("__n", per_id) \
+        .observe(obs, F.count(F.when(F.col("__n") > 1, 1)).alias("rows")) \
+        .drop("__n").localCheckpoint(eager=True)
+    if obs.get["rows"]:
+        raise ValueError(
+            f"near-dup dedup: {id_col!r} must uniquely key the exact "
+            f"survivors; {obs.get['rows']} rows share an id with another")
+    return out
+
+
+def _near_dup_drops(out: DataFrame, buckets: DataFrame, id_col: str,
+                    text_col: str,
+                    store: tuple[str, str] | None = None) -> DataFrame:
+    """(id) of the exact survivors `out` (`_exact_staged`) that the
+    near-dup chain of `dedup_corpus` and the admit drops, from their
+    (id, band, bucket) `buckets` under `LSH_CONFIG`. Candidates share a
+    bucket (`bucket_pairs`, capped at `MAX_BUCKET`); with `store` =
+    (store_dir, canon_dir), a store with rows and a canon table, the
+    buckets also probe the store's bp partitions, each hit a cross pair
+    (batch id, owner id). One Jaccard pass at `JACCARD_THRESHOLD`
+    verifies all. Dropped: the non-root ids of the components over the
+    verified within-batch pairs (keep-canonical: min id), plus every doc
+    verified against a canonical one; cross pairs stay out of the
+    components, so a root the store rejects does not free its near-dups."""
+    cands = bucket_pairs(buckets, MAX_BUCKET)
+    texts = out.select(id_col, text_col)
+    if store is not None:
+        from ..streaming.minhash import probe_store
+
+        store_dir, canon_dir = store
+        spark = out.sparkSession
+        seen = probe_store(spark, store_dir, buckets)
+        cands = cands.unionByName(
+            buckets.join(seen.select("band", "bucket",
+                                     F.col("id").alias("id_b")),
+                         ["band", "bucket"])
+            # id == id_b is an ORPHAN self-collision (batch and canon ids
+            # are disjoint after the resume anti-join): this doc's own
+            # crashed attempt, not a duplicate (admit docstring step 3)
+            .where(F.col("id") != F.col("id_b"))
+            .select(F.col("id").alias("id_a"), "id_b").distinct())
+        # the verify's pair-id semi-join reads only the hits' canon rows
+        texts = texts.unionByName(
+            spark.read.parquet(canon_dir).select(id_col, text_col))
+    # materialized: the verify reads the pairs four times, each re-running
+    # the bucket self-join and the store read; MAX_BUCKET bounds them
+    cands = cands.localCheckpoint(eager=True)
+    # materialized (true pairs only): the component pass runs its input
+    # twice (bounded fetch + fallback), and the cross half reads it again
+    verified = (
+        ngram_jaccard_pairs(texts, cands, id_col=id_col, text_col=text_col,
+                            min_jaccard=JACCARD_THRESHOLD)
+        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
+        .select("id_a", "id_b").localCheckpoint(eager=True)
+    )
+    if store is None:
+        return _non_root_ids(verified)
+    batch_ids = out.select(F.col(id_col).alias("id_b"))
+    return _non_root_ids(verified.join(batch_ids, "id_b", "left_semi")) \
+        .unionByName(verified.join(batch_ids, "id_b", "left_anti")
+                     .select(F.col("id_a").alias("id"))) \
+        .distinct()
 
 
 def dedup_corpus(docs: DataFrame, id_col: str = "doc_id",
@@ -820,7 +886,7 @@ def dedup_corpus(docs: DataFrame, id_col: str = "doc_id",
     published training-data recipe (Lee et al. 2022 / RefinedWeb) composed
     from this module's tested stages:
 
-        exact/normalized dedup            (hash groupBy, min-id winner)
+        exact/normalized dedup            (one rank() window, min-id winner)
       → MinHash-LSH candidate pairs       (banded bucket join, skew-capped)
       → exact n-gram Jaccard VERIFY       (drop false LSH candidates)
       → connected components              (pairs → clusters, min-label)
@@ -832,30 +898,16 @@ def dedup_corpus(docs: DataFrame, id_col: str = "doc_id",
     the published recipes require. The signature config and the skew cap
     are the module's `LSH_CONFIG` and `MAX_BUCKET`.
 
-    Scale shape: every stage is the scale-safe formulation documented on
-    its function; the Jaccard verify is candidate-pair-bounded. Returns
-    the deduplicated corpus (all input columns). The exact-dedup result
-    is materialized before the fan-out (`_exact_staged`).
+    It is the incremental admit's chain without a store: `_exact_staged`
+    (which raises on duplicate ids), then `_near_dup_drops`, then one
+    anti-join. Returns the deduplicated corpus (all input columns).
     """
     out = _exact_staged(docs, id_col, text_col)
-    # materialize the candidate pairs: the verify stage references them
-    # four times (pair-id restriction, size prefilter, intersection count,
-    # zero-overlap left join) and each reference would otherwise re-run
-    # the banding self-join; the pair set is bounded (MAX_BUCKET caps the
-    # per-bucket quadratic blowup)
-    cands = lsh_candidate_pairs(out, id_col=id_col, text_col=text_col,
-                                max_bucket=MAX_BUCKET, **LSH_CONFIG) \
-        .localCheckpoint(eager=True)
-    # materialized: dedup_keep_canonical's component pass executes its
-    # pair input twice (bounded fetch + fallback) and the final anti-join
-    # references it again — without the checkpoint each execution re-runs
-    # the whole verify. True pairs only, so the materialization is tiny.
-    verified = ngram_jaccard_pairs(out, cands, id_col=id_col,
-                                   text_col=text_col,
-                                   min_jaccard=JACCARD_THRESHOLD) \
-        .where(F.col("jaccard") >= JACCARD_THRESHOLD) \
-        .select("id_a", "id_b").localCheckpoint(eager=True)
-    return dedup_keep_canonical(out, verified, id_col)
+    drop = _near_dup_drops(
+        out, lsh_buckets(out, id_col, text_col, **LSH_CONFIG), id_col,
+        text_col)
+    return out.join(drop.withColumnRenamed("id", id_col), id_col,
+                    "left_anti")
 
 
 def dedup_corpus_incremental(increment: DataFrame, store_dir: str,
@@ -869,20 +921,14 @@ def dedup_corpus_incremental(increment: DataFrame, store_dir: str,
 
         1. exact dedup of the increment (`_exact_staged`) and ONE
            checkpointed (id, band, bucket, bp) table over it, which feeds
-           the within-batch pairs (`bucket_pairs`), the store probe and
-           the store append,
-        2. the buckets probe the store — read PRUNED to their bp
-           partitions (bp = pmod(xxhash64(band,bucket), P)),
-        3. within-batch and store candidates are VERIFIED in ONE
-           same-shingle-space Jaccard pass (canonical texts fetched from
-           `canon_dir` by a semi-join on the hit ids only). Dropped: the
-           non-root ids of the components over verified pairs owned by a
-           batch doc, plus every doc verified against a canonical one —
-           cross pairs stay out of the component pass, so a batch root
-           the store rejects does not free its near-dups. Probing with
-           all exact survivors admits the same set as probing only the
-           roots: buckets and Jaccard depend on the two texts only,
-        4. admitted docs' (band, bucket, id, bp) rows are appended to the
+           the candidates, the store probe and the store append,
+        2. candidates, verify and drop set are `_near_dup_drops`, the
+           chain `dedup_corpus` runs, given the store: the buckets also
+           probe the store read PRUNED to their bp partitions (bp =
+           pmod(xxhash64(band,bucket), P)). Probing with all exact
+           survivors admits the same set as probing only the roots:
+           buckets and Jaccard depend on the two texts only,
+        3. admitted docs' (band, bucket, id, bp) rows are appended to the
            store FIRST, then the docs to `canon_dir` — the crash-safe
            order. An ORPHAN bucket row (id absent from canon) is
            semantically inert: a collision with it never verifies (the
@@ -919,7 +965,8 @@ def dedup_corpus_incremental(increment: DataFrame, store_dir: str,
     (a store written under another config holds incomparable bucket
     values and would silently admit every duplicate), as is the
     partitioned layout; the store is read with the bp modulus its meta
-    records.
+    records. An increment whose exact survivors repeat an id raises
+    before anything is appended (`_exact_staged`).
 
     Semantics are FIRST-SEEN GREEDY, the standard incremental trade-off:
     equal to one-shot `dedup_corpus` over the accumulated corpus except
@@ -939,12 +986,7 @@ def dedup_corpus_incremental(increment: DataFrame, store_dir: str,
     acquisition races a concurrent increment's commit and skews the split
     between already-admitted and dedup-dropped — r5 verdict #6).
     """
-    from ..streaming.minhash import (
-        append_store,
-        open_store,
-        probe_store,
-        store_buckets,
-    )
+    from ..streaming.minhash import append_store, open_store, store_buckets
 
     spark = increment.sparkSession
     with WriterLease(os.path.dirname(store_dir.rstrip("/")) or ".") \
@@ -973,21 +1015,14 @@ def dedup_corpus_incremental(increment: DataFrame, store_dir: str,
 
         out = _exact_staged(increment, id_col, text_col)
         buckets = store_buckets(out, id_col, text_col, n_parts)
-        cands = bucket_pairs(buckets, MAX_BUCKET)
 
         # `has_store and not has_canon` is the FIRST-EVER batch retried
         # after a crash between the two appends: every store row is an
-        # orphan (no canonical text exists anywhere), so a collision can
-        # never verify and the probe branch would only crash on the
-        # canon_dir read (PATH_NOT_FOUND) — skip it and admit the batch
-        # (ADVICE r5). But the same state also describes a LOST or
-        # mispointed canon table (review finding: silently admitting every
-        # near-dup of a mature store would be far worse than the crash the
-        # guard removes), so the orphan hypothesis is VERIFIED first: in
-        # the crash window every store row's owner id comes from this very
-        # increment. Any foreign id ⇒ refuse loudly. The check reads the
-        # store once — in the genuine crash state that store is one
-        # batch's worth of rows.
+        # orphan, so no collision can verify — skip the probe (it would
+        # crash on the missing canon_dir) and admit the batch. A LOST or
+        # mispointed canon table looks the same, so the orphan hypothesis
+        # is VERIFIED first: in the crash window every owner id comes
+        # from this very increment; any foreign id ⇒ refuse loudly.
         if has_store and not has_canon:
             foreign = (
                 spark.read.parquet(store_dir).select("id")
@@ -1003,51 +1038,13 @@ def dedup_corpus_incremental(increment: DataFrame, store_dir: str,
                     "Refusing to probe-skip: that would silently admit "
                     "every near-duplicate of the indexed corpus. Restore "
                     "canon_dir or rebuild the store.")
-        if has_store and has_canon:
-            seen = probe_store(spark, store_dir, buckets)
-            cands = cands.unionByName(
-                buckets.join(seen.select("band", "bucket",
-                                         F.col("id").alias("id_b")),
-                             ["band", "bucket"])
-                # id_a == id_b can only be an ORPHAN self-collision (batch
-                # and canon ids are disjoint after the resume anti-join): a
-                # prior crashed attempt indexed this doc's buckets but
-                # never published its text — that is this doc's own
-                # history, not a duplicate, so it must not count against
-                # admission
-                .where(F.col("id") != F.col("id_b"))
-                .select(F.col("id").alias("id_a"), "id_b").distinct())
-        # materialized: referenced by the canon-text semi-join and four
-        # times inside the verify, each of which would otherwise re-run
-        # the bucket self-join and re-read the store; bounded by the
-        # candidate pairs
-        cands = cands.localCheckpoint(eager=True)
-        texts = out.select(id_col, text_col)
-        if has_store and has_canon:
-            texts = texts.unionByName(
-                spark.read.parquet(canon_dir)
-                .join(cands.select(F.col("id_b").alias(id_col)).distinct(),
-                      id_col, "left_semi")
-                .select(id_col, text_col))
-        # materialized (true pairs only): the component pass and the drop
-        # set's cross half would each re-run the verify and its canon read
-        verified = (
-            ngram_jaccard_pairs(texts, cands, id_col=id_col,
-                                text_col=text_col,
-                                min_jaccard=JACCARD_THRESHOLD)
-            .where(F.col("jaccard") >= JACCARD_THRESHOLD)
-            .select("id_a", "id_b").localCheckpoint(eager=True)
-        )
-        batch_ids = out.select(F.col(id_col).alias("id_b"))
         # materialized (distinct ids — tiny, AQE-coalesced): the store
         # append, the canon write and the caller's read of the result each
-        # anti-join it, and would otherwise each re-run its two joins of
-        # `verified` against the batch ids and the dedup of their union
-        dropped = _non_root_ids(
-            verified.join(batch_ids, "id_b", "left_semi")) \
-            .unionByName(verified.join(batch_ids, "id_b", "left_anti")
-                         .select(F.col("id_a").alias("id"))) \
-            .distinct().localCheckpoint(eager=True)
+        # anti-join it, and would otherwise each re-run the drop-set joins
+        dropped = _near_dup_drops(
+            out, buckets, id_col, text_col,
+            (store_dir, canon_dir) if has_store and has_canon else None) \
+            .localCheckpoint(eager=True)
         admitted = out.join(dropped.withColumnRenamed("id", id_col), id_col,
                             "left_anti")
         admitted_buckets = buckets.join(dropped, "id", "left_anti")
@@ -1063,7 +1060,7 @@ def dedup_corpus_incremental(increment: DataFrame, store_dir: str,
         lease.assert_held()
         lease.touch()
         # BUCKETS FIRST, canon second — the crash-safe order (see
-        # docstring step 4: orphan bucket rows are inert; canon rows
+        # docstring step 3: orphan bucket rows are inert; canon rows
         # without index entries would silently admit every future
         # near-dup of them)
         append_store(store_dir, n_parts, admitted_buckets)

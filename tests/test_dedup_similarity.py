@@ -930,7 +930,8 @@ def test_domain_stats_triage_table(spark):
     assert got[""]["n_docs"] == 1 and got[""]["total_chars"] == 0
 
 
-def test_dedup_corpus_incremental_store(spark, tmp_path, docs_df):
+def test_dedup_corpus_incremental_store(spark, tmp_path, docs_df,
+                                        monkeypatch):
     """r4 verdict #4: incremental dedup against a persisted bucket index —
     batch A then batch B yields the same canonical set as one run over
     A∪B; B's store lookup reads ONLY its bp partitions (plan-asserted);
@@ -1024,19 +1025,39 @@ def test_dedup_corpus_incremental_store(spark, tmp_path, docs_df):
 
     # crash-retry: a crashed attempt appended f00's bucket rows (buckets
     # are written BEFORE canon — the crash-safe order) but never published
-    # its text. The orphan rows are self-collisions only and must not
-    # block f00's own re-admission.
+    # its text. The orphan rows are self-collisions only: they must not
+    # reach the verify, nor block f00's own re-admission.
+    from rag_pdf_parser_spark.operators import dedup as dd
+    from rag_pdf_parser_spark.streaming import minhash
+
     C = spark.createDataFrame(
         [("f00", "an orphaned crash survivor document with plenty of "
                  "novel words describing centrifuges and flywheels")],
         "doc_id string, text string")
-    (lsh_buckets(C, "doc_id", "text")
-     .withColumn("bp", store_partition_expr(F.col("band"), F.col("bucket"),
-                                            n_parts))
-     .select("band", "bucket", "id", "bp")
-     .write.mode("append").partitionBy("bp").parquet(store))
+    orphans = minhash.store_buckets(C, "doc_id", "text", n_parts) \
+        .select(*cols)
+    orphans.write.mode("append").partitionBy("bp").parquet(store)
+    computed, verified = [], []
+    real_buckets, real_verify = minhash.store_buckets, dd.ngram_jaccard_pairs
+
+    def recorded_buckets(*a, **k):
+        computed.append(real_buckets(*a, **k))
+        return computed[-1]
+
+    def recorded_verify(df, pairs, *a, **k):
+        verified.extend(tuple(r) for r in pairs.collect())
+        return real_verify(df, pairs, *a, **k)
+
+    monkeypatch.setattr(minhash, "store_buckets", recorded_buckets)
+    monkeypatch.setattr(dd, "ngram_jaccard_pairs", recorded_verify)
     adm_c = sorted(r["doc_id"] for r in
                    dedup_corpus_incremental(C, store, canon).collect())
+    monkeypatch.undo()
+    # precondition: the orphans are exactly the bucket rows f00's admit
+    # computes, so each of f00's buckets meets its own orphan in the probe
+    assert sorted(tuple(r) for r in computed[0].select(*cols).collect()) \
+        == sorted(tuple(r) for r in orphans.collect())
+    assert ("f00", "f00") not in verified, verified
     assert adm_c == ["f00"], adm_c
     assert spark.read.parquet(canon).where(
         F.col("doc_id") == "f00").count() == 1
@@ -1663,6 +1684,53 @@ def test_blocklist_depth_warning(spark):
     assert not [w for w in caught if "subdomains" in str(w.message)]
     with pytest.warns(UserWarning, match="never their subdomains"):
         flag_corpus(docs_t, blocked).collect()  # default still validates
+
+
+def test_duplicate_ids_raise_before_anything_is_written(spark, tmp_path):
+    """Ids must uniquely key the exact survivors. Two texts under one id
+    make `dedup_corpus` and the admit raise, whether or not a near pair
+    sits among the docs, and the admit writes nothing: the store's rows,
+    its `_STORE_META.json` and the canon table are untouched, and a first
+    batch creates no store."""
+    import hashlib
+
+    from rag_pdf_parser_spark.operators.dedup import (
+        dedup_corpus,
+        dedup_corpus_incremental,
+    )
+
+    t = ("a document about turbines and impellers spinning in laminar "
+         "flow for many words")
+    u = "unrelated second text with entirely distinct vocabulary tokens"
+    v = "yet another novel text about glaciers calving into fjords"
+    schema = "doc_id string, text string"
+    store, canon = str(tmp_path / "lsh"), str(tmp_path / "canon")
+    dedup_corpus_incremental(spark.createDataFrame(
+        [("z", "a stored doc about centrifuges and flywheels")], schema),
+        store, canon)
+
+    def snapshot():
+        return {os.path.join(d, f): hashlib.sha256(
+                    open(os.path.join(d, f), "rb").read()).hexdigest()
+                for root in (store, canon) for d, _, fs in os.walk(root)
+                for f in fs}
+
+    before = snapshot()
+    assert any(p.endswith("_STORE_META.json") for p in before)
+    fresh = tmp_path / "fresh"
+    for rows in ([("a", t), ("a", u), ("b", v)],
+                 [("a", t), ("a", u), ("b", v), ("c", t + " x")]):
+        docs = spark.createDataFrame(rows, schema)
+        with pytest.raises(ValueError, match="uniquely key"):
+            dedup_corpus(docs).collect()
+        with pytest.raises(ValueError, match="uniquely key"):
+            dedup_corpus_incremental(docs, store, canon)
+        assert snapshot() == before
+        with pytest.raises(ValueError, match="uniquely key"):
+            dedup_corpus_incremental(docs, str(fresh / "lsh"),
+                                     str(fresh / "canon"))
+        assert not (fresh / "lsh").exists()
+        assert not (fresh / "canon").exists()
 
 
 def test_incremental_refuses_lost_canon(spark, tmp_path):

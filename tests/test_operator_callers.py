@@ -165,3 +165,31 @@ def test_near_dup_recipe_takes_no_config_parameter():
                 bad += [(n.name, p) for p in sorted(names & RECIPE_CONFIG)]
     assert found == RECIPE_FUNCS, found
     assert not bad, bad
+
+
+def test_near_dup_recipe_has_one_chain():
+    """`ngram_jaccard_pairs` has one call site in the library, in the
+    near-dup core `_near_dup_drops`, and both `dedup_corpus` and the
+    incremental admit call that core: the two entry points share one
+    candidates → verify → drop-set chain."""
+    verify_sites, core_callers = [], set()
+    for path in _py_files(LIB):
+        tree = _parse(path)
+        verify_sites += [(os.path.relpath(path, ROOT), n.lineno)
+                         for n in ast.walk(tree) if isinstance(n, ast.Call)
+                         and _callee(n) == "ngram_jaccard_pairs"]
+        core_callers |= {fn.name for fn in tree.body
+                         if isinstance(fn, ast.FunctionDef)
+                         and any(isinstance(n, ast.Call)
+                                 and _callee(n) == "_near_dup_drops"
+                                 for n in ast.walk(fn))}
+    assert len(verify_sites) == 1, verify_sites
+    core = os.path.join(LIB, "operators", "dedup.py")
+    line = verify_sites[0][1]
+    owner = [fn.name for fn in _parse(core).body
+             if isinstance(fn, ast.FunctionDef)
+             and fn.lineno <= line <= fn.end_lineno]
+    assert verify_sites[0][0] == os.path.relpath(core, ROOT), verify_sites
+    assert owner == ["_near_dup_drops"], owner
+    assert {"dedup_corpus", "dedup_corpus_incremental"} <= core_callers, \
+        core_callers

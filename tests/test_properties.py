@@ -441,3 +441,116 @@ def test_one_increment_into_empty_store_keeps_what_dedup_corpus_keeps(
         shutil.rmtree(root, ignore_errors=True)
     want = sorted(r["doc_id"] for r in dedup_corpus(docs).collect())
     assert got == want, (rows, got, want)
+
+
+def _first_seen_greedy_model(batches):
+    """Python model of admitting `batches` in order into one empty store:
+    per batch the ids the admit returns, and at the end the canon ids.
+
+    - A re-submitted id already in canon is skipped: neither admitted nor
+      dropped.
+    - Exact lane: min id per normalized text; a NULL text is keyed by its
+      own id.
+    - Candidates share an LSH bucket (`minhash_signature_xx` bands), and
+      verify at round-half-up-6 char-shingle Jaccard ≥ the threshold. A
+      NULL text never verifies.
+    - Within the batch, union-find over the verified pairs: non-roots
+      (all but the min id of a component) are dropped.
+    - Cross: a doc sharing a bucket with an admitted doc and verifying
+      against it is dropped.
+    """
+    from rag_pdf_parser_spark.kernel.twins import (char_shingles,
+                                                   minhash_signature_xx,
+                                                   normalized_text,
+                                                   round_half_up)
+    from rag_pdf_parser_spark.operators.dedup import (JACCARD_THRESHOLD,
+                                                      LSH_CONFIG)
+
+    n, k, bands = (LSH_CONFIG[x] for x in ("n", "num_perm", "bands"))
+    r = k // bands
+
+    def buckets(text):
+        if text is None:
+            return set()
+        sig = minhash_signature_xx(text, n, k)
+        return {(b, tuple(sig[b * r:(b + 1) * r])) for b in range(bands)}
+
+    def verifies(a, b):
+        if a is None or b is None:
+            return False
+        ga, gb = char_shingles(a, n), char_shingles(b, n)
+        return round_half_up(len(ga & gb) / len(ga | gb), 6) \
+            >= JACCARD_THRESHOLD
+
+    canon, index, admitted_per_batch = {}, {}, []
+    for rows in batches:
+        first = {}
+        for i, t in sorted(r for r in rows if r[0] not in canon):
+            first.setdefault(("text", normalized_text(t)) if t is not None
+                             else ("id", i), (i, t))
+        docs = dict(first.values())
+        bk = {i: buckets(t) for i, t in docs.items()}
+        root = {i: i for i in docs}
+
+        def find(x):
+            while root[x] != x:
+                x = root[x]
+            return x
+
+        ids = sorted(docs)
+        for x, a in enumerate(ids):
+            for b in ids[x + 1:]:
+                if bk[a] & bk[b] and verifies(docs[a], docs[b]):
+                    ra, rb = find(a), find(b)
+                    root[max(ra, rb)] = min(ra, rb)
+        dropped = {i for i in ids if find(i) != i}
+        dropped |= {i for i in ids if any(
+            verifies(docs[i], canon[c])
+            for key in bk[i] for c in index.get(key, ()))}
+        admitted = [i for i in ids if i not in dropped]
+        for i in admitted:
+            canon[i] = docs[i]
+            for key in bk[i]:
+                index.setdefault(key, set()).add(i)
+        admitted_per_batch.append(admitted)
+    return admitted_per_batch, sorted(canon)
+
+
+@settings(max_examples=6, deadline=None)
+@given(_near_dup_corpora(), st.data())
+def test_increments_admit_what_first_seen_greedy_admits(spark, rows, data):
+    """Admitting a corpus as 2-3 consecutive increments, with one earlier
+    increment submitted again later, admits per increment what the
+    first-seen-greedy model admits, and canon and the store's owner ids
+    end up as the model's canon."""
+    import shutil
+    import tempfile
+
+    from rag_pdf_parser_spark.operators.dedup import dedup_corpus_incremental
+
+    k = data.draw(st.integers(2, 3))
+    cuts = sorted(data.draw(st.lists(st.integers(0, len(rows)),
+                                     min_size=k - 1, max_size=k - 1)))
+    bounds = [0, *cuts, len(rows)]
+    batches = [rows[a:b] for a, b in zip(bounds, bounds[1:])]
+    again = data.draw(st.integers(0, k - 1))
+    at = data.draw(st.integers(again + 1, k))
+    batches.insert(at, batches[again])
+
+    want, want_canon = _first_seen_greedy_model(batches)
+    root = tempfile.mkdtemp(prefix="admit_k_prop_")
+    store, canon = f"{root}/lsh", f"{root}/canon"
+    try:
+        got = [sorted(r["doc_id"] for r in dedup_corpus_incremental(
+            spark.createDataFrame(b, "doc_id string, text string"),
+            store, canon).collect()) for b in batches]
+        got_canon = sorted(r["doc_id"] for r in
+                           spark.read.parquet(canon).collect()) \
+            if want_canon else []
+        owners = sorted({r["id"] for r in
+                         spark.read.parquet(store).select("id").collect()}) \
+            if want_canon else []
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+    assert got == want, (batches, got, want)
+    assert got_canon == want_canon == owners, (got_canon, owners)
