@@ -156,13 +156,13 @@ def quality_score_expr(text: Column) -> Column:
     ).cast("long")
 
 
-def fingerprint_expr(text: Column, prefix_len: int = 128) -> Column:
+def fingerprint_expr(text: Column) -> Column:
     """Polynomial rolling-hash document fingerprint over the first
-    `prefix_len` chars of the ASCII-projected normalized text:
+    128 chars of the ASCII-projected normalized text:
     acc = (acc*31 + code) mod 1_000_000_007. Engine-portable (same arithmetic
     in the DuckDB oracle)."""
     ascii_text = F.substring(
-        F.regexp_replace(normalized_text_expr(text), "[^ -~]", ""), 1, prefix_len
+        F.regexp_replace(normalized_text_expr(text), "[^ -~]", ""), 1, 128
     )
     chars = F.split(ascii_text, "")
     return F.aggregate(
@@ -172,14 +172,18 @@ def fingerprint_expr(text: Column, prefix_len: int = 128) -> Column:
     )
 
 
-def hash_embedding_expr(text: Column, dim: int = 32) -> Column:
+#: width of `hash_embedding_expr`'s vector (two md5 hex chars address at
+#: most 256 buckets)
+EMBEDDING_DIM = 32
+
+
+def hash_embedding_expr(text: Column) -> Column:
     """Hashed bag-of-words text embedding (feature hashing / 'hashing
     trick'): token → bucket via the first two hex chars of md5(token)
     (portable to DuckDB without bigint hex parsing), bucket counts as a
-    dense double vector. The training-data pipeline's deterministic
-    text→vector source; L2-normalize via `l2_normalize_expr` for cosine
-    workloads. Pure expressions — no UDF, no shuffle."""
-    assert dim <= 256, "two-hex-char bucketing supports dim <= 256"
+    dense `EMBEDDING_DIM` double vector. The training-data pipeline's
+    deterministic text→vector source; L2-normalize via `l2_normalize_expr`
+    for cosine workloads. Pure expressions — no UDF, no shuffle."""
     toks = F.filter(F.split(normalized_text_expr(text), " "),
                     lambda t: F.length(t) > 0)
     hexes = F.lit("0123456789abcdef")
@@ -189,7 +193,7 @@ def hash_embedding_expr(text: Column, dim: int = 32) -> Column:
         return (
             (F.instr(hexes, F.substring(h, 1, 1)) - 1) * 16
             + (F.instr(hexes, F.substring(h, 2, 1)) - 1)
-        ) % dim
+        ) % EMBEDDING_DIM
 
     # Hash each token ONCE into an int bucket index, THEN fold the index
     # array into the dim-wide accumulator. Referencing md5 inside the
@@ -197,7 +201,7 @@ def hash_embedding_expr(text: Column, dim: int = 32) -> Column:
     # (the HOF re-evaluation trap) — here the only work inside the fold is
     # an int compare.
     bucket_idx = F.transform(toks, bucket)
-    init = F.array(*[F.lit(0.0)] * dim)
+    init = F.array(*[F.lit(0.0)] * EMBEDDING_DIM)
     return F.aggregate(
         bucket_idx, init,
         lambda acc, b: F.transform(
@@ -369,13 +373,12 @@ def quality_model_weights(dim: int = QUALITY_MODEL_DIM,
 
 
 def quality_model_score_expr(text: Column,
-                             dim: int = QUALITY_MODEL_DIM,
-                             seed: int = 13,
                              toks: Column | None = None,
                              bigrams: Column | None = None) -> Column:
     """Linear text-quality classifier score over hashed unigram+bigram
     features (the 'hashing trick' a la fastText/CCNet): feature f → bucket
-    pmod(xxhash64(f), dim) → weight lookup → mean over features + bias.
+    pmod(xxhash64(f), QUALITY_MODEL_DIM) → weight lookup → mean over
+    features + bias.
     NULL text behaves as empty (scores exactly the bias) — a NULL score
     would make a keep/drop gate silently lose the row from both branches.
 
@@ -392,7 +395,7 @@ def quality_model_score_expr(text: Column,
     array rides the plan as a literal (a real model's ~10^5-dim weights
     would ship via broadcast + `F.element_at` on a map/array column
     instead; same plan shape)."""
-    ws, bias = quality_model_weights(dim, seed)
+    ws, bias = quality_model_weights()
     # pre-staged toks/bigrams (flag_corpus): tokenize-once composition —
     # bit-identical to the default construction from `text`
     if toks is None:
@@ -403,7 +406,8 @@ def quality_model_score_expr(text: Column,
     weights = F.array(*[F.lit(float(x)) for x in ws])
     # hash each feature ONCE in a projection, then fold weight lookups —
     # only an element_at happens inside the accumulator (HOF trap avoided)
-    buckets = F.transform(feats, lambda f: F.pmod(F.xxhash64(f), F.lit(dim)))
+    buckets = F.transform(
+        feats, lambda f: F.pmod(F.xxhash64(f), F.lit(QUALITY_MODEL_DIM)))
     total = F.aggregate(
         buckets, F.lit(0.0),
         lambda acc, b: acc + F.element_at(weights, b.cast("int") + 1),
@@ -413,7 +417,6 @@ def quality_model_score_expr(text: Column,
 
 
 def with_quality_model(df, text_col: str = "text",
-                       dim: int = QUALITY_MODEL_DIM, seed: int = 13,
                        toks: Column | None = None,
                        bigrams: Column | None = None):
     """df + score_lin / quality_p (monotone sigmoid calibration — exp may
@@ -422,8 +425,8 @@ def with_quality_model(df, text_col: str = "text",
     columns reference the score ATTRIBUTE, which CollapseProject refuses
     to re-inline for multiply-referenced non-cheap expressions)."""
     staged = df.withColumn(
-        "score_lin", quality_model_score_expr(F.col(text_col), dim, seed,
-                                              toks, bigrams))
+        "score_lin", quality_model_score_expr(F.col(text_col), toks,
+                                              bigrams))
     s = F.col("score_lin")
     return (staged
             .withColumn("quality_p", F.lit(1.0) / (F.lit(1.0) + F.exp(-s)))
@@ -503,9 +506,10 @@ REPETITION_STATS = (
     "dup_para_frac", "dup_para_char_frac")
 
 
-def with_repetition_features(df, text_col: str = "text"):
-    """df + the COMPLETE Gopher repetition-filter family (Rae et al. 2021
-    §A1.1), beyond the subset in `gopher_features_expr`:
+def with_repetition_features(df):
+    """df + the COMPLETE Gopher repetition-filter family over its `text`
+    column (Rae et al. 2021 §A1.1), beyond the subset in
+    `gopher_features_expr`:
 
     - top n-gram CHARACTER fraction for n ∈ {2,3,4} (chars covered by the
       single most frequent word n-gram / total chars),
@@ -518,10 +522,10 @@ def with_repetition_features(df, text_col: str = "text"):
 
     Words are the lowercase non-empty whitespace tokens of the text. Zero
     shuffle; NULL text behaves as empty (all fractions 0, keep true)."""
-    safe = F.coalesce(F.col(text_col), F.lit(""))
+    safe = F.coalesce(F.col("text"), F.lit(""))
     toks = F.transform(raw_tokens_expr(safe), F.lower)
     return with_repetition_stats(df.withColumn("__rep_toks", toks),
-                                 text_col, "__rep_toks")
+                                 "text", "__rep_toks")
 
 
 def with_repetition_stats(df, text_col: str, toks_col: str):

@@ -24,19 +24,14 @@ DuckDB's native ``ASOF JOIN`` provides the independent oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
 def asof_join(left: DataFrame, right: DataFrame, on: str, ts: str,
-              payload: list[str] | None = None,
-              tolerance: Column | None = None) -> DataFrame:
+              payload: list[str] | None = None) -> DataFrame:
     """left ⟕-asof right: all left columns + the latest right `payload`
     columns at or before the left row's `ts` (null when none precedes).
-
-    `tolerance`: optional max staleness interval column/literal — right rows
-    older than ``left.ts - tolerance`` do not match (same semantics as
-    pandas.merge_asof tolerance).
 
     Duplicate right rows at the same (key, ts) are broken DETERMINISTICALLY:
     the window order includes a content hash of the right payload, so the
@@ -78,13 +73,6 @@ def asof_join(left: DataFrame, right: DataFrame, on: str, ts: str,
         .withColumn("__eff", F.last("__r", ignorenulls=True).over(w))
         .where(F.col("__side") == 1)
     )
-    if tolerance is not None:
-        carried = carried.withColumn(
-            "__eff",
-            F.when(F.col("__eff").isNotNull()
-                   & (F.col("__ts") - F.col("__eff")[ts] <= tolerance),
-                   F.col("__eff")),
-        )
     out_cols = [F.col("__l")[c].alias(c) for c in left.columns]
     out_cols += [F.col("__eff")[ts].alias(f"asof_{ts}")]
     out_cols += [F.col("__eff")[c].alias(f"asof_{c}") for c in payload]

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..kernel.chunker import ChunkingConfig, chunk_blocks
+from ..kernel.chunker import chunk_blocks
 from ..schema import CHUNKS_SCHEMA
 from .arrowmap import group_rows
 
@@ -24,29 +24,31 @@ _BLOCK_COLS = ["page", "block_id", "type", "reading_order", "text",
                "markdown", "anchor"]
 
 
-def chunk_documents(blocks: DataFrame, cfg: ChunkingConfig | None = None) -> DataFrame:
-    """blocks (flat, any order) → chunks per CHUNKS_SCHEMA."""
-    cfg = cfg or ChunkingConfig()
+def chunk_documents(blocks: DataFrame) -> DataFrame:
+    """blocks (flat, any order) → chunks per CHUNKS_SCHEMA, under the
+    kernel's default `ChunkingConfig` (the one the fused
+    `extract_docs(chunks=True)` stage uses)."""
 
     def chunk_group(g: dict[str, list]) -> list[list]:
         blist = sorted((dict(zip(_BLOCK_COLS, vals))
                         for vals in zip(*(g[c] for c in _BLOCK_COLS))),
                        key=lambda b: b["reading_order"])  # stable
-        chunks = chunk_blocks(blist, g["doc_id"][0], cfg)
+        chunks = chunk_blocks(blist, g["doc_id"][0])
         return [[c[k] for k in CHUNKS_SCHEMA.names] for c in chunks]
 
     return blocks.groupBy("doc_id").applyInArrow(
         group_rows(chunk_group, CHUNKS_SCHEMA), CHUNKS_SCHEMA)
 
 
-def embed_chunks(chunks: DataFrame, dim: int = 32) -> DataFrame:
+def embed_chunks(chunks: DataFrame) -> DataFrame:
     """Fill the chunk embedding slot (chunk.py:45) with an L2-normalized
-    hashed bag-of-words vector — pure expressions, no UDF, no shuffle; the
-    deterministic stand-in for a model embedding stage (north rule). The
-    result feeds the similarity family directly (knn/ANN/IVF over chunks)."""
+    32-dim hashed bag-of-words vector — pure expressions, no UDF, no
+    shuffle; the deterministic stand-in for a model embedding stage (north
+    rule). The result feeds the similarity family directly (knn/ANN/IVF
+    over chunks)."""
     from ..functions import hash_embedding_expr, l2_normalize_expr
 
-    vec = l2_normalize_expr(hash_embedding_expr(F.col("text"), dim))
+    vec = l2_normalize_expr(hash_embedding_expr(F.col("text")))
     return chunks.withColumn(
         "embedding", F.transform(vec, lambda v: v.cast("float"))
     )

@@ -59,6 +59,20 @@ LSH_CONFIG = {"n": 5, "num_perm": 32, "bands": 8, "shingle": "char"}
 MAX_BUCKET = 10_000
 #: verified char-5-gram Jaccard at or above which two docs are near-dups
 JACCARD_THRESHOLD = 0.8
+#: measured gram-table bytes up to which the Jaccard verify broadcasts
+#: both gram sides (`ngram_jaccard_pairs`); above it the verify falls back
+#: to sort-merge joins
+JACCARD_BROADCAST_BYTES = 256 << 20
+#: pair-list size up to which `connected_components` solves on the driver
+#: (union-find) instead of the distributed propagation loop
+DRIVER_EDGES = 200_000
+#: propagation rounds after which the distributed loop gives up
+MAX_CC_ROUNDS = 20
+#: SimHash banded blocking: 64-bit fingerprints in 4 bands of 16 bits;
+#: pigeonhole makes every pair within Hamming distance 3 share a band
+SIMHASH_BITS = 64
+SIMHASH_BANDS = 4
+SIMHASH_MAX_HAMMING = SIMHASH_BANDS - 1
 
 
 # --- exact -------------------------------------------------------------------
@@ -88,19 +102,12 @@ def exact_dedup(df: DataFrame, content_col: str = "text",
 
 
 def anti_join_seen(df: DataFrame, seen: DataFrame, hash_col: Column,
-                   kind: str, broadcast: bool | None = None) -> DataFrame:
+                   kind: str) -> DataFrame:
     """J2/F7: drop rows whose hash is registered in seen_hashes (the
-    reference's dedup-gate, deduplicator.py:114-141).
-
-    `broadcast`: the caller knows which regime it is in — True forces a
-    broadcast hint (small registry), False forces shuffle (at 10^12 scale
-    the seen table is bucketed by hash so the anti-join is shuffle-free
-    anyway), None (default) leaves the decision to AQE /
-    autoBroadcastJoinThreshold. No driver-side count() fires during plan
-    construction in any mode."""
+    reference's dedup-gate, deduplicator.py:114-141). The join strategy is
+    AQE's (autoBroadcastJoinThreshold); no driver-side count() fires
+    during plan construction."""
     s = seen.where(F.col("kind") == kind).select(F.col("hash").alias("__h"))
-    if broadcast:
-        s = F.broadcast(s)
     return (
         df.withColumn("__h", hash_col)
         .join(s, "__h", "left_anti")
@@ -236,12 +243,13 @@ def lsh_buckets(df: DataFrame, id_col: str = "doc_id",
 
 
 def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", n: int = 5, num_perm: int = 8,
+                        n: int = 5, num_perm: int = 8,
                         bands: int = 4, flavor: str = "xx",
                         max_bucket: int | None = None,
                         shingle: str = "char") -> DataFrame:
-    """MinHash-LSH near-dup candidates: band the signature, hash each band,
-    self-join rows sharing any band bucket → distinct (a < b) pairs.
+    """MinHash-LSH near-dup candidates over the `text` column: band the
+    signature, hash each band, self-join rows sharing any band bucket →
+    distinct (a < b) pairs.
 
     `max_bucket` is the LSH skew guard for corpus scale: a bucket of m
     near-identical docs fans out m² candidate pairs, and one boilerplate
@@ -261,7 +269,7 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
     struct array in memory before the Generate copies it per output row —
     the 37× Generate-copy trap in another costume (8.1 s, 2.3× slower).
     The join streams pairs without ever materializing a bucket."""
-    return bucket_pairs(lsh_buckets(df, id_col, text_col, n, num_perm, bands,
+    return bucket_pairs(lsh_buckets(df, id_col, "text", n, num_perm, bands,
                                     flavor, shingle), max_bucket)
 
 
@@ -292,24 +300,25 @@ def bucket_pairs(buckets: DataFrame,
 
 # --- SimHash ---------------------------------------------------------------------
 
-def simhash(df: DataFrame, text_col: str = "text", bits: int = 64) -> DataFrame:
-    """SimHash over whitespace tokens: per-token 64-bit hash, per-bit
-    weighted majority, reassembled fingerprint. Fully native: explode-free —
-    bit b contribution via shiftright/&1 and aggregate over the token array."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+def simhash(df: DataFrame) -> DataFrame:
+    """SimHash of the `text` column over whitespace tokens: per-token
+    64-bit hash, per-bit weighted majority, reassembled fingerprint. Fully
+    native: explode-free — bit b contribution via shiftright/&1 and
+    aggregate over the token array."""
+    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     hashes = F.transform(toks, lambda t: F.xxhash64(t))
 
-    # All `bits` votes in ONE aggregate pass over the token-hash array
+    # All 64 votes in ONE aggregate pass over the token-hash array
     # (inside the merge lambda, `h` is a bound variable — referencing it per
     # bit is an attribute read, not a re-hash). A per-bit aggregate would
-    # re-walk (and re-hash) the token array `bits` times.
+    # re-walk (and re-hash) the token array 64 times.
     one = F.lit(1).cast("long")
-    init = F.array(*[F.lit(0).cast("long")] * bits)
+    init = F.array(*[F.lit(0).cast("long")] * SIMHASH_BITS)
     merge = lambda acc, h: F.array(*[  # noqa: E731
         F.element_at(acc, b + 1)
         + F.when(F.shiftright(h, b).bitwiseAND(one) == 1, F.lit(1))
         .otherwise(F.lit(-1)).cast("long")
-        for b in range(bits)
+        for b in range(SIMHASH_BITS)
     ])
     votes = F.aggregate(hashes, init, merge)
     # Fingerprint assembly folded into a SECOND aggregate whose *argument* is
@@ -322,7 +331,8 @@ def simhash(df: DataFrame, text_col: str = "text", bits: int = 64) -> DataFrame:
     # Bit values come from a literal array (1L << b, with b=63 the
     # two's-complement -(2^63) the signed fingerprint needs).
     bitvals = F.array(*[
-        F.lit(2 ** b if b < 63 else -(2 ** 63)).cast("long") for b in range(bits)
+        F.lit(2 ** b if b < 63 else -(2 ** 63)).cast("long")
+        for b in range(SIMHASH_BITS)
     ])
     fingerprint = F.aggregate(
         votes,
@@ -343,35 +353,23 @@ def simhash_hamming(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def simhash_near_dup_pairs(df: DataFrame, id_col: str = "doc_id",
-                           text_col: str = "text", bands: int = 4,
-                           max_hamming: int = 3, bits: int = 64,
-                           max_bucket: int | None = None) -> DataFrame:
-    """SimHash near-dup PAIRS at corpus scale via banded blocking (Manku,
-    Jain & Sarma 2007, "Detecting near-duplicates for web crawling"): split
-    the `bits`-bit fingerprint into `bands` contiguous chunks; by
-    pigeonhole, two fingerprints within Hamming distance <= bands-1 agree
-    EXACTLY on at least one chunk, so an equi-self-join on (band, chunk
-    value) finds every such pair with recall 1.0 — no all-pairs scan. The
-    exact `bit_count(xor) <= max_hamming` predicate then verifies
-    candidates (default 3 = bands-1, the lossless configuration; a larger
-    max_hamming with the same bands trades recall for cost exactly as in
-    the paper).
+def simhash_near_dup_pairs(df: DataFrame,
+                           id_col: str = "doc_id") -> DataFrame:
+    """SimHash near-dup PAIRS of the `text` column at corpus scale via
+    banded blocking (Manku, Jain & Sarma 2007, "Detecting near-duplicates
+    for web crawling"): split the 64-bit fingerprint into `SIMHASH_BANDS`
+    contiguous chunks; by pigeonhole, two fingerprints within Hamming
+    distance <= bands-1 agree EXACTLY on at least one chunk, so an
+    equi-self-join on (band, chunk value) finds every such pair with
+    recall 1.0 — no all-pairs scan. The exact `bit_count(xor) <=
+    SIMHASH_MAX_HAMMING` predicate then verifies candidates (bands-1, the
+    lossless configuration).
 
-    Shuffle ∝ corpus × bands on uniformly-distributed 16-bit chunk keys;
-    `max_bucket` is the same boilerplate-mega-bucket skew guard as
-    `lsh_candidate_pairs` (a chunk value shared by m docs fans out m²
-    candidates — cap it and let the cheaper exact-dedup lane own those).
+    Shuffle ∝ corpus × bands on uniformly-distributed 16-bit chunk keys.
     """
-    if bits % bands != 0:
-        raise ValueError(f"bands={bands} must divide bits={bits}")
-    width = bits // bands
-    # width == bits (bands=1, the degenerate all-pairs-on-one-key config):
-    # 2^64-1 does not fit a LongType literal — all-ones is -1 in two's
-    # complement (r4 ADVICE finding).
-    mask = (F.lit(-1).cast("long") if width == bits
-            else F.lit((1 << width) - 1).cast("long"))
-    sig = simhash(df.select(id_col, text_col), text_col, bits).select(
+    width = SIMHASH_BITS // SIMHASH_BANDS
+    mask = F.lit((1 << width) - 1).cast("long")
+    sig = simhash(df.select(id_col, "text")).select(
         F.col(id_col).alias("id"), "simhash")
     entries = [
         F.struct(
@@ -381,15 +379,11 @@ def simhash_near_dup_pairs(df: DataFrame, id_col: str = "doc_id",
             F.shiftright(F.col("simhash"), b * width).bitwiseAND(mask)
             .alias("bv"),
         )
-        for b in range(bands)
+        for b in range(SIMHASH_BANDS)
     ]
     bk = sig.select(
         "id", "simhash", F.explode(F.array(*entries)).alias("k")
     ).select("id", "simhash", "k.band", "k.bv")
-    if max_bucket is not None:
-        sizes = bk.groupBy("band", "bv").agg(F.count("*").alias("__bsz"))
-        bk = bk.join(sizes.where(F.col("__bsz") <= max_bucket),
-                     ["band", "bv"]).drop("__bsz")
     left, right = bk.alias("l"), bk.alias("r")
     return (
         left.join(
@@ -399,7 +393,7 @@ def simhash_near_dup_pairs(df: DataFrame, id_col: str = "doc_id",
             & (F.col("l.id") < F.col("r.id")),
         )
         .where(simhash_hamming(F.col("l.simhash"), F.col("r.simhash"))
-               <= max_hamming)
+               <= SIMHASH_MAX_HAMMING)
         .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
         .distinct()
     )
@@ -423,8 +417,7 @@ def jaccard_size_bound_expr(sz_a: Column, sz_b: Column,
 
 def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text",
-                        min_jaccard: float | None = None,
-                        broadcast_bytes: int = 256 << 20) -> DataFrame:
+                        min_jaccard: float | None = None) -> DataFrame:
     """Exact char n-gram Jaccard for candidate pairs (id_a, id_b):
     |∩| / (|A|+|B|-|∩|) over the docs' distinct shingle sets, with n the
     recipe's shingle length (`LSH_CONFIG`), so candidates verify in the
@@ -532,7 +525,7 @@ def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
     # sort-merge, and an SMJ ships a full gram ARRAY per PAIR through the
     # id_b exchange — measured 10× the gram-table bytes at a 50k-doc
     # corpus. One cheap agg over the materialized gram table bounds its
-    # broadcast size; under `broadcast_bytes` (default 256 MB — guide:
+    # broadcast size; under `JACCARD_BROADCAST_BYTES` (256 MB — guide:
     # a few hundred MB broadcast is fine; both sides broadcast, so the
     # executor cost is ~2×) the pairs stream through two BroadcastHash
     # joins and NO array ever crosses an exchange. Above the bound the
@@ -558,11 +551,15 @@ def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
             f"{stats_row['n'] - stats_row['d']} duplicate rows among the "
             f"candidate docs")
     est_bytes = (stats_row["b"] or 0) + 16 * (stats_row["c"] or 0)
-    fits = est_bytes <= broadcast_bytes
+    fits = est_bytes <= JACCARD_BROADCAST_BYTES
     ga = gtab.select(F.col("id").alias("id_a"), F.col("__gs").alias("__ga"))
     gb = gtab.select(F.col("id").alias("id_b"), F.col("__gs").alias("__gb"))
     if fits:
         ga, gb = F.broadcast(ga), F.broadcast(gb)
+    else:
+        # the measured bound decides, not AQE: its 10 MB size threshold
+        # would still broadcast a gram table the bound refuses
+        ga, gb = ga.hint("merge"), gb.hint("merge")
     # two-step projection: __ni is referenced twice by the jaccard
     # formula, and size(array_intersect) is non-cheap — staging it as an
     # attribute keeps CollapseProject from inlining (and thus evaluating)
@@ -590,13 +587,12 @@ def ngram_jaccard_pairs(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
 
 
 def dedup_lines_corpus(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id",
-                       min_repeat: int = 2) -> DataFrame:
+                       id_col: str = "doc_id") -> DataFrame:
     """C4-style CORPUS-level line deduplication (Raffel et al. 2020 §2.2
     'we discarded all but one of any three-sentence span occurring more than
     once' — here at line granularity, the common web-pipeline variant):
-    drop every line whose exact text occurs >= `min_repeat` times across
-    the whole corpus (boilerplate: nav text, cookie banners, repeated
+    drop every line whose exact text occurs more than once across the
+    whole corpus (boilerplate: nav text, cookie banners, repeated
     section stubs), reassemble each document's remaining lines in order.
 
     Blank lines are never counted or dropped (they'd trivially repeat).
@@ -624,7 +620,7 @@ def dedup_lines_corpus(docs: DataFrame, text_col: str = "text",
     dup_lines = (
         lines.where(F.length("__line") > 0)
         .groupBy("__line").agg(F.count("*").alias("__c"))
-        .where(F.col("__c") >= min_repeat)
+        .where(F.col("__c") >= 2)
         .select("__line")
     )
     survivors = lines.join(dup_lines, "__line", "left_anti")
@@ -650,23 +646,20 @@ def dedup_lines_corpus(docs: DataFrame, text_col: str = "text",
     )
 
 
-def connected_components(pairs: DataFrame, id_a: str = "id_a",
-                         id_b: str = "id_b",
-                         max_iter: int = 20,
-                         driver_edges: int = 200_000) -> DataFrame:
-    """Connected components over a near-duplicate pair list → (id,
-    component) with component = MIN node id in the cluster. The tail stage
-    of every dedup pipeline: LSH/phash emit PAIRS, but dropping duplicates
-    needs CLUSTERS (keep one canonical doc per component). NOT a lazy plan
-    builder: at call time one bounded eager job fetches up to
-    `driver_edges`+1 pairs (see below), and the distributed fallback runs
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """Connected components over an (id_a, id_b) near-duplicate pair list
+    → (id, component) with component = MIN node id in the cluster. The
+    tail stage of every dedup pipeline: LSH/phash emit PAIRS, but dropping
+    duplicates needs CLUSTERS (keep one canonical doc per component). NOT
+    a lazy plan builder: at call time one bounded eager job fetches up to
+    `DRIVER_EDGES`+1 pairs (see below), and the distributed fallback runs
     its rounds eagerly too — pass a materialized pair table.
 
     Spark-first: iterative min-label propagation — each round joins the
     (undirected) edge list against current labels and takes the min label
     over {self} ∪ neighbors. Rounds needed = graph diameter; near-dup
     clusters are shallow (template families — diameter ≤ ~3), so this
-    converges in a handful of rounds; `max_iter` bounds pathological
+    converges in a handful of rounds; `MAX_CC_ROUNDS` bounds pathological
     chains. Convergence is detected by a per-round changed-count — one
     driver-side scalar per round (control plane only, never row data).
 
@@ -674,32 +667,31 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     large graphs swap in alternating large-star/small-star (Kiveris et al.
     2014) — same join primitive, fewer rounds on long chains.
 
-    `driver_edges` (r7): SMALL-GRAPH FAST PATH. Near-dup pair lists are
+    `DRIVER_EDGES` (r7): SMALL-GRAPH FAST PATH. Near-dup pair lists are
     usually tiny next to the corpus (a few true pairs per thousand docs),
     and each propagation round of the loop costs a join + shuffle +
     localCheckpoint + a count job — pure scheduling overhead when |E| is
     small (measured ~2 s for a 241-edge graph at sf0.1). When a BOUNDED
-    probe (`limit(driver_edges+1).count()` — never an unbounded collect)
+    probe (`limit(DRIVER_EDGES+1).collect()` — never an unbounded collect)
     shows the edge list fits, solve with a driver-side union-find instead:
     identical min-label output (union-find tracks the min id per root;
     Python's str ordering equals Spark's UTF8 binary ordering because
     UTF-8 preserves code-point order), bounded memory (~50 B/edge, ≤10 MB
-    at the default). 0 disables (always distribute); at corpus scale a
-    big pair list simply exceeds the bound and takes the loop.
+    at the bound); at corpus scale a big pair list simply exceeds the
+    bound and takes the loop.
     """
     # ONE bounded job decides the path AND fetches the edges (a separate
     # count-then-collect would execute the caller's pair plan twice):
-    # len == driver_edges+1 ⇒ the graph exceeds the bound, discard and
+    # len == DRIVER_EDGES+1 ⇒ the graph exceeds the bound, discard and
     # take the distributed loop.
-    rows = (pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-            .limit(driver_edges + 1).collect()) if driver_edges else None
-    if rows is not None and any(
-            r["a"] is None or r["b"] is None for r in rows):
+    rows = pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b")) \
+        .limit(DRIVER_EDGES + 1).collect()
+    if any(r["a"] is None or r["b"] is None for r in rows):
         # NULL ids would crash Python's `<` in union-by-min; the
         # distributed loop tolerates null edges (a null key never joins),
         # so odd inputs keep their pre-r7 behavior instead of raising
         rows = None
-    if rows is not None and len(rows) <= driver_edges:
+    if rows is not None and len(rows) <= DRIVER_EDGES:
         parent: dict = {}
 
         def find(x):
@@ -723,27 +715,27 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
         # built from Arrow so it plans as a LocalTableScan, not a pickled
         # RDD that every consumer re-runs in Python workers
         ids = list(parent)
-        schema = pairs.select(F.col(id_a).alias("id"),
-                              F.col(id_a).alias("comp")).schema
+        schema = pairs.select(F.col("id_a").alias("id"),
+                              F.col("id_a").alias("comp")).schema
         return pairs.sparkSession.createDataFrame(
             pa.table({"id": ids, "comp": [find(x) for x in ids]}), schema)
-    if max_iter < 1:
-        raise ValueError("max_iter must be >= 1")
     # materialized once: every round joins `edges`, and without the
     # checkpoint each round would re-run the caller's pair plan
     edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        .union(pairs.select(F.col("id_b").alias("src"),
+                            F.col("id_a").alias("dst")))
         .distinct()
     ).localCheckpoint(eager=True)
     labels = (
         edges.select(F.col("src").alias("id")).distinct()
         .withColumn("comp", F.col("id"))
     )
-    # max_iter propagation rounds + 1 certification round: convergence is
-    # certified by a zero-change round, so a graph converging in EXACTLY
-    # max_iter rounds still certifies (and returns) rather than raising.
-    for _ in range(max_iter + 1):
+    # MAX_CC_ROUNDS propagation rounds + 1 certification round:
+    # convergence is certified by a zero-change round, so a graph
+    # converging in EXACTLY MAX_CC_ROUNDS rounds still certifies (and
+    # returns) rather than raising.
+    for _ in range(MAX_CC_ROUNDS + 1):
         neighbor_min = (
             edges.join(labels, edges["dst"] == labels["id"])
             .groupBy("src").agg(F.min("comp").alias("nmin"))
@@ -769,34 +761,33 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
         if changed == 0:
             break
     else:
-        # exhausting max_iter with changes still flowing means a component
-        # of diameter > max_iter got SPLIT labels — wrong answers that look
-        # converged. Fail loudly instead (raise the bound or switch to
-        # large-star/small-star for long-chain graphs).
+        # exhausting the rounds with changes still flowing means a
+        # component of larger diameter got SPLIT labels — wrong answers
+        # that look converged. Fail loudly instead (raise the bound or
+        # switch to large-star/small-star for long-chain graphs).
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing); component diameter exceeds "
-            "max_iter — raise it or use star-contraction for chain graphs"
+            f"connected_components did not converge in {MAX_CC_ROUNDS} "
+            f"rounds ({changed} labels still changing); component diameter "
+            "exceeds MAX_CC_ROUNDS — raise it or use star-contraction for "
+            "chain graphs"
         )
     return labels.select("id", "comp")
 
 
-def dedup_keep_canonical(docs: DataFrame, pairs: DataFrame,
-                         id_col: str = "doc_id", id_a: str = "id_a",
-                         id_b: str = "id_b") -> DataFrame:
-    """Keep exactly one document per near-dup component (the MIN id — a
-    deterministic canonical pick) plus every unpaired document. The
-    components table is usually tiny next to the corpus (only paired docs
-    appear in it), so the join back is broadcast-friendly."""
-    drop = _non_root_ids(pairs, id_a, id_b).withColumnRenamed("id", id_col)
-    return docs.join(drop, id_col, "left_anti")
+def dedup_keep_canonical(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Keep exactly one `doc_id` per near-dup component of the (id_a,
+    id_b) pairs (the MIN id — a deterministic canonical pick) plus every
+    unpaired document. The components table is usually tiny next to the
+    corpus (only paired docs appear in it), so the join back is
+    broadcast-friendly."""
+    drop = _non_root_ids(pairs).withColumnRenamed("id", "doc_id")
+    return docs.join(drop, "doc_id", "left_anti")
 
 
-def _non_root_ids(pairs: DataFrame, id_a: str = "id_a",
-                  id_b: str = "id_b") -> DataFrame:
+def _non_root_ids(pairs: DataFrame) -> DataFrame:
     """(id) of every paired node that is not its component's min-id root
     — the drop set of keep-canonical."""
-    comp = connected_components(pairs, id_a, id_b)
+    comp = connected_components(pairs)
     return comp.where(F.col("id") != F.col("comp")).select("id")
 
 
@@ -1069,13 +1060,12 @@ def dedup_corpus_incremental(increment: DataFrame, store_dir: str,
 
 
 def decontaminate_flags(docs: DataFrame, benchmark_grams: DataFrame,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        n: int = 13, hashed: bool = False) -> DataFrame:
+                        hashed: bool = False) -> DataFrame:
     """Eval-set DECONTAMINATION (the training-data hygiene op: drop
     documents that contain any n-gram from the benchmark/eval corpus —
     cf. GPT-3 §C / PaLM app. training-set filtering): per-doc token
-    n-grams joined against the benchmark gram set; returns docs +
-    n_hits + contaminated flag.
+    13-grams of `text` joined against the benchmark gram set; returns
+    `doc_id`-keyed docs + n_hits + contaminated flag.
 
     `benchmark_grams` must have a `gram` string column (small — broadcast).
 
@@ -1104,9 +1094,9 @@ def decontaminate_flags(docs: DataFrame, benchmark_grams: DataFrame,
     # sf0.1 once spread) — guard against single-task scans (spread.py)
     docs = ensure_parallelism(docs)
     if hashed:
-        gh = F.transform(token_ngrams_expr(F.col(text_col), n),
+        gh = F.transform(token_ngrams_expr(F.col("text")),
                          lambda g: F.xxhash64(g))
-        grams = docs.select(F.col(id_col).alias("__id"),
+        grams = docs.select(F.col("doc_id").alias("__id"),
                             F.explode_outer(gh).alias("__gh"))
         bench = (benchmark_grams.select(F.xxhash64("gram").alias("__gh"))
                  .distinct())
@@ -1116,8 +1106,8 @@ def decontaminate_flags(docs: DataFrame, benchmark_grams: DataFrame,
         )
     else:
         grams = docs.select(
-            F.col(id_col).alias("__id"),
-            F.explode_outer(token_ngrams_expr(F.col(text_col), n))
+            F.col("doc_id").alias("__id"),
+            F.explode_outer(token_ngrams_expr(F.col("text")))
             .alias("gram"))
         hits = (
             grams.join(F.broadcast(benchmark_grams.select("gram").distinct()),
@@ -1125,7 +1115,7 @@ def decontaminate_flags(docs: DataFrame, benchmark_grams: DataFrame,
             .groupBy("__id").agg(F.count("*").alias("n_hits"))
         )
     return (
-        docs.join(hits, docs[id_col] == hits["__id"], "left").drop("__id")
+        docs.join(hits, docs["doc_id"] == hits["__id"], "left").drop("__id")
         .withColumn("n_hits",
                     F.coalesce("n_hits", F.lit(0)).cast("int"))
         .withColumn("contaminated", F.col("n_hits") > 0)

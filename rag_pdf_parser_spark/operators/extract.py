@@ -79,13 +79,12 @@ def extract_docs(pages: DataFrame, partitions: int | None = None,
     return src.mapInArrow(map_rows(_extract_row(chunks), schema), schema)
 
 
-def extract_docs_full(pages: DataFrame, partitions: int | None = None,
-                      salt: bool = True) -> DataFrame:
-    """`extract_docs(pages, partitions, salt, chunks=True)`. Kept only
+def extract_docs_full(pages: DataFrame, salt: bool = True) -> DataFrame:
+    """`extract_docs(pages, salt=salt, chunks=True)`. Kept only
     because the benchmark harnesses (`bench.py`, `perfbench/core.py`)
     import it under this name and signature and are not edited alongside
     the library; new code calls `extract_docs` directly."""
-    return extract_docs(pages, partitions, salt, chunks=True)
+    return extract_docs(pages, salt=salt, chunks=True)
 
 
 def explode_chunks(docs_full: DataFrame) -> DataFrame:

@@ -50,23 +50,23 @@ def xy_cut_order(boxes: DataFrame) -> DataFrame:
         group_rows(per_doc, ORDERED_SCHEMA), ORDERED_SCHEMA)
 
 
-def segment_markdown_docs(docs: DataFrame, id_col: str = "doc_id",
+def segment_markdown_docs(docs: DataFrame,
                           text_col: str = "text") -> DataFrame:
-    """X7 as one Arrow row-map stage over any text/markdown column — emits
-    the flat typed-block table."""
+    """X7 as one Arrow row-map stage over any text/markdown column of a
+    `doc_id`-keyed table — emits the flat typed-block table."""
 
     def blocks(did, text):
         return [(int(did), b["reading_order"], b["type"], b["text"],
                  b["markdown"]) for b in segment_markdown(text or "")]
 
-    return salted(docs.select(id_col, text_col), id_col).mapInArrow(
+    return salted(docs.select("doc_id", text_col), "doc_id").mapInArrow(
         map_rows(blocks, MD_BLOCKS_SCHEMA), MD_BLOCKS_SCHEMA)
 
 
-def synth_boxes(spark, n_docs: int, seed: int = 42) -> DataFrame:
+def synth_boxes(spark, n_docs: int) -> DataFrame:
     """Deterministic positioned-boxes fixture, distributed generation."""
     def gen(i):
-        lines, width = make_boxes(i, seed)
+        lines, width = make_boxes(i)
         return [(i, width, l["line_id"], l["text"], l["box"]) for l in lines]
 
     return spark.range(n_docs).mapInArrow(

@@ -22,14 +22,14 @@ IMAGE_FEATURES_SCHEMA = (
 )
 
 
-def image_features(media: DataFrame, id_col: str = "media_id",
-                   bytes_col: str = "content") -> DataFrame:
-    """Arrow feature extraction over a binary media column — the decode
-    slot of the pipeline. phash is a genuine 8×8 average-hash
-    (kernel.imagex.avg_hash_64) over the deterministic fake decode."""
+def image_features(media: DataFrame) -> DataFrame:
+    """Arrow feature extraction over the `content` bytes of a media table
+    keyed by `media_id` — the decode slot of the pipeline. phash is a
+    genuine 8×8 average-hash (kernel.imagex.avg_hash_64) over the
+    deterministic fake decode."""
 
     def features(m, raw):
         return [image_features_row(str(m), raw)]
 
-    return salted(media.select(id_col, bytes_col), id_col).mapInArrow(
+    return salted(media.select("media_id", "content"), "media_id").mapInArrow(
         map_rows(features, IMAGE_FEATURES_SCHEMA), IMAGE_FEATURES_SCHEMA)

@@ -35,22 +35,15 @@ def _sec_col(df: DataFrame, c: str, qualified: str):
 
 def range_join_binned(left: DataFrame, right: DataFrame, on: str,
                       ts: str, start: str, end: str,
-                      bin_width_sec: int = 900,
-                      how: str = "inner") -> DataFrame:
+                      bin_width_sec: int = 900) -> DataFrame:
     """left rows matched to right intervals with
     ``right.start <= left.ts < right.end``, same key `on`.
 
-    `how='left'` keeps unmatched left rows (interval columns null).
-    Timestamps may be TIMESTAMP/DATE/STRING (epoch via unix_timestamp) or
+    Inner join: a left row in no interval has no output row. Timestamps
+    may be TIMESTAMP/DATE/STRING (epoch via unix_timestamp) or
     already-numeric epoch seconds (used as-is — unix_timestamp rejects
     numeric input).
     """
-    if how not in ("inner", "left"):
-        # 'right'/'full' would be WRONG, not just unsupported: the right
-        # side is exploded per bin before the join, so unmatched right rows
-        # would surface once per exploded bin.
-        raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
-
     def sec(df: DataFrame, c: str):
         return _sec_col(df, c, c)
 
@@ -73,7 +66,6 @@ def range_join_binned(left: DataFrame, right: DataFrame, on: str,
            <= _sec_col(left, ts, f"l.{ts}"))
         & (_sec_col(left, ts, f"l.{ts}")
            < _sec_col(right, end, f"r.{end}")),
-        how,
     )
     out_cols = [F.col(f"l.{c}") for c in left.columns]
     out_cols += [F.col(f"r.{c}").alias(c) for c in right.columns if c != on]

@@ -153,8 +153,8 @@ def bilingual_markdown_py(content: str) -> str:
     return "\n".join(out)
 
 
-def translate_markdown_bilingual(docs: DataFrame,
-                                 md_col: str = "markdown_doc") -> DataFrame:
+def translate_markdown_bilingual(docs: DataFrame) -> DataFrame:
     """Document-level M6 slot: adds a `bilingual_md` column with the
-    paragraph-aware interleave of `md_col`."""
-    return docs.withColumn("bilingual_md", bilingual_markdown_expr(F.col(md_col)))
+    paragraph-aware interleave of `markdown_doc`."""
+    return docs.withColumn("bilingual_md",
+                           bilingual_markdown_expr(F.col("markdown_doc")))

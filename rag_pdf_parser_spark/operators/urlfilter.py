@@ -105,8 +105,7 @@ PSL_SNAPSHOT = (
 )
 
 
-def _psl_rule_classes(entries=PSL_SNAPSHOT
-                      ) -> tuple[list[str], list[str], list[str]]:
+def _psl_rule_classes(entries) -> tuple[list[str], list[str], list[str]]:
     """Split raw PSL entries into (plain, wildcard-base, exception-base)
     rule lists: '*.ck' → wildcard base 'ck', '!www.ck' → exception base
     'www.ck', everything else plain. Single source for the Spark probes,
@@ -147,8 +146,7 @@ PSL_MAX_LABELS = max(s.count(".") + 1
                      if not s.startswith(("!", "*.")))
 
 
-def _psl_probe_specs(entries=PSL_SNAPSHOT
-                     ) -> list[tuple[str, int, str, list[str]]]:
+def _psl_probe_specs(entries) -> list[tuple[str, int, str, list[str]]]:
     """(marker, key-depth, class, rules) for every POPULATED (class, depth)
     probe `with_registrable_domain` makes: plain rules at depths ≥ 2
     (depth 1 IS the default rule), wildcard bases at their own depth
@@ -178,12 +176,12 @@ def _psl_probe_specs(entries=PSL_SNAPSHOT
     )
 
 
-def psl_probe_count(entries=PSL_SNAPSHOT) -> int:
+def psl_probe_count() -> int:
     """How many per-depth broadcast probes `with_registrable_domain`
-    makes for this rule set — one per populated (class, depth) combo
+    makes for `PSL_SNAPSHOT` — one per populated (class, depth) combo
     (`_psl_probe_specs`). The plan audit asserts the executed
     BroadcastHashJoin count equals this."""
-    return len(_psl_probe_specs(entries))
+    return len(_psl_probe_specs(PSL_SNAPSHOT))
 
 
 def url_host_expr(url: Column) -> Column:
@@ -223,8 +221,7 @@ def _suffix_key_expr(labels: Column, n: Column, j: int) -> Column:
                  F.lit("")))
 
 
-def validate_blocklist(blocked_hosts: DataFrame,
-                       max_labels: int = MAX_HOST_LABELS) -> list[str]:
+def validate_blocklist(blocked_hosts: DataFrame) -> list[str]:
     """Load-time blocklist validation (r5 verdict #9): an entry DEEPER
     than the suffix cap is matched exactly (the full-host probe) but its
     SUBDOMAINS can never match — a corpus host one label deeper derives no
@@ -232,31 +229,29 @@ def validate_blocklist(blocked_hosts: DataFrame,
     offending entries; one tiny control-plane job over the by-contract
     broadcastable blocklist."""
     deep = [r["host"] for r in _normalize_entries(blocked_hosts, "host")
-            .where(F.size(F.split("host", r"\.")) > max_labels)
+            .where(F.size(F.split("host", r"\.")) > MAX_HOST_LABELS)
             .limit(20).collect()]
     if deep:
         import warnings
 
         warnings.warn(
             f"blocklist entries deeper than MAX_HOST_LABELS="
-            f"{max_labels} match only EXACT hosts, never their "
+            f"{MAX_HOST_LABELS} match only EXACT hosts, never their "
             f"subdomains (suffix chains are capped): {deep}. Raise "
             "MAX_HOST_LABELS or shorten the entries.",
             stacklevel=3)
     return deep
 
 
-def url_pattern_flag_expr(url: Column,
-                          patterns: tuple[str, ...] = DEFAULT_URL_PATTERNS
-                          ) -> Column:
-    """True when the URL matches any bad pattern — one alternation regex,
-    evaluated in codegen."""
-    combined = "(?:" + ")|(?:".join(patterns) + ")"
+def url_pattern_flag_expr(url: Column) -> Column:
+    """True when the URL matches any of `DEFAULT_URL_PATTERNS` — one
+    alternation regex, evaluated in codegen."""
+    combined = "(?:" + ")|(?:".join(DEFAULT_URL_PATTERNS) + ")"
     return F.lower(url).rlike(combined)
 
 
-def registrable_domain_expr(host: Column, labels: int = 2) -> Column:
-    """Last `labels` labels of the host ('a.b.example.com' → 'example.com')
+def registrable_domain_expr(host: Column) -> Column:
+    """Last two labels of the host ('a.b.example.com' → 'example.com')
     — the fixed-depth approximation of the registrable domain. Every
     `*.co.uk` site collapses into ONE 'co.uk' key under it; when per-ccTLD
     exactness matters (any non-US corpus) use `with_registrable_domain`,
@@ -264,7 +259,7 @@ def registrable_domain_expr(host: Column, labels: int = 2) -> Column:
     hl = F.split(host, r"\.")
     n = F.size(hl)
     return F.array_join(
-        F.slice(hl, F.greatest(n - (labels - 1), F.lit(1)), F.lit(labels)),
+        F.slice(hl, F.greatest(n - 1, F.lit(1)), F.lit(2)),
         ".")
 
 
@@ -370,13 +365,11 @@ def with_registrable_domain(docs: DataFrame, host_col: str,
         "__pl", *key_cols.values(), *[m for m, _, _, _ in probes])
 
 
-def domain_stats(docs: DataFrame, url_col: str = "url",
-                 text_col: str = "text",
-                 patterns: tuple[str, ...] = DEFAULT_URL_PATTERNS,
-                 psl: DataFrame | None = None) -> DataFrame:
-    """Per-domain corpus triage (the C4 §2.2 / RefinedWeb analysis table):
-    one row per registrable domain with document count, total text chars,
-    Gopher-keep count, and bad-URL-pattern count — the table a curation
+def domain_stats(docs: DataFrame, psl: DataFrame | None = None) -> DataFrame:
+    """Per-domain corpus triage (the C4 §2.2 / RefinedWeb analysis table)
+    over the `url` and `text` columns: one row per registrable domain
+    with document count, total text chars, Gopher-keep count, and
+    bad-URL-pattern count — the table a curation
     engineer reads to decide which domains to block next.
 
     `psl` (see `psl_table`) switches the grouping key to the
@@ -396,18 +389,17 @@ def domain_stats(docs: DataFrame, url_col: str = "url",
     from ..functions import (gopher_features_expr, gram_step_expr,
                              raw_tokens_expr)
 
-    safe_text = F.coalesce(F.col(text_col), F.lit(""))
-    pat = F.coalesce(
-        url_pattern_flag_expr(F.col(url_col), patterns), F.lit(False))
+    safe_text = F.coalesce(F.col("text"), F.lit(""))
+    pat = F.coalesce(url_pattern_flag_expr(F.col("url")), F.lit(False))
     base = docs
     if psl is not None:
         base = with_registrable_domain(
-            base.withColumn("__host", url_host_expr(F.col(url_col))),
+            base.withColumn("__host", url_host_expr(F.col("url"))),
             "__host", psl, out_col="__dom")
         dom = F.coalesce(F.col("__dom"), F.lit(""))
     else:
         dom = F.coalesce(
-            registrable_domain_expr(url_host_expr(F.col(url_col))),
+            registrable_domain_expr(url_host_expr(F.col("url"))),
             F.lit(""))
     s1 = base.select(
         dom.alias("domain"),
@@ -435,29 +427,24 @@ def domain_stats(docs: DataFrame, url_col: str = "url",
 
 
 def filter_urls(docs: DataFrame, blocked_hosts: DataFrame | None = None,
-                url_col: str = "url",
-                patterns: tuple[str, ...] = DEFAULT_URL_PATTERNS,
-                action: str = "flag", validate: bool = True) -> DataFrame:
+                url_col: str = "url", validate: bool = True) -> DataFrame:
     """The URL gate. `blocked_hosts` needs a `host` string column
-    (registrable domains; matching covers the domain AND every subdomain).
+    (registrable domains; matching covers the domain AND every subdomain);
+    the URL patterns are `DEFAULT_URL_PATTERNS`.
 
-    action='flag' (default): returns docs + `url_blocked` boolean +
-    `block_reason` ('domain' < 'pattern' when both) — the auditable form
-    (manifests record WHY a url was dropped, mirroring failure_code).
-    action='drop': returns only the passing rows (the production gate).
+    Returns docs + `url_blocked` boolean + `block_reason` ('domain' <
+    'pattern' when both) — the auditable form (manifests record WHY a url
+    was dropped, mirroring failure_code); the callers split on the flag.
 
     `validate=True` runs `validate_blocklist` (one tiny eager job over the
     broadcast-side table) — loud by default; pass False when building the
     gate repeatedly over an already-validated blocklist to keep this a
     pure lazy plan builder.
     """
-    if action not in ("flag", "drop"):
-        raise ValueError(f"action must be 'flag' or 'drop', got {action!r}")
     # coalesce to false: rlike(NULL) is NULL, and a NULL url_blocked would
     # make the row vanish from BOTH branches of the pipeline gate (neither
     # blocked-manifest nor extraction) — null urls pass through unblocked
-    pat = F.coalesce(url_pattern_flag_expr(F.col(url_col), patterns),
-                     F.lit(False)) if patterns else F.lit(False)
+    pat = F.coalesce(url_pattern_flag_expr(F.col(url_col)), F.lit(False))
     out = docs.withColumn("__pat", pat)
     if blocked_hosts is not None:
         blocked_norm = _normalize_entries(blocked_hosts, "host")
@@ -470,14 +457,13 @@ def filter_urls(docs: DataFrame, blocked_hosts: DataFrame | None = None,
         out = out.withColumn("__h", url_host_expr(F.col(url_col))) \
             .withColumn("__hl", F.split(F.col("__h"), r"\."))
         n = F.size("__hl")
-        max_labels = MAX_HOST_LABELS
         sfx_keys = {
             # depth 0 = the FULL host when deeper than the cap (the exact-
-            # host entry beyond max_labels must still match — ADVICE r4);
+            # host entry beyond the cap must still match — ADVICE r4);
             # NULL key (host within the cap) never equi-matches.
-            "__sfx0": F.when(n > max_labels, F.col("__h")),
+            "__sfx0": F.when(n > MAX_HOST_LABELS, F.col("__h")),
         }
-        for j in range(1, max_labels + 1):
+        for j in range(1, MAX_HOST_LABELS + 1):
             sfx_keys[f"__sfx{j}"] = _suffix_key_expr(F.col("__hl"), n, j)
         out = out.withColumns(sfx_keys)
         # One broadcast of the blocklist, probed once per depth: left joins
@@ -498,7 +484,7 @@ def filter_urls(docs: DataFrame, blocked_hosts: DataFrame | None = None,
             *[f"__bh_{k}" for k in sfx_keys])
     else:
         out = out.withColumn("__dom", F.lit(False))
-    flagged = (
+    return (
         out.withColumn("url_blocked", F.col("__dom") | F.col("__pat"))
         .withColumn(
             "block_reason",
@@ -507,7 +493,3 @@ def filter_urls(docs: DataFrame, blocked_hosts: DataFrame | None = None,
         )
         .drop("__dom", "__pat")
     )
-    if action == "drop":
-        return flagged.where(~F.col("url_blocked")) \
-            .drop("url_blocked", "block_reason")
-    return flagged

@@ -151,8 +151,7 @@ def compact_seen_hashes(spark: SparkSession, path: str) -> dict:
     return compact_table(spark, path, ["hash", "kind"])
 
 
-def compact_output(spark: SparkSession, out_dir: str,
-                   fmt: str = "parquet") -> dict:
+def compact_output(spark: SparkSession, out_dir: str) -> dict:
     """Fold an ExtractionPipeline out_dir's committed ``batch_id=`` batches
     into ONE base batch — manifest maintenance (r4 verdict #7). The commit
     log grows a dir per run forever; after thousands of runs the listing
@@ -175,7 +174,8 @@ def compact_output(spark: SparkSession, out_dir: str,
     after (3): committed state is the base batch; orphans age out.
 
     Readers therefore see the pre-compaction batches up to the instant of
-    the swap and exactly-equal rows after it. Returns
+    the swap and exactly-equal rows after it. The base batch is written in
+    the sinks' own format (`ExtractionPipeline.sink_format`). Returns
     {"batches_before", "batches_after", "removed_dirs"}.
     """
     from .pipeline import ExtractionPipeline
@@ -187,6 +187,7 @@ def compact_output(spark: SparkSession, out_dir: str,
             return {"batches_before": len(ids), "batches_after": len(ids),
                     "removed_dirs": 0}
         base = f"base-{uuid.uuid4().hex[:12]}"
+        fmt = p.sink_format() or "parquet"
         for sink in (p.docs_path, p.blocks_path, p.chunks_path):
             if not os.path.isdir(sink):
                 continue

@@ -71,6 +71,17 @@ from .lease import WriterLease
 from .maintenance import recover_store
 
 
+def _run_counts(run_id: str, counts: dict) -> dict:
+    """`ExtractionPipeline.run`'s result from its staged batch's row
+    count per failure code."""
+    n_blocked = counts.pop("URL_BLOCKED", 0)
+    return {"run_id": run_id, "docs_processed": sum(counts.values()),
+            "duplicates_skipped": counts.get("DUPLICATE", 0),
+            "urls_blocked": n_blocked,
+            "curation_drops": {c: counts[c] for c in TEXT_GATE_CODES
+                               if c in counts}}
+
+
 class ExtractionPipeline:
     def __init__(self, spark: SparkSession, out_dir: str,
                  partitions: int | None = None) -> None:
@@ -91,15 +102,17 @@ class ExtractionPipeline:
 
     # -- resume gate ----------------------------------------------------------
     def processed_urls(self) -> DataFrame | None:
+        """The url of every manifest row, None before the first commit.
+        Not distinct: the resume anti-join needs no distinct build side,
+        and each distinct would cost a shuffle job per read. An
+        unreadable manifest raises — treating it as "no resume state"
+        would re-extract and re-commit every url."""
         self._recover_manifest()
         if not os.path.exists(self.manifest_path):
             return None
-        try:
-            return self.spark.read.schema(MANIFEST_SCHEMA).parquet(
-                self.manifest_path
-            ).select("url").distinct()
-        except Exception:  # noqa: BLE001 — empty/corrupt manifest = no resume state
-            return None
+        return self.spark.read.schema(MANIFEST_SCHEMA).parquet(
+            self.manifest_path
+        ).select("url")
 
     def pending(self, pages: DataFrame) -> DataFrame:
         done = self.processed_urls()
@@ -115,7 +128,10 @@ class ExtractionPipeline:
             curate: bool = False) -> dict:
         """`fmt='json'` mirrors the reference's JSONL sinks (K2/K3,
         writer.py:110-165) — same rows, line-delimited; parquet is the
-        scale default (columnar, prunable).
+        scale default (columnar, prunable). An out_dir holds one format:
+        a run whose `fmt` differs from the sink files already there raises
+        before writing anything, and the readers and `compact_output` use
+        the format of the files (`sink_format`).
 
         `dedupe=True` wires in the reference's dedup gate (F7/J2,
         main.py:43-46): documents whose normalized-text hash was already
@@ -154,10 +170,19 @@ class ExtractionPipeline:
         The returned counts come from the manifest batch this run stages:
         `docs_processed` is every row but URL_BLOCKED; `urls_blocked`,
         `duplicates_skipped` and `curation_drops` count their codes. A run
-        with nothing pending stages no rows, so it commits no batch and
-        registers no hashes, and its counts are all zero."""
+        with nothing pending commits no batch and registers no hashes, and
+        its counts are all zero: on a resume (a manifest exists) a bounded
+        probe of `pending` (two jobs: the manifest broadcast and a limit-1
+        scan) finds it empty and the run stops there."""
         with WriterLease(self.out_dir) as lease:
+            held = self.sink_format()
+            if held not in (None, fmt):
+                raise ValueError(
+                    f"{self.out_dir} holds {held} sink files; a run with "
+                    f"fmt={fmt!r} would mix two formats in one table")
             todo = self.pending(pages)
+            if os.path.isdir(self.manifest_path) and todo.isEmpty():
+                return _run_counts(run_id, {})
             batch_id = f"{run_id}-{uuid.uuid4().hex[:12]}"
             if dedupe:
                 # a seen-hashes compaction that died between its two swap
@@ -272,12 +297,7 @@ class ExtractionPipeline:
                                 F.lit("normalized_text").alias("kind"),
                                 F.lit(run_id).alias("source"))
                     register_hashes(self.seen_path, fresh_hashes)
-        n_blocked = counts.pop("URL_BLOCKED", 0)
-        return {"run_id": run_id, "docs_processed": sum(counts.values()),
-                "duplicates_skipped": counts.get("DUPLICATE", 0),
-                "urls_blocked": n_blocked,
-                "curation_drops": {c: counts[c] for c in TEXT_GATE_CODES
-                                   if c in counts}}
+        return _run_counts(run_id, counts)
 
     # -- commit protocol -------------------------------------------------------
     def committed_batch_ids(self) -> list[str]:
@@ -302,23 +322,38 @@ class ExtractionPipeline:
         os.rename(staging_dir,
                   os.path.join(self.manifest_path, f"batch_id={batch_id}"))
 
-    def _read_committed(self, path: str, fmt: str = "parquet") -> DataFrame:
+    def sink_format(self) -> str | None:
+        """The format of the content sinks' part files, by extension
+        (``parquet``, ``json``); None before the first write. Orphan
+        batches count: a reader lists them before pruning."""
+        found = {f.rsplit(".", 1)[-1]
+                 for sink in (self.docs_path, self.blocks_path,
+                              self.chunks_path)
+                 for _, _, files in os.walk(sink)
+                 for f in files if f.startswith("part-")}
+        if len(found) > 1:
+            raise ValueError(
+                f"{self.out_dir} mixes sink formats {sorted(found)}")
+        return found.pop() if found else None
+
+    def _read_committed(self, path: str) -> DataFrame:
         ids = self.committed_batch_ids()
-        df = self.spark.read.format(fmt).load(path)
+        df = self.spark.read.format(self.sink_format() or "parquet") \
+            .load(path)
         # isin over the partition column → static partition pruning (no data
         # files of orphan batches are even opened); asserted in tests.
         return df.where(F.col("batch_id").isin(ids)).drop("batch_id")
 
-    def read_docs(self, fmt: str = "parquet") -> DataFrame:
+    def read_docs(self) -> DataFrame:
         """Committed-only view of the docs sink (crash-orphan batches
         pruned by partition filter)."""
-        return self._read_committed(self.docs_path, fmt)
+        return self._read_committed(self.docs_path)
 
-    def read_blocks(self, fmt: str = "parquet") -> DataFrame:
-        return self._read_committed(self.blocks_path, fmt)
+    def read_blocks(self) -> DataFrame:
+        return self._read_committed(self.blocks_path)
 
-    def read_chunks(self, fmt: str = "parquet") -> DataFrame:
-        return self._read_committed(self.chunks_path, fmt)
+    def read_chunks(self) -> DataFrame:
+        return self._read_committed(self.chunks_path)
 
     def vacuum_uncommitted(self, staging_min_age_sec: float = 3600.0) -> int:
         """Reclaim orphan batch partitions left by a mid-job crash (present

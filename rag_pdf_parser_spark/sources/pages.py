@@ -17,24 +17,21 @@ from ..operators.arrowmap import map_rows
 from ..schema import PAGES_SCHEMA
 
 
-def synth_pages(spark: SparkSession, n: int, seed: int = 42,
-                partitions: int | None = None) -> DataFrame:
-    """Deterministic synthetic pages DataFrame, built on the driver from
-    one Arrow table."""
-    df = spark.createDataFrame(pa.Table.from_pylist(make_pages(n, seed)),
-                               schema=PAGES_SCHEMA)
-    if partitions:
-        df = df.repartition(partitions)
-    return df
+def synth_pages(spark: SparkSession, n: int) -> DataFrame:
+    """Deterministic synthetic pages DataFrame (`make_pages`' default
+    seed), built on the driver from one Arrow table."""
+    return spark.createDataFrame(pa.Table.from_pylist(make_pages(n)),
+                                 schema=PAGES_SCHEMA)
 
 
-def synth_pages_dist(spark: SparkSession, n: int, seed: int = 42,
-                     partitions: int | None = None) -> DataFrame:
+def synth_pages_dist(spark: SparkSession, n: int,
+                     seed: int = 42) -> DataFrame:
     """Distributed deterministic pages generation: row i is a pure function
     of (seed, i) (datagen.make_page), so generation parallelizes with
-    spark.range + mapInArrow — the only way to materialize fixture tables at
-    bench scale (the driver never holds the corpus)."""
-    parts = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    spark.range + mapInArrow over the session's shuffle partitions — the
+    only way to materialize fixture tables at bench scale (the driver never
+    holds the corpus)."""
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     def gen(i):
         page = make_page(i, seed)

@@ -11,14 +11,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def user_sessions(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+#: inactivity gap that closes a session
+SESSION_GAP = "30 minutes"
+
+
+def user_sessions(events: DataFrame) -> DataFrame:
     """Session-window aggregation per user (`F.session_window`): a session
-    is a maximal run of events whose inter-event gap is < `gap`; the window
-    end is last-event + gap (Spark semantics, [start, end)). The DuckDB
+    is a maximal run of events whose inter-event gap is < `SESSION_GAP`; the
+    window end is last-event + gap (Spark semantics, [start, end)). The DuckDB
     oracle re-derives sessions with the gaps-and-islands formulation."""
     ev = events.withColumn("ts", F.col("ts").cast("timestamp"))
     return (
-        ev.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        ev.groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum(F.col("value").cast("decimal(18,6)")), 4)

@@ -9,9 +9,12 @@
    caller: a def under operators/, streaming/, functions/, plans/ or
    sources/ must be referenced from the library, the driver entry, the
    bench, perfbench or a script, or be a named user entry point.
+4. Every option has a production caller: each optional parameter of such
+   a public function or method is passed by some production call.
 """
 
 import ast
+import math
 import os
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -193,3 +196,63 @@ def test_near_dup_recipe_has_one_chain():
     assert owner == ["_near_dup_drops"], owner
     assert {"dedup_corpus", "dedup_corpus_incremental"} <= core_callers, \
         core_callers
+
+
+def _optional_params(fn, method):
+    """(positional names after self/cls, optional names) of a def."""
+    a = fn.args
+    pos = [x.arg for x in a.posonlyargs + a.args]
+    optional = pos[len(pos) - len(a.defaults):] if a.defaults else []
+    optional += [k.arg for k, d in zip(a.kwonlyargs, a.kw_defaults)
+                 if d is not None]
+    static = any(getattr(d, "id", None) == "staticmethod"
+                 for d in fn.decorator_list)
+    return (pos[1:] if method and not static else pos), optional
+
+
+def test_every_option_has_a_production_caller():
+    """An optional parameter of a public def (module level, or a public
+    method of a public class) under `OPERATOR_DIRS` passes when some
+    production call names it by keyword or reaches its position; a
+    starred argument counts for every later position and a `**` argument
+    for every name. Calls are matched by callee name, so a same-named def
+    elsewhere counts too. `ENTRY_POINTS` and `__init__` are exempt: a
+    user entry point's and a constructor's options are for deployments.
+    An option no caller sets is a constant in disguise: inline it."""
+    callers = [LIB, os.path.join(ROOT, "__spark_entry__.py"),
+               os.path.join(ROOT, "bench.py"),
+               os.path.join(ROOT, "perfbench"), os.path.join(ROOT, "scripts")]
+    calls = {}
+    for path in _py_files(*callers):
+        for n in ast.walk(_parse(path)):
+            if isinstance(n, ast.Call) and _callee(n):
+                # positions reached: a starred argument reaches them all
+                reach = (math.inf if any(isinstance(x, ast.Starred)
+                                         for x in n.args) else len(n.args))
+                calls.setdefault(_callee(n), []).append(
+                    (reach, {k.arg for k in n.keywords}))
+
+    total, unset = 0, []
+    for path in _py_files(*(os.path.join(LIB, d) for d in OPERATOR_DIRS)):
+        tree = _parse(path)
+        defs = [(n, False) for n in tree.body
+                if isinstance(n, ast.FunctionDef)]
+        defs += [(m, True) for c in tree.body
+                 if isinstance(c, ast.ClassDef) and not c.name.startswith("_")
+                 for m in c.body if isinstance(m, ast.FunctionDef)]
+        for fn, method in defs:
+            if fn.name.startswith("_") or fn.name in ENTRY_POINTS:
+                continue
+            pos, optional = _optional_params(fn, method)
+            total += len(optional)
+            for p in optional:
+                i = pos.index(p) if p in pos else None
+                if not any(p in kws or None in kws
+                           or (i is not None and i < reach)
+                           for reach, kws in calls.get(fn.name, [])):
+                    unset.append(
+                        f"{os.path.relpath(path, ROOT)}:{fn.name}({p})")
+    print(f"optional parameters outside the entry points: {total}")
+    assert total, "the guard must see the library's options"
+    assert not unset, (f"{len(unset)} of {total} optional parameters have "
+                       "no production caller:\n" + "\n".join(unset))

@@ -103,14 +103,16 @@ def test_crash_between_sinks_and_manifest_commit(spark, tmp_path):
 def test_pipeline_json_sinks_with_commit_layout(spark, tmp_path):
     """fmt='json' (the reference's JSONL sinks) must work with the
     batch_id-partitioned commit layout: line-delimited files under
-    batch_id=<token> dirs, committed readers pruning as for parquet."""
+    batch_id=<token> dirs, committed readers pruning as for parquet. The
+    readers take the format of the sink files."""
     pages = synth_pages(spark, 20)
     p = ExtractionPipeline(spark, str(tmp_path / "j"), partitions=2)
     r = p.run(pages, run_id="r1", with_chunks=True, fmt="json")
     assert r["docs_processed"] == 20
-    docs = p.read_docs(fmt="json")
+    assert p.sink_format() == "json"
+    docs = p.read_docs()
     assert docs.count() == 20 and "batch_id" not in docs.columns
-    chunks = p.read_chunks(fmt="json")
+    chunks = p.read_chunks()
     assert chunks.count() > 0
     # K3: chunk JSONL never carries vectors (the null embedding is dropped)
     assert "embedding" not in chunks.columns
@@ -120,6 +122,98 @@ def test_pipeline_json_sinks_with_commit_layout(spark, tmp_path):
     assert len(batch_dirs) == 1
     inner = os.listdir(os.path.join(p.docs_path, batch_dirs[0]))
     assert any(f.endswith(".json") for f in inner), inner
+
+
+def test_pipeline_keeps_one_sink_format(spark, tmp_path):
+    """An out_dir holds one sink format: a parquet run over JSON sinks
+    raises before writing anything (mixed into one table, the JSON reader
+    returns `_corrupt_record` rows and the parquet reader raises), and
+    `compact_output` folds a JSON out_dir's batches in JSON."""
+    from rag_pdf_parser_spark.plans.maintenance import compact_output
+
+    pages = synth_pages(spark, 20)
+    out = str(tmp_path / "fmt")
+    p = ExtractionPipeline(spark, out, partitions=2)
+    p.run(pages.limit(10), run_id="r1", with_chunks=True, fmt="json")
+    ids = p.committed_batch_ids()
+
+    def sink_files():
+        return sorted(os.path.join(d, f)
+                      for sink in (p.docs_path, p.blocks_path, p.chunks_path)
+                      for d, _, fs in os.walk(sink) for f in fs)
+
+    files = sink_files()
+    with pytest.raises(ValueError, match="json"):
+        p.run(pages, run_id="r2", with_chunks=True)
+    assert p.committed_batch_ids() == ids
+    assert sink_files() == files
+    assert not os.path.isdir(os.path.join(out, "_staging")) \
+        or not os.listdir(os.path.join(out, "_staging"))
+
+    p.run(pages, run_id="r2", with_chunks=True, fmt="json")
+    assert len(p.committed_batch_ids()) == 2
+    cols = ["url", "doc_id", "extracted_text"]
+    before = p.read_docs().select(*cols).localCheckpoint(eager=True)
+    n_chunks = p.read_chunks().count()
+    assert before.count() == 20
+    res = compact_output(spark, out)
+    assert res["batches_before"] == 2 and res["batches_after"] == 1, res
+    assert p.sink_format() == "json"
+    after = p.read_docs().select(*cols)
+    assert after.exceptAll(before).count() == 0
+    assert before.exceptAll(after).count() == 0
+    assert p.read_chunks().count() == n_chunks
+
+
+def test_resume_raises_on_an_unreadable_manifest(spark, tmp_path):
+    """A manifest Spark cannot read (here a stray non-`batch_id=` copy of a
+    batch inside `manifest/`) fails the run. Read as "no resume state" it
+    would re-extract and commit every url a second time."""
+    import shutil
+
+    pages = synth_pages(spark, 20)
+    p = ExtractionPipeline(spark, str(tmp_path / "stray"), partitions=2)
+    p.run(pages, run_id="r1", with_chunks=False)
+    ids = p.committed_batch_ids()
+    shutil.copytree(os.path.join(p.manifest_path, f"batch_id={ids[0]}"),
+                    os.path.join(p.manifest_path, "backup"))
+    with pytest.raises(Exception, match="(?i)conflicting directory"):
+        p.run(pages, run_id="r2", with_chunks=False)
+    assert p.committed_batch_ids() == ids
+    assert p.read_docs().count() == 20
+
+
+def test_resume_with_nothing_pending_stops_at_the_probe(spark, tmp_path):
+    """A resume (a manifest exists) probes `pending` once: with nothing
+    pending the gated run takes at most 2 Spark jobs and commits nothing;
+    with urls pending it takes 25 jobs, as many as before the probe (the
+    probe's jobs are paid back by the manifest read losing its distinct).
+    Jobs are counted by job group on `synth_pages(300)` at local[4]."""
+    sc = spark.sparkContext
+    blocked = spark.createDataFrame([("host1.example",)], "host string")
+    p = ExtractionPipeline(spark, str(tmp_path / "probe"))
+
+    def run(tag, n):
+        sc.setJobGroup(tag, tag)
+        try:
+            r = p.run(synth_pages(spark, n), run_id=tag, with_chunks=True,
+                      url_blocklist=blocked, curate=True, dedupe=True)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return r, len(sc.statusTracker().getJobIdsForGroup(tag))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    run("probe-first", 200)
+    r, jobs = run("probe-resume", 300)
+    assert r["docs_processed"] + r["urls_blocked"] == 100, r
+    assert jobs <= 26, jobs
+    ids = p.committed_batch_ids()
+    r, jobs = run("probe-empty", 300)
+    assert r == {"run_id": "probe-empty", "docs_processed": 0,
+                 "duplicates_skipped": 0, "urls_blocked": 0,
+                 "curation_drops": {}}, r
+    assert jobs <= 2, jobs
+    assert p.committed_batch_ids() == ids
 
 
 def test_pipeline_url_gate_blocks_before_extraction(spark, tmp_path):
@@ -340,19 +434,6 @@ class TestAsofJoin:
         assert got[2] == 200.0
         assert got[3] is None   # nothing at or before ts=5
         assert got[5] is None   # key with no right rows
-
-    def test_tolerance(self, spark):
-        from pyspark.sql import functions as F
-
-        from rag_pdf_parser_spark.operators.asof import asof_join
-
-        left, right = self._frames(spark)
-        got = {r["event_id"]: r["asof_px"]
-               for r in asof_join(left, right, on="k", ts="ts",
-                                  tolerance=F.lit(2)).collect()}
-        assert got[1] == 100.0   # staleness 0 <= 2
-        assert got[2] is None    # ts=25 vs right ts=20 → staleness 5 > 2
-        assert got[4] is None    # ts=7 has no right at/before (right ts=8 is after)
 
     def test_one_shuffle_plan(self, spark):
         from rag_pdf_parser_spark.operators.asof import asof_join
@@ -1027,17 +1108,6 @@ class TestRangeJoin:
         # event 3 (23:00, key a) matches no interval → absent on inner join
         assert got == {1: 10, 2: 10, 4: 30}, got
 
-    def test_left_join_keeps_unmatched(self, spark):
-        from rag_pdf_parser_spark.operators.rangejoin import range_join_binned
-
-        left, right = self._frames(spark)
-        got = {r["event_id"]: r["tag"]
-               for r in range_join_binned(left, right, on="k", ts="ts",
-                                          start="s", end="e",
-                                          bin_width_sec=3600,
-                                          how="left").collect()}
-        assert got == {1: 10, 2: 10, 3: None, 4: 30}, got
-
     def test_numeric_epoch_columns(self, spark):
         """Documented contract: ts/start/end may be numeric epoch seconds."""
         from rag_pdf_parser_spark.operators.rangejoin import range_join_binned
@@ -1049,9 +1119,8 @@ class TestRangeJoin:
         got = {r["event_id"]: r["tag"]
                for r in range_join_binned(left, right, on="k", ts="ts",
                                           start="s", end="e",
-                                          bin_width_sec=600,
-                                          how="left").collect()}
-        assert got == {1: 7, 2: None}, got
+                                          bin_width_sec=600).collect()}
+        assert got == {1: 7}, got
 
     def test_fractional_end_crossing_bin_boundary(self, spark):
         """Regression (r3 advice): a fractional EXCLUSIVE end whose fraction
@@ -1068,9 +1137,8 @@ class TestRangeJoin:
         got = {r["event_id"]: r["tag"]
                for r in range_join_binned(left, right, on="k", ts="ts",
                                           start="s", end="e",
-                                          bin_width_sec=900,
-                                          how="left").collect()}
-        assert got == {1: 7, 2: None}, got
+                                          bin_width_sec=900).collect()}
+        assert got == {1: 7}, got
 
     def test_integer_end_on_bin_boundary_stays_exclusive(self, spark):
         """ceil(end/w)-1 must not ADD a bin either: end exactly on a bin
@@ -1085,21 +1153,8 @@ class TestRangeJoin:
         got = {r["event_id"]: r["tag"]
                for r in range_join_binned(left, right, on="k", ts="ts",
                                           start="s", end="e",
-                                          bin_width_sec=900,
-                                          how="left").collect()}
-        assert got == {1: 7, 2: None}, got
-
-    def test_unsupported_how_raises(self, spark):
-        """'right'/'full' would emit unmatched right rows once per exploded
-        bin — must raise, not silently mis-count."""
-        import pytest
-
-        from rag_pdf_parser_spark.operators.rangejoin import range_join_binned
-
-        left, right = self._frames(spark)
-        with pytest.raises(ValueError, match="inner.*left"):
-            range_join_binned(left, right, on="k", ts="ts", start="s",
-                              end="e", how="right")
+                                          bin_width_sec=900).collect()}
+        assert got == {1: 7}, got
 
     def test_no_nested_loop_join(self, spark):
         """The whole point: the binned formulation must plan as hash/merge
