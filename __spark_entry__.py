@@ -1011,7 +1011,7 @@ def q_ivf_topk(spark, sf_dir):
     from rag_pdf_parser_spark.operators.similarity import ivf_topk
 
     e = _t(spark, sf_dir, "embeddings")
-    return ivf_topk(e, e.where(F.col("vec_id") < 5), dim=64, k=3,
+    return ivf_topk(e, e.where(F.col("vec_id") < 5), k=3,
                     n_lists=8, n_probe=3)
 
 

@@ -217,7 +217,7 @@ def _probe_lists(queries: DataFrame, cents: np.ndarray, n_probe: int,
     return probe_rows
 
 
-def ivf_topk(corpus: DataFrame, queries: DataFrame, dim: int, k: int = 5,
+def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
              n_lists: int = 8, n_probe: int = 2) -> DataFrame:
     """IVF approximate NN over (`vec_id`, `embedding`): deterministic
     k-means coarse quantizer (fit on a bounded deterministic sample of 512

@@ -1,17 +1,19 @@
 """MERGE-equivalent maintenance for the mutable stores (r3 verdict #3).
 
-The engine's two long-lived mutable tables are bare parquet appends:
+The engine keeps two long-lived mutable tables:
 
-- ``seen_hashes`` (operators/dedup.py register_hashes — the reference's
-  SQLite upsert, persistent.py:158-190, as a table), and
+- the pipeline's manifest — its resume table, commit log and dedup log
+  (`text_hash`, plans/pipeline.py), grown by one batch dir per run, and
 - the LSH bucket store the incremental admit writes, per increment or
-  per streaming micro-batch (streaming/minhash.py).
+  per streaming micro-batch (streaming/minhash.py), a bare parquet
+  append.
 
-Appends accumulate duplicate rows (harmless for correctness — both lookups
-are semi-joins — but scan cost grows without bound). SURVEY §1.1 maps these
-to Delta/Iceberg tables whose MERGE/rewriteDataFiles would compact them;
-Iceberg jars are absent in this sandbox, so `compact_table` implements the
-same job: read → dropDuplicates → rewrite → ATOMIC SWAP.
+Store appends accumulate duplicate rows (harmless for correctness — the
+probe is a semi-join — but scan cost grows without bound). SURVEY §1.1
+maps these to Delta/Iceberg tables whose MERGE/rewriteDataFiles would
+compact them; the engine does not depend on the Iceberg jars, so
+`compact_lsh_store` implements the same job: read → dropDuplicates →
+rewrite → ATOMIC SWAP.
 
 Swap protocol (commit = one POSIX dir rename, same primitive as the
 pipeline's manifest commit):
@@ -52,7 +54,7 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .lease import WriterLease
@@ -86,71 +88,6 @@ def atomic_swap(path: str) -> None:
     shutil.rmtree(_trash(path))
 
 
-def compact_table(spark: SparkSession, path: str,
-                  dedup_keys: list[str] | None,
-                  partition_by: list[str] | None = None,
-                  preserve_files: list[str] | None = None) -> dict:
-    """Rewrite the parquet table at `path` with duplicate rows (by
-    `dedup_keys`, or whole rows when None) collapsed and small append
-    files coalesced — the MERGE-maintenance job. Preserves (or
-    re-establishes) the `partition_by` layout so downstream partition
-    pruning keeps working. Holds the parent-dir writer lease for the
-    duration (module docstring).
-
-    Returns {"rows_before", "rows_after", "files_before", "files_after"}.
-    """
-    with WriterLease(os.path.dirname(path.rstrip("/")) or ".") as lease:
-        # recover INSIDE the lease: an un-leased recover_store could
-        # resurrect the trash dir of a CONCURRENT compaction sitting
-        # between its two swap renames, colliding with its second rename
-        recover_store(path)
-        df = spark.read.parquet(path)
-        files_before = sum(
-            len([f for f in fs if f.endswith(".parquet")])
-            for _, _, fs in os.walk(path))
-        rows_before = df.count()
-        compacted = df.dropDuplicates(dedup_keys)
-        if partition_by:
-            # one output file per partition dir: each key lands in one
-            # shuffle task, and AQE sizes the (unnamed) shuffle width
-            writer = compacted.repartition(*partition_by).write \
-                .mode("overwrite").partitionBy(*partition_by)
-        else:
-            writer = compacted.coalesce(1).write.mode("overwrite")
-        # the tmp write is an ACTION that completes before any rename
-        # below — the source read and the swap never overlap
-        writer.parquet(_tmp(path))
-        # sidecar metadata (e.g. the LSH store's persisted bp modulus)
-        # must TRAVEL WITH the commit rename — copying it after the swap
-        # would leave a metadata-less store if the process dies in between
-        # (reopening the exact silent-mismatch hole the metadata closes)
-        for name in preserve_files or []:
-            src = os.path.join(path, name)
-            if os.path.exists(src):
-                shutil.copy2(src, os.path.join(_tmp(path), name))
-        # commit-point validation (same rule as ExtractionPipeline.run): a
-        # long compaction whose lock went stale and was stolen must abort
-        # HERE — swapping would discard rows the stealing writer appended
-        # to the store after our read. touch() first so a healthy
-        # compaction never looks stale to the next acquirer.
-        lease.assert_held()
-        lease.touch()
-        atomic_swap(path)
-        out = spark.read.parquet(path)
-        files_after = sum(
-            len([f for f in fs if f.endswith(".parquet")])
-            for _, _, fs in os.walk(path))
-        return {"rows_before": rows_before, "rows_after": out.count(),
-                "files_before": files_before, "files_after": files_after}
-
-
-def compact_seen_hashes(spark: SparkSession, path: str) -> dict:
-    """seen_hashes maintenance: one row per (hash, kind) — the reference's
-    INSERT OR IGNORE upsert semantics (persistent.py:158-190) re-established
-    over the append-only log."""
-    return compact_table(spark, path, ["hash", "kind"])
-
-
 def compact_output(spark: SparkSession, out_dir: str) -> dict:
     """Fold an ExtractionPipeline out_dir's committed ``batch_id=`` batches
     into ONE base batch — manifest maintenance (r4 verdict #7). The commit
@@ -174,8 +111,11 @@ def compact_output(spark: SparkSession, out_dir: str) -> dict:
     after (3): committed state is the base batch; orphans age out.
 
     Readers therefore see the pre-compaction batches up to the instant of
-    the swap and exactly-equal rows after it. The base batch is written in
-    the sinks' own format (`ExtractionPipeline.sink_format`). Returns
+    the swap and exactly-equal rows after it, the dedup log (`text_hash`)
+    included: the manifest is read with MANIFEST_SCHEMA, so batches
+    written before the column existed read it as NULL instead of a
+    schema inferred from one file dropping it. The base batch is written
+    in the sinks' own format (`ExtractionPipeline.sink_format`). Returns
     {"batches_before", "batches_after", "removed_dirs"}.
     """
     from .pipeline import ExtractionPipeline
@@ -196,7 +136,7 @@ def compact_output(spark: SparkSession, out_dir: str) -> dict:
                     .withColumn("batch_id", F.lit(base)))
             (rows.write.mode("append").partitionBy("batch_id")
              .format(fmt).save(sink))
-        manifest = (spark.read.parquet(p.manifest_path)
+        manifest = (p.read_manifest()
                     .where(F.col("batch_id").isin(ids))
                     .withColumn("batch_id", F.lit(base)))
         tmp = _tmp(p.manifest_path)
@@ -219,18 +159,54 @@ def compact_output(spark: SparkSession, out_dir: str) -> dict:
 def compact_lsh_store(spark: SparkSession, path: str) -> dict:
     """LSH store maintenance (the store the incremental admit writes,
     per increment or per streaming micro-batch — streaming/minhash.py):
-    whole-row duplicates collapsed, bp partition layout preserved for
-    pruned probes. Deduping
-    whole (band, bucket, id, bp) rows keeps every co-bucketed OWNER — two
+    read → whole-row dropDuplicates → rewrite → atomic swap, holding the
+    parent-dir writer lease throughout (module docstring). Deduping whole
+    (band, bucket, id, bp) rows keeps every co-bucketed OWNER — two
     canonical docs legitimately share a bucket below the Jaccard threshold,
     and dropping either would let its future near-dups probe, miss and be
     admitted forever. What gets reclaimed: rows re-appended by crashed and
-    retried writers, and the per-append small files. The store's
-    _STORE_META.json (bp modulus + signature config) rides the atomic swap
-    via `preserve_files` — bp values are preserved verbatim, so the
-    modulus they were computed with must be too, through every crash
-    point."""
+    retried writers, and the per-append small files. The bp partition
+    layout is re-established (one file per bp dir) so probes stay pruned,
+    and the store's _STORE_META.json (bp modulus + signature config) rides
+    the atomic swap — bp values are preserved verbatim, so the modulus they
+    were computed with must be too, through every crash point.
+
+    Returns {"rows_before", "rows_after", "files_before", "files_after"}.
+    """
     from ..streaming.minhash import _META_NAME
 
-    return compact_table(spark, path, None, partition_by=["bp"],
-                         preserve_files=[_META_NAME])
+    def n_files() -> int:
+        return sum(len([f for f in fs if f.endswith(".parquet")])
+                   for _, _, fs in os.walk(path))
+
+    with WriterLease(os.path.dirname(path.rstrip("/")) or ".") as lease:
+        # recover INSIDE the lease: an un-leased recover_store could
+        # resurrect the trash dir of a CONCURRENT compaction sitting
+        # between its two swap renames, colliding with its second rename
+        recover_store(path)
+        df = spark.read.parquet(path)
+        files_before = n_files()
+        rows_before = df.count()
+        # one output file per bp dir: each key lands in one shuffle task,
+        # and AQE sizes the (unnamed) shuffle width. The tmp write is an
+        # ACTION that completes before any rename below — the source read
+        # and the swap never overlap
+        df.dropDuplicates().repartition("bp").write.mode("overwrite") \
+            .partitionBy("bp").parquet(_tmp(path))
+        # the meta must TRAVEL WITH the commit rename — copying it after
+        # the swap would leave a meta-less store if the process dies in
+        # between (reopening the silent-mismatch hole the meta closes)
+        meta = os.path.join(path, _META_NAME)
+        if os.path.exists(meta):
+            shutil.copy2(meta, os.path.join(_tmp(path), _META_NAME))
+        # commit-point validation (same rule as ExtractionPipeline.run): a
+        # long compaction whose lock went stale and was stolen must abort
+        # HERE — swapping would discard rows the stealing writer appended
+        # to the store after our read. touch() first so a healthy
+        # compaction never looks stale to the next acquirer.
+        lease.assert_held()
+        lease.touch()
+        atomic_swap(path)
+        return {"rows_before": rows_before,
+                "rows_after": spark.read.parquet(path).count(),
+                "files_before": files_before, "files_after": n_files()}

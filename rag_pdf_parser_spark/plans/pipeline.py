@@ -7,8 +7,8 @@ Spark-first restatement of the reference's CLI lifecycle (SURVEY §3.1):
               → salted repartition by xxhash64(url)       [north_rule skew defusal]
               → mapInArrow extraction (kernel)            [M1/M2 fused]
               → text-quality gates (curate=)              [plans/curate.py]
-              → dedup gate: left joins vs in-batch winners
-                and seen_hashes (dedupe=)                 [F7/J2, main.py:43-46]
+              → dedup gate: in-batch min-url window, left
+                join vs committed text_hash (dedupe=)     [F7/J2, main.py:43-46]
               → docs + exploded blocks + chunks           [S3/W1/W6]
               → parquet sinks + manifest append           [K1-K4, K7]
 
@@ -23,6 +23,14 @@ anti-join of pages against manifest urls — exactly the reference's
 SQLite doc_status skip (persistent.py:369-406) as a relational op. Per-url
 (not per-partition-summary) rows keep resume exact under repartitioning;
 a summary view aggregates them for metrics.
+
+The manifest is also the dedup log — the reference's JSON hash dict
+(deduplicator.py:45-59) as one column: `text_hash` holds the
+normalized-text hash of every doc a `dedupe=True` run publishes as its
+hash's winner, NULL on every other row (and on every row of a run without
+`dedupe`). The dedup gate's seen set is the committed manifest's non-NULL
+`text_hash`, so a hash becomes durable in the same rename that commits its
+doc — exactly once, with no second store to register into or recover.
 
 Commit protocol (crash-exactness across MID-JOB death, r3 verdict #2):
 content sinks append under a per-run ``batch_id=<token>`` partition, and the
@@ -43,9 +51,6 @@ reclaimed by `vacuum_uncommitted()`. The reference's doc_status marking
 POSIX rename is atomic on local/HDFS filesystems; on object stores the same
 role is played by an Iceberg/metastore metadata swap (SURVEY §1.1 maps the
 manifest to a Delta/Iceberg table — jars absent in this sandbox).
-Hash registration (dedupe=True) runs after the commit point: a crash between
-them loses only the *flagging* of future duplicates (at-least-once dedup),
-never rows.
 """
 
 from __future__ import annotations
@@ -54,11 +59,10 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import normalized_text_hash_expr
-from ..operators.dedup import register_hashes
 from ..operators.extract import (
     explode_blocks,
     explode_chunks,
@@ -101,24 +105,26 @@ class ExtractionPipeline:
         recover_store(self.manifest_path)
 
     # -- resume gate ----------------------------------------------------------
-    def processed_urls(self) -> DataFrame | None:
-        """The url of every manifest row, None before the first commit.
-        Not distinct: the resume anti-join needs no distinct build side,
-        and each distinct would cost a shuffle job per read. An
-        unreadable manifest raises — treating it as "no resume state"
-        would re-extract and re-commit every url."""
+    def read_manifest(self) -> DataFrame | None:
+        """Every committed manifest row (MANIFEST_SCHEMA, `batch_id`
+        included), None before the first commit: the resume gate reads
+        its `url`, the dedup gate its `text_hash`. An unreadable manifest
+        raises — treating it as "no resume state" would re-extract and
+        re-commit every url."""
         self._recover_manifest()
         if not os.path.exists(self.manifest_path):
             return None
         return self.spark.read.schema(MANIFEST_SCHEMA).parquet(
-            self.manifest_path
-        ).select("url")
+            self.manifest_path)
 
     def pending(self, pages: DataFrame) -> DataFrame:
-        done = self.processed_urls()
+        """`pages` less every url the manifest holds. Not distinct: the
+        resume anti-join needs no distinct build side, and each distinct
+        would cost a shuffle job per read."""
+        done = self.read_manifest()
         if done is None:
             return pages
-        return pages.join(done, "url", "left_anti")
+        return pages.join(done.select("url"), "url", "left_anti")
 
     # -- run --------------------------------------------------------------------
     def run(self, pages: DataFrame, run_id: str = "run0",
@@ -134,13 +140,18 @@ class ExtractionPipeline:
         the format of the files (`sink_format`).
 
         `dedupe=True` wires in the reference's dedup gate (F7/J2,
-        main.py:43-46): documents whose normalized-text hash was already
-        registered (previous runs, via the persistent `seen_hashes` table)
-        or already produced by a lexicographically-smaller url in THIS run
+        main.py:43-46): documents whose normalized-text hash a committed
+        manifest row already holds in `text_hash` (previous runs) or
+        that a lexicographically-smaller url in THIS run also produced
         are NOT written to the content sinks — but they ARE recorded in
         the manifest with failure_code='DUPLICATE', so resume never
         re-extracts them (exactly the reference's skip-if-seen +
-        mark-status flow).
+        mark-status flow). The published winners' manifest rows carry
+        their hash, committed by the same rename as the batch. An out_dir
+        that still holds a `seen_hashes/` store from an older layout is
+        refused with ValueError before anything is written: its history
+        is not migrated, and ignoring it would re-admit every duplicate
+        it knows.
 
         `url_blocklist` (a DataFrame with a `host` column) switches on the
         C4-style URL gate (operators.urlfilter) BEFORE extraction: blocked
@@ -170,8 +181,8 @@ class ExtractionPipeline:
         The returned counts come from the manifest batch this run stages:
         `docs_processed` is every row but URL_BLOCKED; `urls_blocked`,
         `duplicates_skipped` and `curation_drops` count their codes. A run
-        with nothing pending commits no batch and registers no hashes, and
-        its counts are all zero: on a resume (a manifest exists) a bounded
+        with nothing pending commits no batch, and its counts are all
+        zero: on a resume (a manifest exists) a bounded
         probe of `pending` (two jobs: the manifest broadcast and a limit-1
         scan) finds it empty and the run stops there."""
         with WriterLease(self.out_dir) as lease:
@@ -180,17 +191,16 @@ class ExtractionPipeline:
                 raise ValueError(
                     f"{self.out_dir} holds {held} sink files; a run with "
                     f"fmt={fmt!r} would mix two formats in one table")
+            if dedupe and os.path.exists(
+                    os.path.join(self.out_dir, "seen_hashes")):
+                raise ValueError(
+                    f"{self.out_dir} holds a seen_hashes/ store from an "
+                    "older layout; the dedup history now lives in the "
+                    "manifest's text_hash column and is not migrated")
             todo = self.pending(pages)
             if os.path.isdir(self.manifest_path) and todo.isEmpty():
                 return _run_counts(run_id, {})
             batch_id = f"{run_id}-{uuid.uuid4().hex[:12]}"
-            if dedupe:
-                # a seen-hashes compaction that died between its two swap
-                # renames left the store in the trash dir; restore BEFORE
-                # the exists() check in _mark_duplicates — otherwise this
-                # run would silently pass every known duplicate and
-                # recreate a fresh store, stranding the whole hash history
-                recover_store(self.seen_path)
             blocked = None
             if url_blocklist is not None:
                 flagged = filter_urls(todo, url_blocklist)
@@ -204,6 +214,7 @@ class ExtractionPipeline:
                     .cast("long").alias("bytes_in"),
                     F.lit(0).cast("long").alias("bytes_out"),
                     F.lit("URL_BLOCKED").alias("failure_code"),
+                    F.lit(None).cast("string").alias("text_hash"),
                 )
                 todo = flagged.where(~F.col("url_blocked")) \
                     .drop("url_blocked", "block_reason")
@@ -216,19 +227,20 @@ class ExtractionPipeline:
             docs_m = docs.withColumns({
                 "partition_id": F.spark_partition_id(),
                 "__code": F.lit(None).cast("string"),
+                "__h": F.lit(None).cast("string"),
             })
             if curate:
                 # gates BEFORE the dedup marking — the curate_corpus funnel
                 # order (dedup applies only to gate survivors, and a gated
-                # doc's hash must not be registered or own a winner slot)
+                # doc's hash must not be published or own a winner slot)
                 docs_m = self._mark_curation(docs_m)
             if dedupe:
                 docs_m = self._mark_duplicates(docs_m)
             # localCheckpoint, NOT cache: the plan reads the manifest
-            # (resume anti-join) and the seen_hashes store (dedup gate) —
-            # appending to either path below refreshes it and INVALIDATES
-            # a cache built on it, silently recomputing docs_m against the
-            # post-write state (todo becomes empty, dup flags flip).
+            # (resume anti-join and dedup gate) — the commit rename below
+            # refreshes it and INVALIDATES a cache built on it, silently
+            # recomputing docs_m against the post-write state (todo
+            # becomes empty, dup flags flip).
             # Checkpointing materializes the batch immutably before any
             # sink write.
             docs_m = docs_m.localCheckpoint(eager=True)
@@ -263,6 +275,7 @@ class ExtractionPipeline:
                 # an extraction failure outranks a gate code (the gates
                 # only code docs whose failure_code is NULL anyway)
                 F.coalesce("failure_code", "__code").alias("failure_code"),
+                F.col("__h").alias("text_hash"),
             )
             if blocked is not None:
                 manifest = manifest.unionByName(blocked)
@@ -280,7 +293,7 @@ class ExtractionPipeline:
             }
             if not counts:
                 # nothing was pending: an empty batch would only grow the
-                # commit log, so commit and register nothing
+                # commit log, so commit nothing
                 shutil.rmtree(staging)
             else:
                 # commit-point validation: if this run's lock went stale
@@ -291,12 +304,6 @@ class ExtractionPipeline:
                 lease.assert_held()
                 lease.touch()
                 self._commit(staging, batch_id)
-                if dedupe:
-                    fresh_hashes = docs_m.where(F.col("__h").isNotNull()) \
-                        .select(F.col("__h").alias("hash"),
-                                F.lit("normalized_text").alias("kind"),
-                                F.lit(run_id).alias("source"))
-                    register_hashes(self.seen_path, fresh_hashes)
         return _run_counts(run_id, counts)
 
     # -- commit protocol -------------------------------------------------------
@@ -401,10 +408,6 @@ class ExtractionPipeline:
                     removed += 1
         return removed
 
-    @property
-    def seen_path(self) -> str:
-        return os.path.join(self.out_dir, "seen_hashes")
-
     def _mark_curation(self, docs_m: DataFrame) -> DataFrame:
         """Set `__code` to the first failing text-quality gate's manifest
         code (GOPHER_DROP / REPETITION_DROP / MODEL_DROP) where it is NULL
@@ -422,34 +425,39 @@ class ExtractionPipeline:
 
     def _mark_duplicates(self, docs_m: DataFrame) -> DataFrame:
         """Set `__code` to DUPLICATE when the doc's normalized-text hash is
-        in the persistent seen store OR a smaller url in this batch owns
-        the hash, and add `__h`: the hash of every doc this run registers
-        (the gate-eligible docs that are not duplicates), NULL otherwise.
+        in a committed manifest row's `text_hash` OR a smaller url in this
+        batch owns the hash, and set `__h`: the hash of every doc this run
+        publishes as its hash's winner (the gate-eligible docs that are not
+        duplicates), NULL otherwise — the manifest's `text_hash`.
 
         Only docs with no code and no extraction failure and a non-empty
         text are gate-eligible. Failed or empty extractions all share
         extracted_text='' and would otherwise collapse into one
-        'duplicate' class (and poison the seen store with hash('')
+        'duplicate' class (and poison the dedup log with hash('')
         forever); a parse failure is not a content duplicate.
         Curation-gated docs are excluded for the published-winner
         invariant: a gated doc is never written, so letting it own a
         hash's winner slot would mark its duplicates DUPLICATE while NO
-        copy reaches the sinks — silent loss of the content."""
+        copy reaches the sinks — silent loss of the content.
+
+        The in-batch winner is a window min over the hash (a NULL hash is
+        keyed by its own url — no sha256 hex digest contains ':' — so
+        ineligible rows never pile into one window partition): one pass
+        over the batch, where a groupBy joined back would run the
+        extraction stage below it twice."""
         eligible = (F.col("failure_code").isNull()
                     & F.col("__code").isNull()
                     & (F.length(F.coalesce("extracted_text", F.lit(""))) > 0))
         hashed = docs_m.withColumn("__h", F.when(
             eligible, normalized_text_hash_expr(F.col("extracted_text"))))
-        winners = hashed.where(F.col("__h").isNotNull()) \
-            .groupBy("__h").agg(F.min("url").alias("__wurl"))
-        hashed = hashed.join(winners, "__h", "left")
-        if os.path.exists(self.seen_path):
-            seen = (
-                self.spark.read.parquet(self.seen_path)
-                .where(F.col("kind") == "normalized_text")
-                .select(F.col("hash").alias("__h"),
-                        F.lit(True).alias("__seen")).distinct()
-            )
+        key = F.coalesce("__h", F.concat(F.lit("null:"), F.col("url")))
+        hashed = hashed.withColumn(
+            "__wurl", F.min("url").over(Window.partitionBy(key)))
+        committed = self.read_manifest()
+        if committed is not None:
+            seen = committed.where(F.col("text_hash").isNotNull()).select(
+                F.col("text_hash").alias("__h"),
+                F.lit(True).alias("__seen")).distinct()
             hashed = hashed.join(seen, "__h", "left")
         else:
             hashed = hashed.withColumn("__seen", F.lit(None).cast("boolean"))

@@ -114,9 +114,11 @@ DOCS_FULL_SCHEMA = T.StructType(
 )
 
 # Per-partition lineage manifest (north_rule resume mechanism; FIXTURES §6).
-# `batch_id` is NOT in the data files — it is the commit-log partition
-# directory (manifest/batch_id=<token>/, plans/pipeline.py commit protocol)
-# surfaced as a partition column on read.
+# `text_hash` is the dedup log (deduplicator.py:45-59 JSON dict → a column):
+# the normalized-text hash of a doc a `dedupe=True` run published as its
+# hash's winner, NULL otherwise. `batch_id` is NOT in the data files — it is
+# the commit-log partition directory (manifest/batch_id=<token>/,
+# plans/pipeline.py commit protocol) surfaced as a partition column on read.
 MANIFEST_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),
@@ -125,15 +127,7 @@ MANIFEST_SCHEMA = T.StructType(
         T.StructField("bytes_in", T.LongType(), False),
         T.StructField("bytes_out", T.LongType(), False),
         T.StructField("failure_code", T.StringType(), True),
+        T.StructField("text_hash", T.StringType(), True),
         T.StructField("batch_id", T.StringType(), True),
-    ]
-)
-
-# Dedup registry (deduplicator.py:45-59 JSON dict → a real table; FIXTURES §5).
-SEEN_HASHES_SCHEMA = T.StructType(
-    [
-        T.StructField("hash", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("source", T.StringType(), True),
     ]
 )

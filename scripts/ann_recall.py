@@ -13,7 +13,12 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# the local-mode Python workers import the engine too; they inherit the
+# PYTHONPATH the session is started with, not this process's sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -74,7 +79,7 @@ def main() -> None:
 
     for n_probe in (1, 2, 4, 8):
         t0 = time.time()
-        approx = topk_sets(ivf_topk(emb, queries, dim=dim, k=K,
+        approx = topk_sets(ivf_topk(emb, queries, k=K,
                                     n_lists=8, n_probe=n_probe))
         dt = time.time() - t0
         print(f"| ivf_topk | n_lists=8 n_probe={n_probe} "

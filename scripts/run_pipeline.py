@@ -14,14 +14,28 @@ On a cluster, --master yarn/k8s and the same --py-files zip; the job itself
 is identical (the engine holds no driver-local state beyond the plan).
 Re-running with the same --out resumes: urls already in the manifest are
 anti-joined away.
+
+Locally, from the repo root, no packaging is needed:
+
+    python scripts/run_pipeline.py --pages synth:200 --out /tmp/extract_out
+
+The JSON counts are the last stdout line.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# the local-mode Python workers import the engine too; they inherit the
+# PYTHONPATH the session is started with, not this process's sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
 
 
 def main() -> None:
@@ -33,7 +47,8 @@ def main() -> None:
     ap.add_argument("--format", default="parquet", choices=["parquet", "json"])
     ap.add_argument("--no-chunks", action="store_true")
     ap.add_argument("--dedupe", action="store_true",
-                    help="content-dedup gate vs the persistent seen_hashes store")
+                    help="content-dedup gate vs the manifest's committed "
+                         "text_hash column")
     ap.add_argument("--blocklist", default=None,
                     help="parquet/csv of blocked hosts (column `host`) — "
                          "switches on the pre-extraction URL gate")

@@ -248,7 +248,7 @@ def test_ivf_recall_against_brute_force(spark, vecs_df):
     exact = {(r["query_id"], r["cand_id"])
              for r in brute_force_topk(vecs_df, queries, k=3).collect()}
     approx = {(r["query_id"], r["cand_id"])
-              for r in ivf_topk(vecs_df, queries, dim=16, k=3,
+              for r in ivf_topk(vecs_df, queries, k=3,
                                 n_lists=5, n_probe=2).collect()}
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.6, recall  # clustered fixture → probed lists cover neighbors
@@ -258,8 +258,8 @@ def test_ivf_deterministic(spark, vecs_df):
     from rag_pdf_parser_spark.operators.similarity import ivf_topk
 
     queries = vecs_df.where(F.col("vec_id") < 3)
-    a = sorted(map(tuple, ivf_topk(vecs_df, queries, dim=16, k=3).collect()))
-    b = sorted(map(tuple, ivf_topk(vecs_df, queries, dim=16, k=3).collect()))
+    a = sorted(map(tuple, ivf_topk(vecs_df, queries, k=3).collect()))
+    b = sorted(map(tuple, ivf_topk(vecs_df, queries, k=3).collect()))
     assert a == b
 
 
@@ -270,9 +270,9 @@ def test_ivf_stable_across_partitionings(spark, vecs_df):
 
     queries = vecs_df.where(F.col("vec_id") < 3)
     a = sorted(map(tuple,
-                   ivf_topk(vecs_df.repartition(2), queries, dim=16, k=3).collect()))
+                   ivf_topk(vecs_df.repartition(2), queries, k=3).collect()))
     b = sorted(map(tuple,
-                   ivf_topk(vecs_df.repartition(8), queries, dim=16, k=3).collect()))
+                   ivf_topk(vecs_df.repartition(8), queries, k=3).collect()))
     assert a == b
 
 
@@ -282,7 +282,7 @@ def test_ivf_bounds_query_collect(spark, vecs_df, monkeypatch):
 
     monkeypatch.setattr(similarity, "MAX_QUERIES", 10)
     with pytest.raises(ValueError, match="MAX_QUERIES"):
-        ivf_topk(vecs_df, vecs_df, dim=16, k=3)
+        ivf_topk(vecs_df, vecs_df, k=3)
 
 
 def test_simhash_plan_has_no_exchange(spark, docs_df):
@@ -330,7 +330,7 @@ def test_ivf_disk_index_partition_pruning(spark, vecs_df, tmp_path):
     assert "list_id" in seg, seg
 
     direct = sorted(map(tuple, ivf_topk(
-        vecs_df, queries, dim=16, k=3, n_lists=5, n_probe=2).collect()))
+        vecs_df, queries, k=3, n_lists=5, n_probe=2).collect()))
     via_disk = sorted(map(tuple, out.collect()))
     assert via_disk == direct
 

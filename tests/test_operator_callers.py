@@ -11,6 +11,9 @@
    bench, perfbench or a script, or be a named user entry point.
 4. Every option has a production caller: each optional parameter of such
    a public function or method is passed by some production call.
+5. The manifest is the pipeline's one dedup store: the library neither
+   calls the perfbench-only `register_hashes` / `anti_join_seen` nor
+   names a `seen_hashes` path except to refuse one.
 """
 
 import ast
@@ -25,7 +28,7 @@ OPERATOR_DIRS = ("operators", "streaming", "functions", "plans", "sources")
 # output maintenance): called by deployments, not from inside the repo
 ENTRY_POINTS = {"curate_corpus", "curate_corpus_incremental",
                 "run_streaming_dedup", "run_extraction_stream",
-                "compact_seen_hashes", "compact_lsh_store", "compact_output"}
+                "compact_lsh_store", "compact_output"}
 
 
 def _py_files(*paths):
@@ -256,3 +259,36 @@ def test_every_option_has_a_production_caller():
     assert total, "the guard must see the library's options"
     assert not unset, (f"{len(unset)} of {total} optional parameters have "
                        "no production caller:\n" + "\n".join(unset))
+
+
+#: kept for the benchmark harness only: the library's dedup gate reads the
+#: manifest's `text_hash`, so no library call may write or probe a second
+#: hash store
+PERFBENCH_ONLY = {"register_hashes", "anti_join_seen"}
+
+
+def test_manifest_is_the_one_dedup_store():
+    """No library call of `PERFBENCH_ONLY`, and no library string naming a
+    `seen_hashes` path (the old second store) outside the test of an `if`
+    whose body raises — the refusal of an out_dir that still holds one."""
+    calls, paths, refusals = [], [], 0
+    for path in _py_files(LIB):
+        rel = os.path.relpath(path, ROOT)
+        tree = _parse(path)
+        calls += [(rel, n.lineno, _callee(n)) for n in ast.walk(tree)
+                  if isinstance(n, ast.Call) and _callee(n) in PERFBENCH_ONLY]
+        refused = {id(c) for n in ast.walk(tree)
+                   if isinstance(n, ast.If)
+                   and any(isinstance(b, ast.Raise) for b in n.body)
+                   for c in ast.walk(n.test)}
+        for n in ast.walk(tree):
+            if (isinstance(n, ast.Constant) and isinstance(n.value, str)
+                    and n.value.rstrip("/").rsplit("/", 1)[-1]
+                    == "seen_hashes"):
+                if id(n) in refused:
+                    refusals += 1
+                else:
+                    paths.append((rel, n.lineno))
+    assert not calls, calls
+    assert not paths, paths
+    assert refusals == 1, refusals  # the pipeline's legacy-layout check

@@ -186,9 +186,8 @@ def test_resume_raises_on_an_unreadable_manifest(spark, tmp_path):
 def test_resume_with_nothing_pending_stops_at_the_probe(spark, tmp_path):
     """A resume (a manifest exists) probes `pending` once: with nothing
     pending the gated run takes at most 2 Spark jobs and commits nothing;
-    with urls pending it takes 25 jobs, as many as before the probe (the
-    probe's jobs are paid back by the manifest read losing its distinct).
-    Jobs are counted by job group on `synth_pages(300)` at local[4]."""
+    with urls pending it takes 21 jobs. Jobs are counted by job group on
+    `synth_pages(300)` at local[4]."""
     sc = spark.sparkContext
     blocked = spark.createDataFrame([("host1.example",)], "host string")
     p = ExtractionPipeline(spark, str(tmp_path / "probe"))
@@ -206,7 +205,7 @@ def test_resume_with_nothing_pending_stops_at_the_probe(spark, tmp_path):
     run("probe-first", 200)
     r, jobs = run("probe-resume", 300)
     assert r["docs_processed"] + r["urls_blocked"] == 100, r
-    assert jobs <= 26, jobs
+    assert jobs <= 22, jobs
     ids = p.committed_batch_ids()
     r, jobs = run("probe-empty", 300)
     assert r == {"run_id": "probe-empty", "docs_processed": 0,
@@ -790,27 +789,18 @@ def test_streaming_gate_equals_incremental_admit(spark, tmp_path):
 
 
 def test_compaction_merge_equivalent(spark, tmp_path):
-    """plans.maintenance: append-duplicated stores are rewritten to one row
-    per key with the partition layout preserved; the swap is atomic with
-    crash recovery (trash-dir rename-back)."""
+    """plans.maintenance: an append-duplicated LSH store is rewritten to
+    one row per whole row with the bp partition layout and meta preserved;
+    the swap is atomic with crash recovery (trash-dir rename-back)."""
     from rag_pdf_parser_spark.plans.maintenance import (
         compact_lsh_store,
-        compact_seen_hashes,
         recover_store,
     )
-    from rag_pdf_parser_spark.streaming.minhash import store_partition_expr
-
-    # seen_hashes: triple-append the same rows
-    seen_path = str(tmp_path / "seen_hashes")
-    rows = [(f"h{i}", "normalized_text", "r1") for i in range(10)]
-    df = spark.createDataFrame(rows, "hash string, kind string, source string")
-    for _ in range(3):
-        df.write.mode("append").parquet(seen_path)
-    stats = compact_seen_hashes(spark, seen_path)
-    assert stats["rows_before"] == 30 and stats["rows_after"] == 10, stats
-    assert stats["files_after"] <= stats["files_before"]
-    got = spark.read.parquet(seen_path)
-    assert got.count() == 10 and set(got.columns) == {"hash", "kind", "source"}
+    from rag_pdf_parser_spark.streaming.minhash import (
+        read_store_meta,
+        store_partition_expr,
+        write_store_meta,
+    )
 
     # LSH store: duplicate bucket rows, bp layout must survive compaction
     lsh_path = str(tmp_path / "lsh")
@@ -820,14 +810,11 @@ def test_compaction_merge_equivalent(spark, tmp_path):
         "bp", store_partition_expr(F.col("band"), F.col("bucket")))
     b.write.mode("append").partitionBy("bp").parquet(lsh_path)
     b.write.mode("append").partitionBy("bp").parquet(lsh_path)
-    from rag_pdf_parser_spark.streaming.minhash import (
-        read_store_meta,
-        write_store_meta,
-    )
     write_store_meta(lsh_path, 64)
     stats = compact_lsh_store(spark, lsh_path)
     # (i%4, bucket{i%6}) cycles with period 12 → 12 distinct keys of 48 rows
     assert stats["rows_before"] == 48 and stats["rows_after"] == 12, stats
+    assert stats["files_after"] <= stats["files_before"]
     assert any(d.startswith("bp=") for d in os.listdir(lsh_path))
     # the persisted modulus RIDES the atomic swap (copied into the tmp dir
     # before the commit rename — a crash at any point leaves either the old
@@ -836,44 +823,132 @@ def test_compaction_merge_equivalent(spark, tmp_path):
 
     # crash recovery: simulate death between the two swap renames
     import shutil as sh
-    sh.move(seen_path, seen_path + ".__compact_trash")
-    assert recover_store(seen_path) is True
-    assert spark.read.parquet(seen_path).count() == 10
-    assert recover_store(seen_path) is False  # idempotent
+    sh.move(lsh_path, lsh_path + ".__compact_trash")
+    assert recover_store(lsh_path) is True
+    assert spark.read.parquet(lsh_path).count() == 12
+    assert read_store_meta(lsh_path)["store_partitions"] == 64
+    assert recover_store(lsh_path) is False  # idempotent
 
 
-def test_pipeline_recovers_half_swapped_seen_store(spark, tmp_path):
-    """r4 review finding: a compaction crash between the two swap renames
-    leaves seen_hashes in the trash dir; the next dedupe run must RESTORE
-    it (not silently start a fresh store and pass known duplicates)."""
-    import shutil as sh
-
+def _same_body_pages(spark, *urls):
+    """One page per url, every page with the same html body."""
     import pandas as pd
 
     from rag_pdf_parser_spark.schema import PAGES_SCHEMA
 
-    body = b"<html><body><p>the very same page body both runs</p></body></html>"
-    mk = lambda url: (url, None, body, "", "en")  # noqa: E731
-    p1 = spark.createDataFrame(
-        pd.DataFrame([mk("https://a.example/1")],
+    body = b"<html><body><p>the very same page body every run</p></body></html>"
+    return spark.createDataFrame(
+        pd.DataFrame([(u, None, body, "", "en") for u in urls],
                      columns=["url", "warc_ts", "html", "text", "lang"]),
         schema=PAGES_SCHEMA)
+
+
+def test_pipeline_recovers_half_swapped_dedup_log(spark, tmp_path):
+    """A manifest compaction crash between the two swap renames leaves the
+    manifest — and with it the dedup log — in the trash dir; the next
+    dedupe run must RESTORE it (not see an empty history and pass known
+    duplicates)."""
+    import shutil as sh
+
     out = str(tmp_path / "rec")
     pipe = ExtractionPipeline(spark, out, partitions=2)
-    pipe.run(p1, run_id="r1", with_chunks=False, dedupe=True)
-    assert os.path.exists(pipe.seen_path)
+    pipe.run(_same_body_pages(spark, "https://a.example/1"), run_id="r1",
+             with_chunks=False, dedupe=True)
+    assert pipe.read_manifest().where(
+        F.col("text_hash").isNotNull()).count() == 1
 
     # simulate the compaction half-swap crash
-    sh.move(pipe.seen_path, pipe.seen_path + ".__compact_trash")
+    sh.move(pipe.manifest_path, pipe.manifest_path + ".__compact_trash")
 
-    p2 = spark.createDataFrame(
-        pd.DataFrame([mk("https://b.example/2")],  # same CONTENT, new url
-                     columns=["url", "warc_ts", "html", "text", "lang"]),
-        schema=PAGES_SCHEMA)
-    r = pipe.run(p2, run_id="r2", with_chunks=False, dedupe=True)
-    # without recovery this would be 0 (fresh store) — the duplicate must
-    # still be recognized via the RESTORED store
+    # same CONTENT, new url
+    r = pipe.run(_same_body_pages(spark, "https://b.example/2"), run_id="r2",
+                 with_chunks=False, dedupe=True)
+    # without recovery this would be 0 (no history) — the duplicate must
+    # still be recognized via the RESTORED manifest
     assert r["duplicates_skipped"] == 1, r
+
+
+def test_dedup_log_commits_with_the_batch(spark, tmp_path):
+    """The hashes a run publishes are durable in the commit rename itself:
+    a run that dies right after its commit still flags, on the next run,
+    a same-content page under a new url."""
+    out = str(tmp_path / "seam")
+    pipe = ExtractionPipeline(spark, out, partitions=2)
+    real_commit = pipe._commit
+
+    def commit_then_die(staging, batch_id):
+        real_commit(staging, batch_id)
+        raise RuntimeError("killed after the commit rename")
+
+    pipe._commit = commit_then_die
+    with pytest.raises(RuntimeError, match="after the commit"):
+        pipe.run(_same_body_pages(spark, "https://a.example/1"),
+                 run_id="r1", with_chunks=False, dedupe=True)
+    assert len(pipe.committed_batch_ids()) == 1
+
+    r = ExtractionPipeline(spark, out, partitions=2).run(
+        _same_body_pages(spark, "https://b.example/2"), run_id="r2",
+        with_chunks=False, dedupe=True)
+    assert r["duplicates_skipped"] == 1, r
+
+
+def test_compact_output_keeps_the_dedup_log(spark, tmp_path):
+    """`compact_output` folds the dedup history with the commit log: after
+    two dedupe runs and a compaction, a third run still flags a copy of a
+    doc from the first batch. A committed batch written before the
+    manifest had `text_hash` (its files lack the column, and it lists
+    first) must not make the fold drop the column."""
+    from rag_pdf_parser_spark.plans.maintenance import compact_output
+
+    out = str(tmp_path / "cdl")
+    pipe = ExtractionPipeline(spark, out, partitions=2)
+    pipe.run(_same_body_pages(spark, "https://a.example/1"), run_id="r1",
+             with_chunks=False, dedupe=True)
+    pipe.run(synth_pages(spark, 6), run_id="r2", with_chunks=False,
+             dedupe=True)
+    spark.createDataFrame(
+        [("r0", 0, "https://old.example/x", 10, 0, "URL_BLOCKED")],
+        "run_id string, partition_id int, url string, bytes_in long, "
+        "bytes_out long, failure_code string").write.parquet(
+        os.path.join(pipe.manifest_path, "batch_id=a-legacy"))
+    hashes = sorted(r["text_hash"] for r in pipe.read_manifest()
+                    .where(F.col("text_hash").isNotNull()).collect())
+    assert len(hashes) == 7, hashes
+    assert compact_output(spark, out)["batches_after"] == 1
+    after = pipe.read_manifest()
+    assert after.count() == 8
+    assert sorted(r["text_hash"] for r in
+                  after.where(F.col("text_hash").isNotNull()).collect()) \
+        == hashes
+
+    r = pipe.run(_same_body_pages(spark, "https://c.example/3"), run_id="r3",
+                 with_chunks=False, dedupe=True)
+    assert r["docs_processed"] == 1 and r["duplicates_skipped"] == 1, r
+
+
+def test_dedupe_keeps_the_out_dir_to_four_tables(spark, tmp_path):
+    """The manifest is the only dedup store: a gated run leaves `docs`,
+    `blocks`, `chunks` and `manifest` (the lease is gone once it returns,
+    and the staging root is empty), and a `dedupe=True` run on an out_dir
+    that still holds a `seen_hashes/` store raises before it writes
+    anything."""
+    blocked = spark.createDataFrame([("nowhere.example",)], "host string")
+    out = str(tmp_path / "layout")
+    r = ExtractionPipeline(spark, out, partitions=2).run(
+        synth_pages(spark, 8), run_id="r1", with_chunks=True,
+        url_blocklist=blocked, curate=True, dedupe=True)
+    assert r["docs_processed"] == 8, r
+    assert os.listdir(os.path.join(out, "_staging")) == []
+    assert sorted(set(os.listdir(out)) - {"_staging"}) == [
+        "blocks", "chunks", "docs", "manifest"], os.listdir(out)
+
+    legacy = str(tmp_path / "legacy")
+    os.makedirs(os.path.join(legacy, "seen_hashes"))
+    with pytest.raises(ValueError, match="seen_hashes"):
+        ExtractionPipeline(spark, legacy, partitions=2).run(
+            synth_pages(spark, 4), run_id="r1", with_chunks=False,
+            dedupe=True)
+    assert os.listdir(legacy) == ["seen_hashes"]
 
 
 def test_streaming_rejects_legacy_flat_store(spark, tmp_path):
@@ -913,7 +988,7 @@ def test_writer_lease_mutual_exclusion(spark, tmp_path):
     lease makes the second run fail LOUDLY at start; a stolen-stale lease
     aborts at the commit point, not after it."""
     from rag_pdf_parser_spark.plans.lease import LeaseHeldError, WriterLease
-    from rag_pdf_parser_spark.plans.maintenance import compact_seen_hashes
+    from rag_pdf_parser_spark.plans.maintenance import compact_output
 
     out = str(tmp_path / "lease")
     pages = synth_pages(spark, 12)
@@ -924,20 +999,19 @@ def test_writer_lease_mutual_exclusion(spark, tmp_path):
     with pytest.raises(LeaseHeldError, match="held by another run"):
         p.run(pages, run_id="r-blocked", with_chunks=False)
     assert p.committed_batch_ids() == []
-    # ... and blocks maintenance on stores under the same out_dir (#9)
-    seen = os.path.join(out, "seen_hashes")
-    spark.createDataFrame([("h1", "normalized_text", "r")],
-                          "hash string, kind string, source string") \
-        .write.mode("append").parquet(seen)
+    # ... and blocks maintenance of the same out_dir (#9)
     with pytest.raises(LeaseHeldError):
-        compact_seen_hashes(spark, seen)
+        compact_output(spark, out)
     holder.release()
 
     # released → run proceeds, and releases its own lease afterwards
-    r = p.run(pages, run_id="r1", with_chunks=False)
-    assert r["docs_processed"] == 12
+    r = p.run(pages.limit(6), run_id="r1", with_chunks=False)
+    assert r["docs_processed"] == 6
     assert not os.path.exists(os.path.join(out, "_lock"))
-    assert compact_seen_hashes(spark, seen)["rows_after"] == 1
+    r = p.run(pages, run_id="r2", with_chunks=False)
+    assert r["docs_processed"] == 6
+    assert compact_output(spark, out)["batches_after"] == 1
+    assert p.read_docs().count() == 12
 
     # stale takeover: a crashed writer's old lock is stolen after
     # STALE_SEC; the displaced writer must fail its commit-point check
@@ -1187,15 +1261,16 @@ def test_pipeline_dedupe_never_gates_failures(spark, tmp_path):
     p = ExtractionPipeline(spark, str(tmp_path / "f"), partitions=2)
     r = p.run(pages, run_id="r1", with_chunks=False, dedupe=True)
     assert r["duplicates_skipped"] == 0, r
-    m = spark.read.parquet(p.manifest_path)
+    m = p.read_manifest()
     assert m.where(F.col("failure_code") == "DUPLICATE").count() == 0
     # only the real doc's hash registered
-    assert spark.read.parquet(p.seen_path).count() == 1
+    assert [r["url"] for r in m.where(F.col("text_hash").isNotNull())
+            .collect()] == ["https://f.example/ok"]
 
 
 def test_pipeline_dedupe_gate(spark, tmp_path):
     """dedupe=True: within-run content duplicates and cross-run duplicates
-    (via the persistent seen_hashes store) are skipped from the content
+    (via the committed manifest's `text_hash`) are skipped from the content
     sinks but recorded in the manifest as DUPLICATE — resume never
     re-extracts them."""
     import pandas as pd
@@ -1218,11 +1293,14 @@ def test_pipeline_dedupe_gate(spark, tmp_path):
     assert r1["docs_processed"] == 5 and r1["duplicates_skipped"] == 3, r1
     docs = spark.read.parquet(p.docs_path)
     assert docs.count() == 2
-    m = spark.read.parquet(p.manifest_path)
+    m = p.read_manifest()
     assert m.where(F.col("failure_code") == "DUPLICATE").count() == 3
+    # each content's min url publishes its hash; no other row carries one
+    assert sorted(r["url"] for r in m.where(F.col("text_hash").isNotNull())
+                  .collect()) == ["https://a.example/0", "https://a.example/3"]
 
     # cross-run: a NEW url with previously-seen content is dropped via the
-    # persistent store; a genuinely new page passes
+    # manifest's text_hash; a genuinely new page passes
     rows2 = [("https://b.example/new-dup", None, body, "", "en"),
              ("https://b.example/fresh", None,
               b"<html><body><p>never seen before content here</p></body></html>",
@@ -1235,8 +1313,40 @@ def test_pipeline_dedupe_gate(spark, tmp_path):
     assert r2["docs_processed"] == 2 and r2["duplicates_skipped"] == 1, r2
     assert spark.read.parquet(p.docs_path).count() == 3
     # all 7 urls in the manifest exactly once → nothing re-extracts
-    m2 = spark.read.parquet(p.manifest_path)
+    m2 = p.read_manifest()
     assert m2.count() == 7 and m2.select("url").distinct().count() == 7
+    assert m2.where(F.col("text_hash").isNotNull()).count() == 3
+
+
+def test_dedupe_gate_runs_each_python_stage_once(spark, tmp_path,
+                                                 monkeypatch):
+    """The gated batch's executed plan (`curate=True, dedupe=True`) holds
+    each Python stage once: one extraction `MapInArrow`, one for the
+    repetition kernel. The in-batch winner is a window over the hash, not
+    a groupBy joined back — that self-join ran the stages below it twice."""
+    from rag_pdf_parser_spark.operators.spread import plan_nodes
+
+    pages = synth_pages(spark, 40)
+    checkpointed = []
+    real = type(pages).localCheckpoint
+
+    def capture(self, *a, **kw):
+        out = real(self, *a, **kw)
+        checkpointed.append(self)
+        return out
+
+    monkeypatch.setattr(type(pages), "localCheckpoint", capture)
+    r = ExtractionPipeline(spark, str(tmp_path / "once"), partitions=4).run(
+        pages, run_id="r1", with_chunks=True, curate=True,
+        dedupe=True)
+    assert r["docs_processed"] == 40, r
+    [batch] = checkpointed
+    # the node's own line, not its subtree: "MapInArrow <kernel>(...)"
+    arrow = [n.simpleString(4) for n in plan_nodes(batch)
+             if n.nodeName() == "MapInArrow"]
+    assert len([a for a in arrow if a.startswith("MapInArrow extract(")]) \
+        == 1, arrow
+    assert len(arrow) == 2, arrow
 
 
 def test_aqe_skew_join_splits_hot_partition(spark):
@@ -1347,8 +1457,9 @@ def test_pipeline_curate_stage(spark, tmp_path):
         == ["https://ok.example/a-ok"]
     # the gated docs' hashes were NOT registered (published-winner
     # invariant: a gated doc must not own a seen-hash slot)
-    seen = spark.read.parquet(p.seen_path)
-    assert seen.count() == 1
+    assert [row["url"] for row in p.read_manifest()
+            .where(F.col("text_hash").isNotNull()).collect()] \
+        == ["https://ok.example/a-ok"]
 
     # resume never re-gates: everything is settled in the manifest
     r2 = p.run(pages, run_id="r2", with_chunks=False, curate=True,
@@ -1374,8 +1485,8 @@ def test_pipeline_counts_match_committed_manifest(spark, tmp_path):
     """All three gates plus a kernel failure in one run: the returned
     counts equal the code counts of the batch's committed manifest rows,
     the sinks hold exactly the docs no gate coded (the EMPTY_HTML doc
-    included), `seen_hashes` holds only the OK docs' hashes, and a resume
-    run reports all zeros."""
+    included), the manifest's `text_hash` holds only the OK docs' hashes,
+    and a resume run reports all zeros."""
     import random
 
     import pandas as pd
@@ -1412,8 +1523,7 @@ def test_pipeline_counts_match_committed_manifest(spark, tmp_path):
 
     r = run("r1")
     [batch] = p.committed_batch_ids()
-    m = spark.read.parquet(p.manifest_path) \
-        .where(F.col("batch_id") == batch)
+    m = p.read_manifest().where(F.col("batch_id") == batch)
     codes = {row["failure_code"]: row["count"]
              for row in m.groupBy("failure_code").count().collect()}
     assert r == {
@@ -1444,8 +1554,8 @@ def test_pipeline_counts_match_committed_manifest(spark, tmp_path):
         F.col("failure_code").isNull()).select(
         normalized_text_hash_expr(F.col("extracted_text")).alias("h"))
         .collect()}
-    seen = [row["hash"] for row in
-            spark.read.parquet(p.seen_path).select("hash").collect()]
+    seen = [row["text_hash"] for row in
+            m.where(F.col("text_hash").isNotNull()).collect()]
     assert sorted(seen) == sorted(ok_hashes) and ok_hashes, (seen, ok_hashes)
 
     assert run("r2") == {"run_id": "r2", "docs_processed": 0,
