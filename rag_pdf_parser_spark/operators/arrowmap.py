@@ -75,8 +75,8 @@ def group_rows(fn: Callable[[dict], Iterable], schema: StructType | str):
     return run
 
 
-def salted(df: DataFrame, key: str, n: int | None = None) -> DataFrame:
-    """Spread rows uniformly by `xxhash64(key)` over `n` partitions (default:
-    the session's shuffle partitions)."""
-    n = n or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+def salted(df: DataFrame, key: str) -> DataFrame:
+    """Spread rows uniformly by `xxhash64(key)` over the session's shuffle
+    partitions."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(n, F.xxhash64(key))

@@ -13,10 +13,10 @@ so every downstream operator (explode, enrichments, chunking, dedup, sinks)
 is lane-agnostic.
 
 Scale design:
-- **skew defusal**: upstream `repartition(n, xxhash64(url))` spreads hot
-  hosts uniformly (north_rule; a host's pages share templates and can be
-  enormous) — the extraction cost is per-row, so uniform row spread = uniform
-  work;
+- **skew defusal**: upstream `repartition(xxhash64(url))` at the session's
+  shuffle width spreads hot hosts uniformly (north_rule; a host's pages
+  share templates and can be enormous) — the extraction cost is per-row,
+  so uniform row spread = uniform work;
 - per-row size cap inside the kernel (MAX_HTML_BYTES, OVERSIZE_TRUNCATED
   failure code) bounds worst-case memory per task;
 - everything downstream of this stage is native Spark (no Python).
@@ -51,8 +51,8 @@ def _extract_row(chunks: bool):
     return extract
 
 
-def extract_docs(pages: DataFrame, partitions: int | None = None,
-                 salt: bool = True, chunks: bool = False) -> DataFrame:
+def extract_docs(pages: DataFrame, salt: bool = True,
+                 chunks: bool = False) -> DataFrame:
     """pages(url, html, ...) → docs per DOCS_SCHEMA (blocks nested), or per
     DOCS_FULL_SCHEMA (blocks AND chunks nested) when `chunks` is set.
 
@@ -61,20 +61,15 @@ def extract_docs(pages: DataFrame, partitions: int | None = None,
     and avoids the groupBy(doc_id) shuffle of the standalone grouped-map;
     use `chunk_documents` only when chunking pre-existing block tables.
 
-    `partitions`: salted-repartition width before the UDF; defaults to
-    3× the session's shuffle partitions (UDF stages want finer tasks than
-    pure-JVM stages: stragglers from uneven per-document cost are the
-    dominant tail at high parallelism).
-
-    `salt=False` skips the defusal shuffle — correct when the input is
-    already url-hash bucketed (an Iceberg table bucketed at ingest), which
-    is the production layout at 10^12 rows.
+    The salted repartition (`arrowmap.salted`) spreads the pages over the
+    session's shuffle partitions, the width every salted Arrow stage
+    uses. `salt=False` skips the defusal shuffle — correct when the input
+    is already url-hash bucketed (an Iceberg table bucketed at ingest),
+    which is the production layout at 10^12 rows.
     """
     src = pages.select("url", "html")
     if salt:
-        n = partitions or 3 * int(
-            pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        src = salted(src, "url", n)
+        src = salted(src, "url")
     schema = DOCS_FULL_SCHEMA if chunks else DOCS_SCHEMA
     return src.mapInArrow(map_rows(_extract_row(chunks), schema), schema)
 

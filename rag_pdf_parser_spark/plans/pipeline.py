@@ -87,11 +87,9 @@ def _run_counts(run_id: str, counts: dict) -> dict:
 
 
 class ExtractionPipeline:
-    def __init__(self, spark: SparkSession, out_dir: str,
-                 partitions: int | None = None) -> None:
+    def __init__(self, spark: SparkSession, out_dir: str) -> None:
         self.spark = spark
         self.out_dir = out_dir
-        self.partitions = partitions
         self.manifest_path = os.path.join(out_dir, "manifest")
         self.docs_path = os.path.join(out_dir, "docs")
         self.blocks_path = os.path.join(out_dir, "blocks")
@@ -219,7 +217,7 @@ class ExtractionPipeline:
                 todo = flagged.where(~F.col("url_blocked")) \
                     .drop("url_blocked", "block_reason")
             # fused extract(+chunk): one Arrow stage, no chunking shuffle
-            docs = extract_docs(todo, self.partitions, chunks=with_chunks)
+            docs = extract_docs(todo, chunks=with_chunks)
 
             # manifest rows ride the same job: spark_partition_id() is
             # stamped AFTER the salted repartition inside extract_docs, so
@@ -331,13 +329,22 @@ class ExtractionPipeline:
 
     def sink_format(self) -> str | None:
         """The format of the content sinks' part files, by extension
-        (``parquet``, ``json``); None before the first write. Orphan
-        batches count: a reader lists them before pruning."""
-        found = {f.rsplit(".", 1)[-1]
-                 for sink in (self.docs_path, self.blocks_path,
-                              self.chunks_path)
-                 for _, _, files in os.walk(sink)
-                 for f in files if f.startswith("part-")}
+        (``parquet``, ``json``); None before the first write. One run
+        writes each ``batch_id=`` dir in one format, so one part file per
+        batch dir tells its format. Orphan batches count: a reader lists
+        them before pruning."""
+        found = set()
+        for sink in (self.docs_path, self.blocks_path, self.chunks_path):
+            if not os.path.isdir(sink):
+                continue
+            for d in os.listdir(sink):
+                if not d.startswith("batch_id="):
+                    continue
+                with os.scandir(os.path.join(sink, d)) as files:
+                    part = next((f.name for f in files
+                                 if f.name.startswith("part-")), None)
+                if part is not None:
+                    found.add(part.rsplit(".", 1)[-1])
         if len(found) > 1:
             raise ValueError(
                 f"{self.out_dir} mixes sink formats {sorted(found)}")
@@ -473,8 +480,12 @@ class ExtractionPipeline:
     # -- lineage metrics --------------------------------------------------------
     def manifest_summary(self) -> DataFrame:
         """Per-(run, partition) lineage rollup — the reference's scheduler
-        stats (scheduler.py:278-292) as a groupBy."""
-        m = self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.manifest_path)
+        stats (scheduler.py:278-292) as a groupBy. Reads the manifest
+        through `read_manifest` (so after its crash recovery); empty
+        before the first commit."""
+        m = self.read_manifest()
+        if m is None:
+            m = self.spark.createDataFrame([], MANIFEST_SCHEMA)
         totals = m.groupBy("run_id", "partition_id").agg(
             F.count("*").alias("urls_processed"),
             F.sum("bytes_in").alias("bytes_in"),

@@ -36,6 +36,21 @@ def repetition_stages(df) -> int:
                and "repetition_row" in n.toString() for n in plan_nodes(df))
 
 
+def arrow_stages(df) -> int:
+    """MapInArrow nodes in `df`'s executed plan; raises if the plan holds
+    a pandas Python stage."""
+    names = [n.nodeName() for n in plan_nodes(df)]
+    assert not {"MapInPandas", "FlatMapGroupsInPandas"} & set(names), names
+    return names.count("MapInArrow")
+
+
+def shuffles(df) -> list:
+    """The shuffle exchange nodes of `df`'s executed plan."""
+    exchange = df.sparkSession._jvm.Class.forName(
+        "org.apache.spark.sql.execution.exchange.ShuffleExchangeExec")
+    return [n for n in plan_nodes(df) if exchange.isInstance(n)]
+
+
 def plan_of(df) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
@@ -74,26 +89,38 @@ def main() -> None:
         ["HashAggregate", "partial_min"],
     ))
 
-    # 4. extraction: exactly one Python stage
+    # 4. extraction: exactly one Python stage behind one salted exchange
+    # at the session's shuffle width
     pages = synth_pages(spark, 50)
-    p = plan_of(extract_docs(pages))
+    ext = extract_docs(pages)
+    assert arrow_stages(ext) == 1, "extraction must be ONE Python stage"
+    exchanges = shuffles(ext)
+    assert len(exchanges) == 1, "extraction must shuffle once (the salt)"
+    part = exchanges[0].outputPartitioning()
+    xxhash = spark._jvm.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.XxHash64")
+    assert part.numPartitions() == int(
+        spark.conf.get("spark.sql.shuffle.partitions")), \
+        "extraction spreads to the session's shuffle width"
+    assert part.expressions().size() == 1 \
+        and xxhash.isInstance(part.expressions().apply(0)), \
+        "extraction salts by xxhash64(url)"
     sections.append((
         "extraction: single Arrow-native Python stage after salted exchange",
-        p,
-        ["MapInArrow", "hashpartitioning(xxhash64(url"],
+        plan_of(ext), [],
+        "Asserted on plan nodes: one MapInArrow, no pandas node, and one "
+        "shuffle exchange hash-partitioned on xxhash64(url) at "
+        "spark.sql.shuffle.partitions.",
     ))
-    assert p.count("MapInArrow (") == 1, "extraction must be ONE Python stage"
-    assert p.count("MapInPandas (") == 0, "extraction is mapInArrow now (r7)"
 
     # 4b. mixed HTML/PDF corpus: the PDF lane rides the SAME Arrow stage
-    mixed = plan_of(E.q_extract_pdf_mixed(spark, SF))
+    mixed = E.q_extract_pdf_mixed(spark, SF)
+    assert arrow_stages(mixed) == 1, "mixed: ONE extract stage"
     sections.append((
         "mixed HTML/PDF extraction: per-row kernel choice in one Arrow stage",
-        mixed,
-        ["MapInArrow"],
+        plan_of(mixed), [],
+        "Asserted on plan nodes: one MapInArrow, no pandas node.",
     ))
-    assert mixed.count("MapInArrow (") == 1, "mixed: ONE extract stage"
-    assert mixed.count("MapInPandas (") == 0, "mixed: no pandas boundary"
 
     # 5. simhash: fingerprint pass must be shuffle-free (VERDICT r1 #1)
     from rag_pdf_parser_spark.operators.dedup import simhash
@@ -152,13 +179,14 @@ def main() -> None:
     # 9. fused extract, salt=False: NO Exchange anywhere (pre-bucketed
     # input goes straight into the Arrow stage — r2 verdict #2)
     unsalted = extract_docs(pages, salt=False, chunks=True)
-    unsalted_exec = unsalted._jdf.queryExecution().executedPlan().toString()
+    assert not has_exchange(unsalted), "salt=False must not shuffle"
+    assert arrow_stages(unsalted) == 1, "salt=False: ONE extract stage"
     sections.append((
         "fused extract+chunk, salt=False: zero Exchange",
-        plan_of(unsalted),
-        ["MapInArrow"],
+        plan_of(unsalted), [],
+        "Asserted on plan nodes: no Exchange, one MapInArrow, no pandas "
+        "node.",
     ))
-    assert "Exchange" not in unsalted_exec, "salt=False must not shuffle"
 
     # 10. webtext quality gate: pure projection over the scan — zero
     # Exchange, all expressions in one stage

@@ -19,7 +19,7 @@ def test_resume_no_double_processing(spark, tmp_path):
     half = pages.limit(40)
 
     out1 = str(tmp_path / "interrupted")
-    p1 = ExtractionPipeline(spark, out1, partitions=4)
+    p1 = ExtractionPipeline(spark, out1)
     r1 = p1.run(half, run_id="r1", with_chunks=False)
     assert r1["docs_processed"] == 40
 
@@ -31,7 +31,7 @@ def test_resume_no_double_processing(spark, tmp_path):
     assert manifest.select("url").distinct().count() == 80  # no url twice
 
     out2 = str(tmp_path / "clean")
-    p2 = ExtractionPipeline(spark, out2, partitions=4)
+    p2 = ExtractionPipeline(spark, out2)
     p2.run(pages, run_id="single", with_chunks=False)
 
     a = spark.read.parquet(p1.docs_path).select("url", "doc_id", "extracted_text")
@@ -48,7 +48,7 @@ def test_crash_between_sinks_and_manifest_commit(spark, tmp_path):
     pages = synth_pages(spark, 60)
 
     out = str(tmp_path / "crashy")
-    p = ExtractionPipeline(spark, out, partitions=4)
+    p = ExtractionPipeline(spark, out)
 
     real_commit = p._commit
 
@@ -77,7 +77,7 @@ def test_crash_between_sinks_and_manifest_commit(spark, tmp_path):
     assert chunks.count() == chunks.select("chunk_id").distinct().count()
 
     # committed output == an uninterrupted clean run, byte-for-byte
-    clean = ExtractionPipeline(spark, str(tmp_path / "clean"), partitions=4)
+    clean = ExtractionPipeline(spark, str(tmp_path / "clean"))
     clean.run(pages, run_id="single", with_chunks=True)
     cols = ["url", "doc_id", "extracted_text"]
     a, b = docs.select(*cols), clean.read_docs().select(*cols)
@@ -106,7 +106,7 @@ def test_pipeline_json_sinks_with_commit_layout(spark, tmp_path):
     batch_id=<token> dirs, committed readers pruning as for parquet. The
     readers take the format of the sink files."""
     pages = synth_pages(spark, 20)
-    p = ExtractionPipeline(spark, str(tmp_path / "j"), partitions=2)
+    p = ExtractionPipeline(spark, str(tmp_path / "j"))
     r = p.run(pages, run_id="r1", with_chunks=True, fmt="json")
     assert r["docs_processed"] == 20
     assert p.sink_format() == "json"
@@ -133,7 +133,7 @@ def test_pipeline_keeps_one_sink_format(spark, tmp_path):
 
     pages = synth_pages(spark, 20)
     out = str(tmp_path / "fmt")
-    p = ExtractionPipeline(spark, out, partitions=2)
+    p = ExtractionPipeline(spark, out)
     p.run(pages.limit(10), run_id="r1", with_chunks=True, fmt="json")
     ids = p.committed_batch_ids()
 
@@ -165,6 +165,20 @@ def test_pipeline_keeps_one_sink_format(spark, tmp_path):
     assert p.read_chunks().count() == n_chunks
 
 
+def test_sink_format_refuses_mixed_batches(spark, tmp_path):
+    """`sink_format` reads one part file per batch dir, and two batches in
+    two formats still raise, across sinks too."""
+    p = ExtractionPipeline(spark, str(tmp_path / "mix"))
+    for sink, batch, ext in ((p.docs_path, "a", "json"),
+                             (p.blocks_path, "b", "parquet")):
+        d = os.path.join(sink, f"batch_id={batch}")
+        os.makedirs(d)
+        for i in range(3):
+            open(os.path.join(d, f"part-0000{i}.{ext}"), "w").close()
+    with pytest.raises(ValueError, match="mixes sink formats"):
+        p.sink_format()
+
+
 def test_resume_raises_on_an_unreadable_manifest(spark, tmp_path):
     """A manifest Spark cannot read (here a stray non-`batch_id=` copy of a
     batch inside `manifest/`) fails the run. Read as "no resume state" it
@@ -172,7 +186,7 @@ def test_resume_raises_on_an_unreadable_manifest(spark, tmp_path):
     import shutil
 
     pages = synth_pages(spark, 20)
-    p = ExtractionPipeline(spark, str(tmp_path / "stray"), partitions=2)
+    p = ExtractionPipeline(spark, str(tmp_path / "stray"))
     p.run(pages, run_id="r1", with_chunks=False)
     ids = p.committed_batch_ids()
     shutil.copytree(os.path.join(p.manifest_path, f"batch_id={ids[0]}"),
@@ -233,7 +247,7 @@ def test_pipeline_url_gate_blocks_before_extraction(spark, tmp_path):
         schema=PAGES_SCHEMA)
     blocked = spark.createDataFrame([("spam.example",)], "host string")
 
-    p = ExtractionPipeline(spark, str(tmp_path / "ug"), partitions=2)
+    p = ExtractionPipeline(spark, str(tmp_path / "ug"))
     r = p.run(pages, run_id="r1", with_chunks=False, url_blocklist=blocked)
     assert r["urls_blocked"] == 3 and r["docs_processed"] == 4, r
 
@@ -255,13 +269,39 @@ def test_pipeline_url_gate_blocks_before_extraction(spark, tmp_path):
 def test_manifest_summary_lineage(spark, tmp_path):
     pages = synth_pages(spark, 60)
     out = str(tmp_path / "lineage")
-    p = ExtractionPipeline(spark, out, partitions=4)
+    p = ExtractionPipeline(spark, out)
     p.run(pages, run_id="r1", with_chunks=False)
     s = p.manifest_summary().collect()
     assert sum(r["urls_processed"] for r in s) == 60
     assert all(r["bytes_in"] > 0 for r in s if r["urls_processed"] > 0)
     codes = {k for r in s for k in r["failure_codes"]}
     assert "OK" in codes
+
+
+def test_manifest_summary_recovers_a_half_swapped_manifest(spark, tmp_path):
+    """`manifest_summary` reads through the manifest's crash recovery: after
+    a compaction died between its two swap renames (manifest dir in the
+    trash), the summary equals the one taken before. Before the first
+    commit it is empty."""
+    import shutil
+
+    p = ExtractionPipeline(spark, str(tmp_path / "sum"))
+    assert p.manifest_summary().collect() == []
+    pages = synth_pages(spark, 40)
+    p.run(pages.limit(20), run_id="r1", with_chunks=False)
+    p.run(pages, run_id="r2", with_chunks=False)
+    assert len(p.committed_batch_ids()) == 2
+
+    def summary():
+        return sorted((r["run_id"], r["partition_id"], r["urls_processed"],
+                       r["bytes_in"], r["bytes_out"],
+                       sorted(r["failure_codes"].items()))
+                      for r in p.manifest_summary().collect())
+
+    before = summary()
+    shutil.move(p.manifest_path, p.manifest_path + ".__compact_trash")
+    assert summary() == before
+    assert sum(row[2] for row in before) == 40
 
 
 def test_multimodal_feature_plumbing(spark):
@@ -475,22 +515,23 @@ class TestAsofJoin:
 
 def test_streaming_extraction_matches_batch(spark, tmp_path):
     """The north-star pipeline as a checkpointed stream: page files →
-    micro-batch extraction → parquet sink. Byte identity per url with the
-    batch path (and transitively with the pure-Python kernel goldens)."""
+    one `ExtractionPipeline.run` per micro-batch. The committed docs are
+    byte-identical per url with the batch path (and transitively with the
+    pure-Python kernel goldens)."""
     from rag_pdf_parser_spark.operators.extract import extract_docs
-    from rag_pdf_parser_spark.sources.pages import synth_pages
     from rag_pdf_parser_spark.streaming.pages import run_extraction_stream
 
     src = str(tmp_path / "pages_in")
     out = str(tmp_path / "docs_out")
-    ckpt = str(tmp_path / "ckpt")
     pages = synth_pages(spark, 120)
     # several files → several micro-batches at maxFilesPerTrigger=8
     pages.repartition(12).write.parquet(src)
 
-    run_extraction_stream(spark, src, out, ckpt)
+    run_extraction_stream(spark, src, out, str(tmp_path / "ckpt"))
+    p = ExtractionPipeline(spark, out)
+    assert len(p.committed_batch_ids()) == 2
     got = {r["url"]: (r["doc_id"], r["extracted_text"])
-           for r in spark.read.parquet(out).collect()}
+           for r in p.read_docs().collect()}
     exp = {r["url"]: (r["doc_id"], r["extracted_text"])
            for r in extract_docs(pages).collect()}
     assert got == exp
@@ -499,10 +540,36 @@ def test_streaming_extraction_matches_batch(spark, tmp_path):
     # rows are not reprocessed (exactly-once via checkpoint)
     more = synth_pages(spark, 150).where(~F.col("url").isin(list(got)))
     more.repartition(3).write.mode("append").parquet(src)
-    run_extraction_stream(spark, src, out, ckpt)
-    after = spark.read.parquet(out)
+    run_extraction_stream(spark, src, out, str(tmp_path / "ckpt"))
+    after = p.read_docs()
     assert after.count() == 150
     assert after.select("url").distinct().count() == 150
+
+
+def test_streaming_extraction_replay_commits_nothing(spark, tmp_path):
+    """A fresh checkpoint replays every micro-batch over the same files:
+    the manifest resume finds each url committed, so the rerun commits no
+    batch, the committed docs are unchanged, and the manifest holds each
+    url once."""
+    from rag_pdf_parser_spark.streaming.pages import run_extraction_stream
+
+    src = str(tmp_path / "pages_in")
+    out = str(tmp_path / "docs_out")
+    synth_pages(spark, 60).repartition(10).write.parquet(src)
+
+    run_extraction_stream(spark, src, out, str(tmp_path / "ckpt1"))
+    p = ExtractionPipeline(spark, out)
+    ids = p.committed_batch_ids()
+    cols = ["url", "doc_id", "extracted_text"]
+    before = sorted(tuple(r) for r in p.read_docs().select(*cols).collect())
+    assert len(before) == 60
+
+    run_extraction_stream(spark, src, out, str(tmp_path / "ckpt2"))
+    assert p.committed_batch_ids() == ids
+    assert sorted(tuple(r) for r in
+                  p.read_docs().select(*cols).collect()) == before
+    m = p.read_manifest()
+    assert m.count() == m.select("url").distinct().count() == 60
 
 
 def test_streaming_curation_gates_match_batch(spark, tmp_path):
@@ -851,7 +918,7 @@ def test_pipeline_recovers_half_swapped_dedup_log(spark, tmp_path):
     import shutil as sh
 
     out = str(tmp_path / "rec")
-    pipe = ExtractionPipeline(spark, out, partitions=2)
+    pipe = ExtractionPipeline(spark, out)
     pipe.run(_same_body_pages(spark, "https://a.example/1"), run_id="r1",
              with_chunks=False, dedupe=True)
     assert pipe.read_manifest().where(
@@ -873,7 +940,7 @@ def test_dedup_log_commits_with_the_batch(spark, tmp_path):
     a run that dies right after its commit still flags, on the next run,
     a same-content page under a new url."""
     out = str(tmp_path / "seam")
-    pipe = ExtractionPipeline(spark, out, partitions=2)
+    pipe = ExtractionPipeline(spark, out)
     real_commit = pipe._commit
 
     def commit_then_die(staging, batch_id):
@@ -886,7 +953,7 @@ def test_dedup_log_commits_with_the_batch(spark, tmp_path):
                  run_id="r1", with_chunks=False, dedupe=True)
     assert len(pipe.committed_batch_ids()) == 1
 
-    r = ExtractionPipeline(spark, out, partitions=2).run(
+    r = ExtractionPipeline(spark, out).run(
         _same_body_pages(spark, "https://b.example/2"), run_id="r2",
         with_chunks=False, dedupe=True)
     assert r["duplicates_skipped"] == 1, r
@@ -901,7 +968,7 @@ def test_compact_output_keeps_the_dedup_log(spark, tmp_path):
     from rag_pdf_parser_spark.plans.maintenance import compact_output
 
     out = str(tmp_path / "cdl")
-    pipe = ExtractionPipeline(spark, out, partitions=2)
+    pipe = ExtractionPipeline(spark, out)
     pipe.run(_same_body_pages(spark, "https://a.example/1"), run_id="r1",
              with_chunks=False, dedupe=True)
     pipe.run(synth_pages(spark, 6), run_id="r2", with_chunks=False,
@@ -934,7 +1001,7 @@ def test_dedupe_keeps_the_out_dir_to_four_tables(spark, tmp_path):
     anything."""
     blocked = spark.createDataFrame([("nowhere.example",)], "host string")
     out = str(tmp_path / "layout")
-    r = ExtractionPipeline(spark, out, partitions=2).run(
+    r = ExtractionPipeline(spark, out).run(
         synth_pages(spark, 8), run_id="r1", with_chunks=True,
         url_blocklist=blocked, curate=True, dedupe=True)
     assert r["docs_processed"] == 8, r
@@ -945,7 +1012,7 @@ def test_dedupe_keeps_the_out_dir_to_four_tables(spark, tmp_path):
     legacy = str(tmp_path / "legacy")
     os.makedirs(os.path.join(legacy, "seen_hashes"))
     with pytest.raises(ValueError, match="seen_hashes"):
-        ExtractionPipeline(spark, legacy, partitions=2).run(
+        ExtractionPipeline(spark, legacy).run(
             synth_pages(spark, 4), run_id="r1", with_chunks=False,
             dedupe=True)
     assert os.listdir(legacy) == ["seen_hashes"]
@@ -992,7 +1059,7 @@ def test_writer_lease_mutual_exclusion(spark, tmp_path):
 
     out = str(tmp_path / "lease")
     pages = synth_pages(spark, 12)
-    p = ExtractionPipeline(spark, out, partitions=2)
+    p = ExtractionPipeline(spark, out)
 
     # a held lease blocks a new run — and nothing gets committed
     holder = WriterLease(out).acquire()
@@ -1041,8 +1108,8 @@ def test_two_interleaved_runs_commit_each_url_once(spark, tmp_path):
 
     out = str(tmp_path / "interleave")
     pages = synth_pages(spark, 10)
-    p1 = ExtractionPipeline(spark, out, partitions=2)
-    p2 = ExtractionPipeline(spark, out, partitions=2)
+    p1 = ExtractionPipeline(spark, out)
+    p2 = ExtractionPipeline(spark, out)
     real_commit = p1._commit
     b_attempted = {}
 
@@ -1073,7 +1140,7 @@ def test_compact_output_folds_batches(spark, tmp_path):
 
     out = str(tmp_path / "co")
     pages = synth_pages(spark, 30)
-    p = ExtractionPipeline(spark, out, partitions=2)
+    p = ExtractionPipeline(spark, out)
     p.run(pages.limit(15), run_id="r1", with_chunks=True)
     p.run(pages, run_id="r2", with_chunks=True)
     assert len(p.committed_batch_ids()) == 2
@@ -1131,7 +1198,7 @@ def test_vacuum_spares_young_staging(spark, tmp_path):
     in-flight run (between manifest write and commit rename) — only ones
     older than the age threshold."""
     out = str(tmp_path / "v")
-    p = ExtractionPipeline(spark, out, partitions=2)
+    p = ExtractionPipeline(spark, out)
     p.run(synth_pages(spark, 5), run_id="r1", with_chunks=False)
     staging_root = os.path.join(out, "_staging")
     young = os.path.join(staging_root, "inflight-run")
@@ -1258,7 +1325,7 @@ def test_pipeline_dedupe_never_gates_failures(spark, tmp_path):
     pages = spark.createDataFrame(
         pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"]),
         schema=PAGES_SCHEMA)
-    p = ExtractionPipeline(spark, str(tmp_path / "f"), partitions=2)
+    p = ExtractionPipeline(spark, str(tmp_path / "f"))
     r = p.run(pages, run_id="r1", with_chunks=False, dedupe=True)
     assert r["duplicates_skipped"] == 0, r
     m = p.read_manifest()
@@ -1287,7 +1354,7 @@ def test_pipeline_dedupe_gate(spark, tmp_path):
 
     out = str(tmp_path / "dd")
     from rag_pdf_parser_spark.plans.pipeline import ExtractionPipeline
-    p = ExtractionPipeline(spark, out, partitions=4)
+    p = ExtractionPipeline(spark, out)
     r1 = p.run(pages1, run_id="r1", with_chunks=False, dedupe=True)
     # 3 copies of `body` → 1 kept; 2 copies of `other` → 1 kept
     assert r1["docs_processed"] == 5 and r1["duplicates_skipped"] == 3, r1
@@ -1336,7 +1403,7 @@ def test_dedupe_gate_runs_each_python_stage_once(spark, tmp_path,
         return out
 
     monkeypatch.setattr(type(pages), "localCheckpoint", capture)
-    r = ExtractionPipeline(spark, str(tmp_path / "once"), partitions=4).run(
+    r = ExtractionPipeline(spark, str(tmp_path / "once")).run(
         pages, run_id="r1", with_chunks=True, curate=True,
         dedupe=True)
     assert r["docs_processed"] == 40, r
@@ -1427,7 +1494,7 @@ def test_pipeline_curate_stage(spark, tmp_path):
                                     "lang"]),
         schema=PAGES_SCHEMA)
 
-    p = ExtractionPipeline(spark, str(tmp_path / "cur"), partitions=2)
+    p = ExtractionPipeline(spark, str(tmp_path / "cur"))
     r = p.run(pages, run_id="r1", with_chunks=False, curate=True,
               dedupe=True)
     assert r["docs_processed"] == 5
@@ -1469,10 +1536,10 @@ def test_pipeline_curate_stage(spark, tmp_path):
 
     # committed output ≡ curate_corpus over the same extracted input
     # (no-dedup variants on both sides; url as the doc key)
-    p2 = ExtractionPipeline(spark, str(tmp_path / "cur2"), partitions=2)
+    p2 = ExtractionPipeline(spark, str(tmp_path / "cur2"))
     p2.run(pages, run_id="r1", with_chunks=False, curate=True)
     got = sorted(row["url"] for row in p2.read_docs().select("url").collect())
-    docs = extract_docs(pages, partitions=2) \
+    docs = extract_docs(pages) \
         .select("url", F.col("extracted_text").alias("text"))
     want = sorted(row["url"] for row in
                   curate_corpus(docs, id_col="url", text_col="text",
@@ -1515,7 +1582,7 @@ def test_pipeline_counts_match_committed_manifest(spark, tmp_path):
                      columns=["url", "warc_ts", "html", "text", "lang"]),
         schema=PAGES_SCHEMA)
     blocked = spark.createDataFrame([("spam.example",)], "host string")
-    p = ExtractionPipeline(spark, str(tmp_path / "all"), partitions=2)
+    p = ExtractionPipeline(spark, str(tmp_path / "all"))
 
     def run(run_id):
         return p.run(pages, run_id=run_id, with_chunks=True,

@@ -107,9 +107,18 @@ def test_chunking_grouped_map_equals_kernel(spark, pages_df, golden_docs):
 
 
 def test_determinism_across_partitionings(spark, pages_df):
-    """SURVEY §5.5: same results regardless of parallelism/partitioning."""
-    a = extract_docs(pages_df, partitions=2).select("url", "doc_id", "extracted_text")
-    b = extract_docs(pages_df, partitions=11).select("url", "doc_id", "extracted_text")
+    """SURVEY §5.5: same results regardless of parallelism/partitioning.
+    The salted stage takes the session's shuffle width when it is built."""
+    key = "spark.sql.shuffle.partitions"
+    width = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "2")
+        a = extract_docs(pages_df).select("url", "doc_id", "extracted_text")
+        spark.conf.set(key, "11")
+        b = extract_docs(pages_df).select("url", "doc_id", "extracted_text")
+    finally:
+        spark.conf.set(key, width)
+    assert a.rdd.getNumPartitions() == 2 and b.rdd.getNumPartitions() == 11
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
 
@@ -258,6 +267,36 @@ def test_python_stages_cross_one_arrow_boundary(spark):
         names = {n.nodeName() for n in plan_nodes(df)}
         assert expected in names, (name, names)
         assert not names & {"MapInPandas", "FlatMapGroupsInPandas"}, (name, names)
+
+
+def test_extraction_spreads_to_the_session_width(spark, pages_df):
+    """The extraction plan holds one Arrow map behind one hash exchange on
+    `xxhash64(url)`, and that exchange is as wide as the session's shuffle
+    partitions: the salted stages share one width rule."""
+    from rag_pdf_parser_spark.operators.spread import plan_nodes
+
+    def cls(name):
+        return spark._jvm.Class.forName("org.apache.spark.sql." + name)
+
+    shuffle = cls("execution.exchange.ShuffleExchangeExec")
+    hashing = cls("catalyst.plans.physical.HashPartitioning")
+    xxhash = cls("catalyst.expressions.XxHash64")
+    attr = cls("catalyst.expressions.AttributeReference")
+
+    nodes = list(plan_nodes(extract_docs(pages_df)))
+    maps = [n for n in nodes if n.nodeName() == "MapInArrow"]
+    exchanges = [n for n in nodes if shuffle.isInstance(n)]
+    assert len(maps) == 1 and len(exchanges) == 1, [n.nodeName() for n in nodes]
+    part = exchanges[0].outputPartitioning()
+    assert hashing.isInstance(part)
+    exprs = [part.expressions().apply(i)
+             for i in range(part.expressions().size())]
+    assert len(exprs) == 1 and xxhash.isInstance(exprs[0])
+    keys = exprs[0].children()
+    assert keys.size() == 1 and attr.isInstance(keys.apply(0))
+    assert keys.apply(0).name() == "url"
+    assert part.numPartitions() == int(
+        spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def test_session_driver_memory_fits_the_host(spark):
