@@ -250,19 +250,6 @@ def url_pattern_flag_expr(url: Column) -> Column:
     return F.lower(url).rlike(combined)
 
 
-def registrable_domain_expr(host: Column) -> Column:
-    """Last two labels of the host ('a.b.example.com' → 'example.com')
-    — the fixed-depth approximation of the registrable domain. Every
-    `*.co.uk` site collapses into ONE 'co.uk' key under it; when per-ccTLD
-    exactness matters (any non-US corpus) use `with_registrable_domain`,
-    the public-suffix-list longest-match (r5 verdict #2)."""
-    hl = F.split(host, r"\.")
-    n = F.size(hl)
-    return F.array_join(
-        F.slice(hl, F.greatest(n - 1, F.lit(1)), F.lit(2)),
-        ".")
-
-
 def psl_table(spark) -> DataFrame:
     """The packaged PSL snapshot as a one-column DataFrame (`suffix`) —
     the broadcast side of `with_registrable_domain`. Swap in the full
@@ -365,19 +352,18 @@ def with_registrable_domain(docs: DataFrame, host_col: str,
         "__pl", *key_cols.values(), *[m for m, _, _, _ in probes])
 
 
-def domain_stats(docs: DataFrame, psl: DataFrame | None = None) -> DataFrame:
+def domain_stats(docs: DataFrame, psl: DataFrame) -> DataFrame:
     """Per-domain corpus triage (the C4 §2.2 / RefinedWeb analysis table)
     over the `url` and `text` columns: one row per registrable domain
     with document count, total text chars, Gopher-keep count, and
     bad-URL-pattern count — the table a curation
     engineer reads to decide which domains to block next.
 
-    `psl` (see `psl_table`) switches the grouping key to the
-    public-suffix-list longest-match: without it every `*.co.uk` site
-    collapses into ONE 'co.uk' row and the triage table misattributes
-    entire ccTLD namespaces (r5 verdict #2) — pass it for any non-US
-    corpus. The PSL probes are per-depth broadcast joins (zero extra
-    corpus shuffle); the fixed 2-label cut remains the psl=None fallback.
+    The grouping key is the public-suffix-list longest-match over `psl`
+    (see `psl_table`), so 'a.example.co.uk' and 'b.example.co.uk' share
+    the row 'example.co.uk' and no ccTLD namespace collapses into one
+    'co.uk' row (r5 verdict #2). The PSL probes are per-depth broadcast
+    joins (zero extra corpus shuffle).
 
     Scale shape: the gate flags are pure projections; ONE shuffle on the
     domain key (bounded cardinality ≪ corpus, partial-aggregated
@@ -391,16 +377,10 @@ def domain_stats(docs: DataFrame, psl: DataFrame | None = None) -> DataFrame:
 
     safe_text = F.coalesce(F.col("text"), F.lit(""))
     pat = F.coalesce(url_pattern_flag_expr(F.col("url")), F.lit(False))
-    base = docs
-    if psl is not None:
-        base = with_registrable_domain(
-            base.withColumn("__host", url_host_expr(F.col("url"))),
-            "__host", psl, out_col="__dom")
-        dom = F.coalesce(F.col("__dom"), F.lit(""))
-    else:
-        dom = F.coalesce(
-            registrable_domain_expr(url_host_expr(F.col("url"))),
-            F.lit(""))
+    base = with_registrable_domain(
+        docs.withColumn("__host", url_host_expr(F.col("url"))),
+        "__host", psl, out_col="__dom")
+    dom = F.coalesce(F.col("__dom"), F.lit(""))
     s1 = base.select(
         dom.alias("domain"),
         safe_text.alias("__t"),

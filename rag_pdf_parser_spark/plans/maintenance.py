@@ -114,8 +114,7 @@ def compact_output(spark: SparkSession, out_dir: str) -> dict:
     the swap and exactly-equal rows after it, the dedup log (`text_hash`)
     included: the manifest is read with MANIFEST_SCHEMA, so batches
     written before the column existed read it as NULL instead of a
-    schema inferred from one file dropping it. The base batch is written
-    in the sinks' own format (`ExtractionPipeline.sink_format`). Returns
+    schema inferred from one file dropping it. Returns
     {"batches_before", "batches_after", "removed_dirs"}.
     """
     from .pipeline import ExtractionPipeline
@@ -127,15 +126,13 @@ def compact_output(spark: SparkSession, out_dir: str) -> dict:
             return {"batches_before": len(ids), "batches_after": len(ids),
                     "removed_dirs": 0}
         base = f"base-{uuid.uuid4().hex[:12]}"
-        fmt = p.sink_format() or "parquet"
         for sink in (p.docs_path, p.blocks_path, p.chunks_path):
             if not os.path.isdir(sink):
                 continue
-            rows = (spark.read.format(fmt).load(sink)
+            rows = (spark.read.parquet(sink)
                     .where(F.col("batch_id").isin(ids))
                     .withColumn("batch_id", F.lit(base)))
-            (rows.write.mode("append").partitionBy("batch_id")
-             .format(fmt).save(sink))
+            rows.write.mode("append").partitionBy("batch_id").parquet(sink)
         manifest = (p.read_manifest()
                     .where(F.col("batch_id").isin(ids))
                     .withColumn("batch_id", F.lit(base)))

@@ -12,6 +12,12 @@ Spark-first restatement of the reference's CLI lifecycle (SURVEY §3.1):
               → docs + exploded blocks + chunks           [S3/W1/W6]
               → parquet sinks + manifest append           [K1-K4, K7]
 
+The sinks are parquet, one table format per out_dir. The reference's JSONL
+outputs (K2/K3, writer.py:110-165) are a write of the committed view:
+`read_blocks().write.json(dest)` and `read_chunks().write.json(dest)`,
+where Spark's JSON writer omits null fields, so no chunk line carries the
+always-null `embedding` (K3's exclusion).
+
 Each gate writes one nullable `__code` column (URL_BLOCKED rows leave
 before extraction and go straight into the manifest batch): the sinks take
 the rows whose `__code` is NULL, and the manifest records
@@ -59,7 +65,7 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import normalized_text_hash_expr
@@ -126,18 +132,10 @@ class ExtractionPipeline:
 
     # -- run --------------------------------------------------------------------
     def run(self, pages: DataFrame, run_id: str = "run0",
-            with_chunks: bool = True, fmt: str = "parquet",
-            dedupe: bool = False,
+            with_chunks: bool = True, dedupe: bool = False,
             url_blocklist: DataFrame | None = None,
             curate: bool = False) -> dict:
-        """`fmt='json'` mirrors the reference's JSONL sinks (K2/K3,
-        writer.py:110-165) — same rows, line-delimited; parquet is the
-        scale default (columnar, prunable). An out_dir holds one format:
-        a run whose `fmt` differs from the sink files already there raises
-        before writing anything, and the readers and `compact_output` use
-        the format of the files (`sink_format`).
-
-        `dedupe=True` wires in the reference's dedup gate (F7/J2,
+        """`dedupe=True` wires in the reference's dedup gate (F7/J2,
         main.py:43-46): documents whose normalized-text hash a committed
         manifest row already holds in `text_hash` (previous runs) or
         that a lexicographically-smaller url in THIS run also produced
@@ -169,6 +167,12 @@ class ExtractionPipeline:
         are computed in the one tokenize-once projection pass over the
         freshly-extracted batch — zero extra scans or shuffles.
 
+        `pages` must hold each url once: a batch that repeats a url
+        raises ValueError before the commit, since `pending` anti-joins
+        earlier batches only and both copies would commit. The check is a
+        window over url inside the staging write's own job; the raising
+        run leaves only the orphan sink rows a crash leaves.
+
         SINGLE WRITER, enforced: the whole run holds the out_dir writer
         lease (plans/lease.py — atomic mkdir, stale-age takeover after
         `STALE_SEC`, owner re-validated at the commit point). A
@@ -184,11 +188,6 @@ class ExtractionPipeline:
         probe of `pending` (two jobs: the manifest broadcast and a limit-1
         scan) finds it empty and the run stops there."""
         with WriterLease(self.out_dir) as lease:
-            held = self.sink_format()
-            if held not in (None, fmt):
-                raise ValueError(
-                    f"{self.out_dir} holds {held} sink files; a run with "
-                    f"fmt={fmt!r} would mix two formats in one table")
             if dedupe and os.path.exists(
                     os.path.join(self.out_dir, "seen_hashes")):
                 raise ValueError(
@@ -250,18 +249,18 @@ class ExtractionPipeline:
             # partition + manifest-dir commit log; see module docstring)
             (fresh.drop("blocks", "chunks")
              .write.mode("append").partitionBy("batch_id")
-             .format(fmt).save(self.docs_path))
+             .parquet(self.docs_path))
 
             blocks = explode_blocks(fresh.drop("chunks", "batch_id")) \
                 .withColumn("batch_id", F.lit(batch_id))
             (blocks.write.mode("append").partitionBy("batch_id")
-             .format(fmt).save(self.blocks_path))
+             .parquet(self.blocks_path))
 
             if with_chunks:
                 (explode_chunks(fresh.drop("batch_id"))
                  .withColumn("batch_id", F.lit(batch_id))
                  .write.mode("append").partitionBy("batch_id")
-                 .format(fmt).save(self.chunks_path))
+                 .parquet(self.chunks_path))
 
             manifest = docs_m.select(
                 F.lit(run_id).alias("run_id"),
@@ -281,9 +280,26 @@ class ExtractionPipeline:
             # keyed by url with no width, so AQE sizes the write to the
             # rows instead of one part file per extraction partition plus
             # one per blocked-row partition; coalesce(1) would instead
-            # pull the URL gate's scan into one task
-            manifest.repartition("url").write.mode("overwrite") \
-                .parquet(staging)
+            # pull the URL gate's scan into one task. Every row of a url
+            # lands in one task, so a window over url counts its rows
+            # exactly inside this write's job, and the observed max tells
+            # whether the batch repeats a url
+            repeats = Observation("repeated_urls")
+            (manifest.repartition("url")
+             .withColumn("__n", F.count("*").over(Window.partitionBy("url")))
+             .observe(repeats, F.max("__n").alias("n"),
+                      F.max_by("url", "__n").alias("url"))
+             .drop("__n")
+             .write.mode("overwrite").parquet(staging))
+            repeated = repeats.get
+            if (repeated["n"] or 0) > 1:
+                # `pending` anti-joins earlier batches only, and the dedup
+                # gate's in-batch winner is keyed by url: both copies
+                # would commit, and every resume would keep them
+                shutil.rmtree(staging)
+                raise ValueError(
+                    f"the batch holds url {repeated['url']!r} "
+                    f"{repeated['n']} times; a run commits each url once")
             counts = {
                 r["failure_code"]: r["count"] for r in
                 self.spark.read.schema(MANIFEST_SCHEMA).parquet(staging)
@@ -327,33 +343,9 @@ class ExtractionPipeline:
         os.rename(staging_dir,
                   os.path.join(self.manifest_path, f"batch_id={batch_id}"))
 
-    def sink_format(self) -> str | None:
-        """The format of the content sinks' part files, by extension
-        (``parquet``, ``json``); None before the first write. One run
-        writes each ``batch_id=`` dir in one format, so one part file per
-        batch dir tells its format. Orphan batches count: a reader lists
-        them before pruning."""
-        found = set()
-        for sink in (self.docs_path, self.blocks_path, self.chunks_path):
-            if not os.path.isdir(sink):
-                continue
-            for d in os.listdir(sink):
-                if not d.startswith("batch_id="):
-                    continue
-                with os.scandir(os.path.join(sink, d)) as files:
-                    part = next((f.name for f in files
-                                 if f.name.startswith("part-")), None)
-                if part is not None:
-                    found.add(part.rsplit(".", 1)[-1])
-        if len(found) > 1:
-            raise ValueError(
-                f"{self.out_dir} mixes sink formats {sorted(found)}")
-        return found.pop() if found else None
-
     def _read_committed(self, path: str) -> DataFrame:
         ids = self.committed_batch_ids()
-        df = self.spark.read.format(self.sink_format() or "parquet") \
-            .load(path)
+        df = self.spark.read.parquet(path)
         # isin over the partition column → static partition pruning (no data
         # files of orphan batches are even opened); asserted in tests.
         return df.where(F.col("batch_id").isin(ids)).drop("batch_id")

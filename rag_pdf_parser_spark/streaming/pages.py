@@ -25,7 +25,10 @@ def run_extraction_stream(spark: SparkSession, src_dir: str, out_dir: str,
     """Drain available page files (at most 8 per micro-batch, which bounds
     each batch's work) through `ExtractionPipeline(spark, out_dir).run`,
     one committed batch per micro-batch; read the result with that
-    pipeline's `read_docs` / `read_blocks`."""
+    pipeline's `read_docs` / `read_blocks`. A micro-batch that repeats a
+    url fails the query with `run`'s ValueError (raised from
+    `awaitTermination` as a StreamingQueryException), and nothing of that
+    micro-batch is committed."""
     pipe = ExtractionPipeline(spark, out_dir)
 
     def process(batch: DataFrame, batch_id: int) -> None:

@@ -19,7 +19,12 @@ Locally, from the repo root, no packaging is needed:
 
     python scripts/run_pipeline.py --pages synth:200 --out /tmp/extract_out
 
-The JSON counts are the last stdout line.
+The JSON counts are the last stdout line. The out_dir's docs, blocks and
+chunks tables are parquet; the reference's JSONL outputs (K2/K3) are a
+write of the committed view:
+
+    ExtractionPipeline(spark, out).read_blocks().write.json(dest)
+    ExtractionPipeline(spark, out).read_chunks().write.json(dest)
 """
 
 from __future__ import annotations
@@ -44,7 +49,6 @@ def main() -> None:
                     help="parquet path, or 'synth:N' for N synthetic pages")
     ap.add_argument("--out", required=True)
     ap.add_argument("--run-id", default=f"run_{int(time.time())}")
-    ap.add_argument("--format", default="parquet", choices=["parquet", "json"])
     ap.add_argument("--no-chunks", action="store_true")
     ap.add_argument("--dedupe", action="store_true",
                     help="content-dedup gate vs the manifest's committed "
@@ -85,7 +89,7 @@ def main() -> None:
     pipe = ExtractionPipeline(spark, args.out)
     t0 = time.time()
     result = pipe.run(pages, run_id=args.run_id,
-                      with_chunks=not args.no_chunks, fmt=args.format,
+                      with_chunks=not args.no_chunks,
                       dedupe=args.dedupe, url_blocklist=blocklist,
                       curate=args.curate)
     result["wall_sec"] = round(time.time() - t0, 2)

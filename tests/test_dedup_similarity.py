@@ -922,7 +922,10 @@ def test_domain_stats_triage_table(spark):
     """Per-domain triage: registrable-domain grouping (subdomains fold into
     their domain), char totals, gopher and pattern counts; NULL url/text
     rows keep a row under the '' domain."""
-    from rag_pdf_parser_spark.operators.urlfilter import domain_stats
+    from rag_pdf_parser_spark.operators.urlfilter import (
+        domain_stats,
+        psl_table,
+    )
 
     long_good = " ".join(f"w{i}x" for i in range(60)) + "."
     rows = [
@@ -933,7 +936,8 @@ def test_domain_stats_triage_table(spark):
         (5, None, None),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, url string, text string")
-    got = {r["domain"]: r.asDict() for r in domain_stats(docs).collect()}
+    got = {r["domain"]: r.asDict()
+           for r in domain_stats(docs, psl_table(spark)).collect()}
     se = got["shop.example"]
     assert se["n_docs"] == 3
     assert se["total_chars"] == len(long_good) + len("short") + len("tiny")
@@ -1484,7 +1488,6 @@ def test_psl_registrable_domain(spark):
     from rag_pdf_parser_spark.operators.urlfilter import (
         domain_stats,
         psl_table,
-        registrable_domain_expr,
         with_registrable_domain,
     )
 
@@ -1503,11 +1506,6 @@ def test_psl_registrable_domain(spark):
     assert got["deep.a.b.example.com"] == "example.com"  # default rule
     assert got["localhost"] == "localhost"
     assert got[""] == "" and got[None] is None
-    # the fixed cut misattributes exactly the rows PSL fixes
-    fixed = {r["host"]: r["d2"] for r in df.select(
-        "host", registrable_domain_expr(F.col("host")).alias("d2")
-    ).collect()}
-    assert fixed["a.shop.example.co.uk"] == "co.uk"  # the r5 hazard
 
     # end to end through domain_stats(psl=): the verdict's grouping proof
     long_good = " ".join(f"w{i}x" for i in range(60)) + "."
@@ -1519,9 +1517,6 @@ def test_psl_registrable_domain(spark):
     stats = {r["domain"]: r["n_docs"] for r in domain_stats(
         docs, psl=psl_table(spark)).collect()}
     assert stats == {"example.co.uk": 2, "other.co.uk": 1}, stats
-    no_psl = {r["domain"]: r["n_docs"]
-              for r in domain_stats(docs).collect()}
-    assert no_psl == {"co.uk": 3}  # the misattribution the PSL removes
 
 
 def test_psl_probe_depth_follows_supplied_table(spark):

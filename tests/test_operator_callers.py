@@ -14,6 +14,9 @@
 5. The manifest is the pipeline's one dedup store: the library neither
    calls the perfbench-only `register_hashes` / `anti_join_seen` nor
    names a `seen_hashes` path except to refuse one.
+6. An out_dir has one table format: `ExtractionPipeline.run` takes no
+   format, nothing sniffs one, and `plans/` reads and writes no table
+   through `.json(` or `.format(`.
 """
 
 import ast
@@ -292,3 +295,35 @@ def test_manifest_is_the_one_dedup_store():
     assert not calls, calls
     assert not paths, paths
     assert refusals == 1, refusals  # the pipeline's legacy-layout check
+
+
+def test_out_dir_has_one_format():
+    """The pipeline's sinks are parquet only: `ExtractionPipeline.run`
+    takes no `fmt`, no library code names `sink_format`, and no call
+    under `plans/` goes through `.json(` or `.format(` (a `str.format`
+    there trips it too; use an f-string). JSONL is a write of the
+    committed view, outside the library."""
+    pipeline = _parse(os.path.join(LIB, "plans", "pipeline.py"))
+    (run,) = [m for c in pipeline.body
+              if isinstance(c, ast.ClassDef) and c.name == "ExtractionPipeline"
+              for m in c.body
+              if isinstance(m, ast.FunctionDef) and m.name == "run"]
+    a = run.args
+    params = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+    assert "dedupe" in params and "fmt" not in params, params
+
+    named = []
+    for path in _py_files(LIB):
+        tree = _parse(path)
+        names = _names_used(tree) | {n.name for n in ast.walk(tree)
+                                     if isinstance(n, ast.FunctionDef)}
+        if "sink_format" in names:
+            named.append(os.path.relpath(path, ROOT))
+    assert not named, named
+
+    calls = [(os.path.relpath(path, ROOT), n.lineno, n.func.attr)
+             for path in _py_files(os.path.join(LIB, "plans"))
+             for n in ast.walk(_parse(path))
+             if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+             and n.func.attr in ("json", "format")]
+    assert not calls, calls

@@ -554,3 +554,92 @@ def test_increments_admit_what_first_seen_greedy_admits(spark, rows, data):
         shutil.rmtree(root, ignore_errors=True)
     assert got == want, (batches, got, want)
     assert got_canon == want_canon == owners, (got_canon, owners)
+
+
+#: verify texts: a shared 30-60 char base over ASCII, space and CJK, so
+#: one to three char edits put the 5-gram Jaccard on both sides of the
+#: threshold, mixed with unrelated texts, NULL and ''
+_VERIFY_CHARS = "abcde 数据学"
+
+
+@st.composite
+def _verify_docs(draw):
+    base = draw(st.text(alphabet=_VERIFY_CHARS, min_size=30, max_size=60))
+    texts = []
+    for _ in range(draw(st.integers(min_value=2, max_value=6))):
+        kind = draw(st.sampled_from(
+            ["base", "edit", "edit", "edit", "fresh", "null", "empty"]))
+        if kind == "null":
+            texts.append(None)
+        elif kind == "empty":
+            texts.append("")
+        elif kind == "fresh":
+            texts.append(draw(st.text(alphabet=_VERIFY_CHARS, max_size=60)))
+        else:
+            t = base
+            for _ in range(draw(st.integers(0, 3)) if kind == "edit" else 0):
+                i = draw(st.integers(0, len(t)))
+                c = draw(st.sampled_from(_VERIFY_CHARS))
+                t = draw(st.sampled_from([t[:i] + c + t[i + 1:],
+                                          t[:i] + c + t[i:],
+                                          t[:i] + t[i + 1:]]))
+            texts.append(t)
+    return [(f"d{i}", t) for i, t in enumerate(texts)]
+
+
+@settings(max_examples=15, deadline=None)
+@given(_verify_docs())
+def test_jaccard_prefilter_keeps_what_the_gate_keeps(spark, rows):
+    """With the size-bound prefilter on (`min_jaccard=JACCARD_THRESHOLD`)
+    the verify reports a subset of the unfiltered pairs with equal
+    values, and at the threshold gate keeps exactly the pairs the
+    unfiltered verify reaches it with."""
+    from itertools import combinations
+
+    from rag_pdf_parser_spark.operators.dedup import (JACCARD_THRESHOLD,
+                                                      ngram_jaccard_pairs)
+
+    docs = spark.createDataFrame(rows, "doc_id string, text string")
+    pairs = spark.createDataFrame(
+        [(a, b) for (a, _), (b, _) in combinations(rows, 2)],
+        "id_a string, id_b string")
+
+    def verify(**kw):
+        return {(r["id_a"], r["id_b"]): r["jaccard"] for r in
+                ngram_jaccard_pairs(docs, pairs, **kw).collect()}
+
+    full = verify()
+    pre = verify(min_jaccard=JACCARD_THRESHOLD)
+    assert len(full) == len(rows) * (len(rows) - 1) // 2, (rows, full)
+    assert pre.items() <= full.items(), (rows, pre, full)
+
+    def gate(d):
+        return {k: v for k, v in d.items() if v >= JACCARD_THRESHOLD}
+
+    assert gate(pre) == gate(full), (rows, pre, full)
+
+
+#: component ids: one or two chars of ASCII, Latin-1, CJK and a
+#: supplementary-plane letter, so the driver's Python `<` and Spark's
+#: UTF-8 binary order are both exercised
+_CC_IDS = st.text(alphabet="abé数\U0001d4b3", min_size=1, max_size=2)
+
+
+@settings(max_examples=12, deadline=None)
+@given(st.lists(st.tuples(_CC_IDS, _CC_IDS), min_size=1, max_size=10))
+def test_connected_components_driver_path_equals_loop(spark, edges):
+    """The driver union-find (`DRIVER_EDGES` above the edge count) and
+    the distributed propagation loop (`DRIVER_EDGES = 0`) label every
+    node with the same min-id component, self-pairs and repeated edges
+    included."""
+    from unittest import mock
+
+    from rag_pdf_parser_spark.operators import dedup
+
+    pairs = spark.createDataFrame(edges, "id_a string, id_b string")
+    driver = sorted(map(tuple, dedup.connected_components(pairs).collect()))
+    with mock.patch.object(dedup, "DRIVER_EDGES", 0):
+        loop = sorted(map(tuple,
+                          dedup.connected_components(pairs).collect()))
+    assert driver == loop, (edges, driver, loop)
+    assert {n for e in edges for n in e} == {i for i, _ in driver}

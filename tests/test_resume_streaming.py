@@ -100,83 +100,100 @@ def test_crash_between_sinks_and_manifest_commit(spark, tmp_path):
     assert p.read_docs().count() == 60
 
 
-def test_pipeline_json_sinks_with_commit_layout(spark, tmp_path):
-    """fmt='json' (the reference's JSONL sinks) must work with the
-    batch_id-partitioned commit layout: line-delimited files under
-    batch_id=<token> dirs, committed readers pruning as for parquet. The
-    readers take the format of the sink files."""
-    pages = synth_pages(spark, 20)
-    p = ExtractionPipeline(spark, str(tmp_path / "j"))
-    r = p.run(pages, run_id="r1", with_chunks=True, fmt="json")
-    assert r["docs_processed"] == 20
-    assert p.sink_format() == "json"
-    docs = p.read_docs()
-    assert docs.count() == 20 and "batch_id" not in docs.columns
-    chunks = p.read_chunks()
-    assert chunks.count() > 0
-    # K3: chunk JSONL never carries vectors (the null embedding is dropped)
-    assert "embedding" not in chunks.columns
-    # the sink layout is really JSONL under batch partitions
-    batch_dirs = [d for d in os.listdir(p.docs_path)
-                  if d.startswith("batch_id=")]
-    assert len(batch_dirs) == 1
-    inner = os.listdir(os.path.join(p.docs_path, batch_dirs[0]))
-    assert any(f.endswith(".json") for f in inner), inner
+def test_jsonl_export_is_a_write_of_the_committed_view(spark, tmp_path):
+    """The reference's JSONL outputs (K2 blocks, K3 chunks) are a JSON
+    write of the committed readers: two committed batches plus one orphan
+    batch (death before the commit rename) export exactly the committed
+    rows, and no chunk line carries the always-null `embedding`."""
+    import glob
+    import json
 
+    pages = synth_pages(spark, 30)
+    urls = sorted(r["url"] for r in pages.select("url").collect())
+    p = ExtractionPipeline(spark, str(tmp_path / "out"))
+    p.run(pages.where(F.col("url").isin(urls[:10])), run_id="r1")
+    p.run(pages.where(F.col("url").isin(urls[10:20])), run_id="r2")
 
-def test_pipeline_keeps_one_sink_format(spark, tmp_path):
-    """An out_dir holds one sink format: a parquet run over JSON sinks
-    raises before writing anything (mixed into one table, the JSON reader
-    returns `_corrupt_record` rows and the parquet reader raises), and
-    `compact_output` folds a JSON out_dir's batches in JSON."""
-    from rag_pdf_parser_spark.plans.maintenance import compact_output
+    def dying_commit(staging, batch_id):
+        raise RuntimeError("simulated death before manifest commit")
 
-    pages = synth_pages(spark, 20)
-    out = str(tmp_path / "fmt")
-    p = ExtractionPipeline(spark, out)
-    p.run(pages.limit(10), run_id="r1", with_chunks=True, fmt="json")
-    ids = p.committed_batch_ids()
-
-    def sink_files():
-        return sorted(os.path.join(d, f)
-                      for sink in (p.docs_path, p.blocks_path, p.chunks_path)
-                      for d, _, fs in os.walk(sink) for f in fs)
-
-    files = sink_files()
-    with pytest.raises(ValueError, match="json"):
-        p.run(pages, run_id="r2", with_chunks=True)
-    assert p.committed_batch_ids() == ids
-    assert sink_files() == files
-    assert not os.path.isdir(os.path.join(out, "_staging")) \
-        or not os.listdir(os.path.join(out, "_staging"))
-
-    p.run(pages, run_id="r2", with_chunks=True, fmt="json")
+    p._commit = dying_commit
+    with pytest.raises(RuntimeError, match="simulated death"):
+        p.run(pages, run_id="r3")
     assert len(p.committed_batch_ids()) == 2
-    cols = ["url", "doc_id", "extracted_text"]
-    before = p.read_docs().select(*cols).localCheckpoint(eager=True)
-    n_chunks = p.read_chunks().count()
-    assert before.count() == 20
-    res = compact_output(spark, out)
-    assert res["batches_before"] == 2 and res["batches_after"] == 1, res
-    assert p.sink_format() == "json"
-    after = p.read_docs().select(*cols)
-    assert after.exceptAll(before).count() == 0
-    assert before.exceptAll(after).count() == 0
-    assert p.read_chunks().count() == n_chunks
+    # the orphan batch's rows are on disk
+    assert spark.read.parquet(p.docs_path).count() == 30
+
+    def lines(dest):
+        out = []
+        for part in sorted(glob.glob(os.path.join(dest, "part-*.json"))):
+            with open(part, encoding="utf-8") as f:
+                out += [json.loads(line) for line in f]
+        return out
+
+    blocks_out = str(tmp_path / "blocks_jsonl")
+    chunks_out = str(tmp_path / "chunks_jsonl")
+    p.read_blocks().write.json(blocks_out)
+    p.read_chunks().write.json(chunks_out)
+    blocks, chunks = lines(blocks_out), lines(chunks_out)
+
+    want_blocks = sorted((r["doc_id"], r["block_id"], r["text"])
+                         for r in p.read_blocks().collect())
+    want_chunks = sorted((r["chunk_id"], r["doc_id"], r["text"])
+                         for r in p.read_chunks().collect())
+    assert sorted((b["doc_id"], b["block_id"], b.get("text"))
+                  for b in blocks) == want_blocks
+    assert sorted((c["chunk_id"], c["doc_id"], c["text"])
+                  for c in chunks) == want_chunks
+    assert {r["url"] for r in p.read_docs().collect()} == set(urls[:20])
+    assert {b["url"] for b in blocks} <= set(urls[:20])  # no orphan row
+    assert chunks and not any("embedding" in c for c in chunks)
+    assert "embedding" in p.read_chunks().columns
 
 
-def test_sink_format_refuses_mixed_batches(spark, tmp_path):
-    """`sink_format` reads one part file per batch dir, and two batches in
-    two formats still raise, across sinks too."""
-    p = ExtractionPipeline(spark, str(tmp_path / "mix"))
-    for sink, batch, ext in ((p.docs_path, "a", "json"),
-                             (p.blocks_path, "b", "parquet")):
+def test_legacy_json_sink_batch_fails_the_committed_read(spark, tmp_path):
+    """An out_dir whose sinks an older version wrote as JSON
+    (`fmt="json"`) is not migrated: the committed read raises instead of
+    returning its batch as empty."""
+    import json
+    import shutil
+
+    pages = synth_pages(spark, 5)
+    p = ExtractionPipeline(spark, str(tmp_path / "legacy"))
+    p.run(pages, run_id="r1", with_chunks=False)
+    (batch,) = p.committed_batch_ids()
+    sinks = [(sink, [r.asDict() for r in read().select("url", "doc_id")
+                     .collect()])
+             for sink, read in ((p.docs_path, p.read_docs),
+                                (p.blocks_path, p.read_blocks))]
+    for sink, rows in sinks:
         d = os.path.join(sink, f"batch_id={batch}")
+        shutil.rmtree(d)
         os.makedirs(d)
-        for i in range(3):
-            open(os.path.join(d, f"part-0000{i}.{ext}"), "w").close()
-    with pytest.raises(ValueError, match="mixes sink formats"):
-        p.sink_format()
+        with open(os.path.join(d, "part-00000-legacy.json"), "w") as f:
+            f.writelines(json.dumps(r) + "\n" for r in rows)
+    with pytest.raises(Exception, match="not a Parquet file"):
+        p.read_docs().count()
+
+
+@pytest.mark.parametrize("dedupe", [False, True])
+def test_a_batch_that_repeats_a_url_commits_nothing(spark, tmp_path, dedupe):
+    """A page batch holding a url twice (a re-crawl with changed html)
+    raises before the commit, with or without the dedup gate: `pending`
+    anti-joins earlier batches only, so both copies would commit and no
+    resume would remove them. Nothing is committed or left staged."""
+    pages = synth_pages(spark, 10)
+    recrawl = pages.orderBy("url").limit(2).withColumn(
+        "html", F.concat("html", F.lit(b"<p>re-crawled</p>")))
+    p = ExtractionPipeline(spark, str(tmp_path / "rep"))
+    with pytest.raises(ValueError, match="2 times"):
+        p.run(pages.unionByName(recrawl), run_id="r1", dedupe=dedupe)
+    assert p.committed_batch_ids() == []
+    assert p.read_manifest() is None
+    assert os.listdir(os.path.join(p.out_dir, "_staging")) == []
+    # the same pages, each url once, commit
+    assert p.run(pages, run_id="r2", dedupe=dedupe)["docs_processed"] == 10
+    assert p.read_docs().count() == 10
 
 
 def test_resume_raises_on_an_unreadable_manifest(spark, tmp_path):
