@@ -39,10 +39,10 @@ lease on the store's parent dir.
 
 `compact_output` extends the same two-rename commit to the pipeline's
 MANIFEST (r4 verdict #7): committed batches are folded into one base
-batch — content sinks first (appended UNCOMMITTED under the new base
+batch — the docs sink first (appended UNCOMMITTED under the new base
 batch_id, invisible), then the manifest dir is atomically swapped to a
 commit log containing only the base batch, then the now-orphaned old
-content partitions are vacuumed under the held lease. Readers see the old
+docs partitions are vacuumed under the held lease. Readers see the old
 batches right up to the manifest swap and exactly the base batch after
 it; a crash at any rename is recovered by `recover_store`, which the
 pipeline calls at every committed-read entry point.
@@ -57,6 +57,7 @@ import uuid
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..schema import DOCS_SINK_SCHEMA
 from .lease import WriterLease
 
 
@@ -92,16 +93,16 @@ def compact_output(spark: SparkSession, out_dir: str) -> dict:
     """Fold an ExtractionPipeline out_dir's committed ``batch_id=`` batches
     into ONE base batch — manifest maintenance (r4 verdict #7). The commit
     log grows a dir per run forever; after thousands of runs the listing
-    and the per-sink small-file count dominate. Protocol, under the held
+    and the docs sink's small-file count dominate. Protocol, under the held
     writer lease (no run can start or commit while it proceeds):
 
-        1. read committed rows of each content sink, append them under
+        1. read the docs sink's committed rows, append them under
            ``batch_id=base-<token>``   — UNCOMMITTED, invisible to readers
         2. write the committed manifest rows to manifest.__compact_tmp as
            the single partition ``batch_id=base-<token>``
         3. atomic_swap(manifest)       ← COMMIT: the log now lists exactly
            the base batch, whose content rows are the same rows
-        4. vacuum the now-orphaned old content partitions (age 0 is safe:
+        4. vacuum the now-orphaned old docs partitions (age 0 is safe:
            the lease guarantees no writer is in flight)
 
     Crash anywhere before (3): extra uncommitted base partitions that the
@@ -112,10 +113,11 @@ def compact_output(spark: SparkSession, out_dir: str) -> dict:
 
     Readers therefore see the pre-compaction batches up to the instant of
     the swap and exactly-equal rows after it, the dedup log (`text_hash`)
-    included: the manifest is read with MANIFEST_SCHEMA, so batches
-    written before the column existed read it as NULL instead of a
-    schema inferred from one file dropping it. Returns
-    {"batches_before", "batches_after", "removed_dirs"}.
+    and the nested chunks included: the manifest and docs are read with
+    MANIFEST_SCHEMA and DOCS_SINK_SCHEMA, so a batch written without a
+    column (older `text_hash`-less batches, `with_chunks=False` runs)
+    folds it as NULL instead of a schema inferred from one file dropping
+    it. Returns {"batches_before", "batches_after", "removed_dirs"}.
     """
     from .pipeline import ExtractionPipeline
 
@@ -126,13 +128,10 @@ def compact_output(spark: SparkSession, out_dir: str) -> dict:
             return {"batches_before": len(ids), "batches_after": len(ids),
                     "removed_dirs": 0}
         base = f"base-{uuid.uuid4().hex[:12]}"
-        for sink in (p.docs_path, p.blocks_path, p.chunks_path):
-            if not os.path.isdir(sink):
-                continue
-            rows = (spark.read.parquet(sink)
-                    .where(F.col("batch_id").isin(ids))
-                    .withColumn("batch_id", F.lit(base)))
-            rows.write.mode("append").partitionBy("batch_id").parquet(sink)
+        (spark.read.schema(DOCS_SINK_SCHEMA).parquet(p.docs_path)
+         .where(F.col("batch_id").isin(ids))
+         .withColumn("batch_id", F.lit(base))
+         .write.mode("append").partitionBy("batch_id").parquet(p.docs_path))
         manifest = (p.read_manifest()
                     .where(F.col("batch_id").isin(ids))
                     .withColumn("batch_id", F.lit(base)))

@@ -9,18 +9,22 @@ Spark-first restatement of the reference's CLI lifecycle (SURVEY §3.1):
               → text-quality gates (curate=)              [plans/curate.py]
               → dedup gate: in-batch min-url window, left
                 join vs committed text_hash (dedupe=)     [F7/J2, main.py:43-46]
-              → docs + exploded blocks + chunks           [S3/W1/W6]
-              → parquet sinks + manifest append           [K1-K4, K7]
+              → docs rows, blocks (+chunks) nested        [S3/W1/W6]
+              → one parquet docs sink + manifest append   [K1-K4, K7]
 
-The sinks are parquet, one table format per out_dir. The reference's JSONL
-outputs (K2/K3, writer.py:110-165) are a write of the committed view:
-`read_blocks().write.json(dest)` and `read_chunks().write.json(dest)`,
-where Spark's JSON writer omits null fields, so no chunk line carries the
-always-null `embedding` (K3's exclusion).
+The out_dir holds one parquet content table, `docs/`: one row per document
+with its `blocks` (and `chunks`, when the run chunks) nested — the
+reference's one IR document per input. `read_blocks()`/`read_chunks()`
+explode the committed docs, and `read_docs()` drops the arrays, so its scan
+never reads them. The reference's JSONL outputs (K2/K3, writer.py:110-165)
+are a write of those views: `read_blocks().write.json(dest)` and
+`read_chunks().write.json(dest)`, where Spark's JSON writer omits null
+fields, so no chunk line carries the always-null `embedding` (K3's
+exclusion).
 
 Each gate writes one nullable `__code` column (URL_BLOCKED rows leave
-before extraction and go straight into the manifest batch): the sinks take
-the rows whose `__code` is NULL, and the manifest records
+before extraction and go straight into the manifest batch): the docs sink
+takes the rows whose `__code` is NULL, and the manifest records
 `coalesce(failure_code, __code)`.
 
 The manifest is the resume/lineage mechanism the north rule requires: one row
@@ -39,16 +43,16 @@ hash's winner, NULL on every other row (and on every row of a run without
 doc — exactly once, with no second store to register into or recover.
 
 Commit protocol (crash-exactness across MID-JOB death, r3 verdict #2):
-content sinks append under a per-run ``batch_id=<token>`` partition, and the
-batch becomes visible only when its manifest directory is atomically renamed
-into place — the manifest IS the commit log, and a batch is committed iff
-``manifest/batch_id=<token>/`` exists:
+the docs sink appends under a per-run ``batch_id=<token>`` partition, and
+the batch becomes visible only when its manifest directory is atomically
+renamed into place — the manifest IS the commit log, and a batch is
+committed iff ``manifest/batch_id=<token>/`` exists:
 
-    1. docs/blocks/chunks append partitioned by batch_id   (uncommitted)
+    1. docs append partitioned by batch_id                 (uncommitted)
     2. manifest rows staged to _staging/<token>            (uncommitted)
     3. os.rename(_staging/<token>, manifest/batch_id=<token>)  ← COMMIT
 
-A crash anywhere before (3) leaves orphan batch partitions that committed
+A crash anywhere before (3) leaves an orphan batch partition that committed
 readers (`read_docs`/`read_blocks`/`read_chunks`) prune out by batch_id —
 the rerun re-extracts those urls (the manifest never saw them) under a new
 token, so committed output equals an uninterrupted run EXACTLY. Orphans are
@@ -75,7 +79,7 @@ from ..operators.extract import (
     extract_docs,
 )
 from ..operators.urlfilter import filter_urls
-from ..schema import MANIFEST_SCHEMA
+from ..schema import DOCS_SINK_SCHEMA, MANIFEST_SCHEMA
 from .curate import TEXT_GATE_CODES, text_gate_code_expr, with_text_gate_flags
 from .lease import WriterLease
 from .maintenance import recover_store
@@ -98,10 +102,15 @@ class ExtractionPipeline:
         self.out_dir = out_dir
         self.manifest_path = os.path.join(out_dir, "manifest")
         self.docs_path = os.path.join(out_dir, "docs")
-        self.blocks_path = os.path.join(out_dir, "blocks")
-        self.chunks_path = os.path.join(out_dir, "chunks")
 
     def _recover_manifest(self) -> None:
+        # every entry point passes here before it writes: an older layout
+        # (blocks and chunks sinks, a seen_hashes/ store) is not migrated
+        if any(os.path.exists(os.path.join(self.out_dir, d))
+               for d in ("blocks", "chunks", "seen_hashes")):
+            raise ValueError(
+                f"{self.out_dir} was written by an older layout (a blocks/, "
+                "chunks/ or seen_hashes/ dir) and is not migrated")
         # a manifest compaction (maintenance.compact_output) that died
         # between its two swap renames left the commit log in the trash
         # dir — restore before ANY read of committed state, or readers see
@@ -139,15 +148,12 @@ class ExtractionPipeline:
         main.py:43-46): documents whose normalized-text hash a committed
         manifest row already holds in `text_hash` (previous runs) or
         that a lexicographically-smaller url in THIS run also produced
-        are NOT written to the content sinks — but they ARE recorded in
+        are NOT written to the docs sink — but they ARE recorded in
         the manifest with failure_code='DUPLICATE', so resume never
         re-extracts them (exactly the reference's skip-if-seen +
         mark-status flow). The published winners' manifest rows carry
-        their hash, committed by the same rename as the batch. An out_dir
-        that still holds a `seen_hashes/` store from an older layout is
-        refused with ValueError before anything is written: its history
-        is not migrated, and ignoring it would re-admit every duplicate
-        it knows.
+        their hash, committed by the same rename as the batch.
+        `with_chunks=False` docs rows read back NULL `chunks`.
 
         `url_blocklist` (a DataFrame with a `host` column) switches on the
         C4-style URL gate (operators.urlfilter) BEFORE extraction: blocked
@@ -159,7 +165,7 @@ class ExtractionPipeline:
         stats, the Gopher repetition family, the hashed quality model —
         plans/curate.py) into the run, AFTER extraction and BEFORE the
         dedup gate (the `curate_corpus` funnel order): a doc failing a
-        gate is not written to the content sinks but IS recorded in the
+        gate is not written to the docs sink but IS recorded in the
         manifest with the FIRST failing gate's code (GOPHER_DROP /
         REPETITION_DROP / MODEL_DROP — sequential, same discipline as
         `curation_funnel_df`), so resume never re-extracts or re-gates it
@@ -171,7 +177,7 @@ class ExtractionPipeline:
         raises ValueError before the commit, since `pending` anti-joins
         earlier batches only and both copies would commit. The check is a
         window over url inside the staging write's own job; the raising
-        run leaves only the orphan sink rows a crash leaves.
+        run leaves only the orphan docs batch a crash leaves.
 
         SINGLE WRITER, enforced: the whole run holds the out_dir writer
         lease (plans/lease.py — atomic mkdir, stale-age takeover after
@@ -188,12 +194,6 @@ class ExtractionPipeline:
         probe of `pending` (two jobs: the manifest broadcast and a limit-1
         scan) finds it empty and the run stops there."""
         with WriterLease(self.out_dir) as lease:
-            if dedupe and os.path.exists(
-                    os.path.join(self.out_dir, "seen_hashes")):
-                raise ValueError(
-                    f"{self.out_dir} holds a seen_hashes/ store from an "
-                    "older layout; the dedup history now lives in the "
-                    "manifest's text_hash column and is not migrated")
             todo = self.pending(pages)
             if os.path.isdir(self.manifest_path) and todo.isEmpty():
                 return _run_counts(run_id, {})
@@ -241,26 +241,14 @@ class ExtractionPipeline:
             # Checkpointing materializes the batch immutably before any
             # sink write.
             docs_m = docs_m.localCheckpoint(eager=True)
-            fresh = docs_m.where(F.col("__code").isNull()) \
-                .drop("__code", "__h") \
-                .withColumn("batch_id", F.lit(batch_id))
 
-            # content sinks: UNCOMMITTED until _commit below (batch_id
-            # partition + manifest-dir commit log; see module docstring)
-            (fresh.drop("blocks", "chunks")
+            # the one content sink: UNCOMMITTED until _commit below
+            # (batch_id partition + manifest-dir commit log; module doc)
+            (docs_m.where(F.col("__code").isNull())
+             .drop("__code", "__h")
+             .withColumn("batch_id", F.lit(batch_id))
              .write.mode("append").partitionBy("batch_id")
              .parquet(self.docs_path))
-
-            blocks = explode_blocks(fresh.drop("chunks", "batch_id")) \
-                .withColumn("batch_id", F.lit(batch_id))
-            (blocks.write.mode("append").partitionBy("batch_id")
-             .parquet(self.blocks_path))
-
-            if with_chunks:
-                (explode_chunks(fresh.drop("batch_id"))
-                 .withColumn("batch_id", F.lit(batch_id))
-                 .write.mode("append").partitionBy("batch_id")
-                 .parquet(self.chunks_path))
 
             manifest = docs_m.select(
                 F.lit(run_id).alias("run_id"),
@@ -343,33 +331,34 @@ class ExtractionPipeline:
         os.rename(staging_dir,
                   os.path.join(self.manifest_path, f"batch_id={batch_id}"))
 
-    def _read_committed(self, path: str) -> DataFrame:
+    def _read_committed(self) -> DataFrame:
         ids = self.committed_batch_ids()
-        df = self.spark.read.parquet(path)
+        # one explicit schema: a with_chunks=False batch reads NULL chunks
+        df = self.spark.read.schema(DOCS_SINK_SCHEMA).parquet(self.docs_path)
         # isin over the partition column → static partition pruning (no data
         # files of orphan batches are even opened); asserted in tests.
         return df.where(F.col("batch_id").isin(ids)).drop("batch_id")
 
     def read_docs(self) -> DataFrame:
         """Committed-only view of the docs sink (crash-orphan batches
-        pruned by partition filter)."""
-        return self._read_committed(self.docs_path)
+        pruned by partition filter), nested arrays not scanned."""
+        return self._read_committed().drop("blocks", "chunks")
 
     def read_blocks(self) -> DataFrame:
-        return self._read_committed(self.blocks_path)
+        return explode_blocks(self._read_committed())
 
     def read_chunks(self) -> DataFrame:
-        return self._read_committed(self.chunks_path)
+        return explode_chunks(self._read_committed())
 
     def vacuum_uncommitted(self, staging_min_age_sec: float = 3600.0) -> int:
         """Reclaim orphan batch partitions left by a mid-job crash (present
-        in a content sink, absent from the manifest commit log) plus
+        in the docs sink, absent from the manifest commit log) plus
         abandoned staging dirs. Returns the number of directories removed.
         Safe to run concurrently with readers: committed readers never look
         at these paths. But an uncommitted dir is NOT provably dead just by
         being absent from the commit log — a live run sits between its
-        content-sink append and its commit rename for the whole extraction
-        job, and deleting its batch dirs (or its staging dir) in that window
+        docs append and its commit rename for the whole extraction
+        job, and deleting its batch dir (or its staging dir) in that window
         would let the commit succeed while referencing vanished content
         rows: SILENT loss (r4 ADVICE finding — the staging race at least
         failed loudly at the rename). So BOTH classes are only reclaimed
@@ -388,11 +377,9 @@ class ExtractionPipeline:
             except OSError:  # raced with a concurrent commit/removal
                 return False
 
-        for sink in (self.docs_path, self.blocks_path, self.chunks_path):
-            if not os.path.isdir(sink):
-                continue
-            for d in os.listdir(sink):
-                p = os.path.join(sink, d)
+        if os.path.isdir(self.docs_path):
+            for d in os.listdir(self.docs_path):
+                p = os.path.join(self.docs_path, d)
                 if d.startswith("batch_id=") and \
                         d.split("=", 1)[1] not in committed and \
                         _old_enough(p):
@@ -437,7 +424,7 @@ class ExtractionPipeline:
         Curation-gated docs are excluded for the published-winner
         invariant: a gated doc is never written, so letting it own a
         hash's winner slot would mark its duplicates DUPLICATE while NO
-        copy reaches the sinks — silent loss of the content.
+        copy reaches the docs sink — silent loss of the content.
 
         The in-batch winner is a window min over the hash (a NULL hash is
         keyed by its own url — no sha256 hex digest contains ':' — so

@@ -113,6 +113,15 @@ DOCS_FULL_SCHEMA = T.StructType(
     DOCS_SCHEMA.fields + [T.StructField("chunks", T.ArrayType(CHUNK_STRUCT), False)]
 )
 
+# The pipeline's one content table (plans/pipeline.py `docs/`), always read
+# with this schema: a `with_chunks=False` batch's files lack `chunks`, and
+# inference from one file could drop the column for every batch.
+DOCS_SINK_SCHEMA = T.StructType(
+    DOCS_FULL_SCHEMA.fields
+    + [T.StructField("partition_id", T.IntegerType(), False),
+       T.StructField("batch_id", T.StringType(), True)]
+)
+
 # Per-partition lineage manifest (north_rule resume mechanism; FIXTURES §6).
 # `text_hash` is the dedup log (deduplicator.py:45-59 JSON dict → a column):
 # the normalized-text hash of a doc a `dedupe=True` run published as its

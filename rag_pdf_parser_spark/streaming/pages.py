@@ -2,10 +2,11 @@
 job — new page files appear in a directory (the streaming stand-in for an
 Iceberg table's incremental snapshots), and each micro-batch is one
 `ExtractionPipeline.run` into the same out_dir. The stream has the batch
-pipeline's one output layout and its exactly-once machinery: the manifest
-resume, the writer lease, the batch commit protocol and the committed
-readers. A micro-batch replayed after a crash, or by a rerun with a fresh
-checkpoint, finds its urls in the manifest and commits nothing.
+pipeline's one docs table (it does not chunk: its rows read NULL
+`chunks`) and its exactly-once machinery: the manifest resume, the writer
+lease, the batch commit protocol and the committed readers. A micro-batch
+replayed after a crash, or by a rerun with a fresh checkpoint, finds its
+urls in the manifest and commits nothing.
 
 `availableNow=True` drains the backlog in bounded micro-batches and stops
 (the reference's resume-by-status loop, scheduler.py, as checkpointed

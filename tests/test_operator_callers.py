@@ -17,6 +17,10 @@
 6. An out_dir has one table format: `ExtractionPipeline.run` takes no
    format, nothing sniffs one, and `plans/` reads and writes no table
    through `.json(` or `.format(`.
+7. An out_dir has one content table: blocks and chunks stay nested in
+   the docs sink, so `run` writes two tables (docs and the manifest
+   staging) and no library code joins a `blocks` or `chunks` path except
+   to refuse an older out_dir.
 """
 
 import ast
@@ -327,3 +331,54 @@ def test_out_dir_has_one_format():
              if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
              and n.func.attr in ("json", "format")]
     assert not calls, calls
+
+
+def _writes(call):
+    """Whether `call` ends a `<df>.write...` chain."""
+    x = call.func
+    while isinstance(x, (ast.Attribute, ast.Call)):
+        if isinstance(x, ast.Attribute) and x.attr == "write":
+            return True
+        x = x.value if isinstance(x, ast.Attribute) else x.func
+    return False
+
+
+def test_out_dir_has_one_content_table():
+    """Blocks and chunks live nested in the docs sink: no library code
+    names a `blocks_path` or `chunks_path`, `ExtractionPipeline.run` has
+    exactly two `.parquet(` writes (the docs sink and the manifest
+    staging), and no `join(...)` in the library takes a `"blocks"` or
+    `"chunks"` path component; those names appear only in the test of an
+    `if` whose body raises (the older-layout refusal)."""
+    pipeline = _parse(os.path.join(LIB, "plans", "pipeline.py"))
+    (run,) = [m for c in pipeline.body
+              if isinstance(c, ast.ClassDef) and c.name == "ExtractionPipeline"
+              for m in c.body
+              if isinstance(m, ast.FunctionDef) and m.name == "run"]
+    writes = [n.lineno for n in ast.walk(run)
+              if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+              and n.func.attr == "parquet" and _writes(n)]
+    assert len(writes) == 2, writes
+
+    sinks = {"blocks", "chunks"}
+    named, joined, refusals = [], [], 0
+    for path in _py_files(LIB):
+        rel = os.path.relpath(path, ROOT)
+        tree = _parse(path)
+        named += [(rel, n.lineno) for n in ast.walk(tree)
+                  if isinstance(n, ast.Attribute)
+                  and n.attr in ("blocks_path", "chunks_path")]
+        refused = {id(c) for n in ast.walk(tree)
+                   if isinstance(n, ast.If)
+                   and any(isinstance(b, ast.Raise) for b in n.body)
+                   for c in ast.walk(n.test)}
+        refusals += sum(id(n) in refused for n in ast.walk(tree)
+                        if isinstance(n, ast.Constant) and n.value in sinks)
+        joined += [(rel, n.lineno) for n in ast.walk(tree)
+                   if isinstance(n, ast.Call) and _callee(n) == "join"
+                   and any(isinstance(a, ast.Constant)
+                           and isinstance(a.value, str)
+                           and a.value.strip("/") in sinks for a in n.args)]
+    assert not named, named
+    assert not joined, joined
+    assert refusals == 2, refusals  # the pipeline's older-layout check

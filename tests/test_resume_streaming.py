@@ -39,8 +39,15 @@ def test_resume_no_double_processing(spark, tmp_path):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
+def _read_schema(df):
+    """The `ReadSchema` of the one file scan in `df`'s executed plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    (scan,) = plan.split("ReadSchema: ")[1:]
+    return scan.split("\n")[0]
+
+
 def test_crash_between_sinks_and_manifest_commit(spark, tmp_path):
-    """r3 verdict #2: death AFTER the content-sink appends but BEFORE the
+    """r3 verdict #2: death AFTER the docs-sink append but BEFORE the
     manifest commit must not duplicate rows — the orphan batch partitions
     stay invisible to committed readers, the rerun re-extracts every url the
     manifest never saw, and the committed output equals an uninterrupted
@@ -90,12 +97,19 @@ def test_crash_between_sinks_and_manifest_commit(spark, tmp_path):
     # file is opened): PartitionFilters carries the batch_id IN-list
     plan = p.read_docs()._jdf.queryExecution().executedPlan().toString()
     assert "batch_id" in plan.split("PartitionFilters")[1].split("]")[0], plan
+    # ... and each view scans only the columns it shows: the docs view
+    # reads neither nested array, the blocks view no chunks
+    docs_rs, blocks_rs = _read_schema(p.read_docs()), _read_schema(
+        p.read_blocks())
+    assert "blocks:" not in docs_rs and "chunks:" not in docs_rs, docs_rs
+    assert "blocks:" in blocks_rs and "chunks:" not in blocks_rs, blocks_rs
+    assert "chunks:" in _read_schema(p.read_chunks())
 
     # vacuum reclaims the orphan batch dirs; committed rows untouched.
     # age 0: the test KNOWS no run is in flight — the default age guard
     # now protects live runs' not-yet-committed batch dirs too (ADVICE r4)
     removed = p.vacuum_uncommitted(0)
-    assert removed >= 3  # docs+blocks+chunks orphans (+ staging if present)
+    assert removed == 2  # the docs orphan and the crashed run's staging
     assert spark.read.parquet(p.docs_path).count() == 60
     assert p.read_docs().count() == 60
 
@@ -152,7 +166,7 @@ def test_jsonl_export_is_a_write_of_the_committed_view(spark, tmp_path):
 
 
 def test_legacy_json_sink_batch_fails_the_committed_read(spark, tmp_path):
-    """An out_dir whose sinks an older version wrote as JSON
+    """An out_dir whose docs batch an older version wrote as JSON
     (`fmt="json"`) is not migrated: the committed read raises instead of
     returning its batch as empty."""
     import json
@@ -162,16 +176,13 @@ def test_legacy_json_sink_batch_fails_the_committed_read(spark, tmp_path):
     p = ExtractionPipeline(spark, str(tmp_path / "legacy"))
     p.run(pages, run_id="r1", with_chunks=False)
     (batch,) = p.committed_batch_ids()
-    sinks = [(sink, [r.asDict() for r in read().select("url", "doc_id")
-                     .collect()])
-             for sink, read in ((p.docs_path, p.read_docs),
-                                (p.blocks_path, p.read_blocks))]
-    for sink, rows in sinks:
-        d = os.path.join(sink, f"batch_id={batch}")
-        shutil.rmtree(d)
-        os.makedirs(d)
-        with open(os.path.join(d, "part-00000-legacy.json"), "w") as f:
-            f.writelines(json.dumps(r) + "\n" for r in rows)
+    rows = [r.asDict() for r in p.read_docs().select("url", "doc_id")
+            .collect()]
+    d = os.path.join(p.docs_path, f"batch_id={batch}")
+    shutil.rmtree(d)
+    os.makedirs(d)
+    with open(os.path.join(d, "part-00000-legacy.json"), "w") as f:
+        f.writelines(json.dumps(r) + "\n" for r in rows)
     with pytest.raises(Exception, match="not a Parquet file"):
         p.read_docs().count()
 
@@ -214,29 +225,47 @@ def test_resume_raises_on_an_unreadable_manifest(spark, tmp_path):
     assert p.read_docs().count() == 20
 
 
+def _counting_jobs(spark, tag, fn):
+    """`fn()`'s result and the number of Spark jobs it ran, counted by
+    job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(tag, tag)
+    try:
+        r = fn()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return r, len(sc.statusTracker().getJobIdsForGroup(tag))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_a_plain_run_writes_one_content_table(spark, tmp_path):
+    """A plain `with_chunks=True` run over `synth_pages(300)` at local[4]
+    takes at most 7 Spark jobs: one docs append with blocks and chunks
+    nested, where exploded blocks and chunks sinks took two more."""
+    p = ExtractionPipeline(spark, str(tmp_path / "plain"))
+    r, jobs = _counting_jobs(spark, "plain", lambda: p.run(
+        synth_pages(spark, 300), run_id="plain", with_chunks=True))
+    assert r["docs_processed"] == 300, r
+    assert jobs <= 7, jobs
+
+
 def test_resume_with_nothing_pending_stops_at_the_probe(spark, tmp_path):
     """A resume (a manifest exists) probes `pending` once: with nothing
     pending the gated run takes at most 2 Spark jobs and commits nothing;
-    with urls pending it takes 21 jobs. Jobs are counted by job group on
+    with urls pending it takes 19 jobs. Jobs are counted by job group on
     `synth_pages(300)` at local[4]."""
-    sc = spark.sparkContext
     blocked = spark.createDataFrame([("host1.example",)], "host string")
     p = ExtractionPipeline(spark, str(tmp_path / "probe"))
 
     def run(tag, n):
-        sc.setJobGroup(tag, tag)
-        try:
-            r = p.run(synth_pages(spark, n), run_id=tag, with_chunks=True,
-                      url_blocklist=blocked, curate=True, dedupe=True)
-            sc._jsc.sc().listenerBus().waitUntilEmpty()
-            return r, len(sc.statusTracker().getJobIdsForGroup(tag))
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
+        return _counting_jobs(spark, tag, lambda: p.run(
+            synth_pages(spark, n), run_id=tag, with_chunks=True,
+            url_blocklist=blocked, curate=True, dedupe=True))
 
     run("probe-first", 200)
     r, jobs = run("probe-resume", 300)
     assert r["docs_processed"] + r["urls_blocked"] == 100, r
-    assert jobs <= 22, jobs
+    assert jobs <= 19, jobs
     ids = p.committed_batch_ids()
     r, jobs = run("probe-empty", 300)
     assert r == {"run_id": "probe-empty", "docs_processed": 0,
@@ -247,7 +276,7 @@ def test_resume_with_nothing_pending_stops_at_the_probe(spark, tmp_path):
 
 
 def test_pipeline_url_gate_blocks_before_extraction(spark, tmp_path):
-    """url_blocklist: blocked pages never reach the content sinks, are
+    """url_blocklist: blocked pages never reach the docs sink, are
     manifest-recorded as URL_BLOCKED (so resume skips them forever), and
     clean pages extract normally."""
     import pandas as pd
@@ -281,6 +310,16 @@ def test_pipeline_url_gate_blocks_before_extraction(spark, tmp_path):
     r2 = p.run(pages, run_id="r2", with_chunks=False, url_blocklist=blocked)
     assert r2["docs_processed"] == 0 and r2["urls_blocked"] == 0, r2
     assert spark.read.parquet(p.manifest_path).count() == 7
+
+    # a first run that blocks every page commits a docs batch with no
+    # file: the committed views read it as empty, where a schema inferred
+    # from the sink's files raised
+    q = ExtractionPipeline(spark, str(tmp_path / "all_blocked"))
+    r = q.run(pages.where(F.col("url").contains("spam")), run_id="r1",
+              with_chunks=False, url_blocklist=blocked)
+    assert r["urls_blocked"] == 3 and r["docs_processed"] == 0, r
+    assert q.read_docs().count() == q.read_blocks().count() \
+        == q.read_chunks().count() == 0
 
 
 def test_manifest_summary_lineage(spark, tmp_path):
@@ -1010,29 +1049,47 @@ def test_compact_output_keeps_the_dedup_log(spark, tmp_path):
     assert r["docs_processed"] == 1 and r["duplicates_skipped"] == 1, r
 
 
-def test_dedupe_keeps_the_out_dir_to_four_tables(spark, tmp_path):
-    """The manifest is the only dedup store: a gated run leaves `docs`,
-    `blocks`, `chunks` and `manifest` (the lease is gone once it returns,
-    and the staging root is empty), and a `dedupe=True` run on an out_dir
-    that still holds a `seen_hashes/` store raises before it writes
-    anything."""
+def test_out_dir_is_one_content_table_and_refuses_older_layouts(
+        spark, tmp_path):
+    """The docs table is the one content table and the manifest the only
+    dedup store: a gated `with_chunks=True` run leaves `docs`, `manifest`
+    and an empty `_staging` (the lease is gone once it returns). An out_dir
+    an older layout wrote — it holds `blocks/`, `chunks/` or
+    `seen_hashes/` — is refused by `run`, the committed readers,
+    `compact_output` and the vacuum before any of them writes."""
+    from rag_pdf_parser_spark.plans.maintenance import compact_output
+
     blocked = spark.createDataFrame([("nowhere.example",)], "host string")
     out = str(tmp_path / "layout")
-    r = ExtractionPipeline(spark, out).run(
-        synth_pages(spark, 8), run_id="r1", with_chunks=True,
-        url_blocklist=blocked, curate=True, dedupe=True)
+    p = ExtractionPipeline(spark, out)
+    r = p.run(synth_pages(spark, 8), run_id="r1", with_chunks=True,
+              url_blocklist=blocked, curate=True, dedupe=True)
     assert r["docs_processed"] == 8, r
     assert os.listdir(os.path.join(out, "_staging")) == []
-    assert sorted(set(os.listdir(out)) - {"_staging"}) == [
-        "blocks", "chunks", "docs", "manifest"], os.listdir(out)
+    assert sorted(os.listdir(out)) == ["_staging", "docs", "manifest"], \
+        os.listdir(out)
 
-    legacy = str(tmp_path / "legacy")
-    os.makedirs(os.path.join(legacy, "seen_hashes"))
-    with pytest.raises(ValueError, match="seen_hashes"):
-        ExtractionPipeline(spark, legacy).run(
-            synth_pages(spark, 4), run_id="r1", with_chunks=False,
-            dedupe=True)
-    assert os.listdir(legacy) == ["seen_hashes"]
+    ids = sorted(os.listdir(p.manifest_path))
+    docs = sorted(os.listdir(p.docs_path))
+    for old in ("blocks", "chunks", "seen_hashes"):
+        # an older out_dir: committed state plus the old layout's dir
+        os.makedirs(os.path.join(out, old))
+        for refused in (
+                lambda: p.run(synth_pages(spark, 12), run_id="r2",
+                              with_chunks=False, dedupe=True),
+                p.read_docs, p.read_blocks, p.read_chunks,
+                p.committed_batch_ids,
+                lambda: compact_output(spark, out),
+                lambda: p.vacuum_uncommitted(0)):
+            with pytest.raises(ValueError, match="older layout"):
+                refused()
+            assert sorted(os.listdir(out)) == sorted(
+                ["_staging", "docs", "manifest", old])
+            assert sorted(os.listdir(p.manifest_path)) == ids
+            assert sorted(os.listdir(p.docs_path)) == docs
+            assert os.listdir(os.path.join(out, "_staging")) == []
+            assert os.listdir(os.path.join(out, old)) == []
+        os.rmdir(os.path.join(out, old))
 
 
 def test_streaming_rejects_legacy_flat_store(spark, tmp_path):
@@ -1183,10 +1240,9 @@ def test_compact_output_folds_batches(spark, tmp_path):
     assert before_docs.exceptAll(after_docs).count() == 0
     assert p.read_blocks().count() == before_blocks
     assert p.read_chunks().count() == before_chunks
-    # old content partitions vacuumed: one batch dir per sink
-    for sink in (p.docs_path, p.blocks_path, p.chunks_path):
-        dirs = [d for d in os.listdir(sink) if d.startswith("batch_id=")]
-        assert dirs == [f"batch_id={ids[0]}"], (sink, dirs)
+    # old docs partitions vacuumed: one batch dir in the one content sink
+    dirs = [d for d in os.listdir(p.docs_path) if d.startswith("batch_id=")]
+    assert dirs == [f"batch_id={ids[0]}"], dirs
     # resume is still exact over the folded manifest, and a run with
     # nothing pending commits no batch
     r = p.run(pages, run_id="r3", with_chunks=True)
@@ -1208,6 +1264,51 @@ def test_compact_output_folds_batches(spark, tmp_path):
     sh.move(p.manifest_path, p.manifest_path + ".__compact_trash")
     r = p.run(pages, run_id="r4", with_chunks=False)
     assert r["docs_processed"] == 0
+
+
+def test_mixed_width_batches_read_and_fold(spark, tmp_path):
+    """A `with_chunks=False` batch (the stream's shape) then a
+    `with_chunks=True` batch in one docs table: `read_chunks()` holds
+    exactly the second batch's chunks, `read_blocks()` both batches'
+    blocks, and `read_docs()` keeps its columns — before and after
+    `compact_output` folds the two. The narrow batch's files list first
+    (its run id sorts first), so a schema inferred from one file would
+    drop `chunks` from the read or from the fold."""
+    from rag_pdf_parser_spark.operators.extract import (explode_blocks,
+                                                        explode_chunks,
+                                                        extract_docs)
+    from rag_pdf_parser_spark.plans.maintenance import compact_output
+
+    pages = synth_pages(spark, 20)
+    urls = sorted(r["url"] for r in pages.select("url").collect())
+    narrow = pages.where(F.col("url").isin(urls[:10]))
+    wide = pages.where(F.col("url").isin(urls[10:]))
+    p = ExtractionPipeline(spark, str(tmp_path / "mixed"))
+    p.run(narrow, run_id="a-narrow", with_chunks=False)
+    p.run(wide, run_id="b-wide", with_chunks=True)
+
+    def keys(df, *cols):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    want_chunks = keys(explode_chunks(extract_docs(wide, chunks=True)),
+                       "chunk_id", "doc_id", "text")
+    want_blocks = keys(explode_blocks(extract_docs(pages, chunks=False)),
+                       "url", "block_id", "text")
+    assert want_chunks and len(want_blocks) > len(want_chunks)
+    docs_cols = ["url", "doc_id", "charset", "failure_code", "title",
+                 "authors", "parser_version", "n_pages", "extracted_text",
+                 "bytes_in", "partition_id"]
+
+    def check():
+        assert p.read_docs().columns == docs_cols
+        assert keys(p.read_chunks(), "chunk_id", "doc_id", "text") \
+            == want_chunks
+        assert keys(p.read_blocks(), "url", "block_id", "text") \
+            == want_blocks
+
+    check()
+    assert compact_output(spark, p.out_dir)["batches_after"] == 1
+    check()
 
 
 def test_vacuum_spares_young_staging(spark, tmp_path):
@@ -1479,7 +1580,7 @@ def test_aqe_skew_join_splits_hot_partition(spark):
 def test_pipeline_curate_stage(spark, tmp_path):
     """r5 verdict #3: the `curate=` pipeline stage — text-quality gates
     wired into the resumable run. Per-gate manifest accounting sums to the
-    input; a gated doc never reaches the content sinks, never owns a
+    input; a gated doc never reaches the docs sink, never owns a
     dedup winner slot, and is never re-gated on resume; committed output
     equals `curate_corpus` over the same extracted input."""
     import random
