@@ -37,15 +37,13 @@ files out from under it. The LSH store's one writer, the incremental
 admit (which the streaming gate calls per micro-batch), takes the same
 lease on the store's parent dir.
 
-`compact_output` extends the same two-rename commit to the pipeline's
-MANIFEST (r4 verdict #7): committed batches are folded into one base
-batch — the docs sink first (appended UNCOMMITTED under the new base
-batch_id, invisible), then the manifest dir is atomically swapped to a
-commit log containing only the base batch, then the now-orphaned old
-docs partitions are vacuumed under the held lease. Readers see the old
-batches right up to the manifest swap and exactly the base batch after
-it; a crash at any rename is recovered by `recover_store`, which the
-pipeline calls at every committed-read entry point.
+`compact_output` applies the same swap to the pipeline's one table, the
+MANIFEST (r4 verdict #7): its committed batches, content included, are
+folded into one base batch written to the tmp dir, then swapped in.
+Readers see the old batches right up to the swap and exactly the base
+batch after it; a crash between the renames is recovered by
+`recover_store`, which the pipeline calls at every committed-read entry
+point.
 """
 
 from __future__ import annotations
@@ -57,7 +55,7 @@ import uuid
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..schema import DOCS_SINK_SCHEMA
+from ..schema import OUT_TABLE_SCHEMA
 from .lease import WriterLease
 
 
@@ -93,31 +91,26 @@ def compact_output(spark: SparkSession, out_dir: str) -> dict:
     """Fold an ExtractionPipeline out_dir's committed ``batch_id=`` batches
     into ONE base batch — manifest maintenance (r4 verdict #7). The commit
     log grows a dir per run forever; after thousands of runs the listing
-    and the docs sink's small-file count dominate. Protocol, under the held
-    writer lease (no run can start or commit while it proceeds):
+    and the small-file count dominate. Protocol, under the held writer
+    lease (no run can start or commit while it proceeds):
 
-        1. read the docs sink's committed rows, append them under
-           ``batch_id=base-<token>``   — UNCOMMITTED, invisible to readers
-        2. write the committed manifest rows to manifest.__compact_tmp as
-           the single partition ``batch_id=base-<token>``
-        3. atomic_swap(manifest)       ← COMMIT: the log now lists exactly
-           the base batch, whose content rows are the same rows
-        4. vacuum the now-orphaned old docs partitions (age 0 is safe:
-           the lease guarantees no writer is in flight)
+        1. write the committed table to manifest.__compact_tmp as the
+           single partition ``batch_id=base-<token>``
+        2. atomic_swap(manifest)       ← COMMIT: the log now lists exactly
+           the base batch, whose rows are the same rows
 
-    Crash anywhere before (3): extra uncommitted base partitions that the
-    age-guarded vacuum reclaims — state is the pre-compaction one. Crash
-    between the two renames inside (3): `recover_store` (called by every
-    pipeline committed-read entry point) restores the old manifest. Crash
-    after (3): committed state is the base batch; orphans age out.
+    Crash before (2): a tmp dir the next compaction removes — state is the
+    pre-compaction one. Crash between the two renames inside (2):
+    `recover_store` (called by every pipeline committed-read entry point)
+    restores the old manifest.
 
     Readers therefore see the pre-compaction batches up to the instant of
     the swap and exactly-equal rows after it, the dedup log (`text_hash`)
-    and the nested chunks included: the manifest and docs are read with
-    MANIFEST_SCHEMA and DOCS_SINK_SCHEMA, so a batch written without a
-    column (older `text_hash`-less batches, `with_chunks=False` runs)
-    folds it as NULL instead of a schema inferred from one file dropping
-    it. Returns {"batches_before", "batches_after", "removed_dirs"}.
+    and the nested chunks included: the table is read with
+    OUT_TABLE_SCHEMA, so a batch written without a column (older
+    `text_hash`-less batches) folds it as NULL instead of a schema
+    inferred from one file dropping it. Returns {"batches_before",
+    "batches_after"}.
     """
     from .pipeline import ExtractionPipeline
 
@@ -125,31 +118,22 @@ def compact_output(spark: SparkSession, out_dir: str) -> dict:
     with WriterLease(out_dir) as lease:
         ids = p.committed_batch_ids()
         if len(ids) <= 1:
-            return {"batches_before": len(ids), "batches_after": len(ids),
-                    "removed_dirs": 0}
+            return {"batches_before": len(ids), "batches_after": len(ids)}
         base = f"base-{uuid.uuid4().hex[:12]}"
-        (spark.read.schema(DOCS_SINK_SCHEMA).parquet(p.docs_path)
-         .where(F.col("batch_id").isin(ids))
-         .withColumn("batch_id", F.lit(base))
-         .write.mode("append").partitionBy("batch_id").parquet(p.docs_path))
-        manifest = (p.read_manifest()
-                    .where(F.col("batch_id").isin(ids))
-                    .withColumn("batch_id", F.lit(base)))
         tmp = _tmp(p.manifest_path)
         if os.path.exists(tmp):  # leftover from an earlier crash
             shutil.rmtree(tmp)
-        manifest.write.partitionBy("batch_id").parquet(tmp)
-        # commit-point validation: the content fold above can run long; if
-        # the lock went stale and a pipeline run stole it and COMMITTED a
-        # new batch, swapping our pre-steal commit log would erase that
-        # batch's manifest entry and the vacuum below would delete its
-        # content — silent loss of a committed batch. Abort instead.
+        (spark.read.schema(OUT_TABLE_SCHEMA).parquet(p.manifest_path)
+         .withColumn("batch_id", F.lit(base))
+         .write.partitionBy("batch_id").parquet(tmp))
+        # commit-point validation: the fold above can run long; if the lock
+        # went stale and a pipeline run stole it and COMMITTED a new batch,
+        # swapping our pre-steal table would erase that batch — silent loss
+        # of a committed batch. Abort instead.
         lease.assert_held()
         lease.touch()
         atomic_swap(p.manifest_path)
-        removed = p.vacuum_uncommitted(0)
-        return {"batches_before": len(ids), "batches_after": 1,
-                "removed_dirs": removed}
+        return {"batches_before": len(ids), "batches_after": 1}
 
 
 def compact_lsh_store(spark: SparkSession, path: str) -> dict:

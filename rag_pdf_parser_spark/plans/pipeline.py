@@ -3,28 +3,31 @@
 Spark-first restatement of the reference's CLI lifecycle (SURVEY §3.1):
 
     pages scan → resume anti-join (vs manifest)           [J3, persistent.py doc_status]
+              → salted repartition by xxhash64(url), each
+                url's first capture kept in the same stage [north_rule skew defusal]
               → URL gate (url_blocklist=)                 [C4 front filter]
-              → salted repartition by xxhash64(url)       [north_rule skew defusal]
               → mapInArrow extraction (kernel)            [M1/M2 fused]
               → text-quality gates (curate=)              [plans/curate.py]
               → dedup gate: in-batch min-url window, left
                 join vs committed text_hash (dedupe=)     [F7/J2, main.py:43-46]
-              → docs rows, blocks (+chunks) nested        [S3/W1/W6]
-              → one parquet docs sink + manifest append   [K1-K4, K7]
+              → one write: a manifest row per url, the
+                published doc's content in the same row   [K1-K4, K7]
 
-The out_dir holds one parquet content table, `docs/`: one row per document
-with its `blocks` (and `chunks`, when the run chunks) nested — the
-reference's one IR document per input. `read_blocks()`/`read_chunks()`
-explode the committed docs, and `read_docs()` drops the arrays, so its scan
-never reads them. The reference's JSONL outputs (K2/K3, writer.py:110-165)
-are a write of those views: `read_blocks().write.json(dest)` and
-`read_chunks().write.json(dest)`, where Spark's JSON writer omits null
-fields, so no chunk line carries the always-null `embedding` (K3's
-exclusion).
+The out_dir holds one parquet table, `manifest/` — the reference's
+doc_status row plus its IR document per input (persistent.py:369-406). Each
+row is one url's manifest row; the doc the run published for it rides in
+the same row (`doc_id` … `extracted_text`, with `blocks` and, when the run
+chunks, `chunks` nested), NULL on every row the run did not publish.
+`read_docs()` is the rows with content, its scan reading neither array;
+`read_blocks()`/`read_chunks()` explode them. The reference's JSONL outputs
+(K2/K3, writer.py:110-165) are a write of those views:
+`read_blocks().write.json(dest)` and `read_chunks().write.json(dest)`,
+where Spark's JSON writer omits null fields, so no chunk line carries the
+always-null `embedding` (K3's exclusion).
 
 Each gate writes one nullable `__code` column (URL_BLOCKED rows leave
-before extraction and go straight into the manifest batch): the docs sink
-takes the rows whose `__code` is NULL, and the manifest records
+before extraction and join the batch without content): a row's content is
+published iff its `__code` is NULL, and its manifest `failure_code` is
 `coalesce(failure_code, __code)`.
 
 The manifest is the resume/lineage mechanism the north rule requires: one row
@@ -32,7 +35,9 @@ per (run, partition, url) with bytes in/out and failure code. Resume = left
 anti-join of pages against manifest urls — exactly the reference's
 SQLite doc_status skip (persistent.py:369-406) as a relational op. Per-url
 (not per-partition-summary) rows keep resume exact under repartitioning;
-a summary view aggregates them for metrics.
+a summary view aggregates them for metrics. Each reader scans only its
+columns of the one table: resume `url`, the dedup gate `text_hash`, the
+views the content.
 
 The manifest is also the dedup log — the reference's JSON hash dict
 (deduplicator.py:45-59) as one column: `text_hash` holds the
@@ -42,21 +47,19 @@ hash's winner, NULL on every other row (and on every row of a run without
 `text_hash`, so a hash becomes durable in the same rename that commits its
 doc — exactly once, with no second store to register into or recover.
 
-Commit protocol (crash-exactness across MID-JOB death, r3 verdict #2):
-the docs sink appends under a per-run ``batch_id=<token>`` partition, and
-the batch becomes visible only when its manifest directory is atomically
-renamed into place — the manifest IS the commit log, and a batch is
-committed iff ``manifest/batch_id=<token>/`` exists:
+Commit protocol (crash-exactness across MID-JOB death, r3 verdict #2): a
+batch becomes visible only when its directory is atomically renamed into
+place — the manifest IS the commit log, and a batch is committed iff
+``manifest/batch_id=<token>/`` exists:
 
-    1. docs append partitioned by batch_id                 (uncommitted)
-    2. manifest rows staged to _staging/<token>            (uncommitted)
-    3. os.rename(_staging/<token>, manifest/batch_id=<token>)  ← COMMIT
+    1. the batch written to _staging/<token>               (uncommitted)
+    2. os.rename(_staging/<token>, manifest/batch_id=<token>)  ← COMMIT
 
-A crash anywhere before (3) leaves an orphan batch partition that committed
-readers (`read_docs`/`read_blocks`/`read_chunks`) prune out by batch_id —
-the rerun re-extracts those urls (the manifest never saw them) under a new
-token, so committed output equals an uninterrupted run EXACTLY. Orphans are
-reclaimed by `vacuum_uncommitted()`. The reference's doc_status marking
+A crash anywhere before (2) leaves only the staging dir, which committed
+readers never look at — the rerun re-extracts those urls (the manifest
+never saw them) under a new token, so committed output equals an
+uninterrupted run EXACTLY. Dead staging dirs are reclaimed by
+`vacuum_uncommitted()`. The reference's doc_status marking
 (persistent.py:369-406) has the same window with no committed-reader story.
 POSIX rename is atomic on local/HDFS filesystems; on object stores the same
 role is played by an Iceberg/metastore metadata swap (SURVEY §1.1 maps the
@@ -73,27 +76,36 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import normalized_text_hash_expr
+from ..operators.arrowmap import salted
 from ..operators.extract import (
     explode_blocks,
     explode_chunks,
     extract_docs,
 )
 from ..operators.urlfilter import filter_urls
-from ..schema import DOCS_SINK_SCHEMA, MANIFEST_SCHEMA
+from ..schema import DOCS_FULL_SCHEMA, MANIFEST_SCHEMA, OUT_TABLE_SCHEMA
 from .curate import TEXT_GATE_CODES, text_gate_code_expr, with_text_gate_flags
 from .lease import WriterLease
 from .maintenance import recover_store
 
 
+# the one table's content columns: NULL on every row a run did not publish
+CONTENT = [c for c in OUT_TABLE_SCHEMA.names if c not in MANIFEST_SCHEMA.names]
+# `vacuum_uncommitted` spares a staging dir younger than this: it may be a
+# live run's (tests that know no run is in flight set it to 0)
+STAGING_MIN_AGE_SEC = 3600.0
+
+
 def _run_counts(run_id: str, counts: dict) -> dict:
-    """`ExtractionPipeline.run`'s result from its staged batch's row
-    count per failure code."""
-    n_blocked = counts.pop("URL_BLOCKED", 0)
-    return {"run_id": run_id, "docs_processed": sum(counts.values()),
+    """`ExtractionPipeline.run`'s result from its written batch's row
+    count, in total and per failure code it reports."""
+    n_blocked = counts.get("URL_BLOCKED", 0)
+    return {"run_id": run_id,
+            "docs_processed": counts.get("rows", 0) - n_blocked,
             "duplicates_skipped": counts.get("DUPLICATE", 0),
             "urls_blocked": n_blocked,
             "curation_drops": {c: counts[c] for c in TEXT_GATE_CODES
-                               if c in counts}}
+                               if counts.get(c)}}
 
 
 class ExtractionPipeline:
@@ -101,16 +113,15 @@ class ExtractionPipeline:
         self.spark = spark
         self.out_dir = out_dir
         self.manifest_path = os.path.join(out_dir, "manifest")
-        self.docs_path = os.path.join(out_dir, "docs")
 
     def _recover_manifest(self) -> None:
         # every entry point passes here before it writes: an older layout
-        # (blocks and chunks sinks, a seen_hashes/ store) is not migrated
+        # (content sinks, a seen_hashes/ store) is not migrated
         if any(os.path.exists(os.path.join(self.out_dir, d))
-               for d in ("blocks", "chunks", "seen_hashes")):
+               for d in ("docs", "blocks", "chunks", "seen_hashes")):
             raise ValueError(
-                f"{self.out_dir} was written by an older layout (a blocks/, "
-                "chunks/ or seen_hashes/ dir) and is not migrated")
+                f"{self.out_dir} was written by an older layout (a docs/, "
+                "blocks/, chunks/ or seen_hashes/ dir) and is not migrated")
         # a manifest compaction (maintenance.compact_output) that died
         # between its two swap renames left the commit log in the trash
         # dir — restore before ANY read of committed state, or readers see
@@ -118,17 +129,20 @@ class ExtractionPipeline:
         recover_store(self.manifest_path)
 
     # -- resume gate ----------------------------------------------------------
-    def read_manifest(self) -> DataFrame | None:
-        """Every committed manifest row (MANIFEST_SCHEMA, `batch_id`
-        included), None before the first commit: the resume gate reads
-        its `url`, the dedup gate its `text_hash`. An unreadable manifest
-        raises — treating it as "no resume state" would re-extract and
-        re-commit every url."""
+    def _read(self, schema) -> DataFrame | None:
+        """The committed table read with `schema`, None before the first
+        commit. An unreadable table raises — treating it as "no resume
+        state" would re-extract and re-commit every url."""
         self._recover_manifest()
         if not os.path.exists(self.manifest_path):
             return None
-        return self.spark.read.schema(MANIFEST_SCHEMA).parquet(
-            self.manifest_path)
+        return self.spark.read.schema(schema).parquet(self.manifest_path)
+
+    def read_manifest(self) -> DataFrame | None:
+        """Every committed manifest row (MANIFEST_SCHEMA, `batch_id`
+        included), None before the first commit: the resume gate reads
+        its `url`, the dedup gate its `text_hash`."""
+        return self._read(MANIFEST_SCHEMA)
 
     def pending(self, pages: DataFrame) -> DataFrame:
         """`pages` less every url the manifest holds. Not distinct: the
@@ -148,12 +162,12 @@ class ExtractionPipeline:
         main.py:43-46): documents whose normalized-text hash a committed
         manifest row already holds in `text_hash` (previous runs) or
         that a lexicographically-smaller url in THIS run also produced
-        are NOT written to the docs sink — but they ARE recorded in
-        the manifest with failure_code='DUPLICATE', so resume never
-        re-extracts them (exactly the reference's skip-if-seen +
-        mark-status flow). The published winners' manifest rows carry
-        their hash, committed by the same rename as the batch.
-        `with_chunks=False` docs rows read back NULL `chunks`.
+        are NOT published — but they ARE recorded in the manifest with
+        failure_code='DUPLICATE', so resume never re-extracts them
+        (exactly the reference's skip-if-seen + mark-status flow). The
+        published winners' manifest rows carry their hash, committed by
+        the same rename as the batch. A `with_chunks=False` batch has
+        NULL `chunks`.
 
         `url_blocklist` (a DataFrame with a `host` column) switches on the
         C4-style URL gate (operators.urlfilter) BEFORE extraction: blocked
@@ -165,7 +179,7 @@ class ExtractionPipeline:
         stats, the Gopher repetition family, the hashed quality model —
         plans/curate.py) into the run, AFTER extraction and BEFORE the
         dedup gate (the `curate_corpus` funnel order): a doc failing a
-        gate is not written to the docs sink but IS recorded in the
+        gate is not published but IS recorded in the
         manifest with the FIRST failing gate's code (GOPHER_DROP /
         REPETITION_DROP / MODEL_DROP — sequential, same discipline as
         `curation_funnel_df`), so resume never re-extracts or re-gates it
@@ -173,11 +187,12 @@ class ExtractionPipeline:
         are computed in the one tokenize-once projection pass over the
         freshly-extracted batch — zero extra scans or shuffles.
 
-        `pages` must hold each url once: a batch that repeats a url
-        raises ValueError before the commit, since `pending` anti-joins
-        earlier batches only and both copies would commit. The check is a
-        window over url inside the staging write's own job; the raising
-        run leaves only the orphan docs batch a crash leaves.
+        `pages` must carry `warc_ts`: a batch that repeats a url (a
+        re-crawl) commits it once, as its first capture — the earliest
+        `warc_ts`, NULLs last, then the smallest `html`, so the pick is
+        deterministic at any width. `pending` anti-joins earlier batches
+        only, so without the pick both copies would commit. It is a
+        window inside the salt's own stage: no shuffle of its own.
 
         SINGLE WRITER, enforced: the whole run holds the out_dir writer
         lease (plans/lease.py — atomic mkdir, stale-age takeover after
@@ -186,7 +201,7 @@ class ExtractionPipeline:
         start instead of silently committing duplicate urls; a writer
         whose stale lock was stolen aborts before its commit rename.
 
-        The returned counts come from the manifest batch this run stages:
+        The returned counts are observed on the one write of the batch:
         `docs_processed` is every row but URL_BLOCKED; `urls_blocked`,
         `duplicates_skipped` and `curation_drops` count their codes. A run
         with nothing pending commits no batch, and its counts are all
@@ -198,11 +213,17 @@ class ExtractionPipeline:
             if os.path.isdir(self.manifest_path) and todo.isEmpty():
                 return _run_counts(run_id, {})
             batch_id = f"{run_id}-{uuid.uuid4().hex[:12]}"
+            # the salt, and in its own stage each url's first capture: the
+            # window's partitioning contains the salt's hash, so it adds no
+            # exchange, and the branches below all read that one shuffle
+            first = Window.partitionBy(F.xxhash64("url"), "url").orderBy(
+                F.col("warc_ts").asc_nulls_last(), "html")
+            todo = (salted(todo.select("url", "warc_ts", "html"), "url")
+                    .withColumn("__n", F.row_number().over(first))
+                    .where(F.col("__n") == 1).drop("__n", "warc_ts"))
             blocked = None
             if url_blocklist is not None:
                 flagged = filter_urls(todo, url_blocklist)
-                # read once, by the staging write below — which runs before
-                # the commit rename mutates the manifest its plan reads
                 blocked = flagged.where(F.col("url_blocked")).select(
                     F.lit(run_id).alias("run_id"),
                     F.spark_partition_id().alias("partition_id"),
@@ -216,11 +237,13 @@ class ExtractionPipeline:
                 todo = flagged.where(~F.col("url_blocked")) \
                     .drop("url_blocked", "block_reason")
             # fused extract(+chunk): one Arrow stage, no chunking shuffle
-            docs = extract_docs(todo, chunks=with_chunks)
+            docs = extract_docs(todo, salt=False, chunks=with_chunks)
+            if not with_chunks:
+                docs = docs.withColumn("chunks", F.lit(None).cast(
+                    OUT_TABLE_SCHEMA["chunks"].dataType))
 
-            # manifest rows ride the same job: spark_partition_id() is
-            # stamped AFTER the salted repartition inside extract_docs, so
-            # each row records the partition that actually did the work.
+            # spark_partition_id() is stamped in the extraction stage, so
+            # each row records the partition that actually did the work
             docs_m = docs.withColumns({
                 "partition_id": F.spark_partition_id(),
                 "__code": F.lit(None).cast("string"),
@@ -233,24 +256,8 @@ class ExtractionPipeline:
                 docs_m = self._mark_curation(docs_m)
             if dedupe:
                 docs_m = self._mark_duplicates(docs_m)
-            # localCheckpoint, NOT cache: the plan reads the manifest
-            # (resume anti-join and dedup gate) — the commit rename below
-            # refreshes it and INVALIDATES a cache built on it, silently
-            # recomputing docs_m against the post-write state (todo
-            # becomes empty, dup flags flip).
-            # Checkpointing materializes the batch immutably before any
-            # sink write.
-            docs_m = docs_m.localCheckpoint(eager=True)
-
-            # the one content sink: UNCOMMITTED until _commit below
-            # (batch_id partition + manifest-dir commit log; module doc)
-            (docs_m.where(F.col("__code").isNull())
-             .drop("__code", "__h")
-             .withColumn("batch_id", F.lit(batch_id))
-             .write.mode("append").partitionBy("batch_id")
-             .parquet(self.docs_path))
-
-            manifest = docs_m.select(
+            published = F.col("__code").isNull()
+            batch = docs_m.select(
                 F.lit(run_id).alias("run_id"),
                 F.col("partition_id"),
                 F.col("url"),
@@ -261,39 +268,22 @@ class ExtractionPipeline:
                 # only code docs whose failure_code is NULL anyway)
                 F.coalesce("failure_code", "__code").alias("failure_code"),
                 F.col("__h").alias("text_hash"),
+                *[F.when(published, F.col(c)).alias(c) for c in CONTENT],
             )
             if blocked is not None:
-                manifest = manifest.unionByName(blocked)
+                batch = batch.unionByName(blocked, allowMissingColumns=True)
+            # the one write: UNCOMMITTED until _commit below (module doc).
+            # The run's counts ride it; its plan reads the manifest, which
+            # only the commit rename after it changes
             staging = os.path.join(self.out_dir, "_staging", batch_id)
-            # keyed by url with no width, so AQE sizes the write to the
-            # rows instead of one part file per extraction partition plus
-            # one per blocked-row partition; coalesce(1) would instead
-            # pull the URL gate's scan into one task. Every row of a url
-            # lands in one task, so a window over url counts its rows
-            # exactly inside this write's job, and the observed max tells
-            # whether the batch repeats a url
-            repeats = Observation("repeated_urls")
-            (manifest.repartition("url")
-             .withColumn("__n", F.count("*").over(Window.partitionBy("url")))
-             .observe(repeats, F.max("__n").alias("n"),
-                      F.max_by("url", "__n").alias("url"))
-             .drop("__n")
+            code = F.col("failure_code")
+            seen = Observation("run_counts")
+            (batch.observe(seen, F.count(F.lit(1)).alias("rows"), *[
+                F.count(F.when(code == c, 1)).alias(c)
+                for c in ("URL_BLOCKED", "DUPLICATE", *TEXT_GATE_CODES)])
              .write.mode("overwrite").parquet(staging))
-            repeated = repeats.get
-            if (repeated["n"] or 0) > 1:
-                # `pending` anti-joins earlier batches only, and the dedup
-                # gate's in-batch winner is keyed by url: both copies
-                # would commit, and every resume would keep them
-                shutil.rmtree(staging)
-                raise ValueError(
-                    f"the batch holds url {repeated['url']!r} "
-                    f"{repeated['n']} times; a run commits each url once")
-            counts = {
-                r["failure_code"]: r["count"] for r in
-                self.spark.read.schema(MANIFEST_SCHEMA).parquet(staging)
-                .groupBy("failure_code").count().collect()
-            }
-            if not counts:
+            counts = seen.get
+            if not counts["rows"]:
                 # nothing was pending: an empty batch would only grow the
                 # commit log, so commit nothing
                 shutil.rmtree(staging)
@@ -332,16 +322,18 @@ class ExtractionPipeline:
                   os.path.join(self.manifest_path, f"batch_id={batch_id}"))
 
     def _read_committed(self) -> DataFrame:
-        ids = self.committed_batch_ids()
-        # one explicit schema: a with_chunks=False batch reads NULL chunks
-        df = self.spark.read.schema(DOCS_SINK_SCHEMA).parquet(self.docs_path)
-        # isin over the partition column → static partition pruning (no data
-        # files of orphan batches are even opened); asserted in tests.
-        return df.where(F.col("batch_id").isin(ids)).drop("batch_id")
+        # the published rows, with their content; empty before the first
+        # commit. Every batch dir under manifest/ is committed: _commit
+        # renames it there whole
+        df = self._read(OUT_TABLE_SCHEMA)
+        if df is None:
+            df = self.spark.createDataFrame([], OUT_TABLE_SCHEMA)
+        return df.where(F.col("doc_id").isNotNull()) \
+            .select(*DOCS_FULL_SCHEMA.names, "partition_id")
 
     def read_docs(self) -> DataFrame:
-        """Committed-only view of the docs sink (crash-orphan batches
-        pruned by partition filter), nested arrays not scanned."""
+        """The committed docs, one row per published url; the nested
+        arrays are not scanned."""
         return self._read_committed().drop("blocks", "chunks")
 
     def read_blocks(self) -> DataFrame:
@@ -350,46 +342,28 @@ class ExtractionPipeline:
     def read_chunks(self) -> DataFrame:
         return explode_chunks(self._read_committed())
 
-    def vacuum_uncommitted(self, staging_min_age_sec: float = 3600.0) -> int:
-        """Reclaim orphan batch partitions left by a mid-job crash (present
-        in the docs sink, absent from the manifest commit log) plus
-        abandoned staging dirs. Returns the number of directories removed.
-        Safe to run concurrently with readers: committed readers never look
-        at these paths. But an uncommitted dir is NOT provably dead just by
-        being absent from the commit log — a live run sits between its
-        docs append and its commit rename for the whole extraction
-        job, and deleting its batch dir (or its staging dir) in that window
-        would let the commit succeed while referencing vanished content
-        rows: SILENT loss (r4 ADVICE finding — the staging race at least
-        failed loudly at the rename). So BOTH classes are only reclaimed
-        after `staging_min_age_sec` of no modification (pass 0 only when no
-        run can be in flight — e.g. under the same `writer_lease` the
-        runs take)."""
+    def vacuum_uncommitted(self) -> int:
+        """Reclaim the staging dirs of runs that died before their commit
+        rename. Returns the number of directories removed. Committed
+        readers never look at `_staging/`. But a staging dir is NOT
+        provably dead just by being uncommitted: a live run's sits there
+        for its whole write job, and deleting it in that window would fail
+        the run's commit. So a dir is only reclaimed after
+        `STAGING_MIN_AGE_SEC` of no modification."""
         import time
 
-        committed = set(self.committed_batch_ids())
+        self._recover_manifest()
         removed = 0
         now = time.time()
-
-        def _old_enough(p: str) -> bool:
-            try:
-                return now - os.path.getmtime(p) >= staging_min_age_sec
-            except OSError:  # raced with a concurrent commit/removal
-                return False
-
-        if os.path.isdir(self.docs_path):
-            for d in os.listdir(self.docs_path):
-                p = os.path.join(self.docs_path, d)
-                if d.startswith("batch_id=") and \
-                        d.split("=", 1)[1] not in committed and \
-                        _old_enough(p):
-                    shutil.rmtree(p)
-                    removed += 1
         staging_root = os.path.join(self.out_dir, "_staging")
         if os.path.isdir(staging_root):
             for d in os.listdir(staging_root):
                 p = os.path.join(staging_root, d)
-                if _old_enough(p):
+                try:
+                    old = now - os.path.getmtime(p) >= STAGING_MIN_AGE_SEC
+                except OSError:  # raced with a concurrent commit/removal
+                    continue
+                if old:
                     shutil.rmtree(p)
                     removed += 1
         return removed
@@ -422,9 +396,9 @@ class ExtractionPipeline:
         'duplicate' class (and poison the dedup log with hash('')
         forever); a parse failure is not a content duplicate.
         Curation-gated docs are excluded for the published-winner
-        invariant: a gated doc is never written, so letting it own a
+        invariant: a gated doc is never published, so letting it own a
         hash's winner slot would mark its duplicates DUPLICATE while NO
-        copy reaches the docs sink — silent loss of the content.
+        copy is published — silent loss of the content.
 
         The in-batch winner is a window min over the hash (a NULL hash is
         keyed by its own url — no sha256 hex digest contains ':' — so

@@ -113,16 +113,7 @@ DOCS_FULL_SCHEMA = T.StructType(
     DOCS_SCHEMA.fields + [T.StructField("chunks", T.ArrayType(CHUNK_STRUCT), False)]
 )
 
-# The pipeline's one content table (plans/pipeline.py `docs/`), always read
-# with this schema: a `with_chunks=False` batch's files lack `chunks`, and
-# inference from one file could drop the column for every batch.
-DOCS_SINK_SCHEMA = T.StructType(
-    DOCS_FULL_SCHEMA.fields
-    + [T.StructField("partition_id", T.IntegerType(), False),
-       T.StructField("batch_id", T.StringType(), True)]
-)
-
-# Per-partition lineage manifest (north_rule resume mechanism; FIXTURES §6).
+# Per-url lineage manifest (north_rule resume mechanism; FIXTURES §6).
 # `text_hash` is the dedup log (deduplicator.py:45-59 JSON dict → a column):
 # the normalized-text hash of a doc a `dedupe=True` run published as its
 # hash's winner, NULL otherwise. `batch_id` is NOT in the data files — it is
@@ -139,4 +130,15 @@ MANIFEST_SCHEMA = T.StructType(
         T.StructField("text_hash", T.StringType(), True),
         T.StructField("batch_id", T.StringType(), True),
     ]
+)
+
+# The pipeline's one table (plans/pipeline.py `manifest/`): every manifest
+# row plus the content of the doc it published, NULL on a row the run did
+# not publish (a gate code, DUPLICATE, URL_BLOCKED). Always read with this
+# schema, so no file's columns decide the table's.
+OUT_TABLE_SCHEMA = T.StructType(
+    MANIFEST_SCHEMA.fields[:-1]
+    + [T.StructField(f.name, f.dataType, True) for f in DOCS_FULL_SCHEMA.fields
+       if f.name not in MANIFEST_SCHEMA.names]
+    + MANIFEST_SCHEMA.fields[-1:]
 )

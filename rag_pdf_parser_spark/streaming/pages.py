@@ -2,11 +2,11 @@
 job — new page files appear in a directory (the streaming stand-in for an
 Iceberg table's incremental snapshots), and each micro-batch is one
 `ExtractionPipeline.run` into the same out_dir. The stream has the batch
-pipeline's one docs table (it does not chunk: its rows read NULL
-`chunks`) and its exactly-once machinery: the manifest resume, the writer
-lease, the batch commit protocol and the committed readers. A micro-batch
-replayed after a crash, or by a rerun with a fresh checkpoint, finds its
-urls in the manifest and commits nothing.
+pipeline's one table (it does not chunk: its rows read NULL `chunks`) and
+its exactly-once machinery: the manifest resume, the writer lease, the
+batch commit protocol and the committed readers. A micro-batch replayed
+after a crash, or by a rerun with a fresh checkpoint, finds its urls in
+the manifest and commits nothing.
 
 `availableNow=True` drains the backlog in bounded micro-batches and stops
 (the reference's resume-by-status loop, scheduler.py, as checkpointed
@@ -26,10 +26,9 @@ def run_extraction_stream(spark: SparkSession, src_dir: str, out_dir: str,
     """Drain available page files (at most 8 per micro-batch, which bounds
     each batch's work) through `ExtractionPipeline(spark, out_dir).run`,
     one committed batch per micro-batch; read the result with that
-    pipeline's `read_docs` / `read_blocks`. A micro-batch that repeats a
-    url fails the query with `run`'s ValueError (raised from
-    `awaitTermination` as a StreamingQueryException), and nothing of that
-    micro-batch is committed."""
+    pipeline's `read_docs` / `read_blocks`, empty before the first
+    commit. A micro-batch that repeats a url commits it once, as its
+    first capture (`run`)."""
     pipe = ExtractionPipeline(spark, out_dir)
 
     def process(batch: DataFrame, batch_id: int) -> None:

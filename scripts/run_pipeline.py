@@ -20,8 +20,9 @@ Locally, from the repo root, no packaging is needed:
     python scripts/run_pipeline.py --pages synth:200 --out /tmp/extract_out
 
 The JSON counts are the last stdout line. The out_dir holds one parquet
-content table, `docs/`, with each doc's blocks and chunks nested; the
-reference's JSONL outputs (K2/K3) are a write of the committed view:
+table, `manifest/`: a row per url, carrying the published doc with its
+blocks and chunks nested; the reference's JSONL outputs (K2/K3) are a
+write of the committed view:
 
     ExtractionPipeline(spark, out).read_blocks().write.json(dest)
     ExtractionPipeline(spark, out).read_chunks().write.json(dest)

@@ -17,10 +17,10 @@
 6. An out_dir has one table format: `ExtractionPipeline.run` takes no
    format, nothing sniffs one, and `plans/` reads and writes no table
    through `.json(` or `.format(`.
-7. An out_dir has one content table: blocks and chunks stay nested in
-   the docs sink, so `run` writes two tables (docs and the manifest
-   staging) and no library code joins a `blocks` or `chunks` path except
-   to refuse an older out_dir.
+7. An out_dir has one table: each batch's content rides its manifest
+   rows, so `run` writes once and checkpoints nothing, and no library
+   code names a `docs`, `blocks` or `chunks` path except to refuse an
+   older out_dir.
 """
 
 import ast
@@ -344,12 +344,14 @@ def _writes(call):
 
 
 def test_out_dir_has_one_content_table():
-    """Blocks and chunks live nested in the docs sink: no library code
-    names a `blocks_path` or `chunks_path`, `ExtractionPipeline.run` has
-    exactly two `.parquet(` writes (the docs sink and the manifest
-    staging), and no `join(...)` in the library takes a `"blocks"` or
-    `"chunks"` path component; those names appear only in the test of an
-    `if` whose body raises (the older-layout refusal)."""
+    """The manifest is the one table, content included:
+    `ExtractionPipeline.run` has exactly one `.parquet(` write (the staged
+    batch) and no `localCheckpoint` (nothing reads the batch twice), no
+    library code names a `docs_path`, `blocks_path` or `chunks_path`, no
+    `join(...)` in the library takes a `"blocks"` or `"chunks"` path
+    component, and the string `"docs"` appears only in the test of an `if`
+    whose body raises (the older-layout refusal), with `"blocks"` and
+    `"chunks"`."""
     pipeline = _parse(os.path.join(LIB, "plans", "pipeline.py"))
     (run,) = [m for c in pipeline.body
               if isinstance(c, ast.ClassDef) and c.name == "ExtractionPipeline"
@@ -358,22 +360,28 @@ def test_out_dir_has_one_content_table():
     writes = [n.lineno for n in ast.walk(run)
               if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
               and n.func.attr == "parquet" and _writes(n)]
-    assert len(writes) == 2, writes
+    assert len(writes) == 1, writes
+    assert "localCheckpoint" not in _names_used(run)
 
     sinks = {"blocks", "chunks"}
-    named, joined, refusals = [], [], 0
+    named, joined, docs, refusals = [], [], [], 0
     for path in _py_files(LIB):
         rel = os.path.relpath(path, ROOT)
         tree = _parse(path)
         named += [(rel, n.lineno) for n in ast.walk(tree)
                   if isinstance(n, ast.Attribute)
-                  and n.attr in ("blocks_path", "chunks_path")]
+                  and n.attr in ("docs_path", "blocks_path", "chunks_path")]
         refused = {id(c) for n in ast.walk(tree)
                    if isinstance(n, ast.If)
                    and any(isinstance(b, ast.Raise) for b in n.body)
                    for c in ast.walk(n.test)}
         refusals += sum(id(n) in refused for n in ast.walk(tree)
-                        if isinstance(n, ast.Constant) and n.value in sinks)
+                        if isinstance(n, ast.Constant)
+                        and n.value in sinks | {"docs"})
+        docs += [(rel, n.lineno) for n in ast.walk(tree)
+                 if isinstance(n, ast.Constant) and isinstance(n.value, str)
+                 and n.value.strip("/").rsplit("/", 1)[-1] == "docs"
+                 and id(n) not in refused]
         joined += [(rel, n.lineno) for n in ast.walk(tree)
                    if isinstance(n, ast.Call) and _callee(n) == "join"
                    and any(isinstance(a, ast.Constant)
@@ -381,4 +389,5 @@ def test_out_dir_has_one_content_table():
                            and a.value.strip("/") in sinks for a in n.args)]
     assert not named, named
     assert not joined, joined
-    assert refusals == 2, refusals  # the pipeline's older-layout check
+    assert not docs, docs
+    assert refusals == 3, refusals  # the pipeline's older-layout check

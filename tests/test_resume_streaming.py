@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rag_pdf_parser_spark.operators.multimodal import image_features
+from rag_pdf_parser_spark.plans import pipeline
 from rag_pdf_parser_spark.plans.pipeline import ExtractionPipeline
 from rag_pdf_parser_spark.sources.pages import synth_pages
 
@@ -34,8 +35,8 @@ def test_resume_no_double_processing(spark, tmp_path):
     p2 = ExtractionPipeline(spark, out2)
     p2.run(pages, run_id="single", with_chunks=False)
 
-    a = spark.read.parquet(p1.docs_path).select("url", "doc_id", "extracted_text")
-    b = spark.read.parquet(p2.docs_path).select("url", "doc_id", "extracted_text")
+    a = p1.read_docs().select("url", "doc_id", "extracted_text")
+    b = p2.read_docs().select("url", "doc_id", "extracted_text")
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
@@ -46,12 +47,13 @@ def _read_schema(df):
     return scan.split("\n")[0]
 
 
-def test_crash_between_sinks_and_manifest_commit(spark, tmp_path):
-    """r3 verdict #2: death AFTER the docs-sink append but BEFORE the
-    manifest commit must not duplicate rows — the orphan batch partitions
-    stay invisible to committed readers, the rerun re-extracts every url the
-    manifest never saw, and the committed output equals an uninterrupted
-    run EXACTLY."""
+def test_crash_between_sinks_and_manifest_commit(spark, tmp_path,
+                                               monkeypatch):
+    """r3 verdict #2: death AFTER the batch write but BEFORE the commit
+    rename must not duplicate rows — it leaves nothing but the staging dir,
+    which committed readers never look at, the rerun re-extracts every url
+    the manifest never saw, and the committed output equals an
+    uninterrupted run EXACTLY."""
     pages = synth_pages(spark, 60)
 
     out = str(tmp_path / "crashy")
@@ -66,8 +68,11 @@ def test_crash_between_sinks_and_manifest_commit(spark, tmp_path):
     with pytest.raises(RuntimeError, match="simulated death"):
         p.run(pages, run_id="r1", with_chunks=True)
 
-    # the crash left orphan content: raw sink has rows, committed view none
-    assert spark.read.parquet(p.docs_path).count() == 60
+    # the crash left the staged batch only: committed views see none of it
+    assert sorted(os.listdir(out)) == ["_staging"]
+    (staged,) = os.listdir(os.path.join(out, "_staging"))
+    assert spark.read.parquet(os.path.join(out, "_staging", staged)) \
+        .where(F.col("doc_id").isNotNull()).count() == 60
     assert p.committed_batch_ids() == []
     assert p.read_docs().count() == 0
 
@@ -93,24 +98,21 @@ def test_crash_between_sinks_and_manifest_commit(spark, tmp_path):
     cb = clean.read_chunks().select("chunk_id", "doc_id", "text")
     assert ca.exceptAll(cb).count() == 0 and cb.exceptAll(ca).count() == 0
 
-    # the committed read prunes orphan partitions STATICALLY (no orphan data
-    # file is opened): PartitionFilters carries the batch_id IN-list
-    plan = p.read_docs()._jdf.queryExecution().executedPlan().toString()
-    assert "batch_id" in plan.split("PartitionFilters")[1].split("]")[0], plan
-    # ... and each view scans only the columns it shows: the docs view
-    # reads neither nested array, the blocks view no chunks
+    # each view scans only the columns it shows: the docs view reads
+    # neither nested array, the blocks view no chunks
     docs_rs, blocks_rs = _read_schema(p.read_docs()), _read_schema(
         p.read_blocks())
     assert "blocks:" not in docs_rs and "chunks:" not in docs_rs, docs_rs
     assert "blocks:" in blocks_rs and "chunks:" not in blocks_rs, blocks_rs
     assert "chunks:" in _read_schema(p.read_chunks())
 
-    # vacuum reclaims the orphan batch dirs; committed rows untouched.
-    # age 0: the test KNOWS no run is in flight — the default age guard
-    # now protects live runs' not-yet-committed batch dirs too (ADVICE r4)
-    removed = p.vacuum_uncommitted(0)
-    assert removed == 2  # the docs orphan and the crashed run's staging
-    assert spark.read.parquet(p.docs_path).count() == 60
+    # vacuum reclaims the crashed run's staging dir; committed rows
+    # untouched. age 0: the test KNOWS no run is in flight — the default
+    # age guard protects live runs' not-yet-committed batches (ADVICE r4)
+    monkeypatch.setattr(pipeline, "STAGING_MIN_AGE_SEC", 0)
+    removed = p.vacuum_uncommitted()
+    assert removed == 1
+    assert os.listdir(os.path.join(out, "_staging")) == []
     assert p.read_docs().count() == 60
 
 
@@ -135,8 +137,10 @@ def test_jsonl_export_is_a_write_of_the_committed_view(spark, tmp_path):
     with pytest.raises(RuntimeError, match="simulated death"):
         p.run(pages, run_id="r3")
     assert len(p.committed_batch_ids()) == 2
-    # the orphan batch's rows are on disk
-    assert spark.read.parquet(p.docs_path).count() == 30
+    # the uncommitted batch's rows are on disk, in its staging dir
+    (staged,) = os.listdir(os.path.join(p.out_dir, "_staging"))
+    assert spark.read.parquet(os.path.join(p.out_dir, "_staging", staged)) \
+        .where(F.col("doc_id").isNotNull()).count() == 10
 
     def lines(dest):
         out = []
@@ -166,7 +170,7 @@ def test_jsonl_export_is_a_write_of_the_committed_view(spark, tmp_path):
 
 
 def test_legacy_json_sink_batch_fails_the_committed_read(spark, tmp_path):
-    """An out_dir whose docs batch an older version wrote as JSON
+    """An out_dir whose batch an older version wrote as JSON
     (`fmt="json"`) is not migrated: the committed read raises instead of
     returning its batch as empty."""
     import json
@@ -178,7 +182,7 @@ def test_legacy_json_sink_batch_fails_the_committed_read(spark, tmp_path):
     (batch,) = p.committed_batch_ids()
     rows = [r.asDict() for r in p.read_docs().select("url", "doc_id")
             .collect()]
-    d = os.path.join(p.docs_path, f"batch_id={batch}")
+    d = os.path.join(p.manifest_path, f"batch_id={batch}")
     shutil.rmtree(d)
     os.makedirs(d)
     with open(os.path.join(d, "part-00000-legacy.json"), "w") as f:
@@ -188,23 +192,44 @@ def test_legacy_json_sink_batch_fails_the_committed_read(spark, tmp_path):
 
 
 @pytest.mark.parametrize("dedupe", [False, True])
-def test_a_batch_that_repeats_a_url_commits_nothing(spark, tmp_path, dedupe):
-    """A page batch holding a url twice (a re-crawl with changed html)
-    raises before the commit, with or without the dedup gate: `pending`
-    anti-joins earlier batches only, so both copies would commit and no
-    resume would remove them. Nothing is committed or left staged."""
+def test_a_batch_that_repeats_a_url_commits_its_first_capture(
+        spark, tmp_path, dedupe):
+    """A page batch holding a url twice (a re-crawl with changed html and
+    a later `warc_ts`) commits the url once, as its earlier capture, with
+    or without the dedup gate and at any shuffle width: the salt stage
+    keeps each url's first capture."""
+    from rag_pdf_parser_spark.operators.extract import extract_docs
+
     pages = synth_pages(spark, 10)
-    recrawl = pages.orderBy("url").limit(2).withColumn(
-        "html", F.concat("html", F.lit(b"<p>re-crawled</p>")))
-    p = ExtractionPipeline(spark, str(tmp_path / "rep"))
-    with pytest.raises(ValueError, match="2 times"):
-        p.run(pages.unionByName(recrawl), run_id="r1", dedupe=dedupe)
-    assert p.committed_batch_ids() == []
-    assert p.read_manifest() is None
-    assert os.listdir(os.path.join(p.out_dir, "_staging")) == []
-    # the same pages, each url once, commit
-    assert p.run(pages, run_id="r2", dedupe=dedupe)["docs_processed"] == 10
-    assert p.read_docs().count() == 10
+    first = pages.orderBy("url").limit(2)
+    recrawl = first.withColumns({
+        "html": F.lit(b"<html><body><p>the page as re-crawled a day "
+                      b"later</p></body></html>"),
+        "warc_ts": F.col("warc_ts") + F.expr("INTERVAL 1 DAY")})
+    once = ExtractionPipeline(spark, str(tmp_path / "once"))
+    once.run(pages, run_id="once")
+    want = {r["url"]: r["extracted_text"] for r in once.read_docs().collect()}
+    # precondition: the later capture extracts to other text
+    later = {r["url"]: r["extracted_text"]
+             for r in extract_docs(recrawl).collect()}
+    assert len(later) == 2 and all(later[u] != want[u] for u in later)
+    key = "spark.sql.shuffle.partitions"
+    width = spark.conf.get(key)
+    try:
+        for n in (2, 11):
+            spark.conf.set(key, str(n))
+            p = ExtractionPipeline(spark, str(tmp_path / f"rep{n}"))
+            # the re-crawl first in the input: arrival order decides nothing
+            r = p.run(recrawl.unionByName(pages), run_id="r1",
+                      dedupe=dedupe)
+            assert r["docs_processed"] == 10, r
+            m = p.read_manifest()
+            assert m.count() == m.select("url").distinct().count() == 10
+            got = {r["url"]: r["extracted_text"]
+                   for r in p.read_docs().collect()}
+            assert got == want
+    finally:
+        spark.conf.set(key, width)
 
 
 def test_resume_raises_on_an_unreadable_manifest(spark, tmp_path):
@@ -222,7 +247,31 @@ def test_resume_raises_on_an_unreadable_manifest(spark, tmp_path):
     with pytest.raises(Exception, match="(?i)conflicting directory"):
         p.run(pages, run_id="r2", with_chunks=False)
     assert p.committed_batch_ids() == ids
-    assert p.read_docs().count() == 20
+    # the committed views read the same table, so they raise too
+    with pytest.raises(Exception, match="(?i)conflicting directory"):
+        p.read_docs().count()
+
+
+def test_views_before_the_first_commit_are_empty(spark, tmp_path):
+    """On an out_dir no run has committed to, the docs, blocks and chunks
+    views are empty frames with their usual columns, the manifest view is
+    None, and reading them creates nothing."""
+    from rag_pdf_parser_spark.schema import BLOCKS_FLAT_SCHEMA, CHUNKS_SCHEMA
+
+    out = str(tmp_path / "fresh")
+    p = ExtractionPipeline(spark, out)
+    want = {
+        p.read_docs: ["url", "doc_id", "charset", "failure_code", "title",
+                      "authors", "parser_version", "n_pages",
+                      "extracted_text", "bytes_in", "partition_id"],
+        p.read_blocks: BLOCKS_FLAT_SCHEMA.names,
+        p.read_chunks: CHUNKS_SCHEMA.names,
+    }
+    for view, cols in want.items():
+        df = view()
+        assert df.columns == cols and df.count() == 0
+    assert p.read_manifest() is None
+    assert not os.path.exists(out)
 
 
 def _counting_jobs(spark, tag, fn):
@@ -240,19 +289,19 @@ def _counting_jobs(spark, tag, fn):
 
 def test_a_plain_run_writes_one_content_table(spark, tmp_path):
     """A plain `with_chunks=True` run over `synth_pages(300)` at local[4]
-    takes at most 7 Spark jobs: one docs append with blocks and chunks
-    nested, where exploded blocks and chunks sinks took two more."""
+    takes at most 2 Spark jobs: the salt shuffle and the one write of the
+    batch, content nested in its manifest rows, that also counts it."""
     p = ExtractionPipeline(spark, str(tmp_path / "plain"))
     r, jobs = _counting_jobs(spark, "plain", lambda: p.run(
         synth_pages(spark, 300), run_id="plain", with_chunks=True))
     assert r["docs_processed"] == 300, r
-    assert jobs <= 7, jobs
+    assert jobs <= 2, jobs
 
 
 def test_resume_with_nothing_pending_stops_at_the_probe(spark, tmp_path):
     """A resume (a manifest exists) probes `pending` once: with nothing
     pending the gated run takes at most 2 Spark jobs and commits nothing;
-    with urls pending it takes 19 jobs. Jobs are counted by job group on
+    with urls pending it takes 13 jobs. Jobs are counted by job group on
     `synth_pages(300)` at local[4]."""
     blocked = spark.createDataFrame([("host1.example",)], "host string")
     p = ExtractionPipeline(spark, str(tmp_path / "probe"))
@@ -265,7 +314,7 @@ def test_resume_with_nothing_pending_stops_at_the_probe(spark, tmp_path):
     run("probe-first", 200)
     r, jobs = run("probe-resume", 300)
     assert r["docs_processed"] + r["urls_blocked"] == 100, r
-    assert jobs <= 19, jobs
+    assert jobs <= 13, jobs
     ids = p.committed_batch_ids()
     r, jobs = run("probe-empty", 300)
     assert r == {"run_id": "probe-empty", "docs_processed": 0,
@@ -626,6 +675,38 @@ def test_streaming_extraction_replay_commits_nothing(spark, tmp_path):
                   p.read_docs().select(*cols).collect()) == before
     m = p.read_manifest()
     assert m.count() == m.select("url").distinct().count() == 60
+
+
+def test_stream_past_a_micro_batch_that_repeats_a_url(spark, tmp_path):
+    """A page file holding a url twice (a later re-crawl with changed
+    html) commits that url once, as its earlier capture, and the stream
+    goes on: a clean file appended after it and a restart on the same
+    checkpoint commit too — two batches, each url once."""
+    from rag_pdf_parser_spark.operators.extract import extract_docs
+    from rag_pdf_parser_spark.streaming.pages import run_extraction_stream
+
+    src = str(tmp_path / "pages_in")
+    out = str(tmp_path / "docs_out")
+    pages = synth_pages(spark, 12)
+    urls = sorted(r["url"] for r in pages.select("url").collect())
+    head = pages.where(F.col("url").isin(urls[:6]))
+    recrawl = head.where(F.col("url") == urls[0]).withColumns({
+        "html": F.lit(b"<html><body><p>the page as re-crawled a day "
+                      b"later</p></body></html>"),
+        "warc_ts": F.col("warc_ts") + F.expr("INTERVAL 1 DAY")})
+    head.unionByName(recrawl).coalesce(1).write.parquet(src)
+    run_extraction_stream(spark, src, out, str(tmp_path / "ckpt"))
+    pages.where(~F.col("url").isin(urls[:6])).coalesce(1) \
+        .write.mode("append").parquet(src)
+    run_extraction_stream(spark, src, out, str(tmp_path / "ckpt"))
+
+    p = ExtractionPipeline(spark, out)
+    assert len(p.committed_batch_ids()) == 2
+    m = p.read_manifest()
+    assert m.count() == m.select("url").distinct().count() == 12
+    got = {r["url"]: r["extracted_text"] for r in p.read_docs().collect()}
+    assert got == {r["url"]: r["extracted_text"]
+                   for r in extract_docs(pages).collect()}
 
 
 def test_streaming_curation_gates_match_batch(spark, tmp_path):
@@ -1051,12 +1132,12 @@ def test_compact_output_keeps_the_dedup_log(spark, tmp_path):
 
 def test_out_dir_is_one_content_table_and_refuses_older_layouts(
         spark, tmp_path):
-    """The docs table is the one content table and the manifest the only
-    dedup store: a gated `with_chunks=True` run leaves `docs`, `manifest`
-    and an empty `_staging` (the lease is gone once it returns). An out_dir
-    an older layout wrote — it holds `blocks/`, `chunks/` or
-    `seen_hashes/` — is refused by `run`, the committed readers,
-    `compact_output` and the vacuum before any of them writes."""
+    """The manifest is the one table, content and dedup log included: a
+    gated `with_chunks=True` run leaves `manifest` and an empty `_staging`
+    (the lease is gone once it returns). An out_dir an older layout wrote
+    — it holds `docs/`, `blocks/`, `chunks/` or `seen_hashes/` — is
+    refused by `run`, the committed readers, `compact_output` and the
+    vacuum before any of them writes."""
     from rag_pdf_parser_spark.plans.maintenance import compact_output
 
     blocked = spark.createDataFrame([("nowhere.example",)], "host string")
@@ -1066,12 +1147,11 @@ def test_out_dir_is_one_content_table_and_refuses_older_layouts(
               url_blocklist=blocked, curate=True, dedupe=True)
     assert r["docs_processed"] == 8, r
     assert os.listdir(os.path.join(out, "_staging")) == []
-    assert sorted(os.listdir(out)) == ["_staging", "docs", "manifest"], \
+    assert sorted(os.listdir(out)) == ["_staging", "manifest"], \
         os.listdir(out)
 
     ids = sorted(os.listdir(p.manifest_path))
-    docs = sorted(os.listdir(p.docs_path))
-    for old in ("blocks", "chunks", "seen_hashes"):
+    for old in ("docs", "blocks", "chunks", "seen_hashes"):
         # an older out_dir: committed state plus the old layout's dir
         os.makedirs(os.path.join(out, old))
         for refused in (
@@ -1080,13 +1160,12 @@ def test_out_dir_is_one_content_table_and_refuses_older_layouts(
                 p.read_docs, p.read_blocks, p.read_chunks,
                 p.committed_batch_ids,
                 lambda: compact_output(spark, out),
-                lambda: p.vacuum_uncommitted(0)):
+                p.vacuum_uncommitted):
             with pytest.raises(ValueError, match="older layout"):
                 refused()
             assert sorted(os.listdir(out)) == sorted(
-                ["_staging", "docs", "manifest", old])
+                ["_staging", "manifest", old])
             assert sorted(os.listdir(p.manifest_path)) == ids
-            assert sorted(os.listdir(p.docs_path)) == docs
             assert os.listdir(os.path.join(out, "_staging")) == []
             assert os.listdir(os.path.join(out, old)) == []
         os.rmdir(os.path.join(out, old))
@@ -1240,9 +1319,8 @@ def test_compact_output_folds_batches(spark, tmp_path):
     assert before_docs.exceptAll(after_docs).count() == 0
     assert p.read_blocks().count() == before_blocks
     assert p.read_chunks().count() == before_chunks
-    # old docs partitions vacuumed: one batch dir in the one content sink
-    dirs = [d for d in os.listdir(p.docs_path) if d.startswith("batch_id=")]
-    assert dirs == [f"batch_id={ids[0]}"], dirs
+    # the fold left the one table and no swap dir behind
+    assert sorted(os.listdir(out)) == ["_staging", "manifest"]
     # resume is still exact over the folded manifest, and a run with
     # nothing pending commits no batch
     r = p.run(pages, run_id="r3", with_chunks=True)
@@ -1313,7 +1391,7 @@ def test_mixed_width_batches_read_and_fold(spark, tmp_path):
 
 def test_vacuum_spares_young_staging(spark, tmp_path):
     """The vacuum must not delete a staging dir that may belong to an
-    in-flight run (between manifest write and commit rename) — only ones
+    in-flight run (between its batch write and commit rename) — only ones
     older than the age threshold."""
     out = str(tmp_path / "v")
     p = ExtractionPipeline(spark, out)
@@ -1326,18 +1404,8 @@ def test_vacuum_spares_young_staging(spark, tmp_path):
     os.utime(young, (1, 1))  # pretend it is ancient
     assert p.vacuum_uncommitted() == 1
     assert not os.path.exists(young)
-
-    # ADVICE r4: a YOUNG uncommitted batch_id= content dir may belong to a
-    # run that is between its sink append and its commit rename — deleting
-    # it would commit a manifest referencing vanished rows (silent loss).
-    # Young → spared; aged → provably-dead orphan → reclaimed.
-    orphan = os.path.join(p.docs_path, "batch_id=inflight-batch")
-    os.makedirs(orphan)
-    assert p.vacuum_uncommitted() == 0
-    assert os.path.isdir(orphan)
-    os.utime(orphan, (1, 1))
-    assert p.vacuum_uncommitted() == 1
-    assert not os.path.exists(orphan)
+    # committed rows untouched
+    assert p.read_docs().count() == 5
 
 
 class TestRangeJoin:
@@ -1476,7 +1544,7 @@ def test_pipeline_dedupe_gate(spark, tmp_path):
     r1 = p.run(pages1, run_id="r1", with_chunks=False, dedupe=True)
     # 3 copies of `body` → 1 kept; 2 copies of `other` → 1 kept
     assert r1["docs_processed"] == 5 and r1["duplicates_skipped"] == 3, r1
-    docs = spark.read.parquet(p.docs_path)
+    docs = p.read_docs()
     assert docs.count() == 2
     m = p.read_manifest()
     assert m.where(F.col("failure_code") == "DUPLICATE").count() == 3
@@ -1496,11 +1564,26 @@ def test_pipeline_dedupe_gate(spark, tmp_path):
     r2 = p.run(pages1.union(pages2), run_id="r2", with_chunks=False,
                dedupe=True)
     assert r2["docs_processed"] == 2 and r2["duplicates_skipped"] == 1, r2
-    assert spark.read.parquet(p.docs_path).count() == 3
+    assert p.read_docs().count() == 3
     # all 7 urls in the manifest exactly once → nothing re-extracts
     m2 = p.read_manifest()
     assert m2.count() == 7 and m2.select("url").distinct().count() == 7
     assert m2.where(F.col("text_hash").isNotNull()).count() == 3
+
+
+def _capture_writes(monkeypatch, df):
+    """A list that collects the DataFrame of every `.write...parquet(`
+    call from here on."""
+    written = []
+    writer = type(df.write)
+    real = writer.parquet
+
+    def capture(self, *a, **kw):
+        written.append(self._df)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(writer, "parquet", capture)
+    return written
 
 
 def test_dedupe_gate_runs_each_python_stage_once(spark, tmp_path,
@@ -1512,26 +1595,62 @@ def test_dedupe_gate_runs_each_python_stage_once(spark, tmp_path,
     from rag_pdf_parser_spark.operators.spread import plan_nodes
 
     pages = synth_pages(spark, 40)
-    checkpointed = []
-    real = type(pages).localCheckpoint
-
-    def capture(self, *a, **kw):
-        out = real(self, *a, **kw)
-        checkpointed.append(self)
-        return out
-
-    monkeypatch.setattr(type(pages), "localCheckpoint", capture)
+    written = _capture_writes(monkeypatch, pages)
     r = ExtractionPipeline(spark, str(tmp_path / "once")).run(
         pages, run_id="r1", with_chunks=True, curate=True,
         dedupe=True)
     assert r["docs_processed"] == 40, r
-    [batch] = checkpointed
+    [batch] = written
     # the node's own line, not its subtree: "MapInArrow <kernel>(...)"
     arrow = [n.simpleString(4) for n in plan_nodes(batch)
              if n.nodeName() == "MapInArrow"]
     assert len([a for a in arrow if a.startswith("MapInArrow extract(")]) \
         == 1, arrow
     assert len(arrow) == 2, arrow
+
+
+def test_a_gated_run_shuffles_the_pages_once(spark, tmp_path,
+                                             monkeypatch):
+    """A gated run's executed plan shuffles the pages once: one salt
+    exchange on `xxhash64(url)`, which the URL gate's blocked branch
+    reuses, and which the first-capture window rides without a shuffle
+    of its own."""
+    from rag_pdf_parser_spark.operators.spread import plan_nodes
+
+    def cls(name):
+        return spark._jvm.Class.forName("org.apache.spark.sql." + name)
+
+    shuffle = cls("execution.exchange.ShuffleExchangeExec")
+    reused = cls("execution.exchange.ReusedExchangeExec")
+    xxhash = cls("catalyst.expressions.XxHash64")
+
+    pages = synth_pages(spark, 40)
+    written = _capture_writes(monkeypatch, pages)
+    blocked = spark.createDataFrame([("host1.example",)], "host string")
+    r = ExtractionPipeline(spark, str(tmp_path / "salt")).run(
+        pages, run_id="r1", with_chunks=True, url_blocklist=blocked,
+        curate=True, dedupe=True)
+    assert r["urls_blocked"] > 0 and r["docs_processed"] > 0, r
+    [batch] = written
+    batch.collect()  # run it, so the plan shows AQE's exchange reuse
+    nodes = list(plan_nodes(batch))
+
+    def pages_shuffle(n):
+        return shuffle.isInstance(n) and "html" in [
+            a.name() for a in _seq(n.output())]
+
+    salts = [n for n in nodes if pages_shuffle(n)]
+    assert len(salts) == 1, [n.simpleString(2) for n in salts]
+    (part,) = _seq(salts[0].outputPartitioning().expressions())
+    assert xxhash.isInstance(part)
+    reuses = [n for n in nodes
+              if reused.isInstance(n) and pages_shuffle(n.child())]
+    assert len(reuses) == 1 and reuses[0].child().sameResult(salts[0])
+
+
+def _seq(s):
+    """A Scala Seq as a Python list."""
+    return [s.apply(i) for i in range(s.size())]
 
 
 def test_aqe_skew_join_splits_hot_partition(spark):
