@@ -196,8 +196,8 @@ def curate_corpus_incremental(increment: DataFrame, store_dir: str,
     aggregation and the pass_all filter feeding dedup): without it every
     gate — the tokenize, the quality fold and the repetition stage —
     executes twice per row, and the dedup-side plan would also re-read
-    canon_dir after this very call appends to it (the cache-invalidation
-    hazard documented in plans/pipeline.py).
+    canon_dir after the admit appends to it (the comment above the
+    appends in `operators/dedup.py:dedup_corpus_incremental`).
 
     `drop_already_admitted` is counted INSIDE dedup's writer-leased
     section (its `stats` out-param), against the exact canon snapshot the

@@ -9,8 +9,8 @@ reference got mutual exclusion for free from SQLite's file lock
 guarantee is an ATOMIC ``mkdir`` lease:
 
     acquire  = os.mkdir(<root>/_lock)          (atomic: exactly one winner)
-    steal    = lock older than `STALE_SEC` → rmtree + one retry
-               (same age doctrine as vacuum_uncommitted's staging guard)
+    steal    = lock older than `STALE_SEC` → atomic rename to a
+               stealer-unique trash name, then one retry of the mkdir
     validate = the owner token written inside the lock dir is re-checked at
                the COMMIT POINT (`assert_held`) — a writer whose stale lock
                was taken over fails loudly BEFORE publishing its batch,
@@ -18,11 +18,13 @@ guarantee is an ATOMIC ``mkdir`` lease:
     release  = rmtree, only if still the owner
 
 Consumers: `ExtractionPipeline.run` (one lease per run, validated before
-`_commit`), and `plans.maintenance.compact_*` (compaction takes the same
-lease, replacing the old "run in a maintenance window" comment with an
-actual guard), and `operators.dedup.dedup_corpus_incremental` (one lease
-per increment on the LSH store's parent dir — the streaming near-dup gate
-admits each micro-batch through it, so the stream is leased too).
+`_commit`; holding it, the run deletes every dir under `_staging/` as
+dead: `STALE_SEC` is the out_dir's only age rule),
+`plans.maintenance.compact_*` (compaction takes the same lease, replacing
+the old "run in a maintenance window" comment with an actual guard), and
+`operators.dedup.dedup_corpus_incremental` (one lease per increment on
+the LSH store's parent dir — the streaming near-dup gate admits each
+micro-batch through it, so the stream is leased too).
 
 At 10^12-row scale the same role is played by the metastore's commit
 conflict detection (Iceberg optimistic locking); this module documents and

@@ -58,9 +58,10 @@ place — the manifest IS the commit log, and a batch is committed iff
 A crash anywhere before (2) leaves only the staging dir, which committed
 readers never look at — the rerun re-extracts those urls (the manifest
 never saw them) under a new token, so committed output equals an
-uninterrupted run EXACTLY. Dead staging dirs are reclaimed by
-`vacuum_uncommitted()`. The reference's doc_status marking
-(persistent.py:369-406) has the same window with no committed-reader story.
+uninterrupted run EXACTLY. The lease holder is the only writer, so the
+next run (an empty resume too) deletes every staging dir as dead. The
+reference's doc_status marking (persistent.py:369-406) has the same window
+with no committed-reader story.
 POSIX rename is atomic on local/HDFS filesystems; on object stores the same
 role is played by an Iceberg/metastore metadata swap (SURVEY §1.1 maps the
 manifest to a Delta/Iceberg table — jars absent in this sandbox).
@@ -91,9 +92,6 @@ from .maintenance import recover_store
 
 # the one table's content columns: NULL on every row a run did not publish
 CONTENT = [c for c in OUT_TABLE_SCHEMA.names if c not in MANIFEST_SCHEMA.names]
-# `vacuum_uncommitted` spares a staging dir younger than this: it may be a
-# live run's (tests that know no run is in flight set it to 0)
-STAGING_MIN_AGE_SEC = 3600.0
 
 
 def _run_counts(run_id: str, counts: dict) -> dict:
@@ -200,6 +198,9 @@ class ExtractionPipeline:
         second concurrent run on the same out_dir raises LeaseHeldError at
         start instead of silently committing duplicate urls; a writer
         whose stale lock was stolen aborts before its commit rename.
+        Past the older-layout refusal, the run deletes every dir under
+        `_staging/`: the lease proves each a dead run's batch. `run_id`
+        must be one path component (it names the batch's dir).
 
         The returned counts are observed on the one write of the batch:
         `docs_processed` is every row but URL_BLOCKED; `urls_blocked`,
@@ -208,8 +209,20 @@ class ExtractionPipeline:
         zero: on a resume (a manifest exists) a bounded
         probe of `pending` (two jobs: the manifest broadcast and a limit-1
         scan) finds it empty and the run stops there."""
+        if not run_id or "/" in run_id or os.sep in run_id:
+            raise ValueError(
+                f"run_id {run_id!r} must be one non-empty path component")
         with WriterLease(self.out_dir) as lease:
-            todo = self.pending(pages)
+            todo = self.pending(pages)  # refuses an older layout first
+            # every staging dir is a dead run's, but a writer whose stale
+            # lease was stolen may still rename its own away: skip those
+            staging_root = os.path.join(self.out_dir, "_staging")
+            for d in (os.listdir(staging_root)
+                      if os.path.isdir(staging_root) else ()):
+                try:
+                    shutil.rmtree(os.path.join(staging_root, d))
+                except FileNotFoundError:
+                    pass
             if os.path.isdir(self.manifest_path) and todo.isEmpty():
                 return _run_counts(run_id, {})
             batch_id = f"{run_id}-{uuid.uuid4().hex[:12]}"
@@ -275,7 +288,7 @@ class ExtractionPipeline:
             # the one write: UNCOMMITTED until _commit below (module doc).
             # The run's counts ride it; its plan reads the manifest, which
             # only the commit rename after it changes
-            staging = os.path.join(self.out_dir, "_staging", batch_id)
+            staging = os.path.join(staging_root, batch_id)
             code = F.col("failure_code")
             seen = Observation("run_counts")
             (batch.observe(seen, F.count(F.lit(1)).alias("rows"), *[
@@ -341,32 +354,6 @@ class ExtractionPipeline:
 
     def read_chunks(self) -> DataFrame:
         return explode_chunks(self._read_committed())
-
-    def vacuum_uncommitted(self) -> int:
-        """Reclaim the staging dirs of runs that died before their commit
-        rename. Returns the number of directories removed. Committed
-        readers never look at `_staging/`. But a staging dir is NOT
-        provably dead just by being uncommitted: a live run's sits there
-        for its whole write job, and deleting it in that window would fail
-        the run's commit. So a dir is only reclaimed after
-        `STAGING_MIN_AGE_SEC` of no modification."""
-        import time
-
-        self._recover_manifest()
-        removed = 0
-        now = time.time()
-        staging_root = os.path.join(self.out_dir, "_staging")
-        if os.path.isdir(staging_root):
-            for d in os.listdir(staging_root):
-                p = os.path.join(staging_root, d)
-                try:
-                    old = now - os.path.getmtime(p) >= STAGING_MIN_AGE_SEC
-                except OSError:  # raced with a concurrent commit/removal
-                    continue
-                if old:
-                    shutil.rmtree(p)
-                    removed += 1
-        return removed
 
     def _mark_curation(self, docs_m: DataFrame) -> DataFrame:
         """Set `__code` to the first failing text-quality gate's manifest

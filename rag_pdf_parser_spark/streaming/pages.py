@@ -6,7 +6,9 @@ pipeline's one table (it does not chunk: its rows read NULL `chunks`) and
 its exactly-once machinery: the manifest resume, the writer lease, the
 batch commit protocol and the committed readers. A micro-batch replayed
 after a crash, or by a rerun with a fresh checkpoint, finds its urls in
-the manifest and commits nothing.
+the manifest and commits nothing. A micro-batch that died before its
+commit rename left only its staging dir, and the restarted query's next
+micro-batch (a `run` under the lease) deletes it.
 
 `availableNow=True` drains the backlog in bounded micro-batches and stops
 (the reference's resume-by-status loop, scheduler.py, as checkpointed

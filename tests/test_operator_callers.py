@@ -7,8 +7,9 @@
    every Python stage.
 3. Every public operator has a production caller. A test is not a
    caller: a def under operators/, streaming/, functions/, plans/ or
-   sources/ must be referenced from the library, the driver entry, the
-   bench, perfbench or a script, or be a named user entry point.
+   sources/ (module level, or a public method of a public class) must be
+   referenced from the library, `__spark_entry__.py`, the bench,
+   perfbench or a script, or be a named user entry point.
 4. Every option has a production caller: each optional parameter of such
    a public function or method is passed by some production call.
 5. The manifest is the pipeline's one dedup store: the library neither
@@ -32,10 +33,12 @@ LIB = os.path.join(ROOT, "rag_pdf_parser_spark")
 OPERATOR_DIRS = ("operators", "streaming", "functions", "plans", "sources")
 
 # user entry points (batch/incremental curation, streaming runs, store and
-# output maintenance): called by deployments, not from inside the repo
+# output maintenance, the K2/K3 views of an out_dir): called by
+# deployments, not from inside the repo
 ENTRY_POINTS = {"curate_corpus", "curate_corpus_incremental",
                 "run_streaming_dedup", "run_extraction_stream",
-                "compact_lsh_store", "compact_output"}
+                "compact_lsh_store", "compact_output",
+                "read_blocks", "read_chunks"}
 
 
 def _py_files(*paths):
@@ -127,11 +130,16 @@ def test_every_public_operator_has_a_production_caller():
 
     orphans = []
     for path in _py_files(*(os.path.join(LIB, d) for d in OPERATOR_DIRS)):
-        for n in _parse(path).body:
-            if (isinstance(n, (ast.FunctionDef, ast.ClassDef))
-                    and not n.name.startswith("_")
-                    and n.name not in used and n.name not in ENTRY_POINTS):
-                orphans.append(f"{os.path.relpath(path, ROOT)}:{n.name}")
+        rel = os.path.relpath(path, ROOT)
+        tree = _parse(path)
+        defs = [(n.name, n) for n in tree.body
+                if isinstance(n, (ast.FunctionDef, ast.ClassDef))]
+        defs += [(f"{c.name}.{m.name}", m) for c in tree.body
+                 if isinstance(c, ast.ClassDef) and not c.name.startswith("_")
+                 for m in c.body if isinstance(m, ast.FunctionDef)]
+        orphans += [f"{rel}:{label}" for label, n in defs
+                    if not n.name.startswith("_")
+                    and n.name not in used and n.name not in ENTRY_POINTS]
     assert not orphans, orphans
 
 

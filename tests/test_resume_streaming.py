@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from rag_pdf_parser_spark.operators.multimodal import image_features
-from rag_pdf_parser_spark.plans import pipeline
 from rag_pdf_parser_spark.plans.pipeline import ExtractionPipeline
 from rag_pdf_parser_spark.sources.pages import synth_pages
 
@@ -47,13 +46,12 @@ def _read_schema(df):
     return scan.split("\n")[0]
 
 
-def test_crash_between_sinks_and_manifest_commit(spark, tmp_path,
-                                               monkeypatch):
+def test_crash_between_sinks_and_manifest_commit(spark, tmp_path):
     """r3 verdict #2: death AFTER the batch write but BEFORE the commit
     rename must not duplicate rows — it leaves nothing but the staging dir,
     which committed readers never look at, the rerun re-extracts every url
-    the manifest never saw, and the committed output equals an
-    uninterrupted run EXACTLY."""
+    the manifest never saw and deletes the dead staging dir, and the
+    committed output equals an uninterrupted run EXACTLY."""
     pages = synth_pages(spark, 60)
 
     out = str(tmp_path / "crashy")
@@ -80,6 +78,8 @@ def test_crash_between_sinks_and_manifest_commit(spark, tmp_path,
     p._commit = real_commit
     r = p.run(pages, run_id="r1-retry", with_chunks=True)
     assert r["docs_processed"] == 60
+    # the retry, holding the lease, reclaimed the crashed run's staging dir
+    assert os.listdir(os.path.join(out, "_staging")) == []
 
     # committed readers see the retry batch ONLY — no duplicates anywhere
     docs = p.read_docs()
@@ -105,15 +105,6 @@ def test_crash_between_sinks_and_manifest_commit(spark, tmp_path,
     assert "blocks:" not in docs_rs and "chunks:" not in docs_rs, docs_rs
     assert "blocks:" in blocks_rs and "chunks:" not in blocks_rs, blocks_rs
     assert "chunks:" in _read_schema(p.read_chunks())
-
-    # vacuum reclaims the crashed run's staging dir; committed rows
-    # untouched. age 0: the test KNOWS no run is in flight — the default
-    # age guard protects live runs' not-yet-committed batches (ADVICE r4)
-    monkeypatch.setattr(pipeline, "STAGING_MIN_AGE_SEC", 0)
-    removed = p.vacuum_uncommitted()
-    assert removed == 1
-    assert os.listdir(os.path.join(out, "_staging")) == []
-    assert p.read_docs().count() == 60
 
 
 def test_jsonl_export_is_a_write_of_the_committed_view(spark, tmp_path):
@@ -322,6 +313,25 @@ def test_resume_with_nothing_pending_stops_at_the_probe(spark, tmp_path):
                  "curation_drops": {}}, r
     assert jobs <= 2, jobs
     assert p.committed_batch_ids() == ids
+
+
+def test_run_refuses_a_run_id_that_is_not_one_path_component(
+        spark, tmp_path):
+    """`run_id` names the batch's staging and manifest dirs, so one that is
+    empty or holds a path separator is refused with ValueError before the
+    lease: no Spark job runs and the out_dir gains no `_staging/` or
+    `manifest/`."""
+    out = str(tmp_path / "ids")
+    p = ExtractionPipeline(spark, out)
+    pages = synth_pages(spark, 20)
+    for bad in ("", "nightly/2026-10-19", f"a{os.sep}b"):
+        with pytest.raises(ValueError, match="path component"):
+            _counting_jobs(spark, "bad-id", lambda: p.run(
+                pages, run_id=bad, with_chunks=False))
+        for d in ("_staging", "manifest", "_lock"):
+            assert not os.path.exists(os.path.join(out, d)), d
+    # the group's job ids include the refused calls'
+    assert _counting_jobs(spark, "bad-id", lambda: None) == (None, 0)
 
 
 def test_pipeline_url_gate_blocks_before_extraction(spark, tmp_path):
@@ -1136,8 +1146,9 @@ def test_out_dir_is_one_content_table_and_refuses_older_layouts(
     gated `with_chunks=True` run leaves `manifest` and an empty `_staging`
     (the lease is gone once it returns). An out_dir an older layout wrote
     — it holds `docs/`, `blocks/`, `chunks/` or `seen_hashes/` — is
-    refused by `run`, the committed readers, `compact_output` and the
-    vacuum before any of them writes."""
+    refused by `run`, the committed readers and `compact_output` before
+    any of them writes; a refused `run` leaves a dead run's staging dir in
+    place, because the refusal comes before its reclaim."""
     from rag_pdf_parser_spark.plans.maintenance import compact_output
 
     blocked = spark.createDataFrame([("nowhere.example",)], "host string")
@@ -1151,6 +1162,11 @@ def test_out_dir_is_one_content_table_and_refuses_older_layouts(
         os.listdir(out)
 
     ids = sorted(os.listdir(p.manifest_path))
+    # a dead run's staging dir: a refused run must delete nothing
+    dead = os.path.join(out, "_staging", "dead-run")
+    os.makedirs(dead)
+    with open(os.path.join(dead, "part-0.parquet"), "wb") as f:
+        f.write(b"dead")
     for old in ("docs", "blocks", "chunks", "seen_hashes"):
         # an older out_dir: committed state plus the old layout's dir
         os.makedirs(os.path.join(out, old))
@@ -1159,14 +1175,14 @@ def test_out_dir_is_one_content_table_and_refuses_older_layouts(
                               with_chunks=False, dedupe=True),
                 p.read_docs, p.read_blocks, p.read_chunks,
                 p.committed_batch_ids,
-                lambda: compact_output(spark, out),
-                p.vacuum_uncommitted):
+                lambda: compact_output(spark, out)):
             with pytest.raises(ValueError, match="older layout"):
                 refused()
             assert sorted(os.listdir(out)) == sorted(
                 ["_staging", "manifest", old])
             assert sorted(os.listdir(p.manifest_path)) == ids
-            assert os.listdir(os.path.join(out, "_staging")) == []
+            assert os.listdir(os.path.join(out, "_staging")) == ["dead-run"]
+            assert os.listdir(dead) == ["part-0.parquet"]
             assert os.listdir(os.path.join(out, old)) == []
         os.rmdir(os.path.join(out, old))
 
@@ -1389,23 +1405,34 @@ def test_mixed_width_batches_read_and_fold(spark, tmp_path):
     check()
 
 
-def test_vacuum_spares_young_staging(spark, tmp_path):
-    """The vacuum must not delete a staging dir that may belong to an
-    in-flight run (between its batch write and commit rename) — only ones
-    older than the age threshold."""
+def test_a_run_reclaims_dead_staging_dirs(spark, tmp_path):
+    """The writer lease proves a staged batch dead: a run holding it is
+    the out_dir's only writer, so every dir under `_staging/` belongs to a
+    run that died before its commit rename. A resume with nothing pending
+    deletes it too, and the committed rows stay as they were."""
+    import glob
+    import shutil
+
     out = str(tmp_path / "v")
     p = ExtractionPipeline(spark, out)
-    p.run(synth_pages(spark, 5), run_id="r1", with_chunks=False)
-    staging_root = os.path.join(out, "_staging")
-    young = os.path.join(staging_root, "inflight-run")
-    os.makedirs(young)
-    assert p.vacuum_uncommitted() == 0  # young dir spared, nothing orphaned
-    assert os.path.isdir(young)
-    os.utime(young, (1, 1))  # pretend it is ancient
-    assert p.vacuum_uncommitted() == 1
-    assert not os.path.exists(young)
-    # committed rows untouched
-    assert p.read_docs().count() == 5
+    pages = synth_pages(spark, 5)
+    p.run(pages, run_id="r1", with_chunks=False)
+    cols = ["url", "doc_id", "extracted_text"]
+    before = sorted(p.read_docs().select(*cols).collect())
+    ids = p.committed_batch_ids()
+
+    # a dead run's staged batch: a copy of committed rows, so a reader
+    # that looked at `_staging/` would double them
+    dead = os.path.join(out, "_staging", "dead-run")
+    os.makedirs(dead)
+    part = glob.glob(os.path.join(p.manifest_path, "*", "*.parquet"))[0]
+    shutil.copy(part, os.path.join(dead, "part-0.parquet"))
+
+    r = p.run(pages, run_id="r2", with_chunks=False)
+    assert r["docs_processed"] == 0, r
+    assert os.listdir(os.path.join(out, "_staging")) == []
+    assert p.committed_batch_ids() == ids
+    assert sorted(p.read_docs().select(*cols).collect()) == before
 
 
 class TestRangeJoin:
