@@ -4,12 +4,13 @@
 for extraction.
 
 Scale shape: subdomain matching is NOT an endswith scan — each host derives
-its bounded suffix chain (`a.b.co.uk` → [a.b.co.uk, b.co.uk, co.uk]) and the
+its suffix key at each label depth the blocklist's entries hold
+(`a.b.co.uk` → co.uk at depth 2, b.co.uk at depth 3) and the
 blocklist match is per-depth broadcast left joins on the suffix columns
 (real blocklists are ~1e5-1e6 rows, megabytes — built and broadcast ONCE:
-AQE canonicalizes the seven build sides and runtime-reuses one broadcast
-stage for the other six, asserted on the executed final plan in tests).
-ZERO shuffle of the corpus in any hit-density regime: no
+AQE canonicalizes the per-depth build sides and runtime-reuses one
+broadcast stage for the others, asserted on the executed final plan in
+tests). ZERO shuffle of the corpus in any hit-density regime: no
 Generate, no join-back on url (the r4 formulation exploded suffixes into a
 side table and left-joined the hit urls back — correct, but with a
 heavily-blocked corpus the hit set outgrows the broadcast threshold and the
@@ -36,11 +37,6 @@ DEFAULT_URL_PATTERNS = (
     r"/(?:login|signin|signup|logout|cart|checkout)(?:[/?#]|$)",
     r"/calendar/\d{4}/\d{2}",
 )
-
-#: suffix-chain depth cap: hosts deeper than this keep only their last
-#: `MAX_HOST_LABELS` labels for matching (a 50-label host is itself spam;
-#: the cap bounds the Generate fan-out per row)
-MAX_HOST_LABELS = 6
 
 #: Packaged public-suffix-list SNAPSHOT (r5 verdict #2): the multi-label
 #: entries of the publicsuffix.org ICANN section that real web corpora hit
@@ -111,7 +107,7 @@ def _psl_rule_classes(entries) -> tuple[list[str], list[str], list[str]]:
     'www.ck', everything else plain. Single source for the Spark probes,
     the generated DuckDB twin, and the probe-count audit.
 
-    Entries are normalized HERE, exactly like `_normalize_entries`
+    Entries are normalized HERE, exactly like `filter_urls`' blocklist
     (trim spaces, lower, drop empties, dedupe), BEFORE marker detection:
     classifying raw strings would let a real-list entry with stray
     whitespace (' *.ck') count as a plain rule in `psl_probe_count` while
@@ -198,18 +194,6 @@ def url_host_expr(url: Column) -> Column:
     return F.regexp_replace(host, r"\.+$", "")
 
 
-def _normalize_entries(entries: DataFrame, col: str) -> DataFrame:
-    """lower/trim/non-empty/distinct normalization of a broadcast-side
-    entry table (blocklist hosts, PSL suffixes): real files carry mixed
-    case, stray whitespace, and blank lines; the probe keys are lowercase
-    and never empty; distinct() guarantees each per-depth left join
-    matches at most one row (no fan-out). One home for both probe idioms
-    so an entry-hygiene fix can never miss one of them."""
-    return entries.select(
-        F.lower(F.trim(F.col(col))).alias(col)
-    ).where(F.length(col) > 0).distinct()
-
-
 def _suffix_key_expr(labels: Column, n: Column, j: int) -> Column:
     """Last-j-labels suffix key over a staged label array: NULL when the
     host has fewer than j labels (never equi-matches); nullif('') keeps an
@@ -219,28 +203,6 @@ def _suffix_key_expr(labels: Column, n: Column, j: int) -> Column:
         n >= j,
         F.nullif(F.array_join(F.slice(labels, n - j + 1, j), "."),
                  F.lit("")))
-
-
-def validate_blocklist(blocked_hosts: DataFrame) -> list[str]:
-    """Load-time blocklist validation (r5 verdict #9): an entry DEEPER
-    than the suffix cap is matched exactly (the full-host probe) but its
-    SUBDOMAINS can never match — a corpus host one label deeper derives no
-    suffix at that depth. Warns loudly (bounded sample) and returns the
-    offending entries; one tiny control-plane job over the by-contract
-    broadcastable blocklist."""
-    deep = [r["host"] for r in _normalize_entries(blocked_hosts, "host")
-            .where(F.size(F.split("host", r"\.")) > MAX_HOST_LABELS)
-            .limit(20).collect()]
-    if deep:
-        import warnings
-
-        warnings.warn(
-            f"blocklist entries deeper than MAX_HOST_LABELS="
-            f"{MAX_HOST_LABELS} match only EXACT hosts, never their "
-            f"subdomains (suffix chains are capped): {deep}. Raise "
-            "MAX_HOST_LABELS or shorten the entries.",
-            stacklevel=3)
-    return deep
 
 
 def url_pattern_flag_expr(url: Column) -> Column:
@@ -407,29 +369,42 @@ def domain_stats(docs: DataFrame, psl: DataFrame) -> DataFrame:
 
 
 def filter_urls(docs: DataFrame, blocked_hosts: DataFrame | None = None,
-                url_col: str = "url", validate: bool = True) -> DataFrame:
+                url_col: str = "url") -> DataFrame:
     """The URL gate. `blocked_hosts` needs a `host` string column
-    (registrable domains; matching covers the domain AND every subdomain);
+    (registrable domains; matching covers the domain AND every subdomain,
+    at any depth: host = e OR host ends with '.' + e);
     the URL patterns are `DEFAULT_URL_PATTERNS`.
 
     Returns docs + `url_blocked` boolean + `block_reason` ('domain' <
     'pattern' when both) — the auditable form (manifests record WHY a url
     was dropped, mirroring failure_code); the callers split on the flag.
 
-    `validate=True` runs `validate_blocklist` (one tiny eager job over the
-    broadcast-side table) — loud by default; pass False when building the
-    gate repeatedly over an already-validated blocklist to keep this a
-    pure lazy plan builder.
+    The probe depths are the label depths the blocklist's entries hold,
+    collected in one Spark job over the by-contract broadcastable table;
+    each is one broadcast left join of the host's last-j-labels key. An
+    entry of more than 127 labels is not a DNS name (RFC 1035) and raises
+    ValueError, so the probe count is bounded by the input.
     """
     # coalesce to false: rlike(NULL) is NULL, and a NULL url_blocked would
     # make the row vanish from BOTH branches of the pipeline gate (neither
     # blocked-manifest nor extraction) — null urls pass through unblocked
     pat = F.coalesce(url_pattern_flag_expr(F.col(url_col)), F.lit(False))
-    out = docs.withColumn("__pat", pat)
+    out = docs.withColumns({"__pat": pat, "__dom": F.lit(False)})
     if blocked_hosts is not None:
-        blocked_norm = _normalize_entries(blocked_hosts, "host")
-        if validate:
-            validate_blocklist(blocked_hosts)
+        # real files carry mixed case, stray whitespace and blank lines;
+        # the probe keys are lowercase and never empty, and distinct()
+        # makes each per-depth left join match at most one row
+        entries = blocked_hosts.select(
+            F.lower(F.trim("host")).alias("host")).where(F.length("host") > 0)
+        # one job: the single partition satisfies distinct() without an
+        # exchange
+        depths = sorted(r[0] for r in entries
+                        .select(F.size(F.split("host", r"\.")))
+                        .coalesce(1).distinct().collect())
+        if depths and depths[-1] > 127:
+            raise ValueError(
+                f"a blocklist entry has {depths[-1]} labels; a DNS name "
+                "has at most 127")
         # Stage host + label array ONCE, then derive the per-depth suffix
         # key columns in a SECOND select: CollapseProject keeps a non-cheap
         # attribute referenced >1 time staged, so the split runs once per
@@ -437,33 +412,18 @@ def filter_urls(docs: DataFrame, blocked_hosts: DataFrame | None = None,
         out = out.withColumn("__h", url_host_expr(F.col(url_col))) \
             .withColumn("__hl", F.split(F.col("__h"), r"\."))
         n = F.size("__hl")
-        sfx_keys = {
-            # depth 0 = the FULL host when deeper than the cap (the exact-
-            # host entry beyond the cap must still match — ADVICE r4);
-            # NULL key (host within the cap) never equi-matches.
-            "__sfx0": F.when(n > MAX_HOST_LABELS, F.col("__h")),
-        }
-        for j in range(1, MAX_HOST_LABELS + 1):
-            sfx_keys[f"__sfx{j}"] = _suffix_key_expr(F.col("__hl"), n, j)
-        out = out.withColumns(sfx_keys)
+        out = out.withColumns({f"__sfx{j}": _suffix_key_expr(
+            F.col("__hl"), n, j) for j in depths}).drop("__h", "__hl")
         # One broadcast of the blocklist, probed once per depth: left joins
         # on each suffix column. No Generate, no join-back, no shuffle of
         # the corpus in ANY hit-density regime (see module docstring).
-        hit_flags = []
-        for key in sfx_keys:
-            marker = f"__bh_{key}"
-            bl = F.broadcast(blocked_norm.select(
-                F.col("host").alias(marker)))
-            out = out.join(bl, out[key] == bl[marker], "left")
-            hit_flags.append(F.col(marker).isNotNull())
-        dom = hit_flags[0]
-        for f in hit_flags[1:]:
-            dom = dom | f
-        out = out.withColumn("__dom", dom).drop(
-            "__h", "__hl", *sfx_keys,
-            *[f"__bh_{k}" for k in sfx_keys])
-    else:
-        out = out.withColumn("__dom", F.lit(False))
+        blocked = entries.distinct()
+        for j in depths:
+            bl = F.broadcast(blocked.select(F.col("host").alias(f"__bh{j}")))
+            out = out.join(bl, out[f"__sfx{j}"] == bl[f"__bh{j}"], "left") \
+                .withColumn("__dom", F.col("__dom")
+                            | F.col(f"__bh{j}").isNotNull()) \
+                .drop(f"__sfx{j}", f"__bh{j}")
     return (
         out.withColumn("url_blocked", F.col("__dom") | F.col("__pat"))
         .withColumn(

@@ -80,22 +80,14 @@ def with_text_gate_flags(docs: DataFrame,
 
 
 def flag_corpus(docs: DataFrame, blocked_hosts: DataFrame | None = None,
-                url_col: str = "url", text_col: str = "text",
-                validate: bool = True) -> DataFrame:
+                url_col: str = "url", text_col: str = "text") -> DataFrame:
     """docs + the four gate flags (url_ok, gopher_keep, repetition_keep,
     model_keep) + pass_all. Nothing is dropped — the auditable form (a
     manifest can record WHY each doc would fall); `curate_corpus` applies
-    the drops.
-
-    `validate=False` skips `filter_urls`' load-time blocklist validation
-    (one tiny eager job + possible deep-entry warning per call) — pass it
-    when building the gate repeatedly over an already-validated blocklist
-    (a daily increment loop); threaded here because the composed entry
-    points are the ones called in loops."""
+    the drops."""
     out = docs
     if url_col in docs.columns:
-        out = filter_urls(out, blocked_hosts, url_col=url_col,
-                          validate=validate) \
+        out = filter_urls(out, blocked_hosts, url_col=url_col) \
             .withColumn("url_ok", ~F.col("url_blocked")) \
             .drop("url_blocked", "block_reason")
     else:
@@ -158,13 +150,10 @@ def curation_funnel(flagged: DataFrame) -> dict:
 
 def curate_corpus(docs: DataFrame, blocked_hosts: DataFrame | None = None,
                   id_col: str = "doc_id", url_col: str = "url",
-                  text_col: str = "text", dedup: bool = True,
-                  validate: bool = True) -> DataFrame:
+                  text_col: str = "text", dedup: bool = True) -> DataFrame:
     """The full curation: gate flags → filter to pass_all → near-dedup.
-    Returns the curated corpus with the original columns. `validate` —
-    see flag_corpus."""
-    flagged = flag_corpus(docs, blocked_hosts, url_col, text_col,
-                          validate=validate)
+    Returns the curated corpus with the original columns."""
+    flagged = flag_corpus(docs, blocked_hosts, url_col, text_col)
     kept = flagged.where(F.col("pass_all")).select(*docs.columns)
     if not dedup:
         return kept
@@ -175,8 +164,7 @@ def curate_corpus_incremental(increment: DataFrame, store_dir: str,
                               canon_dir: str,
                               blocked_hosts: DataFrame | None = None,
                               id_col: str = "doc_id", url_col: str = "url",
-                              text_col: str = "text",
-                              validate: bool = True
+                              text_col: str = "text"
                               ) -> tuple[DataFrame, dict]:
     """The DAILY-INCREMENT production entrypoint: gate flags (tokenize-once
     pass) → sequential funnel accounting → pass_all filter → incremental
@@ -206,8 +194,7 @@ def curate_corpus_incremental(increment: DataFrame, store_dir: str,
     split (r5 verdict #6; sums stayed exact, labels didn't)."""
     from ..operators.dedup import dedup_corpus_incremental
 
-    flagged = flag_corpus(increment, blocked_hosts, url_col, text_col,
-                          validate=validate) \
+    flagged = flag_corpus(increment, blocked_hosts, url_col, text_col) \
         .localCheckpoint(eager=True)
     funnel = curation_funnel(flagged)
     kept = flagged.where(F.col("pass_all")).select(*increment.columns)

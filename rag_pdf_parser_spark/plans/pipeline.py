@@ -198,8 +198,9 @@ class ExtractionPipeline:
         second concurrent run on the same out_dir raises LeaseHeldError at
         start instead of silently committing duplicate urls; a writer
         whose stale lock was stolen aborts before its commit rename.
-        Past the older-layout refusal, the run deletes every dir under
-        `_staging/`: the lease proves each a dead run's batch. `run_id`
+        Past the older-layout refusal, the run deletes everything under
+        `_staging/`: the lease proves each dir a dead run's batch, and a
+        stray file there is the lease holder's to remove. `run_id`
         must be one path component (it names the batch's dir).
 
         The returned counts are observed on the one write of the batch:
@@ -214,13 +215,18 @@ class ExtractionPipeline:
                 f"run_id {run_id!r} must be one non-empty path component")
         with WriterLease(self.out_dir) as lease:
             todo = self.pending(pages)  # refuses an older layout first
-            # every staging dir is a dead run's, but a writer whose stale
+            # every staging entry is a dead run's (or a stray file: the
+            # lease holder owns `_staging/`), but a writer whose stale
             # lease was stolen may still rename its own away: skip those
             staging_root = os.path.join(self.out_dir, "_staging")
             for d in (os.listdir(staging_root)
                       if os.path.isdir(staging_root) else ()):
+                path = os.path.join(staging_root, d)
                 try:
-                    shutil.rmtree(os.path.join(staging_root, d))
+                    if os.path.isdir(path) and not os.path.islink(path):
+                        shutil.rmtree(path)
+                    else:
+                        os.remove(path)
                 except FileNotFoundError:
                     pass
             if os.path.isdir(self.manifest_path) and todo.isEmpty():

@@ -252,30 +252,32 @@ def main() -> None:
         plan_of(qm), ["Scan parquet"],
     ))
 
-    # URL gate (r5 shape): per-depth broadcast probes of the blocklist —
-    # no Generate, no join-back, and the CORPUS is never hash-exchanged
-    # (the only permitted exchange builds the broadcast blocklist side).
-    # With a heavily-blocked corpus the r4 explode+join-back form degraded
-    # to a full corpus shuffle on url once the hit set outgrew broadcast;
-    # per-depth probes have no hit-density regime at all.
+    # URL gate: one broadcast probe per label depth the blocklist holds —
+    # no Generate, no join-back, and the CORPUS is never exchanged (the
+    # only permitted shuffle is the blocklist-side distinct() inside the
+    # broadcast build). With a heavily-blocked corpus the r4
+    # explode+join-back form degraded to a full corpus shuffle on url once
+    # the hit set outgrew broadcast; per-depth probes have no hit-density
+    # regime at all. Nodes are matched by name on the walked plan.
     uf = E.q_url_filter(spark, SF)
-    uf_exec = uf._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in uf_exec, \
+    uf_nodes = list(plan_nodes(uf))
+    uf_names = [n.nodeName() for n in uf_nodes]
+    assert "BroadcastNestedLoopJoin" not in uf_names, \
         "url gate must not nested-loop"
-    assert "BroadcastHashJoin" in uf_exec, "blocklist join must broadcast"
-    assert "Generate" not in uf_exec, "url gate must not explode suffixes"
-    assert all("host#" in ln for ln in uf_exec.splitlines()
-               if "Exchange hashpartitioning" in ln), \
-        "url gate must never hash-exchange the corpus"
+    assert "Generate" not in uf_names, "url gate must not explode suffixes"
+    uf_depths = {h.count(".") + 1 for (h,) in E._URL_BLOCKLIST}
+    assert uf_names.count("BroadcastHashJoin") == len(uf_depths), \
+        "url gate must broadcast-probe once per blocklist entry depth"
+    assert all([n.output().apply(i).name() for i in range(n.output().size())]
+               == ["host"] for n in uf_nodes if n.nodeName() == "Exchange"), \
+        "url gate must never exchange the corpus"
     sections.append((
         "URL/domain gate (per-depth broadcast probes; zero corpus shuffle)",
         plan_of(uf), ["BroadcastHashJoin"],
-        "Note (r6): blocklist entries DEEPER than `MAX_HOST_LABELS` (6) "
-        "match only their exact host — the full-host probe covers them — "
-        "but never their subdomains (a deeper corpus host derives no "
-        "suffix at that depth). `filter_urls` warns loudly at load time "
-        "when such entries are present; raise `MAX_HOST_LABELS` or "
-        "shorten the entries to lift the limitation.",
+        "Note: the gate probes exactly the label depths its blocklist's "
+        "entries hold (collected in one Spark job), so an entry of any "
+        "depth blocks its exact host and every subdomain. This audit's "
+        "blocklist holds two-label entries only: one probe.",
     ))
 
     # composed curation funnel (r5): ONE tokenization + ONE bigram step

@@ -725,41 +725,51 @@ def test_url_filter_gate(spark):
             for r in filter_urls(with_null, blocked).collect()}
     assert gotn == {1: False, 2: False}, gotn
 
-    # ADVICE r4: an exact-host blocklist entry DEEPER than MAX_HOST_LABELS
-    # must still match (the capped chain used to drop the full host); its
-    # subdomains beyond the cap need not, but the capped suffixes still do
-    deep_host = "a.b.c.d.e.f.g.example"      # 8 labels > cap of 6
+    # an entry blocks its host and every subdomain at any depth: the
+    # probes take their depths from the entries, so an 8-label entry
+    # blocks its 9-label subdomain too
+    deep_host = "a.b.c.d.e.f.g.example"      # 8 labels
     deep = spark.createDataFrame(
         [(20, f"https://{deep_host}/x"),      # exact deep host
-         (21, f"https://www.{deep_host}/x"),  # 9 labels, suffix is capped out
+         (21, f"https://www.{deep_host}/x"),  # its 9-label subdomain
          (22, "https://g.example/x")],
         "doc_id long, url string")
     deep_list = spark.createDataFrame([(deep_host,)], "host string")
     got4 = {r["doc_id"]: r["url_blocked"]
             for r in filter_urls(deep, deep_list).collect()}
-    assert got4 == {20: True, 21: False, 22: False}, got4
+    assert got4 == {20: True, 21: True, 22: False}, got4
 
-    # scale shape: the domain gate is per-depth BROADCAST probes — no
-    # Generate, no join-back, zero Exchange of the corpus regardless of hit
-    # density (the r4 explode+join-back form shuffled on url when the hit
-    # set outgrew broadcast)
-    plan = filter_urls(docs, blocked)._jdf.queryExecution().executedPlan() \
-        .toString()
-    # the only permitted exchange is the blocklist-side distinct() (tiny,
-    # inside the broadcast build) — the CORPUS is never hash-exchanged
-    ex_lines = [ln for ln in plan.splitlines()
-                if "Exchange hashpartitioning" in ln]
-    assert all("host#" in ln for ln in ex_lines), plan
-    assert "Generate" not in plan, plan
-    assert plan.count("BroadcastHashJoin") == 7, plan
-    # the blocklist is BUILT AND BROADCAST ONCE: AQE canonicalizes the 7
+    # scale shape: the domain gate is one BROADCAST probe per depth the
+    # blocklist holds — no Generate, no join-back, zero Exchange of the
+    # corpus regardless of hit density (the r4 explode+join-back form
+    # shuffled on url when the hit set outgrew broadcast). Nodes are
+    # matched by name on the walked plan, never by plan text.
+    from rag_pdf_parser_spark.operators.spread import plan_nodes
+
+    three = spark.createDataFrame(
+        [("tracker.example",), ("x.site.org",), (deep_host,)], "host string")
+    gate = filter_urls(docs.union(deep.select(*docs.columns)), three)
+
+    def names(df):
+        return [n.nodeName() for n in plan_nodes(df)]
+
+    assert names(gate).count("BroadcastHashJoin") == 3, names(gate)
+    assert "Generate" not in names(gate)
+    # the only permitted shuffle is the blocklist-side distinct() (tiny,
+    # inside the broadcast build) — the CORPUS is never exchanged
+    shuffle_outputs = [[n.output().apply(i).name()
+                        for i in range(n.output().size())]
+                       for n in plan_nodes(gate) if n.nodeName() == "Exchange"]
+    assert shuffle_outputs and all(o == ["host"] for o in shuffle_outputs), \
+        shuffle_outputs
+    # the blocklist is BUILT AND BROADCAST ONCE: AQE canonicalizes the
     # per-depth build sides and reuses one broadcast stage for the rest
     # (visible only in the executed final plan, not the static one)
-    executed = filter_urls(docs, blocked)
-    executed.collect()
-    final = executed._jdf.queryExecution().executedPlan().toString()
-    assert "isFinalPlan=true" in final
-    assert final.count("Reused") >= 6, final.count("Reused")
+    got5 = {r["doc_id"]: r["url_blocked"] for r in gate.collect()}
+    assert got5[1] and got5[2] and got5[21] and not got5[3], got5
+    final = names(gate)
+    assert final.count("BroadcastExchange") == 1, final
+    assert final.count("ReusedExchange") == 2, final
 
 
 def test_dedup_corpus_end_to_end(spark, docs_df):
@@ -1655,47 +1665,39 @@ def test_psl_wildcard_and_exception_rules(spark):
                               for k in expected if duck[k] != expected[k]}
 
 
-def test_blocklist_depth_warning(spark):
-    """r5 verdict #9: a blocklist entry DEEPER than MAX_HOST_LABELS can
-    only match exactly (the full-host probe), never its subdomains — the
-    gate warns loudly at load time instead of silently half-matching."""
+def test_a_deep_blocklist_entry_blocks_its_subdomains(spark):
+    """The gate probes the label depths its blocklist holds, so an entry
+    of any depth blocks its subdomains, with no warning; an entry of more
+    than 127 labels is not a DNS name and raises ValueError."""
     import warnings
 
-    from rag_pdf_parser_spark.operators.urlfilter import (
-        MAX_HOST_LABELS,
-        filter_urls,
-    )
+    from rag_pdf_parser_spark.operators.urlfilter import filter_urls
+    from rag_pdf_parser_spark.plans.curate import flag_corpus
 
-    deep = ".".join(["x"] * (MAX_HOST_LABELS + 1))
+    deep = ".".join(["x"] * 7)
     docs = spark.createDataFrame(
-        [(1, f"https://{deep}/p"), (2, f"https://sub.{deep}/p")],
+        [(1, f"https://{deep}/p"), (2, f"https://sub.{deep}/p"),
+         (3, "https://x.x.x.example/p")],
         "doc_id long, url string")
     blocked = spark.createDataFrame([(deep,), ("ok.example",)],
                                     "host string")
-    with pytest.warns(UserWarning, match="never their subdomains"):
-        out = filter_urls(docs, blocked).collect()
-    by_id = {r["doc_id"]: r["url_blocked"] for r in out}
-    assert by_id[1] is True    # exact match still works (full-host probe)
-    assert by_id[2] is False   # the documented limitation the warning names
-    # a within-cap blocklist stays silent (recording, not erroring — an
-    # unrelated ResourceWarning from a GC'd py4j socket must not flake this)
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        filter_urls(docs, spark.createDataFrame([("ok.example",)],
-                                                "host string")).collect()
-    assert not [w for w in caught if "subdomains" in str(w.message)]
-    # the validate=False escape hatch must be reachable from the composed
-    # entry points (review finding: a daily increment loop re-validated
-    # and re-warned per batch) — flag_corpus threads it through
-    from rag_pdf_parser_spark.plans.curate import flag_corpus
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        by_id = {r["doc_id"]: r["url_blocked"]
+                 for r in filter_urls(docs, blocked).collect()}
+        docs_t = docs.withColumn("text", F.lit("some words here"))
+        url_ok = {r["doc_id"]: r["url_ok"]
+                  for r in flag_corpus(docs_t, blocked).collect()}
+    assert by_id == {1: True, 2: True, 3: False}, by_id
+    assert url_ok == {1: False, 2: False, 3: True}, url_ok
 
-    docs_t = docs.withColumn("text", F.lit("some words here"))
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        flag_corpus(docs_t, blocked, validate=False).collect()
-    assert not [w for w in caught if "subdomains" in str(w.message)]
-    with pytest.warns(UserWarning, match="never their subdomains"):
-        flag_corpus(docs_t, blocked).collect()  # default still validates
+    too_deep = spark.createDataFrame([(".".join(["x"] * 128),)],
+                                     "host string")
+    with pytest.raises(ValueError, match="128 labels"):
+        filter_urls(docs, too_deep)
+    at_limit = spark.createDataFrame([(".".join(["x"] * 127),)],
+                                     "host string")
+    assert filter_urls(docs, at_limit).where("url_blocked").count() == 0
 
 
 def test_duplicate_ids_raise_before_anything_is_written(spark, tmp_path):

@@ -643,3 +643,64 @@ def test_connected_components_driver_path_equals_loop(spark, edges):
                           dedup.connected_components(pairs).collect()))
     assert driver == loop, (edges, driver, loop)
     assert {n for e in edges for n in e} == {i for i, _ in driver}
+
+
+@st.composite
+def _names(draw):
+    """A dotted name of 1-10 labels over a small alphabet, so entries
+    and hosts share suffixes."""
+    n = draw(st.integers(min_value=1, max_value=10))
+    return ".".join(draw(st.lists(st.sampled_from(["a", "b", "ex", "Co"]),
+                                  min_size=n, max_size=n)))
+
+
+@st.composite
+def _url_gate_cases(draw):
+    """Blocklist entries of 1-10 labels (some blank, some padded and
+    upper-cased), and hosts that are random names, an entry itself or an
+    entry's subdomain, under a few paths (two of which hit a URL
+    pattern)."""
+    names = draw(st.lists(_names(), min_size=1, max_size=4))
+    hosts = []
+    for _ in range(draw(st.integers(min_value=1, max_value=8))):
+        kind = draw(st.sampled_from(["name", "entry", "sub", "sub"]))
+        h = draw(_names()) if kind == "name" else draw(st.sampled_from(names))
+        if kind == "sub":
+            h = f"{draw(_names())}.{h}"
+        hosts.append(h)
+    entries = [f" {e.upper()} " if draw(st.booleans()) else e
+               for e in names]
+    entries += draw(st.lists(st.sampled_from(["", "   "]), max_size=2))
+    urls = [f"https://{h}/{draw(st.sampled_from(['p', 'login', 'i.png']))}"
+            for h in hosts]
+    return urls, entries
+
+
+@settings(max_examples=10, deadline=None)
+@given(_url_gate_cases())
+def test_url_gate_matches_the_oracle_rule(spark, case):
+    """`filter_urls` blocks a url exactly when it hits a URL pattern or
+    its host equals a blocklist entry or ends with '.' + entry, at any
+    entry depth — the rule the DuckDB oracle spells as
+    `host = e OR host LIKE '%.' || e`."""
+    from rag_pdf_parser_spark.operators.urlfilter import (
+        DEFAULT_URL_PATTERNS,
+        filter_urls,
+    )
+
+    urls, entries = case
+    pattern = re.compile("|".join(DEFAULT_URL_PATTERNS))
+    norm = {e.strip(" ").lower() for e in entries} - {""}
+
+    def expect(url):
+        host = url.split("/")[2].lower()
+        dom = any(host == e or host.endswith("." + e) for e in norm)
+        pat = bool(pattern.search(url.lower()))
+        return dom or pat, "domain" if dom else "pattern" if pat else None
+
+    docs = spark.createDataFrame(list(enumerate(urls)),
+                                 "doc_id long, url string")
+    blocked = spark.createDataFrame([(e,) for e in entries], "host string")
+    got = {r["doc_id"]: (r["url_blocked"], r["block_reason"])
+           for r in filter_urls(docs, blocked).collect()}
+    assert got == {i: expect(u) for i, u in enumerate(urls)}, (case, got)

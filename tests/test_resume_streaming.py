@@ -337,7 +337,8 @@ def test_run_refuses_a_run_id_that_is_not_one_path_component(
 def test_pipeline_url_gate_blocks_before_extraction(spark, tmp_path):
     """url_blocklist: blocked pages never reach the docs sink, are
     manifest-recorded as URL_BLOCKED (so resume skips them forever), and
-    clean pages extract normally."""
+    clean pages extract normally. An entry deeper than six labels blocks
+    its subdomains too."""
     import pandas as pd
 
     from rag_pdf_parser_spark.schema import PAGES_SCHEMA
@@ -347,28 +348,33 @@ def test_pipeline_url_gate_blocks_before_extraction(spark, tmp_path):
             for i in range(3)]
     rows += [(f"https://ok.example/p/{i}", None, body, "", "en")
              for i in range(4)]
+    deep = "a.b.c.d.e.f.g.example"                    # 8 labels
+    rows.append((f"https://www.{deep}/p", None, body, "", "en"))
     pages = spark.createDataFrame(
         pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"]),
         schema=PAGES_SCHEMA)
-    blocked = spark.createDataFrame([("spam.example",)], "host string")
+    blocked = spark.createDataFrame([("spam.example",), (deep,)],
+                                    "host string")
 
     p = ExtractionPipeline(spark, str(tmp_path / "ug"))
     r = p.run(pages, run_id="r1", with_chunks=False, url_blocklist=blocked)
-    assert r["urls_blocked"] == 3 and r["docs_processed"] == 4, r
+    assert r["urls_blocked"] == 4 and r["docs_processed"] == 4, r
 
     docs = p.read_docs()
     assert docs.count() == 4
     assert docs.where(F.col("url").contains("spam")).count() == 0
     m = spark.read.parquet(p.manifest_path)
     blocked_rows = m.where(F.col("failure_code") == "URL_BLOCKED")
-    assert blocked_rows.count() == 3
+    assert sorted(r["url"] for r in blocked_rows.collect()) == sorted(
+        [f"https://sub{i}.spam.example/p/{i}" for i in range(3)]
+        + [f"https://www.{deep}/p"])
     assert all(r["bytes_out"] == 0 and r["bytes_in"] > 0
                for r in blocked_rows.collect())
 
     # resume: nothing left to do — blocked urls are settled in the manifest
     r2 = p.run(pages, run_id="r2", with_chunks=False, url_blocklist=blocked)
     assert r2["docs_processed"] == 0 and r2["urls_blocked"] == 0, r2
-    assert spark.read.parquet(p.manifest_path).count() == 7
+    assert spark.read.parquet(p.manifest_path).count() == 8
 
     # a first run that blocks every page commits a docs batch with no
     # file: the committed views read it as empty, where a schema inferred
@@ -1409,7 +1415,8 @@ def test_a_run_reclaims_dead_staging_dirs(spark, tmp_path):
     """The writer lease proves a staged batch dead: a run holding it is
     the out_dir's only writer, so every dir under `_staging/` belongs to a
     run that died before its commit rename. A resume with nothing pending
-    deletes it too, and the committed rows stay as they were."""
+    deletes it too, and the committed rows stay as they were. A stray
+    plain file there (a `.DS_Store`) is deleted as well, not raised on."""
     import glob
     import shutil
 
@@ -1427,6 +1434,8 @@ def test_a_run_reclaims_dead_staging_dirs(spark, tmp_path):
     os.makedirs(dead)
     part = glob.glob(os.path.join(p.manifest_path, "*", "*.parquet"))[0]
     shutil.copy(part, os.path.join(dead, "part-0.parquet"))
+    with open(os.path.join(out, "_staging", ".DS_Store"), "wb") as f:
+        f.write(b"\0")
 
     r = p.run(pages, run_id="r2", with_chunks=False)
     assert r["docs_processed"] == 0, r
