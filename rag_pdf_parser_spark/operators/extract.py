@@ -34,16 +34,21 @@ from ..schema import DOCS_FULL_SCHEMA, DOCS_SCHEMA
 from .arrowmap import map_rows, salted
 
 
+BLOCKED_BYTES = "__blocked_bytes"
+
+
 def _extract_row(chunks: bool):
     """The stage's row kernel; `chunks` picks the output columns and
     whether each row is also chunked."""
     names = (DOCS_FULL_SCHEMA if chunks else DOCS_SCHEMA).names
 
-    def extract(url, html):
+    def extract(url, html, blocked_bytes=None):
         raw = bytes(html) if html is not None else b""
         kernel = (extract_pdf_document if raw[:4] == b"%PDF"
                   else extract_document)
         d = {**kernel(raw), "url": url, "bytes_in": len(raw)}
+        if blocked_bytes is not None:
+            d.update(failure_code="URL_BLOCKED", bytes_in=blocked_bytes)
         if chunks:  # the chunk struct keeps its fields, drops `doc_id`
             d["chunks"] = chunk_blocks(d["blocks"], d["doc_id"])
         return [[d[name] for name in names]]
@@ -65,9 +70,12 @@ def extract_docs(pages: DataFrame, salt: bool = True,
     session's shuffle partitions, the width every salted Arrow stage
     uses. `salt=False` skips the defusal shuffle — correct when the input
     is already url-hash bucketed (an Iceberg table bucketed at ingest),
-    which is the production layout at 10^12 rows.
+    which is the production layout at 10^12 rows. In an optional
+    `BLOCKED_BYTES` column (the pipeline's URL gate), a value marks a row
+    with NULL html: it comes out URL_BLOCKED, that value its `bytes_in`.
     """
-    src = pages.select("url", "html")
+    src = pages.select("url", "html", *(
+        [BLOCKED_BYTES] if BLOCKED_BYTES in pages.columns else []))
     if salt:
         src = salted(src, "url")
     schema = DOCS_FULL_SCHEMA if chunks else DOCS_SCHEMA

@@ -377,7 +377,7 @@ def filter_urls(docs: DataFrame, blocked_hosts: DataFrame | None = None,
 
     Returns docs + `url_blocked` boolean + `block_reason` ('domain' <
     'pattern' when both) — the auditable form (manifests record WHY a url
-    was dropped, mirroring failure_code); the callers split on the flag.
+    was dropped, mirroring failure_code); callers drop or code rows by it.
 
     The probe depths are the label depths the blocklist's entries hold,
     collected in one Spark job over the by-contract broadcastable table;
@@ -385,9 +385,8 @@ def filter_urls(docs: DataFrame, blocked_hosts: DataFrame | None = None,
     entry of more than 127 labels is not a DNS name (RFC 1035) and raises
     ValueError, so the probe count is bounded by the input.
     """
-    # coalesce to false: rlike(NULL) is NULL, and a NULL url_blocked would
-    # make the row vanish from BOTH branches of the pipeline gate (neither
-    # blocked-manifest nor extraction) — null urls pass through unblocked
+    # coalesce to false: rlike(NULL) is NULL, and a NULL url_blocked reads
+    # as neither blocked nor passed — null urls pass through unblocked
     pat = F.coalesce(url_pattern_flag_expr(F.col(url_col)), F.lit(False))
     out = docs.withColumns({"__pat": pat, "__dom": F.lit(False)})
     if blocked_hosts is not None:

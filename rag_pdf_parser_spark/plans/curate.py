@@ -36,6 +36,7 @@ from ..functions import (
     with_quality_model,
     with_repetition_stats,
 )
+from ..operators import spread
 from ..operators.dedup import dedup_corpus
 from ..operators.urlfilter import filter_urls
 
@@ -56,11 +57,6 @@ def with_text_gate_flags(docs: DataFrame,
     creates or destroys ASCII whitespace) feeds the one bigram step that
     gopher and the quality model share, and then the repetition stage,
     which drops it."""
-    from ..operators.spread import ensure_parallelism
-
-    # the gates are per-row CPU: spread a single-task input scan first
-    # (a no-op on inputs that already have the parallelism)
-    docs = ensure_parallelism(docs)
     orig = list(docs.columns)
     safe = F.coalesce(F.col(text_col), F.lit(""))
     out = docs.withColumn("__rtoks", raw_tokens_expr(safe))
@@ -92,7 +88,9 @@ def flag_corpus(docs: DataFrame, blocked_hosts: DataFrame | None = None,
             .drop("url_blocked", "block_reason")
     else:
         out = out.withColumn("url_ok", F.lit(True))
-    out = with_text_gate_flags(out, text_col)
+    # the gates are per-row CPU: spread a single-task input scan first
+    # (a no-op on inputs that already have the parallelism)
+    out = with_text_gate_flags(spread.ensure_parallelism(out), text_col)
     return out.withColumn(
         "pass_all",
         F.col("url_ok") & F.col("gopher_keep") & F.col("repetition_keep")

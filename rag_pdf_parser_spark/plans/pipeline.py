@@ -5,7 +5,8 @@ Spark-first restatement of the reference's CLI lifecycle (SURVEY §3.1):
     pages scan → resume anti-join (vs manifest)           [J3, persistent.py doc_status]
               → salted repartition by xxhash64(url), each
                 url's first capture kept in the same stage [north_rule skew defusal]
-              → URL gate (url_blocklist=)                 [C4 front filter]
+              → URL gate (url_blocklist=): NULLs a blocked
+                row's html, keeps its length              [C4 front filter]
               → mapInArrow extraction (kernel)            [M1/M2 fused]
               → text-quality gates (curate=)              [plans/curate.py]
               → dedup gate: in-batch min-url window, left
@@ -25,10 +26,10 @@ chunks, `chunks` nested), NULL on every row the run did not publish.
 where Spark's JSON writer omits null fields, so no chunk line carries the
 always-null `embedding` (K3's exclusion).
 
-Each gate writes one nullable `__code` column (URL_BLOCKED rows leave
-before extraction and join the batch without content): a row's content is
-published iff its `__code` is NULL, and its manifest `failure_code` is
-`coalesce(failure_code, __code)`.
+Each gate writes one nullable `__code` column (a blocked row comes out of
+extraction URL_BLOCKED, which seeds it): a row's content is published iff
+its `__code` is NULL, and its manifest `failure_code` is
+`coalesce(failure_code, __code)`, all in one select.
 
 The manifest is the resume/lineage mechanism the north rule requires: one row
 per (run, partition, url) with bytes in/out and failure code. Resume = left
@@ -79,6 +80,7 @@ from pyspark.sql import functions as F
 from ..functions import normalized_text_hash_expr
 from ..operators.arrowmap import salted
 from ..operators.extract import (
+    BLOCKED_BYTES,
     explode_blocks,
     explode_chunks,
     extract_docs,
@@ -169,9 +171,10 @@ class ExtractionPipeline:
 
         `url_blocklist` (a DataFrame with a `host` column) switches on the
         C4-style URL gate (operators.urlfilter) BEFORE extraction: blocked
-        pages never reach the Arrow stage — they are only recorded in the
-        manifest as failure_code='URL_BLOCKED', so resume skips them
-        forever and the expensive kernel pays nothing for them.
+        pages cross the Arrow stage without their bytes, so the kernel
+        pays nothing for them, and are recorded in the manifest as
+        failure_code='URL_BLOCKED' with their raw `bytes_in`, so resume
+        skips them forever.
 
         `curate=True` wires the THREE text-quality gates (Gopher word
         stats, the Gopher repetition family, the hashed quality model —
@@ -233,28 +236,22 @@ class ExtractionPipeline:
                 return _run_counts(run_id, {})
             batch_id = f"{run_id}-{uuid.uuid4().hex[:12]}"
             # the salt, and in its own stage each url's first capture: the
-            # window's partitioning contains the salt's hash, so it adds no
-            # exchange, and the branches below all read that one shuffle
+            # window's partitioning contains the salt's hash (no exchange)
             first = Window.partitionBy(F.xxhash64("url"), "url").orderBy(
                 F.col("warc_ts").asc_nulls_last(), "html")
             todo = (salted(todo.select("url", "warc_ts", "html"), "url")
                     .withColumn("__n", F.row_number().over(first))
                     .where(F.col("__n") == 1).drop("__n", "warc_ts"))
-            blocked = None
+            url_code = F.lit(None).cast("string")
             if url_blocklist is not None:
-                flagged = filter_urls(todo, url_blocklist)
-                blocked = flagged.where(F.col("url_blocked")).select(
-                    F.lit(run_id).alias("run_id"),
-                    F.spark_partition_id().alias("partition_id"),
-                    F.col("url"),
-                    F.length(F.coalesce(F.col("html"), F.lit(b"")))
-                    .cast("long").alias("bytes_in"),
-                    F.lit(0).cast("long").alias("bytes_out"),
-                    F.lit("URL_BLOCKED").alias("failure_code"),
-                    F.lit(None).cast("string").alias("text_hash"),
-                )
-                todo = flagged.where(~F.col("url_blocked")) \
-                    .drop("url_blocked", "block_reason")
+                # a blocked row crosses the Arrow stage without its bytes
+                hit = F.col("url_blocked")
+                todo = filter_urls(todo, url_blocklist).select(
+                    "url", F.when(~hit, F.col("html")).alias("html"),
+                    F.when(hit, F.length(F.coalesce("html", F.lit(b""))))
+                    .cast("long").alias(BLOCKED_BYTES))
+                url_code = F.when(F.col("failure_code") == "URL_BLOCKED",
+                                  F.col("failure_code"))
             # fused extract(+chunk): one Arrow stage, no chunking shuffle
             docs = extract_docs(todo, salt=False, chunks=with_chunks)
             if not with_chunks:
@@ -265,7 +262,7 @@ class ExtractionPipeline:
             # each row records the partition that actually did the work
             docs_m = docs.withColumns({
                 "partition_id": F.spark_partition_id(),
-                "__code": F.lit(None).cast("string"),
+                "__code": url_code,
                 "__h": F.lit(None).cast("string"),
             })
             if curate:
@@ -289,8 +286,6 @@ class ExtractionPipeline:
                 F.col("__h").alias("text_hash"),
                 *[F.when(published, F.col(c)).alias(c) for c in CONTENT],
             )
-            if blocked is not None:
-                batch = batch.unionByName(blocked, allowMissingColumns=True)
             # the one write: UNCOMMITTED until _commit below (module doc).
             # The run's counts ride it; its plan reads the manifest, which
             # only the commit rename after it changes

@@ -22,6 +22,9 @@
    rows, so `run` writes once and checkpoints nothing, and no library
    code names a `docs`, `blocks` or `chunks` path except to refuse an
    older out_dir.
+8. A manifest row has one builder: `ExtractionPipeline.run` calls no
+   `union` / `unionByName`, so a URL_BLOCKED row is built by the same
+   select as every other row.
 """
 
 import ast
@@ -309,17 +312,23 @@ def test_manifest_is_the_one_dedup_store():
     assert refusals == 1, refusals  # the pipeline's legacy-layout check
 
 
+def _pipeline_run():
+    """The `ExtractionPipeline.run` def node."""
+    pipeline = _parse(os.path.join(LIB, "plans", "pipeline.py"))
+    (run,) = [m for c in pipeline.body
+              if isinstance(c, ast.ClassDef) and c.name == "ExtractionPipeline"
+              for m in c.body
+              if isinstance(m, ast.FunctionDef) and m.name == "run"]
+    return run
+
+
 def test_out_dir_has_one_format():
     """The pipeline's sinks are parquet only: `ExtractionPipeline.run`
     takes no `fmt`, no library code names `sink_format`, and no call
     under `plans/` goes through `.json(` or `.format(` (a `str.format`
     there trips it too; use an f-string). JSONL is a write of the
     committed view, outside the library."""
-    pipeline = _parse(os.path.join(LIB, "plans", "pipeline.py"))
-    (run,) = [m for c in pipeline.body
-              if isinstance(c, ast.ClassDef) and c.name == "ExtractionPipeline"
-              for m in c.body
-              if isinstance(m, ast.FunctionDef) and m.name == "run"]
+    run = _pipeline_run()
     a = run.args
     params = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
     assert "dedupe" in params and "fmt" not in params, params
@@ -360,11 +369,7 @@ def test_out_dir_has_one_content_table():
     component, and the string `"docs"` appears only in the test of an `if`
     whose body raises (the older-layout refusal), with `"blocks"` and
     `"chunks"`."""
-    pipeline = _parse(os.path.join(LIB, "plans", "pipeline.py"))
-    (run,) = [m for c in pipeline.body
-              if isinstance(c, ast.ClassDef) and c.name == "ExtractionPipeline"
-              for m in c.body
-              if isinstance(m, ast.FunctionDef) and m.name == "run"]
+    run = _pipeline_run()
     writes = [n.lineno for n in ast.walk(run)
               if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
               and n.func.attr == "parquet" and _writes(n)]
@@ -399,3 +404,13 @@ def test_out_dir_has_one_content_table():
     assert not joined, joined
     assert not docs, docs
     assert refusals == 3, refusals  # the pipeline's older-layout check
+
+
+def test_a_manifest_row_has_one_builder():
+    """`ExtractionPipeline.run` calls no `union` / `unionByName`: URL-gated
+    rows cross the extraction stage, so no second branch builds their
+    manifest rows."""
+    unions = [(n.lineno, _callee(n)) for n in ast.walk(_pipeline_run())
+              if isinstance(n, ast.Call)
+              and _callee(n) in ("union", "unionAll", "unionByName")]
+    assert not unions, unions

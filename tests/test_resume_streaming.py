@@ -292,8 +292,10 @@ def test_a_plain_run_writes_one_content_table(spark, tmp_path):
 def test_resume_with_nothing_pending_stops_at_the_probe(spark, tmp_path):
     """A resume (a manifest exists) probes `pending` once: with nothing
     pending the gated run takes at most 2 Spark jobs and commits nothing;
-    with urls pending it takes 13 jobs. Jobs are counted by job group on
-    `synth_pages(300)` at local[4]."""
+    with urls pending it takes 11 jobs. Jobs are counted by job group on
+    `synth_pages(300)` at local[4]. A gated batch writes no more part
+    files than the session's shuffle partitions: its blocked rows ride
+    the extraction partitions."""
     blocked = spark.createDataFrame([("host1.example",)], "host string")
     p = ExtractionPipeline(spark, str(tmp_path / "probe"))
 
@@ -305,8 +307,14 @@ def test_resume_with_nothing_pending_stops_at_the_probe(spark, tmp_path):
     run("probe-first", 200)
     r, jobs = run("probe-resume", 300)
     assert r["docs_processed"] + r["urls_blocked"] == 100, r
-    assert jobs <= 13, jobs
+    assert jobs <= 11, jobs
     ids = p.committed_batch_ids()
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for i in ids:
+        files = [f for f in os.listdir(
+            os.path.join(p.manifest_path, f"batch_id={i}"))
+            if f.endswith(".parquet")]
+        assert 0 < len(files) <= width, (i, files)
     r, jobs = run("probe-empty", 300)
     assert r == {"run_id": "probe-empty", "docs_processed": 0,
                  "duplicates_skipped": 0, "urls_blocked": 0,
@@ -337,44 +345,62 @@ def test_run_refuses_a_run_id_that_is_not_one_path_component(
 def test_pipeline_url_gate_blocks_before_extraction(spark, tmp_path):
     """url_blocklist: blocked pages never reach the docs sink, are
     manifest-recorded as URL_BLOCKED (so resume skips them forever), and
-    clean pages extract normally. An entry deeper than six labels blocks
-    its subdomains too."""
+    clean pages extract normally through the curation and dedup gates.
+    An entry deeper than six labels blocks its subdomains too. A blocked
+    page with NULL html is URL_BLOCKED, not EMPTY_HTML, with `bytes_in`
+    0."""
+    import random
+
     import pandas as pd
 
     from rag_pdf_parser_spark.schema import PAGES_SCHEMA
 
-    body = b"<html><body><p>sufficiently long real page content</p></body></html>"
-    rows = [(f"https://sub{i}.spam.example/p/{i}", None, body, "", "en")
+    def body(seed):  # 70 words: passes every curation gate
+        rng = random.Random(seed)
+        text = " ".join(f"{'abcdefghijklmnop'[rng.randrange(16)]}word{i}"
+                        for i in range(70))
+        return f"<html><body><p>{text}.</p></body></html>".encode()
+
+    rows = [(f"https://sub{i}.spam.example/p/{i}", None, body(0), "", "en")
             for i in range(3)]
-    rows += [(f"https://ok.example/p/{i}", None, body, "", "en")
+    rows.append(("https://sub3.spam.example/null", None, None, "", "en"))
+    rows += [(f"https://ok.example/p/{i}", None, body(i), "", "en")
              for i in range(4)]
     deep = "a.b.c.d.e.f.g.example"                    # 8 labels
-    rows.append((f"https://www.{deep}/p", None, body, "", "en"))
+    rows.append((f"https://www.{deep}/p", None, body(0), "", "en"))
     pages = spark.createDataFrame(
         pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"]),
         schema=PAGES_SCHEMA)
     blocked = spark.createDataFrame([("spam.example",), (deep,)],
                                     "host string")
+    gates = dict(with_chunks=False, url_blocklist=blocked, curate=True,
+                 dedupe=True)
 
     p = ExtractionPipeline(spark, str(tmp_path / "ug"))
-    r = p.run(pages, run_id="r1", with_chunks=False, url_blocklist=blocked)
-    assert r["urls_blocked"] == 4 and r["docs_processed"] == 4, r
+    r = p.run(pages, run_id="r1", **gates)
+    assert r == {"run_id": "r1", "docs_processed": 4,
+                 "duplicates_skipped": 0, "urls_blocked": 5,
+                 "curation_drops": {}}, r
 
     docs = p.read_docs()
     assert docs.count() == 4
     assert docs.where(F.col("url").contains("spam")).count() == 0
     m = spark.read.parquet(p.manifest_path)
-    blocked_rows = m.where(F.col("failure_code") == "URL_BLOCKED")
-    assert sorted(r["url"] for r in blocked_rows.collect()) == sorted(
+    blocked_rows = {r["url"]: r for r in m.where(
+        F.col("failure_code") == "URL_BLOCKED").collect()}
+    assert sorted(blocked_rows) == sorted(
         [f"https://sub{i}.spam.example/p/{i}" for i in range(3)]
-        + [f"https://www.{deep}/p"])
-    assert all(r["bytes_out"] == 0 and r["bytes_in"] > 0
-               for r in blocked_rows.collect())
+        + ["https://sub3.spam.example/null", f"https://www.{deep}/p"])
+    assert all(r["bytes_out"] == 0 and r["text_hash"] is None
+               and r["doc_id"] is None for r in blocked_rows.values())
+    null = blocked_rows.pop("https://sub3.spam.example/null")
+    assert null["bytes_in"] == 0
+    assert all(r["bytes_in"] > 0 for r in blocked_rows.values())
 
     # resume: nothing left to do — blocked urls are settled in the manifest
-    r2 = p.run(pages, run_id="r2", with_chunks=False, url_blocklist=blocked)
+    r2 = p.run(pages, run_id="r2", **gates)
     assert r2["docs_processed"] == 0 and r2["urls_blocked"] == 0, r2
-    assert spark.read.parquet(p.manifest_path).count() == 8
+    assert spark.read.parquet(p.manifest_path).count() == 9
 
     # a first run that blocks every page commits a docs batch with no
     # file: the committed views read it as empty, where a schema inferred
@@ -382,9 +408,34 @@ def test_pipeline_url_gate_blocks_before_extraction(spark, tmp_path):
     q = ExtractionPipeline(spark, str(tmp_path / "all_blocked"))
     r = q.run(pages.where(F.col("url").contains("spam")), run_id="r1",
               with_chunks=False, url_blocklist=blocked)
-    assert r["urls_blocked"] == 3 and r["docs_processed"] == 0, r
+    assert r["urls_blocked"] == 4 and r["docs_processed"] == 0, r
     assert q.read_docs().count() == q.read_blocks().count() \
         == q.read_chunks().count() == 0
+
+
+def test_the_pipeline_plans_no_parallelism_probe(spark, tmp_path,
+                                                 monkeypatch):
+    """`run` always salts, so its curation stage reads an exchange and
+    calls no `ensure_parallelism` (each call plans the partial plan);
+    `flag_corpus` spreads its input once, before its text gates."""
+    from rag_pdf_parser_spark.operators import spread
+    from rag_pdf_parser_spark.plans.curate import flag_corpus
+
+    calls = []
+    real = spread.ensure_parallelism
+
+    def counting(df):
+        calls.append(df)
+        return real(df)
+
+    monkeypatch.setattr(spread, "ensure_parallelism", counting)
+    r = ExtractionPipeline(spark, str(tmp_path / "spread")).run(
+        synth_pages(spark, 20), run_id="r1", with_chunks=False, curate=True)
+    assert r["docs_processed"] == 20, r
+    assert len(calls) == 0
+    flag_corpus(spark.createDataFrame(
+        [("https://a.example/1", "some words")], "url string, text string"))
+    assert len(calls) == 1
 
 
 def test_manifest_summary_lineage(spark, tmp_path):
@@ -1647,10 +1698,11 @@ def test_dedupe_gate_runs_each_python_stage_once(spark, tmp_path,
 
 def test_a_gated_run_shuffles_the_pages_once(spark, tmp_path,
                                              monkeypatch):
-    """A gated run's executed plan shuffles the pages once: one salt
-    exchange on `xxhash64(url)`, which the URL gate's blocked branch
-    reuses, and which the first-capture window rides without a shuffle
-    of its own."""
+    """A gated run's executed plan is one pass over the pages: one salt
+    exchange on `xxhash64(url)`, read once (no `ReusedExchange` over it),
+    one first-capture `row_number` window riding it, one broadcast probe
+    per blocklist depth, and no `Union` — blocked rows cross the
+    extraction stage instead of joining the batch from a second branch."""
     from rag_pdf_parser_spark.operators.spread import plan_nodes
 
     def cls(name):
@@ -1658,17 +1710,20 @@ def test_a_gated_run_shuffles_the_pages_once(spark, tmp_path,
 
     shuffle = cls("execution.exchange.ShuffleExchangeExec")
     reused = cls("execution.exchange.ReusedExchangeExec")
+    window = cls("execution.window.WindowExec")
+    row_number = cls("catalyst.expressions.RowNumber")
     xxhash = cls("catalyst.expressions.XxHash64")
 
     pages = synth_pages(spark, 40)
     written = _capture_writes(monkeypatch, pages)
-    blocked = spark.createDataFrame([("host1.example",)], "host string")
+    depths = ["host1.example", "a.b.c.d.e.f.g.example"]   # 2 and 8 labels
+    blocked = spark.createDataFrame([(h,) for h in depths], "host string")
     r = ExtractionPipeline(spark, str(tmp_path / "salt")).run(
         pages, run_id="r1", with_chunks=True, url_blocklist=blocked,
         curate=True, dedupe=True)
     assert r["urls_blocked"] > 0 and r["docs_processed"] > 0, r
     [batch] = written
-    batch.collect()  # run it, so the plan shows AQE's exchange reuse
+    batch.collect()  # run it, so the plan shows any AQE exchange reuse
     nodes = list(plan_nodes(batch))
 
     def pages_shuffle(n):
@@ -1679,9 +1734,15 @@ def test_a_gated_run_shuffles_the_pages_once(spark, tmp_path,
     assert len(salts) == 1, [n.simpleString(2) for n in salts]
     (part,) = _seq(salts[0].outputPartitioning().expressions())
     assert xxhash.isInstance(part)
-    reuses = [n for n in nodes
-              if reused.isInstance(n) and pages_shuffle(n.child())]
-    assert len(reuses) == 1 and reuses[0].child().sameResult(salts[0])
+    assert not [n for n in nodes if reused.isInstance(n)
+                and pages_shuffle(n.child())]
+    firsts = [n for n in nodes if window.isInstance(n) and any(
+        row_number.isInstance(e.child().windowFunction())
+        for e in _seq(n.windowExpression()))]
+    assert len(firsts) == 1, [n.simpleString(2) for n in firsts]
+    probes = [n for n in nodes if n.nodeName() == "BroadcastHashJoin"]
+    assert len(probes) == len(depths), [n.simpleString(2) for n in probes]
+    assert not [n for n in nodes if n.nodeName() == "Union"]
 
 
 def _seq(s):
